@@ -113,9 +113,8 @@ def main(argv: list[str] | None = None) -> int:
 
         pages = corpus.pages_df_distributed(
             spark, args.generate, seed=42, partitions=min(partitions, 64)
-        ).persist()  # each wave rescans its source twice (extract +
-        # oversize quarantine) x n_waves — without this the whole corpus
-        # regenerates ~2x(n_buckets/wave_size) times
+        ).persist()  # each wave scans its source once — without this
+        # the whole corpus regenerates n_buckets/wave_size times
     else:
         pages = pio.read_pages(spark, args.input, fmt=args.input_format)
 

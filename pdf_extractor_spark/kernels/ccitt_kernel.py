@@ -303,40 +303,6 @@ def transitions_to_gray_row(t: list[int], columns: int) -> bytes:
     return bytes(row)
 
 
-def transitions_to_packed_row(t: list[int], columns: int,
-                              black_bit: int = 1) -> bytes:
-    """Changing elements -> packed 1-bpp row, MSB-first, byte padded —
-    the raster layout both PDF (post-filter samples) and TIFF bilevel
-    strips use. ``black_bit`` is the sample value of an ink pixel
-    (TIFF photometric 0 and PDF /BlackIs1 true -> 1; PDF default -> 0)."""
-    nbytes = (columns + 7) >> 3
-    row = bytearray(nbytes) if black_bit else bytearray(b"\xff" * nbytes)
-    if not black_bit and columns & 7:  # keep pad bits zero
-        row[-1] &= 0xFF << (8 - (columns & 7)) & 0xFF
-    for i in range(0, len(t), 2):
-        start = t[i]
-        end = t[i + 1] if i + 1 < len(t) else columns
-        for x in range(start, end):
-            if black_bit:
-                row[x >> 3] |= 0x80 >> (x & 7)
-            else:
-                row[x >> 3] &= ~(0x80 >> (x & 7)) & 0xFF
-    return bytes(row)
-
-
-def packed_row_to_transitions(row: bytes, columns: int,
-                              black_bit: int = 1) -> list[int]:
-    t: list[int] = []
-    black = False
-    for x in range(columns):
-        bit = (row[x >> 3] >> (7 - (x & 7))) & 1
-        b = bit == black_bit
-        if b != black:
-            t.append(x)
-            black = b
-    return t
-
-
 # --------------------------------------------------------------------------
 # 2D mode machinery (shared by MR and MMR)
 # --------------------------------------------------------------------------

@@ -851,11 +851,3 @@ def render_text_webp(text: str, width: int = 32, **flavors) -> bytes:
         use_lz77=flavors.get("use_lz77", False),
         cache_bits=flavors.get("cache_bits", 0),
         use_near=flavors.get("use_near", False))
-
-
-def ocr_webp(payload: bytes, max_err: int = 6) -> list[str]:
-    """OCR one fixed-pitch WEBP page into raw grid lines (container parse
-    + the shared ``ocr_gray_rows`` core)."""
-    from pdf_extractor_spark.kernels.ocr_kernel import ocr_gray_rows
-
-    return ocr_gray_rows(decode_webp_gray(payload), max_err=max_err)

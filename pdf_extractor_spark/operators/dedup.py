@@ -689,17 +689,6 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     )
 
 
-def simhash_duplicates(docs: DataFrame) -> DataFrame:
-    """Docs sharing an identical 64-bit SimHash (hamming distance 0)."""
-    s = simhash_signatures(docs)
-    return (
-        s.groupBy("simhash")
-        .agg(F.count("*").alias("n"), F.sort_array(F.collect_list("doc_id")).alias("doc_ids"))
-        .where(F.col("n") > 1)
-        .orderBy("simhash")
-    )
-
-
 def simhash_neardup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """(a, b, cos): document pairs whose 60-bit SimHash signatures differ
     in at most ``max_hamming`` bits — the Manku/Jain/Das Sarma web-crawl
@@ -1213,8 +1202,10 @@ def exact_substring_dedup_chars(docs: DataFrame,
     IS a duplicated length-L substring) — so windowed hashing computes
     the suffix array's exact coverage set, not an approximation of it.
 
-      windows  : narrow transform(sequence) pass — md5 of each length-L
-                 char slice of the normalized text (~n_chars rows/doc).
+      windows  : an Arrow (mapInPandas) kernel after a narrow repartition
+                 on doc_id — the 16-byte md5 of each length-L char slice
+                 of the normalized text (~n_chars rows/doc), yielded in
+                 bounded chunks.
       dup set  : ONE shuffle on the window hash; count(*) > 1.
       intervals: duplicated windows per doc become [s, s+L-1] intervals,
                  merged with a gaps-and-islands window over (doc_id, s)
@@ -1225,7 +1216,8 @@ def exact_substring_dedup_chars(docs: DataFrame,
                  scale-up where a per-char explode would not.
       rebuild  : per-doc aggregate() over the few merged intervals
                  stitches the kept slices (interpreted HOF over a small
-                 array — fine; the per-char work stays in the scan).
+                 array — fine; the per-char work stays in the window
+                 kernel).
 
     Output is total over input: (doc_id, clean_text, n_removed_chars);
     docs shorter than min_len pass through untouched. Like the token

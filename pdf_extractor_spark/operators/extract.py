@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import time
 from collections.abc import Iterator
+from contextlib import contextmanager
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
@@ -122,19 +123,25 @@ def detect_image_format(payload: bytes) -> str | None:
     return None
 
 
-def _needs_ocr_row(img: str, why: str) -> dict:
-    """The loud quarantine row for image payloads the engine cannot read
-    (reference file_type semantics, enums.py:25-31)."""
+def _failed_row(meta: dict) -> dict:
+    """One empty page-1 row carrying a not-ok ``meta``: the row-level
+    error contract (reference tasks.py:112-123) for a document that
+    yields no text."""
     return {
         "page_number": 1, "text": "", "combined": "", "table": "",
         "markdown": "", "titles": "", "latex": "", "spans": [],
-        "meta": {
-            "ok": "false",
-            "error": f"needs_ocr: {img} payload{why}",
-            "file_type": img,
-            "needs_ocr": "true",
-        },
+        "meta": {"ok": "false", **meta},
     }
+
+
+def _needs_ocr_row(img: str, why: str) -> dict:
+    """The loud quarantine row for image payloads the engine cannot read
+    (reference file_type semantics, enums.py:25-31)."""
+    return _failed_row({
+        "error": f"needs_ocr: {img} payload{why}",
+        "file_type": img,
+        "needs_ocr": "true",
+    })
 
 
 # Scanned-page container decoders the OCR tier reads (all produce the
@@ -248,18 +255,25 @@ def extract_document(payload: bytes | None,
     ]
 
 
-def _extract_arrow_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """mapInArrow kernel: input batches of (url, warc_ts, html, partition_id).
+# input columns that reach the output unchanged, gathered per output row
+_TAKEN = ("url", "warc_ts", "partition_id", "payload_bytes")
 
-    Pass-through columns (url, warc_ts, partition_id) never become Python
-    objects: output rows carry a source-row index and the columns are
-    gathered with pa.compute.take — timestamp<->datetime conversion per row
-    was a measurable share of the batch loop.
+
+def _extract_arrow_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """mapInArrow kernel: input batches of (url, warc_ts, html,
+    payload_bytes, partition_id) — the :func:`eligible_pages` columns.
+
+    Pass-through columns (url, warc_ts, partition_id, payload_bytes) never
+    become Python objects: output rows carry a source-row index and the
+    columns are gathered with pa.compute.take — timestamp<->datetime
+    conversion per row was a measurable share of the batch loop. A row
+    whose payload the size cap removed yields one ``size_cap`` not-ok row.
     """
     import pyarrow.compute as pc
 
     for batch in batches:
         payloads = batch.column("html").to_pylist()
+        sizes = batch.column("payload_bytes").to_pylist()
         # optional transport-charset column (WARC ingest): absent on the
         # plain pages-table path, so the fast path allocates nothing
         charsets = (batch.column("charset").to_pylist()
@@ -267,14 +281,16 @@ def _extract_arrow_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Rec
                     else [None] * len(payloads))
         idx: list[int] = []
         out: dict[str, list] = {
-            name: []
-            for name in _ARROW_OUT.names
-            if name not in ("url", "warc_ts", "partition_id")
+            name: [] for name in _ARROW_OUT.names if name not in _TAKEN
         }
         for i, payload in enumerate(payloads):
-            nbytes = len(payload) if payload else 0
             d0 = time.perf_counter_ns()
-            for row in extract_document(payload, charsets[i]):
+            if payload is None and sizes[i] > SIZE_CAP_BYTES:
+                rows = [_failed_row(
+                    {"error": f"size_cap: payload_over_cap:{sizes[i]}"})]
+            else:
+                rows = extract_document(payload, charsets[i])
+            for row in rows:
                 idx.append(i)
                 out["page_number"].append(row["page_number"])
                 out["text"].append(row["text"])
@@ -287,17 +303,13 @@ def _extract_arrow_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Rec
                     [{"start": s, "end": e, "lang": lg} for s, e, lg in row["spans"]]
                 )
                 out["meta"].append(list(row["meta"].items()))
-                out["payload_bytes"].append(nbytes)
                 out["elapsed_us"].append((time.perf_counter_ns() - d0) // 1000)
         take = pa.array(idx, pa.int32())
         arrays = [
-            pc.take(batch.column("url"), take).cast(pa.string()),
-            pc.take(batch.column("warc_ts"), take).cast(pa.timestamp("us", tz="UTC")),
-            pc.take(batch.column("partition_id"), take).cast(pa.int32()),
-        ] + [
-            pa.array(out[name], _ARROW_OUT.field(name).type)
-            for name in _ARROW_OUT.names
-            if name not in ("url", "warc_ts", "partition_id")
+            pc.take(batch.column(field.name), take).cast(field.type)
+            if field.name in _TAKEN
+            else pa.array(out[field.name], field.type)
+            for field in _ARROW_OUT
         ]
         yield pa.RecordBatch.from_arrays(arrays, schema=_ARROW_OUT)
 
@@ -316,30 +328,39 @@ def salted_repartition(df: DataFrame, num_partitions: int, salt: int = 0) -> Dat
     return df.repartition(num_partitions, F.hash(F.col("url")) + F.lit(salt))
 
 
-# reference 20 MB upload cap (main.py:386-392) — the single policy constant
-# shared by the batch pass, the streaming pass, and the pipeline layer's
-# oversize quarantine (so the cap cannot drift between them)
+# reference 20 MB upload cap (main.py:386-392). Enforced here and nowhere
+# else: eligible_pages drops the bytes of a larger payload and
+# _extract_arrow_batches turns its row into a size_cap quarantine row, so
+# the batch pass, the streaming pass and the pipeline all see the cap the
+# same way.
 SIZE_CAP_BYTES = 20 * 1024 * 1024
 
 
-def eligible_pages(pages: DataFrame,
-                   size_cap_bytes: int = SIZE_CAP_BYTES) -> DataFrame:
+def eligible_pages(pages: DataFrame) -> DataFrame:
     """The shared extraction prologue: prune to (url, warc_ts, html) —
     plus the transport ``charset`` column when the ingest layer carries
-    one (read_warc; WHATWG precedence inside sniff_decode) — and drop
-    payloads over the size cap (the pipeline layer quarantines them)."""
-    cols = ["url", "warc_ts", "html"]
+    one (read_warc; WHATWG precedence inside sniff_decode) — and add
+    ``payload_bytes`` (the payload's length, 0 for NULL).
+
+    A payload over :data:`SIZE_CAP_BYTES` keeps its row but its ``html``
+    becomes NULL, so its bytes never reach the shuffle or the JVM→Python
+    channel; the kernel emits one ``size_cap`` not-ok row for it. Every
+    input url therefore yields at least one output row."""
+    nbytes = F.coalesce(F.length("html"), F.lit(0)).cast("long")
+    cols = [
+        "url", "warc_ts",
+        F.when(nbytes <= SIZE_CAP_BYTES, F.col("html")).alias("html"),
+    ]
     if "charset" in pages.columns:
         cols.append("charset")
-    return pages.select(*cols).where(
-        F.col("html").isNull() | (F.length("html") <= size_cap_bytes)
-    )
+    return pages.select(*cols, nbytes.alias("payload_bytes"))
 
 
+@contextmanager
 def tune_arrow_batch(pages: DataFrame, size_col: str = "html",
                      target_batch_bytes: int = 32 << 20,
                      sample_rows: int = 10_000,
-                     lo: int = 8, hi: int = 256) -> int:
+                     lo: int = 8, hi: int = 256) -> Iterator[int]:
     """Derive ``spark.sql.execution.arrow.maxRecordsPerBatch`` from the
     scan's payload-size stats (round-4 verdict item 10): records/batch =
     target_batch_bytes / max(sampled payload size), clamped to [lo, hi].
@@ -365,17 +386,14 @@ def tune_arrow_batch(pages: DataFrame, size_col: str = "html",
     (the task stops after one batch), so layout order cannot hide a
     tier; cost is one small read per partition, once per job.
 
-    Returns the chosen records/batch. Callers opt in (run_extract
-    ``tune_batch=True``): the conf is session-global and STAYS SET —
-    it must, because the returned plan is lazy and the conf is read at
-    execution time, so an automatic restore here would undo the tuning
-    before the job ever runs. An eager caller that owns the whole
-    lifecycle (ExtractionJob.run) saves the prior value and restores —
-    or unsets — it after its jobs finish; a shared-session caller using
-    run_extract directly owns that restore itself."""
+    A context manager yielding the chosen records/batch. The conf is
+    session-global and read when a plan EXECUTES, so the jobs that should
+    use it run inside the ``with`` block; on exit the prior value is
+    restored, or the key unset when it was unset before."""
     import pandas as pd
 
     spark = pages.sparkSession
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
     def _first_batch_sizes(it):
         for pdf in it:
@@ -391,19 +409,26 @@ def tune_arrow_batch(pages: DataFrame, size_col: str = "html",
     )
     mx = int(row["mx"] or 1)
     rec = max(lo, min(hi, target_batch_bytes // max(mx, 1)))
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(rec))
-    return rec
+    # conf.get(key, None) is None when the key was never set
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, str(rec))
+    try:
+        yield rec
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
 
 
 def run_extract(pages: DataFrame, num_partitions: int = 32, salt: int = 0,
-                size_cap_bytes: int = SIZE_CAP_BYTES,
-                oversize_bytes: int | None = None,
-                tune_batch: bool = False) -> DataFrame:
+                oversize_bytes: int | None = None) -> DataFrame:
     """pages(url, warc_ts, html, ...) → extracted DataFrame (one row/page).
 
     - column pruning: only url/warc_ts/html reach the scan
-    - size cap mirrors the reference 20 MB upload cap (main.py:386-392);
-      rows over the cap are excluded (the pipeline layer quarantines them)
+    - size cap mirrors the reference 20 MB upload cap (main.py:386-392):
+      a row over the cap yields one not-ok page-1 row whose meta error is
+      ``size_cap: payload_over_cap:<bytes>`` (see :func:`eligible_pages`)
     - optional size-based binning (SURVEY.md §4 skew row): with
       `oversize_bytes` set, payloads above it run in a dedicated pass
       partitioned on the url alone, so a handful of huge documents cannot
@@ -415,9 +440,7 @@ def run_extract(pages: DataFrame, num_partitions: int = 32, salt: int = 0,
       is raised to the 100 MB-1 GB book/manual tier, where one payload is
       minutes of work and the straggler dominates wave latency.
     """
-    src = eligible_pages(pages, size_cap_bytes)
-    if tune_batch:
-        tune_arrow_batch(src)
+    src = eligible_pages(pages)
     if oversize_bytes is None:
         src = salted_repartition(src, num_partitions, salt)
         src = src.withColumn("partition_id", F.spark_partition_id())

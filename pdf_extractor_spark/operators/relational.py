@@ -76,19 +76,6 @@ def latest_per_user(events: DataFrame) -> DataFrame:
     )
 
 
-def disjunctive_like(documents: DataFrame, q: str) -> DataFrame:
-    """Annotation-search ILIKE filter (main.py:1438-1445)."""
-    needle = q.lower()
-    return (
-        documents.where(
-            F.lower(F.col("text")).contains(needle)
-            | F.lower(F.col("source")).contains(needle)
-        )
-        .select("doc_id", "source", "lang", "n_chars")
-        .orderBy("doc_id")
-    )
-
-
 def paginated_orders(orders: DataFrame, sort_col: str = "o_totalprice",
                      desc: bool = True, offset: int = 20, limit: int = 10) -> DataFrame:
     """Whitelist-validated dynamic sort + offset/limit (main.py:581-684).
@@ -102,22 +89,6 @@ def paginated_orders(orders: DataFrame, sort_col: str = "o_totalprice",
         .select("o_orderkey", "o_custkey", F.round("o_totalprice", 2).alias("o_totalprice"))
         .offset(offset)
         .limit(limit)
-    )
-
-
-def customer_order_rollup(orders: DataFrame, customer: DataFrame,
-                          nation: DataFrame) -> DataFrame:
-    """EP3-shaped multi-way gather (main.py:1045-1098): fact ⋈ dim ⋈ dim with
-    the dims broadcast, replacing the reference's per-row point lookups."""
-    return (
-        orders.join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .groupBy("n_name", "c_mktsegment")
-        .agg(
-            F.count("*").alias("orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-        )
-        .orderBy("n_name", "c_mktsegment")
     )
 
 

@@ -225,23 +225,6 @@ def split_marked_pages(df: DataFrame, content_col: str = "content") -> DataFrame
     return df.mapInPandas(kernel, f"{key_schema}, page_number int, page_text string")
 
 
-def term_doc_freq(docs: DataFrame, min_df: int = 10, top_n: int = 50) -> DataFrame:
-    """Corpus vocabulary by document frequency: distinct tokens per doc,
-    exploded and counted. One shuffle on the token (map-side partial
-    aggregation); `min_df`/`top_n` bound the result at any corpus size."""
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(F.split(_norm(F.col("text")), " "))).alias("token"),
-    )
-    return (
-        toks.groupBy("token")
-        .agg(F.countDistinct("doc_id").alias("df"))
-        .where((F.col("df") >= min_df) & (F.col("token") != ""))
-        .orderBy(F.col("df").desc(), F.col("token"))
-        .limit(top_n)
-    )
-
-
 def stratified_split(docs: DataFrame, train_pct: int = 90) -> DataFrame:
     """Deterministic train/val assignment by content-independent key hash:
     split = 'train' iff md5(doc_id) mod 100 < train_pct. Hash-based (not

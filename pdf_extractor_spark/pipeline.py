@@ -15,9 +15,14 @@ Maps the reference's orchestration semantics (SURVEY.md §2b) onto Spark:
 
 Scale notes (100 TB / 1000 executors): buckets are the checkpoint granule —
 set n_buckets so one wave ≈ one cluster-full of work (e.g. 4096 buckets,
-wave_size 64). Each wave is scan(pruned) → shuffle(hash(url)+salt) → kernel →
-columnar write; no other shuffle. The SnapshotTable binds 1:1 to Iceberg
-(append/overwritePartitions) when jars are present.
+wave_size 64). Each wave is ONE pass: scan(pruned) → shuffle(hash(url)+salt)
+→ kernel → columnar write, with no cache and no second read of the source.
+Metrics, quarantine and lineage come from a narrow read-back of only the
+data dir that wave's append wrote. The size cap is not a pipeline policy:
+the kernel pass emits a ``size_cap`` not-ok row for an over-cap page
+(operators/extract.py), so it is quarantined like any other failed doc.
+The SnapshotTable binds 1:1 to Iceberg (append/overwritePartitions) when
+jars are present.
 """
 from __future__ import annotations
 
@@ -27,7 +32,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_extractor_spark.operators.extract import run_extract
+from pdf_extractor_spark.operators.extract import run_extract, tune_arrow_batch
 from pdf_extractor_spark.sources.table_format import SnapshotTable
 
 LINEAGE_DDL = (
@@ -60,6 +65,60 @@ def job_cost_usd(pages: int, extractor: str = "local") -> float:
     return PAGE_COST_USD.get(extractor, PAGE_COST_USD["unknown"]) * pages
 
 
+def _wave_metrics(wrote: DataFrame) -> DataFrame:
+    """Per-(bucket, partition) metrics rows (tasks.py:265-282 analogue)
+    of one wave's committed rows."""
+    # per-url rollup first: elapsed_us is CUMULATIVE since the document
+    # start on every page row, so the per-doc total is the MAX, not the
+    # sum (summing overcounts an N-page doc ~N/2-fold)
+    first_page = F.col("page_number") == 1
+    per_url = wrote.groupBy("bucket", "partition_id", "url").agg(
+        F.count("*").alias("pages"),
+        F.max(F.when(first_page, F.col("payload_bytes"))).alias("doc_bytes"),
+        F.max("elapsed_us").alias("doc_us"),
+        F.max(
+            F.when((F.col("meta")["ok"] == "false") & first_page, 1)
+            .otherwise(0)
+        ).alias("doc_fail"),
+    )
+    elapsed_s = F.col("elapsed_ms") / 1000.0
+    return (
+        per_url.groupBy("bucket", "partition_id")
+        .agg(
+            F.count("*").alias("docs"),
+            F.sum("pages").alias("pages"),
+            F.sum(F.coalesce("doc_bytes", F.lit(0))).alias("bytes"),
+            (F.sum("doc_us") / 1000).cast("long").alias("elapsed_ms"),
+            F.sum("doc_fail").alias("failure_count"),
+        )
+        .withColumn("docs_per_sec",
+                    F.when(F.col("elapsed_ms") > 0, F.col("docs") / elapsed_s))
+        .withColumn("bytes_per_sec",
+                    F.when(F.col("elapsed_ms") > 0, F.col("bytes") / elapsed_s))
+        .select(
+            "bucket", "partition_id", "docs", "pages", "bytes", "elapsed_ms",
+            "docs_per_sec", "bytes_per_sec", "failure_count",
+        )
+    )
+
+
+def _quarantine_rows(wrote: DataFrame) -> DataFrame:
+    """Quarantine rows (row-level error contract, tasks.py:112-123;
+    FIXTURES.md §3 shape): one per failed doc. A doc the size cap stopped
+    is stage ``size_cap`` with error ``payload_over_cap:<bytes>``; every
+    other failure is stage ``extract``."""
+    err = F.coalesce(F.col("meta")["error"], F.lit("unknown"))
+    capped = err.startswith("size_cap: ")
+    return wrote.where(
+        (F.col("meta")["ok"] == "false") & (F.col("page_number") == 1)
+    ).select(
+        "url",
+        F.when(capped, F.lit("size_cap")).otherwise(F.lit("extract"))
+        .alias("stage"),
+        F.regexp_replace(err, "^size_cap: ", "").alias("error"),
+    )
+
+
 class ExtractionAborted(RuntimeError):
     """Raised when the failure-rate circuit breaker opens (tasks.py:126-151)."""
 
@@ -74,7 +133,6 @@ class ExtractionJob:
         salt: int = 0,
         wave_size: int = 8,
         failure_rate_abort: float = 0.5,
-        tune_batch: bool = True,
     ) -> None:
         self.spark = spark
         self.out_root = out_root
@@ -83,7 +141,6 @@ class ExtractionJob:
         self.salt = salt
         self.wave_size = wave_size
         self.failure_rate_abort = failure_rate_abort
-        self.tune_batch = tune_batch
         self.extracted = SnapshotTable(os.path.join(out_root, "extracted"))
         self.lineage = SnapshotTable(os.path.join(out_root, "lineage"))
         self.metrics = SnapshotTable(os.path.join(out_root, "metrics"))
@@ -128,34 +185,11 @@ class ExtractionJob:
 
     # -- main entry ------------------------------------------------------------
     def run(self, pages: DataFrame, max_waves: int | None = None) -> dict:
-        """Process all pending buckets in waves; resumable and idempotent."""
-        # once per job, the spark-submit shape: shrink Arrow batches when
-        # the sampled payload sizes would blow the per-batch working set
-        # past ~32 MB (book/manual-tier corpora); a small-page corpus
-        # keeps the 256 default (shrink-only, measured in extract.py).
-        # The conf is SESSION-GLOBAL, so it is restored after the waves
-        # finish and `tune_batch=False` opts a shared-session caller out
-        # entirely (review finding: an unconditional permanent mutation
-        # shrank every later query's Arrow batches in shared sessions)
-        _batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-        _batch_before = self.spark.conf.get(_batch_key, None)
-        if self.tune_batch:
-            from pdf_extractor_spark.operators.extract import (
-                tune_arrow_batch,
-            )
-
-            tune_arrow_batch(pages)
-        try:
+        """Process all pending buckets in waves; resumable and idempotent.
+        The Arrow batch size is tuned once per job from the sampled payload
+        sizes and restored when the waves finish (tune_arrow_batch)."""
+        with tune_arrow_batch(pages):
             return self._run_waves(pages, max_waves)
-        finally:
-            if self.tune_batch:
-                # conf.get(key, None) is None when the key was UNSET (an
-                # external session that never configured it) — restore
-                # means unset there, not skip (second review wave)
-                if _batch_before is not None:
-                    self.spark.conf.set(_batch_key, _batch_before)
-                else:
-                    self.spark.conf.unset(_batch_key)
 
     def _run_waves(self, pages: DataFrame,
                    max_waves: int | None = None) -> dict:
@@ -196,114 +230,44 @@ class ExtractionJob:
         # would record zero wave duration (start == finish == commit time)
         started_at = F.lit(_dt.datetime.now(_dt.timezone.utc)
                            .replace(tzinfo=None))
-        src = pages_b.where(F.col("bucket").isin(wave))
-        out = run_extract(
-            src.select("url", "warc_ts", "html"),
+        out = self._with_bucket(run_extract(
+            pages_b.where(F.col("bucket").isin(wave))
+            .select("url", "warc_ts", "html"),
             num_partitions=self.partitions,
             salt=self.salt,
+        ))
+        # commit order: data first (the manifest records the buckets — the
+        # checkpoint), then metrics/quarantine/lineage (observability),
+        # all derived from a narrow read-back of only what this append
+        # wrote: the extraction runs once and nothing is cached
+        parent = self.extracted._current_id()
+        self.extracted.append(
+            out, summary={"buckets": wave, "buckets_done": buckets_done})
+        wrote = self.extracted.read_incremental(self.spark, parent).select(
+            "url", "bucket", "partition_id", "page_number", "payload_bytes",
+            "elapsed_us", "meta")
+
+        mrows = _wave_metrics(wrote).collect()
+        docs = sum(r["docs"] for r in mrows)
+        failures = sum(r["failure_count"] for r in mrows)
+        nbytes = sum(r["bytes"] for r in mrows)
+        self.metrics.append(self.spark.createDataFrame(mrows, METRICS_DDL))
+        self.quarantine.append(_quarantine_rows(wrote))
+        lineage_rows = (
+            self.spark.createDataFrame(
+                [(b,) for b in wave], "bucket int"
+            )
+            .withColumn("stage", F.lit("extract"))
+            .withColumn("status", F.lit("success"))
+            .withColumn("started_at", started_at)
+            .withColumn("finished_at", F.current_timestamp())
+            .withColumn("docs", F.lit(docs).cast("long"))
+            .withColumn("bytes", F.lit(nbytes).cast("long"))
+            .withColumn("failures", F.lit(failures).cast("long"))
+            .withColumn("attempt", F.lit(1))
         )
-        out = out.withColumn(
-            "bucket", F.pmod(F.hash(F.col("url")), F.lit(self.n_buckets))
-        )
-        out.cache()
-        try:
-            # per-(bucket, partition) metrics — tasks.py:265-282 analogue
-            # per-url rollup first: elapsed_us is CUMULATIVE since the
-            # document start on every page row, so the per-doc total is the
-            # MAX, not the sum (summing overcounts an N-page doc ~N/2-fold)
-            per_url = out.groupBy("bucket", "partition_id", "url").agg(
-                F.count("*").alias("pages"),
-                F.max(
-                    F.when(F.col("page_number") == 1, F.col("payload_bytes"))
-                ).alias("doc_bytes"),
-                F.max("elapsed_us").alias("doc_us"),
-                F.max(
-                    F.when(
-                        (F.col("meta")["ok"] == "false")
-                        & (F.col("page_number") == 1), 1
-                    ).otherwise(0)
-                ).alias("doc_fail"),
-            )
-            met = (
-                per_url.groupBy("bucket", "partition_id")
-                .agg(
-                    F.count("*").alias("docs"),
-                    F.sum("pages").alias("pages"),
-                    F.sum(F.coalesce("doc_bytes", F.lit(0))).alias("bytes"),
-                    (F.sum("doc_us") / 1000).cast("long").alias("elapsed_ms"),
-                    F.sum("doc_fail").alias("failure_count"),
-                )
-                .withColumn(
-                    "docs_per_sec",
-                    F.when(F.col("elapsed_ms") > 0, F.col("docs") / (F.col("elapsed_ms") / 1000.0)),
-                )
-                .withColumn(
-                    "bytes_per_sec",
-                    F.when(F.col("elapsed_ms") > 0, F.col("bytes") / (F.col("elapsed_ms") / 1000.0)),
-                )
-                .select(
-                    "bucket", "partition_id", "docs", "pages", "bytes", "elapsed_ms",
-                    "docs_per_sec", "bytes_per_sec", "failure_count",
-                )
-            )
-            mrows = met.collect()
-            docs = sum(r["docs"] for r in mrows)
-            failures = sum(r["failure_count"] for r in mrows)
-            nbytes = sum(r["bytes"] for r in mrows)
-
-            # quarantine rows (row-level error contract, tasks.py:112-123)
-            # + payloads over the size cap: run_extract EXCLUDES them, so
-            # without this row they would silently vanish while their
-            # bucket commits as done — unrecoverable loss
-            from pdf_extractor_spark.operators.extract import SIZE_CAP_BYTES
-
-            oversize = (
-                src.where(
-                    F.col("html").isNotNull()
-                    & (F.length("html") > SIZE_CAP_BYTES))
-                .select(
-                    "url",
-                    F.lit("size_cap").alias("stage"),
-                    F.concat(
-                        F.lit("payload_over_cap:"), F.length("html")
-                    ).alias("error"),
-                )
-            )
-            quar = (
-                out.where((F.col("meta")["ok"] == "false") & (F.col("page_number") == 1))
-                .select(
-                    "url",
-                    F.lit("extract").alias("stage"),
-                    F.coalesce(F.col("meta")["error"], F.lit("unknown")).alias("error"),
-                )
-                .unionByName(oversize)
-            )
-
-            # commit order: data first (manifest records the buckets — the
-            # checkpoint), then metrics/lineage/quarantine (observability).
-            self.extracted.append(
-                out, summary={"buckets": wave, "buckets_done": buckets_done,
-                              "docs": docs, "failures": failures}
-            )
-            self.metrics.append(self.spark.createDataFrame(mrows, METRICS_DDL))
-            self.quarantine.append(quar)
-            lineage_rows = (
-                self.spark.createDataFrame(
-                    [(b,) for b in wave], "bucket int"
-                )
-                .withColumn("stage", F.lit("extract"))
-                .withColumn("status", F.lit("success"))
-                .withColumn("started_at", started_at)
-                .withColumn("finished_at", F.current_timestamp())
-                .withColumn("docs", F.lit(docs).cast("long"))
-                .withColumn("bytes", F.lit(nbytes).cast("long"))
-                .withColumn("failures", F.lit(failures).cast("long"))
-                .withColumn("attempt", F.lit(1))
-            )
-            self.lineage.append(lineage_rows)
-            return {"docs": docs, "failures": failures, "elapsed_s": time.time() - t0}
-        finally:
-            out.unpersist()
+        self.lineage.append(lineage_rows)
+        return {"docs": docs, "failures": failures, "elapsed_s": time.time() - t0}
 
     # -- reads -----------------------------------------------------------------
     def read_extracted(self) -> DataFrame | None:

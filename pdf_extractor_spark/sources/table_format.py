@@ -603,14 +603,16 @@ class SnapshotTable:
                 removed += 1
         return removed
 
-    def read_incremental(self, spark: SparkSession, since_snapshot: str) -> DataFrame | None:
+    def read_incremental(self, spark: SparkSession,
+                         since_snapshot: str | None) -> DataFrame | None:
         """Rows appended strictly AFTER `since_snapshot` (Iceberg
         incremental-scan analogue): the data dirs on the parent chain from
-        CURRENT down to — excluding — the given snapshot. Drives downstream
-        incremental consumers (e.g. re-running dedup only over new docs)
-        without a full rescan. Raises if the chain was broken by an
-        overwrite/compact commit in between (incremental semantics are
-        append-only, same restriction as Iceberg)."""
+        CURRENT down to — excluding — the given snapshot; ``None`` means
+        since the table was empty. Drives downstream incremental consumers
+        (e.g. re-running dedup only over new docs) without a full rescan.
+        Raises if the chain was broken by an overwrite/compact commit in
+        between (incremental semantics are append-only, same restriction
+        as Iceberg)."""
         cur = self.current_manifest()
         if cur is None:
             return None
@@ -641,7 +643,7 @@ class SnapshotTable:
                 )
             parent = m.get("parent_id")
             m = by_id.get(parent) if parent else None
-        if m is None:
+        if m is None and since_snapshot is not None:
             raise ValueError(f"snapshot {since_snapshot} not on the CURRENT chain")
         if not new_dirs:
             return spark.createDataFrame(

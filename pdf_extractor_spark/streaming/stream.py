@@ -153,24 +153,21 @@ def read_pages_stream(spark: SparkSession, pages_dir: str,
     )
 
 
-def extract_pages_stream(pages: DataFrame,
-                         size_cap_bytes: int | None = None) -> DataFrame:
-    """Streaming variant of the flagship extraction pass: the SAME Arrow
-    kernel batch function as batch run_extract (no second code path — the
-    kernels never know whether the DataFrame is streaming), applied per
+def extract_pages_stream(pages: DataFrame) -> DataFrame:
+    """Streaming variant of the flagship extraction pass: the SAME prologue
+    and Arrow kernel batch function as batch run_extract (no second code
+    path — the kernels never know whether the DataFrame is streaming), so
+    an over-cap page yields the same ``size_cap`` not-ok row. Applied per
     micro-batch. The batch path's salted repartition is intentionally
     absent: in a stream, micro-batch sizing (maxFilesPerTrigger /
     maxBytesPerTrigger) bounds per-trigger work, and a per-batch shuffle
     would only add latency. Stateless — no watermark needed; append mode."""
     from pdf_extractor_spark.operators.extract import (
-        EXTRACTED_SCHEMA, SIZE_CAP_BYTES, _extract_arrow_batches,
-        eligible_pages,
+        EXTRACTED_SCHEMA, _extract_arrow_batches, eligible_pages,
     )
 
-    # the SHARED batch prologue (select + size cap) — one policy, no drift
-    src = eligible_pages(
-        pages, SIZE_CAP_BYTES if size_cap_bytes is None else size_cap_bytes)
-    src = src.withColumn("partition_id", F.spark_partition_id())
+    src = eligible_pages(pages).withColumn(
+        "partition_id", F.spark_partition_id())
     return src.mapInArrow(_extract_arrow_batches, EXTRACTED_SCHEMA)
 
 

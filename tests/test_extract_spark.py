@@ -128,11 +128,14 @@ def test_salted_repartition_defuses_host_skew(spark):
 
 def test_oversized_payloads_routed_not_dropped(spark):
     """Payloads over oversize_bytes go through the dedicated big-bin pass and
-    still produce output; payloads over the 20 MB cap are excluded."""
+    still produce output; a payload over the 20 MB cap yields one not-ok
+    size_cap row instead of text."""
     import pandas as pd
 
     from pdf_extractor_spark.corpus import _wrap  # noqa: F401  (html builder)
-    from pdf_extractor_spark.operators.extract import run_extract
+    from pdf_extractor_spark.operators.extract import (
+        SIZE_CAP_BYTES, run_extract,
+    )
 
     big_body = ("<p>" + "big payload text. " * 50 + "</p>")
     huge = b"<html><body>" + big_body.encode() * 80 + b"</body></html>"
@@ -143,15 +146,20 @@ def test_oversized_payloads_routed_not_dropped(spark):
             "html": [
                 b"<html><body><p>small doc</p></body></html>",
                 huge,
-                b"x" * (len(huge) + 100),
+                b"x" * (SIZE_CAP_BYTES + 100),
             ],
         }
     )
     df = spark.createDataFrame(rows, "url string, warc_ts timestamp, html binary")
-    out = run_extract(df, num_partitions=4, oversize_bytes=1000,
-                      size_cap_bytes=len(huge) + 10)
-    urls = {r["url"] for r in out.select("url").collect()}
-    assert urls == {"u://small", "u://big"}  # big extracted, overcap excluded
+    out = run_extract(df, num_partitions=4, oversize_bytes=1000)
+    got = {r["url"]: r for r in out.collect()}
+    assert set(got) == {"u://small", "u://big", "u://overcap"}
+    assert got["u://big"]["meta"]["ok"] == "true"
+    assert "big payload text" in got["u://big"]["text"]
+    assert got["u://overcap"]["meta"] == {
+        "ok": "false",
+        "error": f"size_cap: payload_over_cap:{SIZE_CAP_BYTES + 100}"}
+    assert got["u://overcap"]["text"] == ""
 
 
 def test_image_payload_dispatch_needs_ocr():
@@ -210,40 +218,47 @@ def test_tune_arrow_batch_shrink_only(spark):
     payload: small pages keep the 256 default (shrink-only — growing
     measured neutral-to-slower), large payloads shrink the batch so the
     per-batch working set stays ~target_batch_bytes, and the floor/ceiling
-    clamp holds. Restores the session conf afterwards."""
-    from pyspark.sql import functions as F
-
+    clamp holds. Leaving the block restores the session conf: the prior
+    value when one was set, unset when none was."""
     from pdf_extractor_spark.operators.extract import tune_arrow_batch
 
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     before = spark.conf.get(key)
     try:
+        spark.conf.set(key, "64")
         small = spark.createDataFrame(
             [(f"u{i}", b"x" * 100) for i in range(50)],
             "url string, html binary")
-        assert tune_arrow_batch(small) == 256
-        assert spark.conf.get(key) == "256"
+        with tune_arrow_batch(small) as rec:
+            assert rec == 256
+            assert spark.conf.get(key) == "256"
+        assert spark.conf.get(key) == "64"  # set before: value restored
 
         big = spark.createDataFrame(
             [(f"u{i}", b"x" * (4 << 20)) for i in range(4)],
             "url string, html binary")
-        rec = tune_arrow_batch(big)
-        assert rec == (32 << 20) // (4 << 20) == 8
-        assert spark.conf.get(key) == "8"
+        spark.conf.unset(key)
+        with tune_arrow_batch(big) as rec:
+            assert rec == (32 << 20) // (4 << 20) == 8
+            assert spark.conf.get(key) == "8"
+        assert spark.conf.get(key, None) is None  # unset before: unset again
 
         # one huge payload in a sea of small ones must still shrink the
         # batch (MAX, not a percentile — the heavy-tail lesson)
         mixed = small.unionByName(spark.createDataFrame(
             [("big", b"y" * (2 << 20))], "url string, html binary"))
-        assert tune_arrow_batch(mixed) == 16
+        with tune_arrow_batch(mixed) as rec:
+            assert rec == 16
 
         # floor clamp: payloads larger than the target can't reach 0
         huge = spark.createDataFrame(
             [("h", b"z" * (40 << 20))], "url string, html binary")
-        assert tune_arrow_batch(huge) == 8
+        with tune_arrow_batch(huge) as rec:
+            assert rec == 8
         # NULL payloads are ignored by the sampler
         nulls = spark.createDataFrame(
             [("n", None)], "url string, html binary")
-        assert tune_arrow_batch(nulls) == 256
+        with tune_arrow_batch(nulls) as rec:
+            assert rec == 256
     finally:
         spark.conf.set(key, before)

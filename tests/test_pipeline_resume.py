@@ -249,9 +249,10 @@ def test_resume_after_compact_and_soft_delete_no_duplicates(spark, tmp_path):
 
 
 def test_oversize_payload_quarantined_not_lost(spark, tmp_path):
-    """A page over the 20 MB cap is excluded from extraction but MUST
-    surface in the quarantine table (silent loss otherwise — its bucket
-    commits as done and resume never retries it)."""
+    """A page over the 20 MB cap yields exactly one not-ok row in the
+    extracted table and MUST surface in the quarantine table (silent loss
+    otherwise — its bucket commits as done and resume never retries it);
+    a resume afterwards is a no-op."""
     import pyspark.sql.functions as F
 
     from pdf_extractor_spark.operators.extract import SIZE_CAP_BYTES
@@ -265,5 +266,12 @@ def test_oversize_payload_quarantined_not_lost(spark, tmp_path):
     quar = job.quarantine.read(spark)
     row = quar.where(F.col("url") == "doc://oversize").collect()
     assert len(row) == 1 and row[0]["stage"] == "size_cap"
-    assert job.read_extracted().where(
-        F.col("url") == "doc://oversize").count() == 0
+    assert row[0]["error"] == f"payload_over_cap:{SIZE_CAP_BYTES + 1}"
+    out = job.read_extracted().where(F.col("url") == "doc://oversize").collect()
+    assert len(out) == 1 and out[0]["meta"]["ok"] == "false"
+    n_rows = job.read_extracted().count()
+
+    again = _job(spark, tmp_path / "oversize").run(pages.unionByName(big))
+    assert again["waves"] == 0 and again["docs"] == 0
+    assert job.read_extracted().count() == n_rows
+    assert job.quarantine.read(spark).count() == quar.count()

@@ -533,14 +533,21 @@ def test_extract_pages_stream_equals_batch(spark, tmp_path):
     extract_pages_stream (same Arrow batch function as run_extract) must
     produce exactly the batch path's rows — byte-identical text, spans,
     meta — across multiple micro-batches (maxFilesPerTrigger=1 over
-    several files exercises the per-trigger path)."""
-    from pdf_extractor_spark.operators.extract import run_extract
+    several files exercises the per-trigger path). A page over the size
+    cap yields the same single size_cap not-ok row on both paths."""
+    from pdf_extractor_spark.operators.extract import (
+        SIZE_CAP_BYTES, run_extract,
+    )
     from pdf_extractor_spark.session import pages_df
     from pdf_extractor_spark.streaming.stream import (
         extract_pages_stream, read_pages_stream, run_stream_to_memory,
     )
 
-    pages = pages_df(spark, 60, 42).select("url", "warc_ts", "html")
+    over = spark.createDataFrame(
+        [("doc://overcap", None, b"x" * (SIZE_CAP_BYTES + 1))],
+        "url string, warc_ts timestamp, html binary")
+    pages = pages_df(spark, 60, 42).select(
+        "url", "warc_ts", "html").unionByName(over)
     pdir = str(tmp_path / "pages")
     pages.repartition(4).write.parquet(pdir)
 
@@ -562,6 +569,13 @@ def test_extract_pages_stream_equals_batch(spark, tmp_path):
     g, b = canon(got), canon(batch)
     assert len(g) == len(b) > 0
     assert g == b
+    capped = batch.where(F.col("url") == "doc://overcap").collect()
+    assert len(capped) == 1
+    assert capped[0]["page_number"] == 1
+    assert capped[0]["payload_bytes"] == SIZE_CAP_BYTES + 1
+    assert capped[0]["meta"] == {
+        "ok": "false",
+        "error": f"size_cap: payload_over_cap:{SIZE_CAP_BYTES + 1}"}
 
 
 def test_streaming_hll_registers_equal_batch_and_bounded(spark):
