@@ -755,8 +755,13 @@ def decode_bmp_gray(payload: bytes) -> list[bytes]:
                 decode_png_gray,
             )
             rows = decode_png_gray(stream)
-        # the embedded stream owns orientation; the header dims must agree
-        # with it or the container is lying — quarantine, don't guess
+        # the embedded stream owns orientation, so rows are never flipped:
+        # per BITMAPINFOHEADER a top-down (negative-height) DIB cannot be
+        # compressed, and for BI_JPEG/BI_PNG biHeight is the height of the
+        # embedded image, whose own top-down row order governs. A positive
+        # height is the spec's form; the negative one pack_bmp_jpeg/_png
+        # write is tolerated. The header dims must agree with the stream
+        # or the container is lying — quarantine, don't guess
         if len(rows) != height or (rows and len(rows[0]) != width):
             raise OcrUnsupported(
                 "BMP embedded stream dimensions disagree with header")

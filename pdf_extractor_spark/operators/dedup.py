@@ -1270,12 +1270,16 @@ def exact_substring_dedup_chars(docs: DataFrame,
     # spread the O(n_chars) kernel across the session's cores: a small-SF
     # corpus arrives as ONE parquet split, which would serialize the whole
     # window pass into a single task; the (doc_id, t) exchange is narrow
-    # and trivially cheaper than the per-char work it parallelizes
+    # and trivially cheaper than the per-char work it parallelizes.
+    # `wins` feeds both the dup count and the semi-join through different
+    # exchanges (no exchange reuse), so it is checkpointed: the kernel
+    # runs once, here, instead of once per consumer
     spark = docs.sparkSession
     wins = (
         t.where(n >= min_len)
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .mapInPandas(_win_kernel, "doc_id long, s int, h binary")
+        .localCheckpoint()
     )
     dup = wins.groupBy("h").agg(F.count("*").alias("c")).where(F.col("c") > 1)
     iv = (

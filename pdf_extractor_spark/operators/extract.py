@@ -14,7 +14,9 @@ SURVEY.md §7 hard parts).
 """
 from __future__ import annotations
 
+import sys
 import time
+import zipimport
 from collections.abc import Iterator
 from contextlib import contextmanager
 
@@ -270,6 +272,20 @@ def _extract_arrow_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Rec
     whose payload the size cap removed yields one ``size_cap`` not-ok row.
     """
     import pyarrow.compute as pc
+
+    # Spark's worker calls importlib.invalidate_caches() at the start of
+    # every task, and on CPython versions whose zipimporter re-reads
+    # eagerly (3.11 does) every cached zip/jar importer then re-parses its
+    # archive's central directory (pyspark.zip, py4j's zip, the Spark jar,
+    # any --py-files zip): tens of ms of CPU per task before a row is
+    # read. Dropping them is safe because the dict is only a cache:
+    # PathFinder rebuilds an entry from sys.path_hooks the next time an
+    # import needs that archive. It pays off because Spark reuses a worker
+    # across the tasks, stages and jobs of a SparkContext, so every later
+    # task on this worker skips the re-read, whatever Python stage it runs.
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[path]
 
     for batch in batches:
         payloads = batch.column("html").to_pylist()

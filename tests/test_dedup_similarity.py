@@ -338,6 +338,19 @@ def test_exact_substring_chars_merges_overlapping_spans(spark):
     assert out[4][1] == 120
 
 
+def test_exact_substring_chars_window_kernel_runs_once(spark):
+    """The O(chars) window kernel feeds both the dup count and the
+    semi-join; it runs once (checkpointed while the plan is built), so
+    the plan the caller executes holds no Python stage at all."""
+    docs = spark.createDataFrame(
+        [(1, "left " + "a" * 55), (2, "a" * 55 + " right")], DOCS_DDL)
+    out = dedup.exact_substring_dedup_chars(docs, min_len=50)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan
+    got = {r["doc_id"]: r["clean_text"] for r in out.collect()}
+    assert got == {1: "left ", 2: " right"}
+
+
 def test_kmeans_ivf_recall_not_worse_than_seed_ivf(spark):
     import numpy as np
 

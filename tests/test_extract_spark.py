@@ -162,6 +162,55 @@ def test_oversized_payloads_routed_not_dropped(spark):
     assert got["u://overcap"]["text"] == ""
 
 
+def test_kernel_drops_cached_zip_importers(tmp_path):
+    """The extraction kernel empties sys.path_importer_cache of zip
+    importers (so a reused Python worker stops re-reading pyspark.zip on
+    every task), and imports from the same archive still work after."""
+    import sys
+    import zipfile
+    import zipimport
+
+    import pyarrow as pa
+
+    from pdf_extractor_spark.operators.extract import _extract_arrow_batches
+
+    archive = tmp_path / "kernel_cache_probe.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zcache_probe_a.py", "VALUE = 'a'\n")
+        z.writestr("zcache_probe_b.py", "VALUE = 'b'\n")
+    entry = str(archive)
+    sys.path.insert(0, entry)
+    try:
+        import zcache_probe_a
+
+        assert zcache_probe_a.VALUE == "a"
+        assert isinstance(sys.path_importer_cache[entry], zipimport.zipimporter)
+
+        html = b"<html><body><p>one row</p></body></html>"
+        batch = pa.RecordBatch.from_pydict(
+            {
+                "url": ["u://one"],
+                "warc_ts": pa.array([0], pa.timestamp("us", tz="UTC")),
+                "html": [html],
+                "payload_bytes": pa.array([len(html)], pa.int64()),
+                "partition_id": pa.array([0], pa.int32()),
+            }
+        )
+        out = list(_extract_arrow_batches(iter([batch])))
+        assert sum(b.num_rows for b in out) == 1
+
+        assert not any(isinstance(f, zipimport.zipimporter)
+                       for f in sys.path_importer_cache.values())
+        import zcache_probe_b
+
+        assert zcache_probe_b.VALUE == "b"
+    finally:
+        sys.path.remove(entry)
+        sys.path_importer_cache.pop(entry, None)
+        for name in ("zcache_probe_a", "zcache_probe_b"):
+            sys.modules.pop(name, None)
+
+
 def test_image_payload_dispatch_needs_ocr():
     """Image payloads (reference enums.py image-capable types) must route to
     a loud needs-OCR quarantine row, not silently-empty text."""

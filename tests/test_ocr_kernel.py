@@ -267,6 +267,20 @@ def test_embedded_codec_bmp_profiles_roundtrip():
         K.decode_bmp_gray(trunc)
 
 
+def test_embedded_png_bmp_positive_height_keeps_stream_order():
+    """BI_PNG with a positive (spec-form) biHeight decodes in the embedded
+    PNG's own top-down row order: for compression 4/5 biHeight is the
+    embedded image's height and carries no bottom-up flip."""
+    from pdf_extractor_spark.kernels.png_kernel import pack_png_gray
+
+    px = [bytes([0] * 4), bytes([85] * 4), bytes([170] * 4)]
+    body = pack_png_gray(px)
+    payload = K._bmp_headers(4, len(px), 0, 5, b"", len(body)) + body
+    (height,) = struct.unpack_from("<i", payload, 22)
+    assert height == 3
+    assert [bytes(r) for r in K.decode_bmp_gray(payload)] == px
+
+
 def test_rle4_absolute_mode_and_escapes():
     """The RLE4 interpreter: absolute-mode packets carry PACKED nibbles
     padded to a word boundary; encoded runs alternate the value byte's

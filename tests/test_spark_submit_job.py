@@ -24,6 +24,7 @@ import duckdb
 
 REPO = Path("/root/repo")
 SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
+CORES = 4  # --master local[CORES]; job.py --cluster defers to it
 
 
 def _zip_package(tmp: Path) -> Path:
@@ -37,7 +38,7 @@ def _zip_package(tmp: Path) -> Path:
 def _submit(zpath: Path, out: Path, extra: list[str]) -> dict:
     cmd = [
         SPARK_SUBMIT,
-        "--master", "local[4]",
+        "--master", f"local[{CORES}]",
         "--py-files", str(zpath),
         "--conf", "spark.ui.enabled=false",
         "--conf", "spark.sql.shuffle.partitions=8",
@@ -45,6 +46,7 @@ def _submit(zpath: Path, out: Path, extra: list[str]) -> dict:
         "--output", str(out),
         "--n-buckets", "8",
         "--wave-size", "4",
+        "--cluster",
         *extra,
     ]
     proc = subprocess.run(
@@ -63,6 +65,21 @@ def _current_data_dirs(table_root: Path) -> list[str]:
     return manifest["data_dirs"]
 
 
+def _planted_failures(n_docs: int, partitions: int) -> int:
+    """Docs the corpus plants as expected_ok=False (empty/degenerate HTML
+    and PDF) for ``job.py --generate n_docs``: one generate_chunk per
+    partition, as in corpus.pages_df_distributed, so the count depends
+    on the partition count the job generated with."""
+    from pdf_extractor_spark import corpus
+
+    per, extra = divmod(n_docs, partitions)
+    return sum(
+        not d.expected_ok
+        for cid in range(partitions)
+        for d in corpus.generate_chunk(cid, per + (cid < extra), seed=42)
+    )
+
+
 def test_spark_submit_pyfiles_end_to_end(tmp_path):
     zpath = _zip_package(tmp_path)
     out = tmp_path / "extracted"
@@ -71,9 +88,10 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
     assert totals["docs"] == 400
     assert totals["buckets"] == 8
     assert totals["waves"] == 2
-    # the synthetic corpus plants image (needs-OCR) payloads on a fixed
-    # cadence — those rows fail loudly into quarantine by design
-    assert totals["failures"] == 20
+    # the corpus plants degenerate HTML/PDF docs that fail into quarantine
+    # by design; job.py generates on min(2 × defaultParallelism, 64)
+    # partitions, which is 2 × CORES under the submit-time master
+    assert totals["failures"] == _planted_failures(400, min(2 * CORES, 64))
 
     # idempotent re-submit against the same output root: the manifest chain
     # marks every bucket done, so the second run has no pending work
