@@ -316,27 +316,24 @@ def _hash_2b(password: bytes, salt: bytes, udata: bytes) -> bytes:
     and the last byte of E is ≤ round − 32. (R5, Adobe's pre-ISO
     extension, is the degenerate single SHA-256 — handled by callers.)
 
-    Memoized TWICE: the in-process lru turns repeat derivations into
-    lookups, and a NODE-LOCAL disk memo (content-keyed, 32-byte values)
-    survives Python-worker churn — Spark respawns workers between
-    stages, and every respawn otherwise re-pays ~0.25 s per distinct
-    (password, salt, udata) tuple; with 32 workers × bounded salt
-    classes that is seconds of pure re-derivation per wave. On a real
-    cluster the memo amortizes per NODE instead of per worker process.
-    Neither layer weakens first-sight cost for genuinely new inputs.
-    Set SPARK_GRAFT_KDF_CACHE="" to disable the disk layer.
+    Memoized in-process by the lru: Spark reuses Python workers across
+    tasks, stages and jobs, so repeat derivations in a worker are
+    lookups. An OPT-IN disk memo (content-keyed, 32-byte values) also
+    shares results between processes: set SPARK_GRAFT_KDF_CACHE to a
+    directory to enable it; unset or empty means no disk layer, so no
+    derived key is ever written to disk by default. Neither layer
+    weakens first-sight cost for genuinely new inputs.
 
-    Trust boundary (review finding): /tmp is shared and a KDF output IS
-    key material, so the memo is only honored when the cache directory
-    is OWNED by this uid and not group/world-writable — a foreign or
-    pre-planted directory is ignored (derive fresh, write nothing)
-    rather than trusted; entries are written 0o600 under a 0o700 dir."""
+    Trust boundary: a KDF output IS key material, so the memo is only
+    honored when the cache directory is OWNED by this uid and not
+    group/world-writable — a foreign, linked or pre-planted directory is
+    ignored (derive fresh, write nothing) rather than trusted; entries
+    are written 0o600 under a 0o700 dir."""
     import hashlib
     import os
     import stat
 
-    cache_dir = os.environ.get("SPARK_GRAFT_KDF_CACHE",
-                               "/tmp/pdfx_kdf_cache")
+    cache_dir = os.environ.get("SPARK_GRAFT_KDF_CACHE")
     path = None
     if cache_dir:
         try:

@@ -9,8 +9,9 @@ At 100 TB scale this plan is: parquet scan (pruned to the 3 needed columns) →
 shuffle on pmod(hash(url)+salt, n) → per-partition Arrow batches through the
 Python workers → columnar write. No joins, no second shuffle; throughput is
 bounded by kernel CPU, which is why the kernels avoid any per-row Spark
-round-trips and the Arrow batch size is capped (multi-MB payloads,
-SURVEY.md §7 hard parts).
+round-trips. Arrow batches are capped in records and bytes by the session
+(``session.get_spark``, multi-MB payloads, SURVEY.md §7 hard parts), so
+this module sets no batch policy of its own.
 """
 from __future__ import annotations
 
@@ -18,7 +19,6 @@ import sys
 import time
 import zipimport
 from collections.abc import Iterator
-from contextlib import contextmanager
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
@@ -372,106 +372,22 @@ def eligible_pages(pages: DataFrame) -> DataFrame:
     return pages.select(*cols, nbytes.alias("payload_bytes"))
 
 
-@contextmanager
-def tune_arrow_batch(pages: DataFrame, size_col: str = "html",
-                     target_batch_bytes: int = 32 << 20,
-                     sample_rows: int = 10_000,
-                     lo: int = 8, hi: int = 256) -> Iterator[int]:
-    """Derive ``spark.sql.execution.arrow.maxRecordsPerBatch`` from the
-    scan's payload-size stats (round-4 verdict item 10): records/batch =
-    target_batch_bytes / max(sampled payload size), clamped to [lo, hi].
-
-    SHRINK-ONLY by design, from measurement: growing batches past the
-    256 default measured NEUTRAL-TO-SLOWER on a small-page corpus (2.60 s
-    fixed-256 vs 2.70 s at 4096 over 48k pages — the kernel loop, not
-    per-batch overhead, dominates), so there is no win to chase upward.
-    The real hazard is downward: at the book/manual tier a 256-row batch
-    of multi-MB payloads is a ~0.3-1 GB working set PER WORKER in the
-    JVM↔Python channel; sizing by the sampled MAX (p90 measured WRONG on
-    heavy-tailed mixes — one 2 MB payload per 50 rows leaves p90 tiny and
-    re-inflates the batch) bounds every batch at ~target_batch_bytes
-    (1.3 MB/doc corpus: rec=16, 64.5 s → 62.4 s with the working set
-    33 MB instead of 333 MB per batch). The sample is LIMITed — a handful
-    of input partitions, never a corpus scan.
-
-    Sampling is PER-PARTITION (review finding): a bare limit(N) reads
-    only the first input partitions, so a heavy tier concentrated in
-    later files would never be seen — exactly the heavy-tail blindness
-    this function exists to prevent, reintroduced at file granularity.
-    Instead every partition contributes its first Arrow batch's sizes
-    (the task stops after one batch), so layout order cannot hide a
-    tier; cost is one small read per partition, once per job.
-
-    A context manager yielding the chosen records/batch. The conf is
-    session-global and read when a plan EXECUTES, so the jobs that should
-    use it run inside the ``with`` block; on exit the prior value is
-    restored, or the key unset when it was unset before."""
-    import pandas as pd
-
-    spark = pages.sparkSession
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-
-    def _first_batch_sizes(it):
-        for pdf in it:
-            yield pd.DataFrame(
-                {"n": pdf["n"].dropna().head(sample_rows)})
-            break  # one Arrow batch per partition — then stop reading
-
-    row = (
-        pages.select(F.length(size_col).alias("n"))
-        .mapInPandas(_first_batch_sizes, "n long")
-        .agg(F.max("n").alias("mx"))
-        .collect()[0]
-    )
-    mx = int(row["mx"] or 1)
-    rec = max(lo, min(hi, target_batch_bytes // max(mx, 1)))
-    # conf.get(key, None) is None when the key was never set
-    before = spark.conf.get(key, None)
-    spark.conf.set(key, str(rec))
-    try:
-        yield rec
-    finally:
-        if before is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, before)
-
-
-def run_extract(pages: DataFrame, num_partitions: int = 32, salt: int = 0,
-                oversize_bytes: int | None = None) -> DataFrame:
+def run_extract(pages: DataFrame, num_partitions: int = 32,
+                salt: int = 0) -> DataFrame:
     """pages(url, warc_ts, html, ...) → extracted DataFrame (one row/page).
 
-    - column pruning: only url/warc_ts/html reach the scan
-    - size cap mirrors the reference 20 MB upload cap (main.py:386-392):
-      a row over the cap yields one not-ok page-1 row whose meta error is
-      ``size_cap: payload_over_cap:<bytes>`` (see :func:`eligible_pages`)
-    - optional size-based binning (SURVEY.md §4 skew row): with
-      `oversize_bytes` set, payloads above it run in a dedicated pass
-      partitioned on the url alone, so a handful of huge documents cannot
-      stall the main wave's partitions. This costs a second scan of the
-      source (the two bins cannot be partition-pruned apart), so it is OFF
-      by default: at the reference's 20 MB cap the worst single document is
-      ~8 s of kernel time — noise in a 1000-executor wave — and the salted
-      hash already spreads big documents uniformly. Turn it on when the cap
-      is raised to the 100 MB-1 GB book/manual tier, where one payload is
-      minutes of work and the straggler dominates wave latency.
+    One pass: :func:`eligible_pages` (column pruning to url/warc_ts/html,
+    the reference 20 MB upload cap of main.py:386-392) → salted url-hash
+    repartition → ``mapInArrow`` kernel. A row over the cap yields one
+    not-ok page-1 row whose meta error is ``size_cap:
+    payload_over_cap:<bytes>``. Arrow batches are bounded in records and
+    bytes by the session (``session.get_spark``), so big in-cap payloads
+    need no separate pass: the salted hash spreads them over partitions
+    and the byte cap keeps each batch's working set bounded.
     """
-    src = eligible_pages(pages)
-    if oversize_bytes is None:
-        src = salted_repartition(src, num_partitions, salt)
-        src = src.withColumn("partition_id", F.spark_partition_id())
-        return src.mapInArrow(_extract_arrow_batches, EXTRACTED_SCHEMA)
-
-    is_big = F.length("html") > oversize_bytes
-    normal = src.where(F.col("html").isNull() | ~is_big)
-    normal = salted_repartition(normal, num_partitions, salt)
-    normal = normal.withColumn("partition_id", F.spark_partition_id())
-    out = normal.mapInArrow(_extract_arrow_batches, EXTRACTED_SCHEMA)
-
-    big = src.where(F.col("html").isNotNull() & is_big)
-    big = big.repartition(num_partitions, F.col("url"))  # ~1 doc per task
-    big = big.withColumn("partition_id", F.spark_partition_id())
-    return out.unionByName(big.mapInArrow(_extract_arrow_batches, EXTRACTED_SCHEMA))
+    src = salted_repartition(eligible_pages(pages), num_partitions, salt)
+    src = src.withColumn("partition_id", F.spark_partition_id())
+    return src.mapInArrow(_extract_arrow_batches, EXTRACTED_SCHEMA)
 
 
 def annotation_span_intersections(extracted: DataFrame,

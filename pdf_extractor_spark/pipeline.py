@@ -32,7 +32,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_extractor_spark.operators.extract import run_extract, tune_arrow_batch
+from pdf_extractor_spark.operators.extract import run_extract
 from pdf_extractor_spark.sources.table_format import SnapshotTable
 
 LINEAGE_DDL = (
@@ -186,13 +186,11 @@ class ExtractionJob:
     # -- main entry ------------------------------------------------------------
     def run(self, pages: DataFrame, max_waves: int | None = None) -> dict:
         """Process all pending buckets in waves; resumable and idempotent.
-        The Arrow batch size is tuned once per job from the sampled payload
-        sizes and restored when the waves finish (tune_arrow_batch)."""
-        with tune_arrow_batch(pages):
-            return self._run_waves(pages, max_waves)
-
-    def _run_waves(self, pages: DataFrame,
-                   max_waves: int | None = None) -> dict:
+        Each wave is one ``run_extract`` pass; the job launches no other
+        Spark work before its first wave, so a run with nothing pending
+        reads only the output table's manifests, never the source. Arrow
+        batches are bounded by the session's record and byte caps
+        (``session.get_spark``)."""
         pages_b = self._with_bucket(pages)
         done = self.done_buckets()
         pending = [b for b in range(self.n_buckets) if b not in done]

@@ -1,9 +1,14 @@
 """SparkSession factory with the engine's standard configs.
 
 Sized for the sandbox (local[N], single JVM) but every knob is the one you'd
-set on a real cluster: AQE on, Arrow on, small Arrow batches because payload
-rows are multi-MB (SURVEY.md §4 vectorization row), shuffle partitions ≈
-2-3× cores.
+set on a real cluster: AQE on, Arrow on, shuffle partitions ≈ 2-3× cores.
+
+This is the only place that sets the Arrow batch policy (SURVEY.md §4
+vectorization row): each engine→Python batch closes as soon as it holds
+256 records or 32 MB (Spark's default byte cap is 64 MB), so a batch
+exceeds 32 MB by at most its last row. Spark measures each batch's real
+bytes as it fills, so the cap holds on every path — ``run_extract``,
+``ExtractionJob``, the streaming pass — whatever the payload sizes.
 """
 from __future__ import annotations
 
@@ -30,9 +35,12 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # payload rows are multi-MB: keep Arrow batches small so the
-        # JVM<->Python channel and kernel working set stay bounded
+        # payload rows can be multi-MB: cap records AND bytes so the
+        # JVM<->Python channel and kernel working set stay bounded. More
+        # than 256 records measured neutral to slower on small pages
+        # (BENCH.md "Arrow batch auto-tuning").
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(32 << 20))
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

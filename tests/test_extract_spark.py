@@ -127,9 +127,9 @@ def test_salted_repartition_defuses_host_skew(spark):
 
 
 def test_oversized_payloads_routed_not_dropped(spark):
-    """Payloads over oversize_bytes go through the dedicated big-bin pass and
-    still produce output; a payload over the 20 MB cap yields one not-ok
-    size_cap row instead of text."""
+    """A big in-cap payload goes through the single extraction pass and
+    produces text; a payload over the 20 MB cap yields one not-ok size_cap
+    row instead of text."""
     import pandas as pd
 
     from pdf_extractor_spark.corpus import _wrap  # noqa: F401  (html builder)
@@ -151,7 +151,7 @@ def test_oversized_payloads_routed_not_dropped(spark):
         }
     )
     df = spark.createDataFrame(rows, "url string, warc_ts timestamp, html binary")
-    out = run_extract(df, num_partitions=4, oversize_bytes=1000)
+    out = run_extract(df, num_partitions=4)
     got = {r["url"]: r for r in out.collect()}
     assert set(got) == {"u://small", "u://big", "u://overcap"}
     assert got["u://big"]["meta"]["ok"] == "true"
@@ -262,52 +262,53 @@ def test_image_payloads_quarantined_by_pipeline(spark, tmp_path):
     assert needs == n_img and n_img > 0
 
 
-def test_tune_arrow_batch_shrink_only(spark):
-    """The batch tuner sizes maxRecordsPerBatch from the sampled MAX
-    payload: small pages keep the 256 default (shrink-only — growing
-    measured neutral-to-slower), large payloads shrink the batch so the
-    per-batch working set stays ~target_batch_bytes, and the floor/ceiling
-    clamp holds. Leaving the block restores the session conf: the prior
-    value when one was set, unset when none was."""
-    from pdf_extractor_spark.operators.extract import tune_arrow_batch
+def test_arrow_batches_bounded_by_session_byte_cap(spark):
+    """The session (get_spark) caps every engine→Python Arrow batch at 32 MB
+    as well as 256 records. Spark closes a batch as soon as it holds the
+    cap, so no input batch of the extraction prologue's mapInArrow
+    exceeds the cap by more than one row:
 
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    before = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "64")
-        small = spark.createDataFrame(
-            [(f"u{i}", b"x" * 100) for i in range(50)],
-            "url string, html binary")
-        with tune_arrow_batch(small) as rec:
-            assert rec == 256
-            assert spark.conf.get(key) == "256"
-        assert spark.conf.get(key) == "64"  # set before: value restored
+    (a) multi-MB payloads totalling several caps in ONE partition arrive
+        in several batches, none over cap + one payload;
+    (b) the heavy tail: one 2 MB+ payload among ~200 smaller rows that
+        fit the cap without it still splits the batch by its real bytes.
+    """
+    from pdf_extractor_spark.operators.extract import eligible_pages
 
-        big = spark.createDataFrame(
-            [(f"u{i}", b"x" * (4 << 20)) for i in range(4)],
-            "url string, html binary")
-        spark.conf.unset(key)
-        with tune_arrow_batch(big) as rec:
-            assert rec == (32 << 20) // (4 << 20) == 8
-            assert spark.conf.get(key) == "8"
-        assert spark.conf.get(key, None) is None  # unset before: unset again
+    cap = int(spark.conf.get("spark.sql.execution.arrow.maxBytesPerBatch"))
+    assert cap == 32 << 20
 
-        # one huge payload in a sea of small ones must still shrink the
-        # batch (MAX, not a percentile — the heavy-tail lesson)
-        mixed = small.unionByName(spark.createDataFrame(
-            [("big", b"y" * (2 << 20))], "url string, html binary"))
-        with tune_arrow_batch(mixed) as rec:
-            assert rec == 16
+    def probe(batches):
+        import pyarrow as pa
 
-        # floor clamp: payloads larger than the target can't reach 0
-        huge = spark.createDataFrame(
-            [("h", b"z" * (40 << 20))], "url string, html binary")
-        with tune_arrow_batch(huge) as rec:
-            assert rec == 8
-        # NULL payloads are ignored by the sampler
-        nulls = spark.createDataFrame(
-            [("n", None)], "url string, html binary")
-        with tune_arrow_batch(nulls) as rec:
-            assert rec == 256
-    finally:
-        spark.conf.set(key, before)
+        for b in batches:
+            yield pa.RecordBatch.from_pydict(
+                {"num_rows": [b.num_rows], "nbytes": [b.nbytes]})
+
+    def batches(pages):
+        got = (eligible_pages(pages)
+               .mapInArrow(probe, "num_rows long, nbytes long").collect())
+        return [(r["num_rows"], r["nbytes"]) for r in got]
+
+    def pages(n, size_expr):
+        return spark.range(n, numPartitions=1).select(
+            F.concat(F.lit("u://"), F.col("id").cast("string")).alias("url"),
+            F.current_timestamp().alias("warc_ts"),
+            F.expr(f"repeat('x', {size_expr})").cast("binary").alias("html"),
+        )
+
+    # (a) 30 x 4 MB = 120 MB in one partition: > 3 caps
+    big = 4 << 20
+    got = batches(pages(30, big))
+    assert sum(n for n, _ in got) == 30
+    assert len(got) >= 4
+    assert max(nb for _, nb in got) <= cap + big + (64 << 10)
+
+    # (b) 200 x 160 KB = 31.25 MB fits the cap; one 2.5 MB payload in the
+    # middle of the partition takes the total past it
+    heavy = (5 << 20) // 2
+    got = batches(pages(
+        201, f"CASE WHEN id = 100 THEN {heavy} ELSE {160 << 10} END"))
+    assert sum(n for n, _ in got) == 201
+    assert len(got) >= 2
+    assert max(nb for _, nb in got) <= cap + heavy + (64 << 10)

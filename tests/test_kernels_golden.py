@@ -839,6 +839,88 @@ def test_aes_fips_197_vectors():
         pkcs7_unpad(b"\x00" * 15 + b"\x11")  # pad byte 17 > block
 
 
+_KDF_ARGS = (b"kdf-test-password", b"8bytesal", b"")
+
+
+def _kdf_fresh(monkeypatch, cache_dir):
+    """One Algorithm 2.B derivation from an empty lru, with the disk memo
+    pointed at ``cache_dir`` (None: env unset)."""
+    from pdf_extractor_spark.kernels.aes import _hash_2b
+
+    if cache_dir is None:
+        monkeypatch.delenv("SPARK_GRAFT_KDF_CACHE", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_KDF_CACHE", str(cache_dir))
+    _hash_2b.cache_clear()
+    try:
+        return _hash_2b(*_KDF_ARGS)
+    finally:
+        _hash_2b.cache_clear()
+
+
+def test_kdf_disk_memo_is_opt_in(monkeypatch):
+    """With SPARK_GRAFT_KDF_CACHE unset the KDF touches no file: no cache
+    directory is made and no derived key is written anywhere."""
+    import os
+
+    calls = []
+
+    def spy(fn):
+        def wrapped(*a, **k):
+            calls.append(a)
+            return fn(*a, **k)
+        return wrapped
+
+    monkeypatch.setattr(os, "makedirs", spy(os.makedirs))
+    monkeypatch.setattr(os, "open", spy(os.open))
+    key = _kdf_fresh(monkeypatch, None)
+    assert len(key) == 32
+    assert calls == []
+
+
+def test_kdf_disk_memo_owned_dir_round_trip(monkeypatch, tmp_path):
+    """An owned 0700 cache dir: the derived key is written 0600, and the
+    next derivation (fresh lru) returns what the entry holds."""
+    import os
+    import stat
+
+    want = _kdf_fresh(monkeypatch, None)
+    d = tmp_path / "kdf"
+    d.mkdir()
+    d.chmod(0o700)
+    assert _kdf_fresh(monkeypatch, d) == want
+    (entry,) = list(d.iterdir())
+    assert stat.S_IMODE(os.lstat(entry).st_mode) == 0o600
+    assert entry.read_bytes() == want
+
+    planted = bytes(range(32))
+    entry.write_bytes(planted)
+    assert _kdf_fresh(monkeypatch, d) == planted
+
+
+def test_kdf_disk_memo_ignores_symlinked_dir(monkeypatch, tmp_path):
+    """A symlink at the cache path is not trusted, even to an owned 0700
+    dir: the key is derived fresh and nothing is written through it."""
+    want = _kdf_fresh(monkeypatch, None)
+    real = tmp_path / "real"
+    real.mkdir()
+    real.chmod(0o700)
+    link = tmp_path / "link"
+    link.symlink_to(real, target_is_directory=True)
+    assert _kdf_fresh(monkeypatch, link) == want
+    assert list(real.iterdir()) == []
+
+
+def test_kdf_disk_memo_ignores_group_writable_dir(monkeypatch, tmp_path):
+    """A group-writable cache dir is not trusted: nothing is written."""
+    want = _kdf_fresh(monkeypatch, None)
+    d = tmp_path / "kdf"
+    d.mkdir()
+    d.chmod(0o770)
+    assert _kdf_fresh(monkeypatch, d) == want
+    assert list(d.iterdir()) == []
+
+
 def test_pdf_encryption_quarantines():
     """Out-of-profile encryption degrades loudly, never raises: a REAL
     user password (empty-password key rejected against /U) at both the

@@ -1,17 +1,16 @@
 """Skew benchmark for run_extract (round-2 verdict item 6): a pathological
-corpus — one host carrying 50% of all documents, plus a handful of near-cap
+corpus — one host carrying 50% of all documents, plus a handful of big
 payloads — measured through the extraction pass under each mitigation, to
-justify the defaults documented at operators/extract.py (salted url-hash
-partitioning always on; size binning opt-in via `oversize_bytes`).
+justify the salted url-hash partitioning documented at
+operators/extract.py. Big in-cap payloads need no separate pass: the
+session's Arrow byte cap (session.get_spark) bounds every batch they ride in.
 
 Arms:
   host_partitioned : repartition on HOST (the naive politeness layout) —
                      half the corpus lands in one task.
   salted (default) : salted_repartition on hash(url)+salt.
-  big+salted       : 8 near-cap (~4 MB) payloads added, binning OFF —
-                     the stragglers ride inside normal partitions.
-  big+binned       : same corpus, oversize_bytes=1 MB — big payloads run
-                     in a dedicated ~1-doc-per-task pass.
+  big+salted       : 8 big (~4 MB) payloads added — the stragglers ride
+                     inside normal partitions.
 
 Usage: python tools/skew_bench.py      # prints one JSON line
 """
@@ -104,17 +103,10 @@ def main() -> None:
             run_extract(skewed, num_partitions=2 * CPUS, salt=1))),
     }
 
-    # arm 3: near-cap payloads, binning OFF (stragglers inside the wave)
+    # arm 3: big payloads (stragglers inside the wave)
     out["arms"]["big_salted"] = {
         "wall_s": timed(lambda: force(
             run_extract(with_big, num_partitions=2 * CPUS, salt=1))),
-    }
-
-    # arm 4: same corpus, oversize binning ON (dedicated ~1-doc tasks)
-    out["arms"]["big_binned"] = {
-        "wall_s": timed(lambda: force(
-            run_extract(with_big, num_partitions=2 * CPUS, salt=1,
-                        oversize_bytes=1024 * 1024))),
     }
 
     print(json.dumps(out))
