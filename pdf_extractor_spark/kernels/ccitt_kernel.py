@@ -156,18 +156,33 @@ def _compile(*tables: dict[int, str]) -> dict[tuple[int, int], int]:
     return out
 
 
-_WHITE_DEC = _compile(_WHITE_TERM, _WHITE_MAKEUP, _EXT_MAKEUP)
-_BLACK_DEC = _compile(_BLACK_TERM, _BLACK_MAKEUP, _EXT_MAKEUP)
+def _tree(dec: dict[tuple[int, int], object]) -> tuple:
+    """(codebook, lookahead, width): ``width`` is the tree's longest
+    codeword; the lookahead maps every ``width``-bit window to the
+    (length, value) of the codeword it starts with, or None where none
+    does. Prefix-freeness (pinned by test) makes each entry unique."""
+    width = max(ln for ln, _ in dec)
+    lut: list = [None] * (1 << width)
+    for (ln, code), value in dec.items():
+        span = 1 << (width - ln)
+        lut[code * span:(code + 1) * span] = [(ln, value)] * span
+    return dec, lut, width
+
+
+_WHITE_DEC = _tree(_compile(_WHITE_TERM, _WHITE_MAKEUP, _EXT_MAKEUP))
+_BLACK_DEC = _tree(_compile(_BLACK_TERM, _BLACK_MAKEUP, _EXT_MAKEUP))
 _WHITE_ENC = {r: (len(b), int(b, 2))
               for r, b in {**_WHITE_TERM, **_WHITE_MAKEUP,
                            **_EXT_MAKEUP}.items()}
 _BLACK_ENC = {r: (len(b), int(b, 2))
               for r, b in {**_BLACK_TERM, **_BLACK_MAKEUP,
                            **_EXT_MAKEUP}.items()}
-_MODE_DEC = {(len(b), int(b, 2)): ("V", d) for d, b in _MODE_V.items()}
-_MODE_DEC[(len(_MODE_PASS), int(_MODE_PASS, 2))] = ("P", 0)
-_MODE_DEC[(len(_MODE_HORIZ), int(_MODE_HORIZ, 2))] = ("H", 0)
-_MODE_DEC[(len(_MODE_EXT), int(_MODE_EXT, 2))] = ("X", 0)
+_MODE_DEC = _tree({
+    **{(len(b), int(b, 2)): ("V", d) for d, b in _MODE_V.items()},
+    (len(_MODE_PASS), int(_MODE_PASS, 2)): ("P", 0),
+    (len(_MODE_HORIZ), int(_MODE_HORIZ, 2)): ("H", 0),
+    (len(_MODE_EXT), int(_MODE_EXT, 2)): ("X", 0),
+})
 _MAX_CODE_LEN = 14  # longest entry across all trees (13) + margin
 
 
@@ -220,14 +235,12 @@ class _BitReader:
         return v
 
     def peek(self, nbits: int) -> int | None:
-        if self.pos + nbits > self.end:
-            return None
-        v = 0
         p = self.pos
-        for _ in range(nbits):
-            v = (v << 1) | ((self.d[p >> 3] >> (7 - (p & 7))) & 1)
-            p += 1
-        return v
+        if p + nbits > self.end:
+            return None
+        stop = (p + nbits + 7) >> 3  # bytes spanned by the window
+        v = int.from_bytes(self.d[p >> 3:stop], "big")
+        return (v >> ((stop << 3) - p - nbits)) & ((1 << nbits) - 1)
 
     def align(self) -> None:
         self.pos = (self.pos + 7) & ~7
@@ -236,11 +249,19 @@ class _BitReader:
         return self.pos >= self.end
 
 
-def _read_code(bits: _BitReader, table: dict[tuple[int, int], int]):
-    """Walk one prefix-free tree: extend the lookahead a bit at a time
-    until a codeword matches. Prefix-freeness (pinned by test) makes the
-    first match the only parse."""
-    v = 0
+def _read_code(bits: _BitReader, tree: tuple):
+    """Decode one codeword of a prefix-free tree (``_tree``): one probe
+    of its lookahead resolves any codeword when a full window is left.
+    Near the stream end, or on a window no codeword starts, walk instead:
+    extend the peek a bit at a time until a codeword matches, so the
+    error is the one the walk reaches. Prefix-freeness (pinned by test)
+    makes the first match the only parse."""
+    table, lut, width = tree
+    v = bits.peek(width)
+    if v is not None and lut[v] is not None:
+        ln, value = lut[v]
+        bits.pos += ln
+        return value
     for ln in range(1, _MAX_CODE_LEN + 1):
         b = bits.peek(ln)
         if b is None:

@@ -22,6 +22,16 @@ Profile (everything else raises ``OcrUnsupported`` → loud quarantine):
   entropy-decoded to keep the bitstream in sync
 - restart intervals (DRI/RSTn) honored; 0xFF00 byte stuffing unstuffed
 
+Entropy decoding is table-driven and linear in the stream length: the
+bit reader's accumulator holds only the bits not yet consumed (refilled
+up to 32 bits at a time), ``read_bits(n)`` takes n bits in one shift and
+mask, and every DHT table carries an 8-bit lookahead (built once per
+table) that resolves any code of <= 8 bits in one probe. Longer codes
+and the last bits before a marker or the stream end fall back to the
+bit-at-a-time walk, so a truncated or desynced stream raises the same
+``OcrUnsupported`` at the same bit as a pure bit walk. The baseline path
+runs the IDCT on luminance blocks only.
+
 The encoder twin (``pack_jpeg_gray``) emits a conforming baseline
 grayscale JPEG with near-lossless quantization (all-ones table), so
 rendered OCR pages survive the DCT round-trip bit-safely above the ink
@@ -59,23 +69,34 @@ for _k in range(8):
 del _k, _c, _n
 
 
-def _build_huffman(bits: list[int], vals: bytes) -> dict[tuple[int, int], int]:
-    """T.81 Annex C: (code length, code) -> value."""
+def _build_huffman(bits: list[int], vals: bytes) -> tuple[dict, list[int]]:
+    """T.81 Annex C: (code length, code) -> value, plus the 8-bit
+    lookahead table: for every byte-wide window of the stream whose
+    leading bits are a code of <= 8 bits, ``(length << 8) | value``; 0
+    where the code is longer (``decode_huff`` then walks bit by bit).
+    Canonical codes are prefix-free, so each window has one entry."""
     table: dict[tuple[int, int], int] = {}
+    lut = [0] * 256
     code = 0
     k = 0
     for length in range(1, 17):
         for _ in range(bits[length - 1]):
             table[(length, code)] = vals[k]
+            if length <= 8 and code < 1 << length:
+                span = 1 << (8 - length)
+                lut[code * span:(code + 1) * span] = \
+                    [(length << 8) | vals[k]] * span
             code += 1
             k += 1
         code <<= 1
-    return table
+    return table, lut
 
 
 class _BitReader:
     """Entropy-coded-segment bit reader: unstuffs 0xFF00, stops at
-    markers, byte-aligns across restart markers."""
+    markers, byte-aligns across restart markers. ``acc`` holds exactly
+    the ``nbits`` bits not yet consumed, so its size stays bounded
+    however long the entropy stream is."""
 
     __slots__ = ("data", "pos", "acc", "nbits")
 
@@ -86,37 +107,73 @@ class _BitReader:
         self.nbits = 0
 
     def _fill(self) -> None:
+        """Buffer more bits, or raise where the stream cannot supply the
+        next byte."""
+        nbits = self.nbits
+        self._prefetch()
+        if self.nbits == nbits:
+            if self.pos >= len(self.data):
+                raise OcrUnsupported("jpeg: truncated entropy stream")
+            # restart marker reached while bits were still requested
+            raise OcrUnsupported("jpeg: entropy stream desync at RST")
+
+    def _prefetch(self) -> None:
+        """Top the accumulator up by up to 32 bits without raising:
+        unstuff 0xFF00, pad a marker tail with 1-bits (T.81), and stop
+        before the stream end or an RST marker, so a truncated or
+        desynced stream raises from ``_fill`` only at the bit that needs
+        the missing byte. Reading ahead is safe for ``restart`` and the
+        progressive next-marker search: the bytes it passes are data
+        bytes or stuffed 0xFF00 pairs, never a marker."""
         d = self.data
-        if self.pos >= len(d):
-            raise OcrUnsupported("jpeg: truncated entropy stream")
-        b = d[self.pos]
-        if b == 0xFF:
-            nxt = d[self.pos + 1] if self.pos + 1 < len(d) else 0xD9
-            if nxt == 0x00:
-                self.pos += 2
-            elif 0xD0 <= nxt <= 0xD7:
-                # restart marker reached while bits were still requested
-                raise OcrUnsupported("jpeg: entropy stream desync at RST")
+        pos = self.pos
+        chunk = d[pos:pos + 4]
+        if len(chunk) == 4 and 0xFF not in chunk:
+            self.acc = (self.acc << 32) | int.from_bytes(chunk, "big")
+            self.nbits += 32
+            self.pos = pos + 4
+            return
+        n = len(d)
+        acc = self.acc
+        nbits = self.nbits
+        for _ in range(4):
+            if pos >= n:
+                break
+            b = d[pos]
+            if b == 0xFF:
+                nxt = d[pos + 1] if pos + 1 < n else 0xD9
+                if nxt == 0x00:
+                    pos += 2
+                elif 0xD0 <= nxt <= 0xD7:
+                    break
+                # else: marker tail, padded with 1-bits in place
             else:
-                # EOI/next marker: T.81 pads the tail with 1-bits
-                self.acc = (self.acc << 8) | 0xFF
-                self.nbits += 8
-                return
-        else:
-            self.pos += 1
-        self.acc = (self.acc << 8) | b
-        self.nbits += 8
+                pos += 1
+            acc = (acc << 8) | b
+            nbits += 8
+        self.pos = pos
+        self.acc = acc
+        self.nbits = nbits
 
     def read_bit(self) -> int:
         if self.nbits == 0:
             self._fill()
         self.nbits -= 1
-        return (self.acc >> self.nbits) & 1
+        v = self.acc >> self.nbits
+        self.acc &= (1 << self.nbits) - 1
+        return v
 
     def read_bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
+        if self.nbits < n:
+            self._prefetch()
+            if self.nbits < n:  # the stream's last bits: raise at the bit
+                v = 0
+                for _ in range(n):
+                    v = (v << 1) | self.read_bit()
+                return v
+        self.nbits -= n
+        v = self.acc >> self.nbits
+        self.acc &= (1 << self.nbits) - 1
         return v
 
     def restart(self) -> None:
@@ -131,11 +188,25 @@ class _BitReader:
             self.pos += 1
         raise OcrUnsupported("jpeg: missing restart marker")
 
-    def decode_huff(self, table: dict[tuple[int, int], int]) -> int:
+    def decode_huff(self, table: tuple[dict, list[int]]) -> int:
+        if self.nbits < 8:
+            self._prefetch()
+        nb = self.nbits
+        # before a marker fewer than 8 bits may be buffered: the window is
+        # then zero-padded and only a code within the real bits counts
+        e = table[1][self.acc >> (nb - 8) if nb >= 8 else self.acc << (8 - nb)]
+        if e and e >> 8 <= nb:
+            nb -= e >> 8
+            self.nbits = nb
+            self.acc &= (1 << nb) - 1
+            return e & 0xFF
+        # code longer than the lookahead or than the bits left before a
+        # marker: walk one bit at a time so errors surface at the same bit
+        codes = table[0]
         code = 0
         for length in range(1, 17):
             code = (code << 1) | self.read_bit()
-            v = table.get((length, code))
+            v = codes.get((length, code))
             if v is not None:
                 return v
         raise OcrUnsupported("jpeg: invalid Huffman code")
@@ -147,9 +218,10 @@ def _extend(v: int, t: int) -> int:
 
 
 def _decode_block(r: _BitReader, dc_tab, ac_tab, qt: np.ndarray,
-                  pred: int) -> tuple[np.ndarray, int]:
+                  pred: int, idct: bool) -> tuple[np.ndarray | None, int]:
     """One 8×8 block: DC diff + AC run-lengths → dequantized spatial
-    samples (before level shift)."""
+    samples (before level shift), or None without ``idct`` (chroma
+    blocks are decoded only to stay in sync with the bitstream)."""
     t = r.decode_huff(dc_tab)
     if t > 15:  # T.81: DC categories are <= 11
         raise OcrUnsupported("jpeg: invalid DC category")
@@ -171,6 +243,8 @@ def _decode_block(r: _BitReader, dc_tab, ac_tab, qt: np.ndarray,
             raise OcrUnsupported("jpeg: AC run past block end")
         coef[k] = _extend(r.read_bits(size), size) * qt[k]
         k += 1
+    if not idct:
+        return None, dc
     block = np.zeros((8, 8), dtype=np.float64)
     block.flat[ZIGZAG] = coef
     return _DCT_M.T @ block @ _DCT_M, dc
@@ -411,8 +485,8 @@ def _decode_jpeg_gray(payload: bytes) -> list[bytes]:
     pos = 2
     n = len(payload)
     qtables: dict[int, np.ndarray] = {}
-    huff_dc: dict[int, dict] = {}
-    huff_ac: dict[int, dict] = {}
+    huff_dc: dict[int, tuple] = {}
+    huff_ac: dict[int, tuple] = {}
     frame = None  # (h, w, comps) comps = [(cid, hi, vi, tq)]
     restart_interval = 0
     progressive = False
@@ -536,7 +610,8 @@ def _decode_jpeg_gray(payload: bytes) -> list[bytes]:
                         for by in range(vi):
                             for bx in range(hi):
                                 blk, preds[cid] = _decode_block(
-                                    r, dc_tab, ac_tab, qt, preds[cid])
+                                    r, dc_tab, ac_tab, qt, preds[cid],
+                                    ci == 0)
                                 if ci == 0:
                                     y0 = (my * vi + by) * 8
                                     x0 = (mx * hi + bx) * 8

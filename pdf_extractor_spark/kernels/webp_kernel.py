@@ -27,6 +27,14 @@ extraction tier quarantines loudly instead of mis-reading):
   text, and the encoder's ``use_near`` flavor round-trips previous-row
   copies (distance code 1) through the mapping from real bits.
 
+Prefix codes decode through an 8-bit lookahead built with each code
+(indexed LSB-first, since VP8L packs code bits MSB-first into an
+LSB-first stream): one probe resolves any code of <= 8 bits; longer
+codes and the stream's last bits walk bit by bit, so truncated streams
+raise at the same bit. Single-symbol codes cost no call in the pixel
+loop, and subtract-green and the final gray conversion run as numpy
+array operations.
+
 The encoder twin (``pack_webp_gray``) emits conforming minimal streams —
 subtract-green transform + literal-only entropy image — with optional
 flavors (two-symbol simple code, LZ77 run-length at distance 1, color
@@ -40,6 +48,8 @@ extraction ``mapInArrow`` pass — no joins, no shuffles, no driver work.
 from __future__ import annotations
 
 import struct
+
+import numpy as np
 
 from pdf_extractor_spark.kernels.ocr_kernel import OcrUnsupported
 
@@ -95,6 +105,14 @@ class _Bits:
         self.nbits -= n
         return v
 
+    def prefetch(self) -> None:
+        """Buffer up to 32 more bits for a lookahead; never raises — a
+        read past the end still raises from ``read`` at the bit it needs."""
+        chunk = self.data[self.pos:self.pos + 4]
+        self.acc |= int.from_bytes(chunk, "little") << self.nbits
+        self.nbits += 8 * len(chunk)
+        self.pos += len(chunk)
+
 
 class _BitWriter:
     __slots__ = ("out", "acc", "nbits")
@@ -123,20 +141,36 @@ class _BitWriter:
 # -- prefix (Huffman) codes ---------------------------------------------------
 
 class _Prefix:
-    """Canonical prefix code: decode walks the stream one bit at a time,
-    building the code MSB-first (spec bit order). A single-symbol code
-    consumes zero bits."""
+    """Canonical prefix code. ``lut`` is the 8-bit lookahead: indexed by
+    the next 8 stream bits (LSB-first, so a code's first bit is the
+    index's lowest), entry ``(length << 16) | symbol`` for codes of <= 8
+    bits, 0 for longer ones. Those, and codes the stream's last bits
+    cannot hold, walk one bit at a time, building the code MSB-first
+    (spec bit order). A single-symbol code consumes zero bits."""
 
-    __slots__ = ("table", "single", "max_len")
+    __slots__ = ("table", "single", "max_len", "lut")
 
     def __init__(self, table: dict, single: int | None, max_len: int):
         self.table = table
         self.single = single
         self.max_len = max_len
+        self.lut = [0] * 256
+        for (length, code), sym in table.items():
+            if length <= 8:
+                rev = int(format(code, f"0{length}b")[::-1], 2)
+                self.lut[rev::1 << length] = \
+                    [(length << 16) | sym] * (1 << (8 - length))
 
     def decode(self, br: _Bits) -> int:
         if self.single is not None:
             return self.single
+        if br.nbits < 8:
+            br.prefetch()
+        e = self.lut[br.acc & 0xFF]
+        if e and e >> 16 <= br.nbits:
+            br.acc >>= e >> 16
+            br.nbits -= e >> 16
+            return e & 0xFFFF
         code = 0
         for length in range(1, self.max_len + 1):
             code = (code << 1) | br.read(1)
@@ -275,16 +309,25 @@ def _entropy_image(br: _Bits, w: int, h: int, is_main: bool) -> list[int]:
     n = w * h
     pixels = [0] * n
     pos = 0
-    codes = groups[0]
+    green, red, blue, alpha, dist_prefix = groups[0]
     while pos < n:
         if meta is not None:
             y, x = divmod(pos, w)
-            codes = groups[meta[(y >> meta_bits) * mw + (x >> meta_bits)]]
-        s = codes[0].decode(br)
+            green, red, blue, alpha, dist_prefix = \
+                groups[meta[(y >> meta_bits) * mw + (x >> meta_bits)]]
+        s = green.decode(br)
         if s < 256:
-            r = codes[1].decode(br)
-            b = codes[2].decode(br)
-            a = codes[3].decode(br)
+            # single-symbol codes (e.g. red/blue after subtract-green,
+            # opaque alpha) cost no bits: skip the call
+            r = red.single
+            if r is None:
+                r = red.decode(br)
+            b = blue.single
+            if b is None:
+                b = blue.decode(br)
+            a = alpha.single
+            if a is None:
+                a = alpha.decode(br)
             px = (a << 24) | (r << 16) | (s << 8) | b
             pixels[pos] = px
             pos += 1
@@ -292,7 +335,7 @@ def _entropy_image(br: _Bits, w: int, h: int, is_main: bool) -> list[int]:
                 cache[(_HASH_MUL * px & 0xFFFFFFFF) >> cache_shift] = px
         elif s < 280:
             length = _lz77_value(s - 256, br)
-            dist_code = _lz77_value(codes[4].decode(br), br)
+            dist_code = _lz77_value(dist_prefix.decode(br), br)
             if dist_code <= 120:
                 # near-neighbor map (spec §"Distance Mapping"): the code
                 # addresses a (x, y) offset in the generated table;
@@ -430,12 +473,12 @@ def _inv_color(px: list[int], w: int, h: int, bits: int, tw: int,
         px[i] = (p & 0xFF00FF00) | (r << 16) | (b & 0xFF)
 
 
-def _inv_subtract_green(px: list[int]) -> None:
-    for i, p in enumerate(px):
-        g = (p >> 8) & 0xFF
-        r = (((p >> 16) & 0xFF) + g) & 0xFF
-        b = ((p & 0xFF) + g) & 0xFF
-        px[i] = (p & 0xFF00FF00) | (r << 16) | b
+def _inv_subtract_green(px: np.ndarray) -> np.ndarray:
+    """Add green back into red and blue, mod 256 per channel."""
+    g = (px >> 8) & 0xFF
+    r = (((px >> 16) & 0xFF) + g) & 0xFF
+    b = ((px & 0xFF) + g) & 0xFF
+    return (px & 0xFF00FF00) | (r << 16) | b
 
 
 def _inv_palette(px: list[int], packed_w: int, h: int, xbits: int,
@@ -551,25 +594,24 @@ def _decode_webp_gray(payload: bytes) -> list[bytes]:
     px = _entropy_image(br, xsize, h, True)
     cur_w = xsize
     for tr in reversed(transforms):
+        if tr[0] == "sub_green":
+            px = _inv_subtract_green(np.asarray(px, dtype=np.uint32))
+            continue
+        if isinstance(px, np.ndarray):  # the other inverses index a list
+            px = px.tolist()
         if tr[0] == "palette":
             _, xbits, pal, out_w = tr
             px = _inv_palette(px, cur_w, h, xbits, pal, out_w)
             cur_w = out_w
-        elif tr[0] == "sub_green":
-            _inv_subtract_green(px)
         elif tr[0] == "predictor":
             _inv_predictor(px, cur_w, h, tr[1], tr[2], tr[3])
         else:
             _inv_color(px, cur_w, h, tr[1], tr[2], tr[3])
     if cur_w != w:
         raise OcrUnsupported("webp: transform width mismatch")
-    rows = []
-    for y in range(h):
-        base = y * w
-        rows.append(bytes(
-            (((p >> 16) & 0xFF) + ((p >> 8) & 0xFF) + (p & 0xFF)) // 3
-            for p in px[base:base + w]))
-    return rows
+    argb = np.asarray(px, dtype=np.uint32)
+    gray = (((argb >> 16) & 0xFF) + ((argb >> 8) & 0xFF) + (argb & 0xFF)) // 3
+    return [row.tobytes() for row in gray.astype(np.uint8).reshape(h, w)]
 
 
 # -- encoder twin -------------------------------------------------------------

@@ -62,6 +62,31 @@ def test_non_multiple_of_mcu_dimensions():
         assert len(dec) == 13 and len(dec[0]) == 21
 
 
+def test_bit_reader_accumulator_stays_bounded():
+    # the accumulator holds only the bits not yet consumed, so a long
+    # entropy stream never grows it into a bigint that every read shifts
+    # (which made decode time quadratic in the payload size)
+    rng = np.random.default_rng(11)
+    data = rng.integers(0, 255, size=64 * 1024, dtype=np.uint8).tobytes()
+    assert 0xFF not in data
+    r = J._BitReader(data, 0)
+    left = len(data) * 8
+    widths = rng.integers(0, 17, size=left)
+    i = 0
+    while left:
+        n = min(int(widths[i]), left)
+        i += 1
+        if n == 0:
+            r.read_bit()
+            n = 1
+        else:
+            r.read_bits(n)
+        left -= n
+        assert r.acc.bit_length() <= r.nbits + 8
+    with pytest.raises(K.OcrUnsupported, match="truncated"):
+        r.read_bit()
+
+
 def test_out_of_profile_quarantines():
     jp = bytearray(J.render_text_jpeg("X", width=8))
     i = jp.find(b"\xff\xc0")

@@ -8,6 +8,7 @@ type; lossy ``VP8 `` stays on the loud quarantine path.
 """
 from __future__ import annotations
 
+import random
 import struct
 
 import pytest
@@ -124,6 +125,46 @@ def _header(bw, w, h):
 
 def _argb(v):
     return (255 << 24) | (v << 16) | (v << 8) | v
+
+
+def test_prefix_lookahead_matches_code_table():
+    # codes up to 15 bits: the 8-bit lookahead resolves the short ones,
+    # the bit walk the long ones; both must follow the canonical table
+    rng = random.Random(7)
+    chain = list(range(1, 16)) + [15]          # Kraft-complete, 1..15 bits
+    balanced = W._balanced_lengths(list(range(300)))   # 8 and 9 bits
+    for lengths in (chain, [balanced[s] for s in range(300)]):
+        prefix = W._canonical(lengths)
+        codes = W._codes_from_lengths(dict(enumerate(lengths)))
+        syms = [rng.randrange(len(lengths)) for _ in range(3000)]
+        bw = W._BitWriter()
+        for s in syms:
+            W._write_code_msb(bw, *codes[s])
+        br = W._Bits(bw.finish())
+        assert [prefix.decode(br) for _ in syms] == syms
+
+
+def test_subtract_green_and_gray_conversion_match_loop_reference():
+    # the array inverse and gray conversion must equal the per-pixel
+    # loops they replaced on full-range ARGB pixels (the rendered pages
+    # only carry red = blue = 0 after subtract-green)
+    rng = random.Random(3)
+    w, h = 23, 9
+    pixels = [rng.getrandbits(32) for _ in range(w * h)]
+    bw = W._BitWriter()
+    _header(bw, w, h)
+    bw.write(1, 1)
+    bw.write(2, 2)  # subtract green
+    bw.write(0, 1)  # no more transforms
+    _write_literal_image(bw, pixels, True)
+    rows = W.decode_webp_gray(_wrap(bw.finish()))
+    expect = []
+    for p in pixels:
+        g = (p >> 8) & 0xFF
+        r = (((p >> 16) & 0xFF) + g) & 0xFF
+        b = ((p & 0xFF) + g) & 0xFF
+        expect.append((r + g + b) // 3)
+    assert b"".join(rows) == bytes(expect)
 
 
 def test_plain_literal_image_no_transforms():
