@@ -75,7 +75,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import SparkSession
 
-    from pdf_extractor_spark.pipeline import ExtractionJob
+    from pdf_extractor_spark.pipeline import ExtractionJob, quarantine_rows
     from pdf_extractor_spark.session import get_spark
     from pdf_extractor_spark.sources import io as pio
 
@@ -102,8 +102,11 @@ def main(argv: list[str] | None = None) -> int:
         ckpt = args.checkpoint or _os.path.join(args.output, "_checkpoint")
         extract_stream_to_table(spark, args.input, table, ckpt)
         out = table.read(spark)
-        print(json.dumps({"output": args.output, "mode": "stream",
-                          "rows": out.count() if out is not None else 0}))
+        print(json.dumps({
+            "output": args.output, "mode": "stream",
+            "rows": out.count() if out is not None else 0,
+            "quarantined": (quarantine_rows(out).count()
+                            if out is not None else 0)}))
         if owns_session:
             spark.stop()
         return 0
@@ -126,7 +129,11 @@ def main(argv: list[str] | None = None) -> int:
         salt=args.salt,
         wave_size=args.wave_size,
     )
-    totals = job.run(pages.select("url", "warc_ts", "html"), max_waves=args.max_waves)
+    try:
+        totals = job.run(pages.select("url", "warc_ts", "html"),
+                         max_waves=args.max_waves)
+    finally:
+        pages.unpersist()  # a generated corpus stays cached otherwise
     print(json.dumps({"output": args.output, **totals}))
     if owns_session:  # don't stop a session we merely joined (in-process callers)
         spark.stop()

@@ -3,76 +3,63 @@
 Maps the reference's orchestration semantics (SURVEY.md §2b) onto Spark:
 
   - fan-out / worker task (tasks.py:154-289)  → one mapInArrow pass per wave
-  - completion tracking (file_coordinator.py) → bucket list recorded in the
-    snapshot manifest of the output table (single source of truth) + a
-    lineage table for observability
+  - completion tracking (file_coordinator.py) → the cumulative ``waves``
+    record (each committed wave's buckets, start and finish time) in the
+    snapshot manifest of the output table: the single source of truth for
+    both the checkpoint and the lineage
   - idempotent retry endpoint (main.py:1695-1786 soft-delete + re-enqueue)
     → resume = anti-join of buckets against manifest-recorded done buckets;
     a bucket is only visible once committed, so re-runs cannot duplicate
   - circuit breaker (tasks.py:126-151, ≥5 consecutive failures)
-    → per-wave failure-rate gate between waves
+    → per-wave failure-rate gate between waves, fed by an Observation on
+    the wave's append
   - cost/latency accounting (tasks.py:265-282) → per-partition metrics rows
 
 Scale notes (100 TB / 1000 executors): buckets are the checkpoint granule —
 set n_buckets so one wave ≈ one cluster-full of work (e.g. 4096 buckets,
-wave_size 64). Each wave is ONE pass: scan(pruned) → shuffle(hash(url)+salt)
-→ kernel → columnar write, with no cache and no second read of the source.
-Metrics, quarantine and lineage come from a narrow read-back of only the
-data dir that wave's append wrote. The size cap is not a pipeline policy:
-the kernel pass emits a ``size_cap`` not-ok row for an over-cap page
-(operators/extract.py), so it is quarantined like any other failed doc.
-The SnapshotTable binds 1:1 to Iceberg (append/overwritePartitions) when
-jars are present.
+wave_size 64). Each wave is ONE append: scan(pruned) → shuffle(hash(url)+salt)
+→ kernel → columnar write; no cache, no re-read, no other table. Metrics,
+quarantine and lineage are views over ``extracted`` (soft-deleted rows
+included, so a delete does not rewrite history) and its manifests; each
+(bucket, partition_id) group belongs to exactly one wave. The size cap is
+not a pipeline policy: the kernel emits a ``size_cap`` not-ok row for an
+over-cap page (operators/extract.py), quarantined like any failed doc.
+The SnapshotTable binds 1:1 to Iceberg (append/overwritePartitions).
 """
 from __future__ import annotations
 
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.operators.extract import run_extract
 from pdf_extractor_spark.sources.table_format import SnapshotTable
 
-LINEAGE_DDL = (
-    "bucket int, stage string, status string, started_at timestamp, "
-    "finished_at timestamp, docs long, bytes long, failures long, attempt int"
-)
-METRICS_DDL = (
-    "bucket int, partition_id int, docs long, pages long, bytes long, "
-    "elapsed_ms long, docs_per_sec double, bytes_per_sec double, failure_count long"
-)
+
+def _doc_counts() -> list[Column]:
+    """Docs, failures and payload bytes of extracted rows; a doc counts
+    through its page-1 row. Shared by each wave's Observation and the
+    lineage view, so the breaker and lineage count the same thing."""
+    first_page = F.col("page_number") == 1
+    return [
+        F.count_if(first_page).alias("docs"),
+        F.count_if(first_page & (F.col("meta")["ok"] == "false"))
+        .alias("failures"),
+        F.sum(F.when(first_page, F.col("payload_bytes"))).alias("bytes"),
+    ]
 
 
-# Per-page cost model (reference tasks.py:88-104): local library extractors
-# are free; hosted services bill per page. The engine's kernels are all
-# 'local', so job cost is 0.0 — the model exists for parity and for pricing
-# a hypothetical hosted-OCR branch of the needs-OCR quarantine.
-PAGE_COST_USD = {
-    "local": 0.0,
-    "textract": 0.0015,
-    "gpt-4o-mini": 0.005,
-    "gpt-4o": 0.010,
-    "gpt-4-turbo": 0.015,
-    "unknown": 0.001,
-}
-
-
-def job_cost_usd(pages: int, extractor: str = "local") -> float:
-    """Reference cost accounting: per-page rate × page count
-    (tasks.py:88-104; unknown extractors bill at the 'unknown' rate)."""
-    return PAGE_COST_USD.get(extractor, PAGE_COST_USD["unknown"]) * pages
-
-
-def _wave_metrics(wrote: DataFrame) -> DataFrame:
+def _wave_metrics(extracted: DataFrame) -> DataFrame:
     """Per-(bucket, partition) metrics rows (tasks.py:265-282 analogue)
-    of one wave's committed rows."""
+    of extracted rows. Needs the ``bucket`` column ExtractionJob adds; the
+    streaming table has no equivalent of it, so it gets no metrics view."""
     # per-url rollup first: elapsed_us is CUMULATIVE since the document
     # start on every page row, so the per-doc total is the MAX, not the
     # sum (summing overcounts an N-page doc ~N/2-fold)
     first_page = F.col("page_number") == 1
-    per_url = wrote.groupBy("bucket", "partition_id", "url").agg(
+    per_url = extracted.groupBy("bucket", "partition_id", "url").agg(
         F.count("*").alias("pages"),
         F.max(F.when(first_page, F.col("payload_bytes"))).alias("doc_bytes"),
         F.max("elapsed_us").alias("doc_us"),
@@ -102,14 +89,15 @@ def _wave_metrics(wrote: DataFrame) -> DataFrame:
     )
 
 
-def _quarantine_rows(wrote: DataFrame) -> DataFrame:
+def quarantine_rows(extracted: DataFrame) -> DataFrame:
     """Quarantine rows (row-level error contract, tasks.py:112-123;
-    FIXTURES.md §3 shape): one per failed doc. A doc the size cap stopped
-    is stage ``size_cap`` with error ``payload_over_cap:<bytes>``; every
+    FIXTURES.md §3 shape) of any extracted frame — the job's table or the
+    streaming sink's: one per failed doc. A doc the size cap stopped is
+    stage ``size_cap`` with error ``payload_over_cap:<bytes>``; every
     other failure is stage ``extract``."""
     err = F.coalesce(F.col("meta")["error"], F.lit("unknown"))
     capped = err.startswith("size_cap: ")
-    return wrote.where(
+    return extracted.where(
         (F.col("meta")["ok"] == "false") & (F.col("page_number") == 1)
     ).select(
         "url",
@@ -142,41 +130,43 @@ class ExtractionJob:
         self.wave_size = wave_size
         self.failure_rate_abort = failure_rate_abort
         self.extracted = SnapshotTable(os.path.join(out_root, "extracted"))
-        self.lineage = SnapshotTable(os.path.join(out_root, "lineage"))
-        self.metrics = SnapshotTable(os.path.join(out_root, "metrics"))
-        self.quarantine = SnapshotTable(os.path.join(out_root, "quarantine"))
 
     # -- checkpoint state ----------------------------------------------------
-    def done_buckets(self) -> set[int]:
-        """Buckets already committed, from the output table's manifest
-        CHAIN (authoritative — a bucket is visible iff its data committed).
+    def _waves(self) -> list[dict]:
+        """Committed waves, oldest first, as ``{buckets, started_at,
+        finished_at}`` (epoch ms), from the output table's manifest CHAIN
+        (authoritative — a bucket is visible iff its data committed).
 
         Walk parent pointers from CURRENT: a commit carrying the cumulative
-        `buckets_done` summary (every pipeline append writes it; compact/
-        soft_delete/undelete carry it forward) is self-sufficient — stop
-        there. Otherwise union per-append `buckets` and keep walking
-        through row-PRESERVING maintenance commits; a plain overwrite
-        replaced the data, so older appends no longer count. (The previous
-        own-dir∈CURRENT heuristic collapsed to the empty set after any
-        compact/soft_delete, making a resumed run() re-extract and
-        duplicate every bucket.)"""
+        ``waves`` record (pipeline appends write it; maintenance commits
+        carry it) is self-sufficient — stop there; an entry without
+        ``finished_at`` is the wave that commit appended. Otherwise take
+        each append's ``buckets`` as a wave and keep walking through
+        row-PRESERVING maintenance commits; a plain overwrite replaced the
+        data, so older appends no longer count."""
         by_id = {m["snapshot_id"]: m for m in self.extracted.snapshots()}
         sid = self.extracted._current_id()
-        done: set[int] = set()
+        newer: list[dict] = []
         while sid is not None and sid in by_id:
             m = by_id[sid]
             summ = m.get("summary") or {}
-            if "buckets_done" in summ:
-                done.update(summ["buckets_done"])
-                break
+            if "waves" in summ:
+                return [{"finished_at": m.get("committed_at"), **w}
+                        for w in summ["waves"]] + newer[::-1]
             if m["op"] == "append":
-                done.update(summ.get("buckets", []))
+                if "buckets" in summ:
+                    newer.append({"buckets": summ["buckets"],
+                                  "finished_at": m.get("committed_at")})
             elif not (m["op"] in ("compact", "add_column", "rename_column", "drop_column")
                       or "soft_delete" in summ or "undelete" in summ
                       or "backfill" in summ):
                 break  # plain overwrite: data replaced
             sid = m.get("parent_id")
-        return done
+        return newer[::-1]
+
+    def done_buckets(self) -> set[int]:
+        """Buckets already committed (see ``_waves``)."""
+        return {b for w in self._waves() for b in w["buckets"]}
 
     def _with_bucket(self, pages: DataFrame) -> DataFrame:
         return pages.withColumn(
@@ -186,8 +176,8 @@ class ExtractionJob:
     # -- main entry ------------------------------------------------------------
     def run(self, pages: DataFrame, max_waves: int | None = None) -> dict:
         """Process all pending buckets in waves; resumable and idempotent.
-        Each wave is one ``run_extract`` pass; the job launches no other
-        Spark work before its first wave, so a run with nothing pending
+        Each wave is one ``run_extract`` pass written by one append; the
+        job launches no other Spark work, so a run with nothing pending
         reads only the output table's manifests, never the source. Arrow
         batches are bounded by the session's record and byte caps
         (``session.get_spark``)."""
@@ -200,13 +190,11 @@ class ExtractionJob:
         ]
         if max_waves is not None:
             waves = waves[:max_waves]
-        total = {"docs": 0, "failures": 0, "waves": 0, "buckets": 0}
-        cum = set(done)
+        total = {"docs": 0, "failures": 0, "bytes": 0, "waves": 0, "buckets": 0}
         for wave in waves:
-            cum.update(wave)
-            stats = self._run_wave(pages_b, wave, sorted(cum))
-            total["docs"] += stats["docs"]
-            total["failures"] += stats["failures"]
+            stats = self._run_wave(pages_b, wave)
+            for k in ("docs", "failures", "bytes"):
+                total[k] += stats[k]
             total["waves"] += 1
             total["buckets"] += len(wave)
             if stats["docs"] > 0 and (
@@ -218,64 +206,57 @@ class ExtractionJob:
                 )
         return total
 
-    def _run_wave(self, pages_b: DataFrame, wave: list[int],
-                  buckets_done: list[int]) -> dict:
-        import datetime as _dt
-
-        t0 = time.time()
-        # bind the wall-clock start as a LITERAL: F.current_timestamp() is
-        # evaluated once at query execution, so using it for started_at
-        # would record zero wave duration (start == finish == commit time)
-        started_at = F.lit(_dt.datetime.now(_dt.timezone.utc)
-                           .replace(tzinfo=None))
+    def _run_wave(self, pages_b: DataFrame, wave: list[int]) -> dict:
+        """Extract and commit one wave in a single append; its totals come
+        from an Observation on that write, so nothing is read back. The
+        manifest's ``waves`` record gets this wave's start time; its finish
+        time is the commit's ``committed_at``."""
+        waves = self._waves() + [
+            {"buckets": wave, "started_at": int(time.time() * 1000)}]
         out = self._with_bucket(run_extract(
             pages_b.where(F.col("bucket").isin(wave))
             .select("url", "warc_ts", "html"),
             num_partitions=self.partitions,
             salt=self.salt,
         ))
-        # commit order: data first (the manifest records the buckets — the
-        # checkpoint), then metrics/quarantine/lineage (observability),
-        # all derived from a narrow read-back of only what this append
-        # wrote: the extraction runs once and nothing is cached
-        parent = self.extracted._current_id()
-        self.extracted.append(
-            out, summary={"buckets": wave, "buckets_done": buckets_done})
-        wrote = self.extracted.read_incremental(self.spark, parent).select(
-            "url", "bucket", "partition_id", "page_number", "payload_bytes",
-            "elapsed_us", "meta")
-
-        mrows = _wave_metrics(wrote).collect()
-        docs = sum(r["docs"] for r in mrows)
-        failures = sum(r["failure_count"] for r in mrows)
-        nbytes = sum(r["bytes"] for r in mrows)
-        self.metrics.append(self.spark.createDataFrame(mrows, METRICS_DDL))
-        self.quarantine.append(_quarantine_rows(wrote))
-        lineage_rows = (
-            self.spark.createDataFrame(
-                [(b,) for b in wave], "bucket int"
-            )
-            .withColumn("stage", F.lit("extract"))
-            .withColumn("status", F.lit("success"))
-            .withColumn("started_at", started_at)
-            .withColumn("finished_at", F.current_timestamp())
-            .withColumn("docs", F.lit(docs).cast("long"))
-            .withColumn("bytes", F.lit(nbytes).cast("long"))
-            .withColumn("failures", F.lit(failures).cast("long"))
-            .withColumn("attempt", F.lit(1))
-        )
-        self.lineage.append(lineage_rows)
-        return {"docs": docs, "failures": failures, "elapsed_s": time.time() - t0}
+        obs = Observation()
+        self.extracted.append(out.observe(obs, *_doc_counts()),
+                              summary={"waves": waves})
+        # an empty wave observes sum(bytes) = NULL
+        return {k: v or 0 for k, v in obs.get.items()}
 
     # -- reads -----------------------------------------------------------------
+    def _view(self, view) -> DataFrame | None:
+        ext = self.extracted.read(self.spark, include_deleted=True)
+        return None if ext is None else view(ext)
+
     def read_extracted(self) -> DataFrame | None:
         return self.extracted.read(self.spark)
 
     def read_metrics(self) -> DataFrame | None:
-        return self.metrics.read(self.spark)
-
-    def read_lineage(self) -> DataFrame | None:
-        return self.lineage.read(self.spark)
+        return self._view(_wave_metrics)
 
     def read_quarantine(self) -> DataFrame | None:
-        return self.quarantine.read(self.spark)
+        return self._view(quarantine_rows)
+
+    def read_lineage(self) -> DataFrame | None:
+        """One row per committed bucket: its wave's start and finish times
+        from the manifest chain, its docs, bytes and failures from its rows
+        in ``extracted``. A committed wave is ``status='success',
+        attempt=1``; a wave that raised committed nothing."""
+        waves = self.spark.createDataFrame(
+            [(b, w.get("started_at"), w.get("finished_at"))
+             for w in self._waves() for b in w["buckets"]],
+            "bucket int, started_ms long, finished_ms long")
+        return self._view(lambda ext: waves.join(
+            ext.groupBy("bucket").agg(*_doc_counts()), "bucket", "left"
+        ).select(
+            "bucket",
+            F.lit("extract").alias("stage"),
+            F.lit("success").alias("status"),
+            F.timestamp_millis("started_ms").alias("started_at"),
+            F.timestamp_millis("finished_ms").alias("finished_at"),
+            *(F.coalesce(c, F.lit(0)).cast("long").alias(c)
+              for c in ("docs", "bytes", "failures")),
+            F.lit(1).alias("attempt"),
+        ))

@@ -21,6 +21,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -152,13 +153,15 @@ class SnapshotTable:
         os.replace → CURRENT swap), shared by data commits and evolution
         commits so the optimistic-concurrency re-check cannot drift
         between the two. `expected_parent` re-validates CURRENT
-        immediately before the swap."""
+        immediately before the swap. Every manifest gets ``committed_at``
+        (epoch ms, Iceberg's snapshot ``timestamp-ms``)."""
         if expected_parent is not _UNSET:
             cur = self._current_id()
             if cur != expected_parent:
                 raise ConcurrentCommitError(
                     f"CURRENT moved from {expected_parent} to {cur} during "
                     f"this {manifest['op']} commit")
+        manifest = {**manifest, "committed_at": int(time.time() * 1000)}
         sid = manifest["snapshot_id"]
         tmp = os.path.join(self.snap_dir, f".{sid}.json.tmp")
         with open(tmp, "w") as f:
@@ -561,17 +564,20 @@ class SnapshotTable:
 
     def _carry_state(self, summary: dict) -> dict:
         """Propagate cumulative checkpoint keys through a row-preserving
-        maintenance commit: buckets_done from the immediate parent (the
-        pipeline's done_buckets also chain-walks, so parent carry is a
-        fast path); stream_batch_id as the CHAIN max — carrying only the
-        parent's value would lose the replay watermark whenever an
-        interleaved foreign commit sits between the stream's last append
-        and this maintenance commit, and expire_snapshots could then make
-        the loss permanent."""
+        maintenance commit: the pipeline's ``waves`` record from the
+        immediate parent (the pipeline's wave walk also follows the chain,
+        so parent carry is a fast path), with the wave the parent appended
+        closed at the parent's ``committed_at``; stream_batch_id as the
+        CHAIN max — carrying only the parent's value would lose the replay
+        watermark whenever an interleaved foreign commit sits between the
+        stream's last append and this maintenance commit, and
+        expire_snapshots could then make the loss permanent."""
         parent = self.current_manifest()
         ps = (parent.get("summary") or {}) if parent else {}
-        if "buckets_done" in ps and "buckets_done" not in summary:
-            summary = {**summary, "buckets_done": ps["buckets_done"]}
+        if "waves" in ps and "waves" not in summary:
+            summary = {**summary, "waves": [
+                {"finished_at": parent.get("committed_at"), **w}
+                for w in ps["waves"]]}
         if "stream_batch_id" not in summary:
             v = self.chain_max_summary("stream_batch_id")
             if v is not None:
@@ -604,12 +610,12 @@ class SnapshotTable:
         return removed
 
     def read_incremental(self, spark: SparkSession,
-                         since_snapshot: str | None) -> DataFrame | None:
+                         since_snapshot: str) -> DataFrame | None:
         """Rows appended strictly AFTER `since_snapshot` (Iceberg
         incremental-scan analogue): the data dirs on the parent chain from
-        CURRENT down to — excluding — the given snapshot; ``None`` means
-        since the table was empty. Drives downstream incremental consumers
-        (e.g. re-running dedup only over new docs) without a full rescan.
+        CURRENT down to — excluding — the given snapshot. Drives downstream
+        incremental consumers (e.g. re-running dedup only over new docs)
+        without a full rescan.
         Raises if the chain was broken by an overwrite/compact commit in
         between (incremental semantics are append-only, same restriction
         as Iceberg)."""
@@ -643,7 +649,7 @@ class SnapshotTable:
                 )
             parent = m.get("parent_id")
             m = by_id.get(parent) if parent else None
-        if m is None and since_snapshot is not None:
+        if m is None:
             raise ValueError(f"snapshot {since_snapshot} not on the CURRENT chain")
         if not new_dirs:
             return spark.createDataFrame(
@@ -705,7 +711,7 @@ class SnapshotTable:
         elif target_partitions:
             df = df.coalesce(target_partitions)
         # carry forward cumulative checkpoint state (the extraction
-        # pipeline's buckets_done, the streaming sink's stream_batch_id —
+        # pipeline's waves, the streaming sink's stream_batch_id —
         # the latter as the chain max, see _carry_state) so maintenance
         # commits stay resume-safe
         summary = self._carry_state({"compacted_dirs": len(m["data_dirs"])})

@@ -257,7 +257,7 @@ def test_image_payloads_quarantined_by_pipeline(spark, tmp_path):
     job = ExtractionJob(spark, str(tmp_path / "imgq"), n_buckets=4,
                         partitions=4, wave_size=4, failure_rate_abort=0.9)
     job.run(pages)
-    quar = job.quarantine.read(spark)
+    quar = job.read_quarantine()
     needs = quar.where(quar["error"].contains("needs_ocr")).count()
     assert needs == n_img and n_img > 0
 

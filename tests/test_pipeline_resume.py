@@ -1,5 +1,6 @@
-"""M3+M4: lineage-table checkpointing, idempotent resume, metrics shape,
-quarantine, circuit breaker (SURVEY.md §7 M3/M4; FIXTURES.md §3 contracts)."""
+"""M3+M4: manifest checkpointing, idempotent resume, lineage, metrics and
+quarantine views, circuit breaker (SURVEY.md §7 M3/M4; FIXTURES.md §3
+contracts)."""
 from __future__ import annotations
 
 import pytest
@@ -79,6 +80,9 @@ def test_metrics_and_lineage_shape(spark, tmp_path):
     lin = job.read_lineage()
     assert lin.where("status = 'success' and stage = 'extract'").count() == 8
     assert lin.where("finished_at < started_at").count() == 0
+    # lineage counts each bucket's own docs (not its whole wave's)
+    page1 = job.read_extracted().where("page_number = 1").count()
+    assert lin.agg(F.sum("docs")).first()[0] == page1 == 80
 
 
 def test_quarantine_captures_degenerate_rows(spark, tmp_path):
@@ -184,16 +188,6 @@ def test_job_entrypoint_runs_and_resumes(spark, tmp_path):
     assert SnapshotTable(out + "/extracted").read(spark).count() == n1
 
 
-def test_job_cost_model_reference_rates():
-    """Reference tasks.py:88-104 parity: per-page rates, unknown fallback."""
-    from pdf_extractor_spark.pipeline import PAGE_COST_USD, job_cost_usd
-
-    assert job_cost_usd(1000, "local") == 0.0
-    assert job_cost_usd(1000, "textract") == 1.5
-    assert job_cost_usd(100, "gpt-4o") == 1.0
-    assert job_cost_usd(10, "never-heard-of-it") == 10 * PAGE_COST_USD["unknown"]
-
-
 def test_incremental_scan_feeds_dedup_on_new_docs_only(spark, tmp_path):
     """Iceberg-style incremental consumption: after an append, dedup work
     runs over ONLY the newly appended documents (read_incremental), and the
@@ -263,7 +257,7 @@ def test_oversize_payload_quarantined_not_lost(spark, tmp_path):
         "url string, warc_ts timestamp, html binary, text string, lang string")
     job = _job(spark, tmp_path / "oversize")
     job.run(pages.unionByName(big))
-    quar = job.quarantine.read(spark)
+    quar = job.read_quarantine()
     row = quar.where(F.col("url") == "doc://oversize").collect()
     assert len(row) == 1 and row[0]["stage"] == "size_cap"
     assert row[0]["error"] == f"payload_over_cap:{SIZE_CAP_BYTES + 1}"
@@ -274,4 +268,54 @@ def test_oversize_payload_quarantined_not_lost(spark, tmp_path):
     again = _job(spark, tmp_path / "oversize").run(pages.unionByName(big))
     assert again["waves"] == 0 and again["docs"] == 0
     assert job.read_extracted().count() == n_rows
-    assert job.quarantine.read(spark).count() == quar.count()
+    assert job.read_quarantine().count() == quar.count()
+
+
+def test_wave_is_one_append(spark, tmp_path):
+    """A wave runs only its append's Spark jobs (the shuffle map stage and
+    the write) and the job writes no table beside ``extracted``: metrics,
+    quarantine and lineage are views, and the breaker's totals come from
+    an Observation on the append, not a read-back."""
+    import os
+
+    pages = pages_df(spark, 80, SEED)
+    sc = spark.sparkContext
+    group = f"wave-jobs-{os.getpid()}"
+    sc.setJobGroup(group, "two-wave ExtractionJob")
+    try:
+        res = _job(spark, tmp_path, n_buckets=8, wave_size=4).run(pages)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert res["waves"] == 2 and res["docs"] == 80
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2 * res["waves"]
+    assert os.listdir(tmp_path) == ["extracted"]
+
+
+def test_wave_records_survive_maintenance(spark, tmp_path):
+    """The manifest's wave record (checkpoint and lineage in one) survives
+    compact, soft_delete and expire_snapshots(keep_last=1): lineage still
+    lists every bucket with its wave's times, metrics and quarantine still
+    count tombstoned rows, and a resume is a no-op."""
+    pages = pages_df(spark, N, SEED)
+    job = _job(spark, tmp_path)
+    job.run(pages)
+    docs = job.read_metrics().agg(F.sum("docs")).first()[0]
+    n_quar = job.read_quarantine().count()
+
+    job.extracted.compact(spark)
+    job.extracted.soft_delete(spark, "page_number = 1 and bucket = 0")
+    job.extracted.expire_snapshots(keep_last=1)
+    assert len(job.extracted.snapshots()) == 1
+
+    lin = job.read_lineage()
+    assert sorted(r["bucket"] for r in lin.collect()) == list(range(8))
+    assert lin.where("started_at is null or finished_at is null").count() == 0
+    assert lin.where("finished_at < started_at").count() == 0
+    assert lin.agg(F.sum("docs")).first()[0] == docs == N
+    assert job.read_quarantine().count() == n_quar
+
+    n_rows = job.read_extracted().count()
+    again = _job(spark, tmp_path).run(pages)
+    assert again["waves"] == 0 and again["docs"] == 0
+    assert job.read_extracted().count() == n_rows

@@ -112,12 +112,12 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
     assert n_dup == 0
 
 
-def test_job_stream_mode_exactly_once(spark, tmp_path):
+def test_job_stream_mode_exactly_once(spark, tmp_path, capsys):
     """--stream drives the streaming ingestion path end-to-end through the
     job entrypoint (in-process: the spark-submit deployment shape is
     covered by the batch test above): drain landed segments, re-run with
     the same checkpoint → zero duplicates, land a new segment → only its
-    rows append."""
+    rows append. Its JSON line reports the rows and the quarantine count."""
     from pdf_extractor_spark.job import main
     from pdf_extractor_spark.session import pages_df
     from pdf_extractor_spark.sources.table_format import SnapshotTable
@@ -132,6 +132,10 @@ def test_job_stream_mode_exactly_once(spark, tmp_path):
     t = SnapshotTable(out + "/extracted")
     n1 = t.read(spark).count()
     assert n1 >= 30
+    line = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    failed = t.read(spark).where(
+        "page_number = 1 and meta['ok'] = 'false'").count()
+    assert line["rows"] == n1 and line["quarantined"] == failed > 0
     # idempotent re-run: nothing new
     assert main(["--input", pdir, "--output", out, "--stream"]) == 0
     assert t.read(spark).count() == n1

@@ -683,6 +683,35 @@ def test_doc_metrics_keep_equals_gopher_quality(spark, sf_dir):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
+def test_extract_stream_to_table_quarantine(spark, tmp_path):
+    """The streaming table gets the batch job's quarantine view: an
+    over-cap page and a PNG page landed as segments surface as one
+    ``size_cap`` row and one ``needs_ocr`` row; a plain HTML page as none."""
+    from pdf_extractor_spark.operators.extract import SIZE_CAP_BYTES
+    from pdf_extractor_spark.pipeline import quarantine_rows
+    from pdf_extractor_spark.sources.table_format import SnapshotTable
+    from pdf_extractor_spark.streaming.stream import extract_stream_to_table
+
+    png = b"\x89PNG\r\n\x1a\n" + b"\x00" * 16
+    ddl = "url string, warc_ts timestamp, html binary"
+    pdir = str(tmp_path / "pages")
+    for url, payload in (("doc://oversize", b"x" * (SIZE_CAP_BYTES + 1)),
+                         ("doc://scan.png", png),
+                         ("doc://page", b"<html><p>plain text page</p></html>")):
+        spark.createDataFrame([(url, None, payload)], ddl).write.mode(
+            "append").parquet(pdir)
+    table = SnapshotTable(str(tmp_path / "out"))
+    extract_stream_to_table(spark, pdir, table, str(tmp_path / "ckpt"))
+
+    quar = {r["url"]: r for r in quarantine_rows(table.read(spark)).collect()}
+    assert set(quar) == {"doc://oversize", "doc://scan.png"}
+    assert quar["doc://oversize"]["stage"] == "size_cap"
+    assert quar["doc://oversize"]["error"] == (
+        f"payload_over_cap:{SIZE_CAP_BYTES + 1}")
+    assert quar["doc://scan.png"]["stage"] == "extract"
+    assert "needs_ocr" in quar["doc://scan.png"]["error"]
+
+
 def test_extract_stream_to_table_exactly_once(spark, tmp_path):
     """Streaming ingestion into the snapshot-table layer must be
     exactly-once across restarts: (a) the drained table equals the batch
