@@ -15,12 +15,14 @@ this module sets no batch policy of its own.
 """
 from __future__ import annotations
 
+import gc
 import sys
 import time
 import zipimport
 from collections.abc import Iterator
 
 import pyarrow as pa
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -257,6 +259,39 @@ def extract_document(payload: bytes | None,
     ]
 
 
+def _settle_worker() -> None:
+    """Cut the fixed CPU a reused Python worker spends around each task.
+    Runs at the start of every extraction task, and only inside a Spark
+    task: in the driver or a test process it does nothing.
+
+    * Drops every cached zip importer. Spark's worker calls
+      ``importlib.invalidate_caches()`` at the start of each task, and on
+      CPython versions whose zipimporter re-reads eagerly (3.11 does)
+      each cached zip/jar importer then re-parses its archive's central
+      directory (pyspark.zip, py4j's zip, the Spark jar, any --py-files
+      zip). The dict is only a cache: PathFinder rebuilds an entry from
+      ``sys.path_hooks`` the next time an import needs that archive.
+    * Freezes the live heap (``gc.freeze``). ``pyspark.daemon`` runs a
+      full ``gc.collect()`` after every task of a reused worker, and
+      without the freeze it walks every tracked object of pyspark,
+      pyarrow, numpy and the kernels' tables each time. Frozen objects
+      are still freed by refcount; only cycles among them are not.
+      Freezing on every task, not once, also moves what the previous task
+      cached (and survived the daemon's collect just before this task)
+      out of the next collect's way.
+
+    Spark reuses a worker across the tasks, stages and jobs of a
+    SparkContext, so every later task on this worker gains, whatever
+    Python stage it runs.
+    """
+    if TaskContext.get() is None:
+        return
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[path]
+    gc.freeze()
+
+
 # input columns that reach the output unchanged, gathered per output row
 _TAKEN = ("url", "warc_ts", "partition_id", "payload_bytes")
 
@@ -273,20 +308,7 @@ def _extract_arrow_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Rec
     """
     import pyarrow.compute as pc
 
-    # Spark's worker calls importlib.invalidate_caches() at the start of
-    # every task, and on CPython versions whose zipimporter re-reads
-    # eagerly (3.11 does) every cached zip/jar importer then re-parses its
-    # archive's central directory (pyspark.zip, py4j's zip, the Spark jar,
-    # any --py-files zip): tens of ms of CPU per task before a row is
-    # read. Dropping them is safe because the dict is only a cache:
-    # PathFinder rebuilds an entry from sys.path_hooks the next time an
-    # import needs that archive. It pays off because Spark reuses a worker
-    # across the tasks, stages and jobs of a SparkContext, so every later
-    # task on this worker skips the re-read, whatever Python stage it runs.
-    for path, finder in list(sys.path_importer_cache.items()):
-        if isinstance(finder, zipimport.zipimporter):
-            del sys.path_importer_cache[path]
-
+    _settle_worker()
     for batch in batches:
         payloads = batch.column("html").to_pylist()
         sizes = batch.column("payload_bytes").to_pylist()

@@ -162,53 +162,150 @@ def test_oversized_payloads_routed_not_dropped(spark):
     assert got["u://overcap"]["text"] == ""
 
 
-def test_kernel_drops_cached_zip_importers(tmp_path):
-    """The extraction kernel empties sys.path_importer_cache of zip
-    importers (so a reused Python worker stops re-reading pyspark.zip on
-    every task), and imports from the same archive still work after."""
-    import sys
-    import zipfile
-    import zipimport
-
+def _kernel_batch():
+    """One pages row in the :func:`eligible_pages` columns the extraction
+    kernel reads."""
     import pyarrow as pa
 
-    from pdf_extractor_spark.operators.extract import _extract_arrow_batches
+    html = b"<html><body><p>one row</p></body></html>"
+    return pa.RecordBatch.from_pydict(
+        {
+            "url": ["u://one"],
+            "warc_ts": pa.array([0], pa.timestamp("us", tz="UTC")),
+            "html": [html],
+            "payload_bytes": pa.array([len(html)], pa.int64()),
+            "partition_id": pa.array([0], pa.int32()),
+        }
+    )
+
+
+def _in_one_task(spark, fn, schema: str) -> dict:
+    """Run ``fn() -> dict`` once inside a Spark Python task (one
+    ``mapInArrow`` task, on a reused worker) and return its dict."""
+    import pyarrow as pa
+
+    def task(batches):
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pylist([fn()])
+
+    rows = spark.range(0, 1, 1, 1).mapInArrow(task, schema).collect()
+    assert len(rows) == 1
+    return rows[0].asDict()
+
+
+def test_kernel_drops_cached_zip_importers(spark, tmp_path):
+    """Inside a Spark task the extraction kernel empties
+    sys.path_importer_cache of zip importers (so a reused Python worker
+    stops re-reading pyspark.zip on every task), and imports from the
+    same archive still work after."""
+    import zipfile
 
     archive = tmp_path / "kernel_cache_probe.zip"
     with zipfile.ZipFile(archive, "w") as z:
         z.writestr("zcache_probe_a.py", "VALUE = 'a'\n")
         z.writestr("zcache_probe_b.py", "VALUE = 'b'\n")
     entry = str(archive)
+    batch = _kernel_batch()
+
+    def probe():
+        import sys
+        import zipimport
+
+        from pdf_extractor_spark.operators.extract import _extract_arrow_batches
+
+        # a fresh worker's first batch imports pandas (pa.array probes
+        # for it), which caches the importers of sys.path's archives again
+        list(_extract_arrow_batches(iter([batch])))
+        sys.path.insert(0, entry)
+        try:
+            import zcache_probe_a
+
+            cached = isinstance(sys.path_importer_cache.get(entry),
+                                zipimport.zipimporter)
+            rows = sum(b.num_rows for b in _extract_arrow_batches(iter([batch])))
+            left = sum(isinstance(f, zipimport.zipimporter)
+                       for f in sys.path_importer_cache.values())
+            import zcache_probe_b
+
+            return {"a": zcache_probe_a.VALUE, "cached": cached, "rows": rows,
+                    "left": left, "b": zcache_probe_b.VALUE}
+        finally:
+            sys.path.remove(entry)
+            sys.path_importer_cache.pop(entry, None)
+            for name in ("zcache_probe_a", "zcache_probe_b"):
+                sys.modules.pop(name, None)
+
+    got = _in_one_task(
+        spark, probe, "a string, cached boolean, rows long, left long, b string")
+    assert got == {"a": "a", "cached": True, "rows": 1, "left": 0, "b": "b"}
+
+
+def test_kernel_outside_a_task_changes_no_process_state(tmp_path):
+    """Called in-process (the driver, a test, ``extract_document`` users),
+    the kernel freezes nothing and keeps the process's cached zip
+    importers."""
+    import gc
+    import sys
+    import zipfile
+    import zipimport
+
+    from pdf_extractor_spark.operators.extract import _extract_arrow_batches
+
+    archive = tmp_path / "kernel_keep_probe.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zkeep_probe.py", "VALUE = 'k'\n")
+    entry = str(archive)
     sys.path.insert(0, entry)
     try:
-        import zcache_probe_a
+        import zkeep_probe
 
-        assert zcache_probe_a.VALUE == "a"
-        assert isinstance(sys.path_importer_cache[entry], zipimport.zipimporter)
-
-        html = b"<html><body><p>one row</p></body></html>"
-        batch = pa.RecordBatch.from_pydict(
-            {
-                "url": ["u://one"],
-                "warc_ts": pa.array([0], pa.timestamp("us", tz="UTC")),
-                "html": [html],
-                "payload_bytes": pa.array([len(html)], pa.int64()),
-                "partition_id": pa.array([0], pa.int32()),
-            }
-        )
-        out = list(_extract_arrow_batches(iter([batch])))
+        assert zkeep_probe.VALUE == "k"
+        before = gc.get_freeze_count()
+        out = list(_extract_arrow_batches(iter([_kernel_batch()])))
         assert sum(b.num_rows for b in out) == 1
-
-        assert not any(isinstance(f, zipimport.zipimporter)
-                       for f in sys.path_importer_cache.values())
-        import zcache_probe_b
-
-        assert zcache_probe_b.VALUE == "b"
+        assert gc.get_freeze_count() == before == 0
+        assert isinstance(sys.path_importer_cache[entry], zipimport.zipimporter)
     finally:
         sys.path.remove(entry)
         sys.path_importer_cache.pop(entry, None)
-        for name in ("zcache_probe_a", "zcache_probe_b"):
-            sys.modules.pop(name, None)
+        sys.modules.pop("zkeep_probe", None)
+
+
+def test_kernel_freeze_does_not_grow_per_task(spark):
+    """Inside a Spark task the extraction kernel freezes the worker's live
+    heap, so the full gc.collect() pyspark.daemon runs after every task
+    walks only what the task created, not the ~74k long-lived objects of
+    pyspark, pyarrow, numpy and the kernels. Leak bound of freezing on
+    every task: K kernel runs in one task, each followed by a gc.collect()
+    as the daemon does between tasks, grow the frozen set by at most a
+    small constant, and leave no unfrozen objects behind. A fresh worker's
+    first batch imports pandas (pa.array probes for it); what that creates
+    is frozen from the second run on."""
+    runs = 12
+    batch = _kernel_batch()
+
+    def probe():
+        import gc
+
+        from pdf_extractor_spark.operators.extract import _extract_arrow_batches
+
+        frozen, tracked, rows = [], [], 0
+        for _ in range(runs):
+            rows += sum(b.num_rows for b in _extract_arrow_batches(iter([batch])))
+            gc.collect()
+            frozen.append(gc.get_freeze_count())
+            tracked.append(len(gc.get_objects()))
+        return {"rows": rows, "first": frozen[0], "second": frozen[1],
+                "last": frozen[-1], "tracked": max(tracked[1:])}
+
+    got = _in_one_task(
+        spark, probe,
+        "rows long, first long, second long, last long, tracked long")
+    assert got["rows"] == runs
+    assert got["first"] > 10_000
+    assert got["last"] - got["second"] <= 64, got
+    assert got["tracked"] < 2_000, got
 
 
 def test_image_payload_dispatch_needs_ocr():

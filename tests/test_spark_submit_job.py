@@ -22,7 +22,7 @@ from pathlib import Path
 
 import duckdb
 
-REPO = Path("/root/repo")
+REPO = Path(__file__).resolve().parent.parent
 SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
 CORES = 4  # --master local[CORES]; job.py --cluster defers to it
 

@@ -15,9 +15,10 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402

@@ -34,10 +34,12 @@ DOCS = int(os.environ.get("SPARK_GRAFT_SCALE_DOCS", "120000"))
 REPS = int(os.environ.get("SPARK_GRAFT_SCALE_REPS", "2"))
 LEVELS = (1, 4, 8, 32)
 PAIRS = ((1, 4), (8, 32))
+# the checkout this file is in; runners start there, so `python -c` and
+# the Spark workers import its package
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 RUNNER = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
 cores = int(sys.argv[1]); docs = int(sys.argv[2])
 from pdf_extractor_spark import corpus
 from pdf_extractor_spark.operators.extract import run_extract
@@ -67,7 +69,6 @@ spark.stop()
 
 MP_RUNNER = r"""
 import json, sys, time, os
-sys.path.insert(0, "/root/repo")
 import multiprocessing as mp
 from pdf_extractor_spark import corpus
 
@@ -96,7 +97,8 @@ if __name__ == "__main__":
 
 
 def _run_once(cmd_args: list[str]) -> dict:
-    out = subprocess.run(cmd_args, capture_output=True, text=True, timeout=1800)
+    out = subprocess.run(cmd_args, capture_output=True, text=True, timeout=1800,
+                         cwd=ROOT)
     for line in out.stdout.strip().splitlines()[::-1]:
         try:
             return json.loads(line)
@@ -199,7 +201,7 @@ def main() -> None:
         "cluster-transferable number: on a real cluster N and 4N executors are "
         "separate hosts and the ceiling effect vanishes.\n"
     )
-    with open("/root/repo/BENCH.md", "a") as f:
+    with open(os.path.join(ROOT, "BENCH.md"), "a") as f:
         f.write("\n".join(lines))
 
 
