@@ -42,22 +42,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _ordered(df: DataFrame, *cols: str) -> DataFrame:
-    """Presentation sort, OPT-IN via SPARK_GRAFT_ORDERED=1. The driver's
-    correctness gate canonicalizes by sorting rows before hashing, so a
-    trailing global orderBy is cosmetic — and it is EXPENSIVE: Spark's
-    range partitioner runs a sampling pass that executes the ENTIRE
-    upstream a second time under full materialization (measured: q39
-    8.7 s with the sort vs 0.9 s without at sf0.1; q26 6.3 vs 1.9).
-    At 10^12 rows a corpus-sized result must never global-sort for
-    cosmetics anyway. Heavy suites route their final sort here."""
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_ORDERED"):
-        return df.orderBy(*cols)
-    return df
-
-
 def _xpar(spark: SparkSession) -> int:
     """Extraction fan-out width = the session's core count. The roundtrip
     queries used a fixed 8 (sf0.01 sizing); at sf0.1 on local[32] that
@@ -624,7 +608,6 @@ def q_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("mix_weight"), F.col("total_chars"), 10_000_000),
         )
     )
-    result = _ordered(result, "source")
     result._persisted_pages = pages  # release handle (frontier_release)
     return result
 
@@ -696,11 +679,11 @@ def q_extract_pdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         make_pdf, "url string, warc_ts timestamp, html binary"
     )
     out = run_extract(pages, num_partitions=_xpar(spark), salt=2)
-    return _ordered(out.select(
+    return out.select(
         F.regexp_replace(F.col("url"), "doc://", "").cast("long").alias("doc_id"),
         F.col("page_number"),
         F.col("text").alias("page_text"),
-    ), "doc_id")
+    )
 
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -858,8 +841,7 @@ def q_line_freq_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup.site_template_dedup(pol3, host_col="host")
         .withColumn("method", F.lit("site_template"))
     )
-    return _ordered(lf.unionByName(es).unionByName(esc).unionByName(st),
-                    "method", "doc_id")
+    return lf.unionByName(es).unionByName(esc).unionByName(st)
 
 
 def q_page_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -972,10 +954,9 @@ def q_channel_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("best:"), F.col("channel")).alias("channel"),
         "content",
     )
-    result = _ordered(
+    result = (
         fan.select(doc_of.alias("doc_id"), "channel", "content")
-        .unionByName(best),
-        "doc_id", "channel",
+        .unionByName(best)
     )
     result._persisted_gate = fan  # release handle (frontier_release)
     return result
@@ -1756,9 +1737,7 @@ def q_chunk_and_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("seq_text").alias("text"),
         F.col("n_tokens"),
     )
-    return _ordered(
-        chunks.unionByName(packed).unionByName(bpe).unionByName(shuffled),
-        "method", "gid", "sub_id")
+    return chunks.unionByName(packed).unionByName(bpe).unionByName(shuffled)
 
 
 def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1948,9 +1927,7 @@ def q_doc_metrics_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "url_host", "url_ok", "url_reason")
     rb = webtext.robots_match(urls, _robots_rules(spark))
     pm = _page_metadata_frame(docs)
-    result = _ordered(
-        base.join(uf, "doc_id").join(rb, "doc_id").join(pm, "doc_id"),
-        "doc_id")
+    result = base.join(uf, "doc_id").join(rb, "doc_id").join(pm, "doc_id")
     result._persisted_docs = docs  # release handle (frontier discipline)
     return result
 
@@ -1996,8 +1973,7 @@ def q_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("group_id", "doc_id")
         .withColumn("method", F.lit("canonical_url"))
     )
-    return _ordered(exact.unionByName(sim).unionByName(urlg),
-                    "method", "group_id", "doc_id")
+    return exact.unionByName(sim).unionByName(urlg)
 
 
 def q_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2038,8 +2014,7 @@ def q_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, threshold=0.5, shingle_store=_shingle_store_path(sf_dir),
         corpus_key=ckey,
     ).withColumn("method", F.lit("prefix_filter"))
-    return _ordered(mh.unionByName(ng).unionByName(inc).unionByName(pf),
-                    "method", "a", "b")
+    return mh.unionByName(ng).unionByName(inc).unionByName(pf)
 
 
 def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2082,10 +2057,9 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = dedup.simhash_neardup_pairs(
         _docs_with_dups(docs), max_hamming=3).withColumn(
         "method", F.lit("simhash_text"))
-    return _ordered(
+    return (
         banded.unionByName(buckets).unionByName(sem).unionByName(img)
-        .unionByName(aud).unionByName(sh),
-        "method", "a", "b",
+        .unionByName(aud).unionByName(sh)
     )
 
 
@@ -2193,7 +2167,7 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = arms[0]
     for a in arms[1:]:
         out = out.unionByName(a)
-    return _ordered(out, "method", "query_id", "rank")
+    return out
 
 
 def q_corpus_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2244,10 +2218,7 @@ def q_corpus_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     cm = sketch.countmin_topk(words).withColumn(
         "method", F.lit("countmin_topk"))
     words.unpersist()
-    return _ordered(
-        tri.unionByName(mdf).unionByName(toks).unionByName(cm),
-        "method", "rank",
-    )
+    return tri.unionByName(mdf).unionByName(toks).unionByName(cm)
 
 
 def q_streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -732,55 +732,6 @@ def _assemble_classic(objs: list[bytes], root_num: int = 1) -> bytes:
     return bytes(out)
 
 
-def build_pdf_nested(
-    page_runs: list[list[tuple[float, float, str]]], fanout: int = 2,
-) -> bytes:
-    """``build_pdf`` with a BALANCED page tree: pages grouped under
-    nested intermediate /Pages nodes ``fanout`` at a time up to a single
-    root — the layout real writers emit for long documents (a flat
-    1000-kid /Kids array is the exception). Exercises the kernel's
-    recursive page-tree walk; same text, same page order."""
-    objs: list[bytes] = []
-
-    def add(body: bytes) -> int:
-        objs.append(body)
-        return len(objs)
-
-    page_nums: list[int] = []
-    for runs in page_runs:
-        ops = ["BT", "/F1 12 Tf"]
-        for x, y, text in runs:
-            ops.append(f"1 0 0 1 {x:g} {y:g} Tm")
-            ops.append(f"({_pdf_escape(text)}) Tj")
-        ops.append("ET")
-        s = "\n".join(ops).encode("latin-1")
-        c = add(b"<< /Length " + str(len(s)).encode()
-                + b" >>\nstream\n" + s + b"\nendstream")
-        page_nums.append(add((
-            f"<< /Type /Page /Parent 0 0 R"  # patched once parents exist
-            f" /MediaBox [0 0 612 792] /Contents {c} 0 R >>").encode()))
-
-    level = page_nums
-    first = True
-    while first or len(level) > 1:
-        first = False
-        nxt: list[int] = []
-        for at in range(0, len(level), fanout):
-            chunk = level[at:at + fanout]
-            kids = " ".join(f"{k} 0 R" for k in chunk)
-            n = add((f"<< /Type /Pages /Parent 0 0 R /Kids [{kids}]"
-                     f" /Count {len(chunk)} >>").encode())
-            for k in chunk:  # patch the children's /Parent
-                objs[k - 1] = objs[k - 1].replace(
-                    b"/Parent 0 0 R", b"/Parent %d 0 R" % n)
-            nxt.append(n)
-        level = nxt
-    root = level[0]
-    objs[root - 1] = objs[root - 1].replace(b" /Parent 0 0 R", b"")
-    cat = add(f"<< /Type /Catalog /Pages {root} 0 R >>".encode())
-    return _assemble_classic(objs, root_num=cat)
-
-
 def _pdf_lines(rng: random.Random, n_lines: int) -> list[str]:
     return [
         _sentence(rng, "en", rng.randint(4, 8)).capitalize() + "."

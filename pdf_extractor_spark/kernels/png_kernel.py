@@ -287,11 +287,3 @@ def render_text_png(text: str, width: int = 32,
 
     return pack_png_gray(render_page_gray(wrap_fixed(text, width)),
                          interlace=interlace)
-
-
-def ocr_png(payload: bytes, max_err: int = 6) -> list[str]:
-    """OCR one fixed-pitch PNG page into raw grid lines (container parse
-    + the shared ``ocr_gray_rows`` core)."""
-    from pdf_extractor_spark.kernels.ocr_kernel import ocr_gray_rows
-
-    return ocr_gray_rows(decode_png_gray(payload), max_err=max_err)

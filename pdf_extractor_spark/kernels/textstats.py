@@ -42,11 +42,6 @@ def ws_token_count(text: str) -> int:
     return len(norm.split(" ")) if norm else 0
 
 
-def bpe_ish_token_count(text: str) -> int:
-    """Count of TOKEN_RE matches (letters runs / digit runs / single punct)."""
-    return len(_TOKEN_RE_C.findall(text))
-
-
 def punct_ratio(text: str) -> float:
     """Punctuation chars / total non-space chars."""
     squeezed = _WS_RE.sub("", text)

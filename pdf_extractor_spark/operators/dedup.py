@@ -7,8 +7,6 @@ all-pairs Jaccard oracle (recall ≈ 1 at the configured bands/rows).
 Pure-Python twins in kernels/textstats.py.
 
 Scale notes (100 TB):
-  - exact dedup: one shuffle on the 16-byte fingerprint — minimal width
-    because we aggregate on md5, never on the text itself.
   - MinHash-LSH: signatures are computed scan-side (one pass, no shuffle),
     then ONE shuffle on (band_id, band_hash) to bucket candidates, then a
     self-join restricted to buckets — the classic way to avoid the O(n²)
@@ -34,7 +32,7 @@ def _norm(col):
 
 
 # ---------------------------------------------------------------------------
-# exact dedup
+# shingles
 # ---------------------------------------------------------------------------
 
 def shingle_arrays(docs: DataFrame, n: int = 3) -> DataFrame:
@@ -69,26 +67,6 @@ def shingle_arrays(docs: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def exact_duplicates(docs: DataFrame) -> DataFrame:
-    """Groups of byte-identical (normalized) documents: fingerprint groups
-    with >1 member. One narrow shuffle on md5(text)."""
-    fp = docs.select("doc_id", F.md5(_norm(F.col("text"))).alias("fp"))
-    return (
-        fp.groupBy("fp")
-        .agg(F.count("*").alias("n"), F.min("doc_id").alias("keep_id"))
-        .where(F.col("n") > 1)
-        .orderBy("fp")
-    )
-
-
-def dedup_exact(docs: DataFrame) -> DataFrame:
-    """Keep the min-doc_id representative per fingerprint group."""
-    w_fp = F.md5(_norm(F.col("text"))).alias("fp")
-    ranked = docs.select("doc_id", w_fp)
-    keep = ranked.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
-    return docs.join(keep, "doc_id", "left_semi")
-
-
 # ---------------------------------------------------------------------------
 # MinHash + LSH near-dup
 # ---------------------------------------------------------------------------
@@ -102,59 +80,6 @@ def _widen(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-def minhash_signatures(docs: DataFrame, num_perm: int = 64, n: int = 3) -> DataFrame:
-    """(doc_id, sig array<long>[num_perm]) — one scan, no shuffle.
-
-    One md5 per shingle (60-bit base hash), then num_perm cheap universal
-    hashes (a*h+b mod 2^31-1) — the digest is the expensive part, so this is
-    ~num_perm× less hash work than one md5 per (seed, shingle) for the same
-    LSH recall. Arrow-batched numpy kernel: per doc, the num_perm minima are
-    one (shingles × num_perm) int64 broadcast-multiply + column-min; shingle
-    digests are memoised across the batch. Bit-identical to
-    textstats.minhash_signature.
-    """
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    from pdf_extractor_spark.kernels.textstats import (
-        MINHASH_P, minhash_perm_params, normalize,
-    )
-
-    params = minhash_perm_params(num_perm)
-    A = np.array([a for a, _ in params], dtype=np.int64)
-    B = np.array([b for _, b in params], dtype=np.int64)
-
-    def kernel(batches):
-        cache: dict[str, int] = {}
-
-        def shash(s: str) -> int:
-            v = cache.get(s)
-            if v is None:
-                v = int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16) % MINHASH_P
-                cache[s] = v
-            return v
-
-        for pdf in batches:
-            sigs = []
-            for text in pdf["text"]:
-                text = text or ""
-                nrm = normalize(text)
-                toks = nrm.split(" ") if nrm else []
-                if len(toks) < n:
-                    sh = {" ".join(toks)}
-                else:
-                    sh = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
-                hs = np.fromiter((shash(s) for s in sh), dtype=np.int64, count=len(sh))
-                sigs.append(((hs[:, None] * A + B) % MINHASH_P).min(axis=0))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "sig": sigs})
-
-    return _widen(docs.select("doc_id", "text")).mapInPandas(
-        kernel, "doc_id long, sig array<long>"
-    )
 
 
 def shingle_hash_arrays(docs: DataFrame, n: int = 3) -> DataFrame:
@@ -796,7 +721,6 @@ def assign_cells(e: DataFrame, cent_lists: list[list[float]]) -> DataFrame:
             )
 
     return e.mapInPandas(kern, "vec_id long, v array<double>, cell int")
-
 
 
 def embedding_neardup_pairs(
@@ -1681,32 +1605,7 @@ def minhash_lsh_pairs_incremental(
     b=new doc, jaccard).
     """
     corpus_banded = minhash_banded_from_hashes(corpus_shh, num_perm, bands)
-    return minhash_pairs_delta_vs_index(
-        new_shh, corpus_banded, corpus_shh, num_perm, bands,
-        jaccard_threshold)
-
-
-def minhash_pairs_delta_vs_index(
-    new_shh: DataFrame,
-    corpus_banded: DataFrame,
-    corpus_shh: DataFrame,
-    num_perm: int = 64,
-    bands: int = 16,
-    jaccard_threshold: float = 0.5,
-    new_banded: DataFrame | None = None,
-) -> DataFrame:
-    """Delta-vs-index with a PREBANDED corpus: when the banded signatures
-    are committed alongside the shingle store (what the streaming operator
-    maintains), the per-batch compute is O(|batch|) hashing + one keyed
-    join against the signature table — re-banding the whole corpus per
-    batch would be corpus-sized numpy work every trigger. At 10^12 docs
-    the signature table additionally partitions on a band_sig prefix so
-    the join prunes to matching buckets. ``new_banded``: callers that
-    already banded the batch (the streaming sink stores the signatures
-    anyway) pass it in so the minhash work runs once per trigger, not
-    twice."""
-    if new_banded is None:
-        new_banded = minhash_banded_from_hashes(new_shh, num_perm, bands)
+    new_banded = minhash_banded_from_hashes(new_shh, num_perm, bands)
     cand = (
         new_banded.select(
             "band", "band_sig", F.col("doc_id").alias("b"))

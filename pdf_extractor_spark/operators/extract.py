@@ -179,18 +179,17 @@ def extract_document(payload: bytes | None,
     Image payloads (scanned-document tier, reference enums.py:25-31,
     tesseract_extractor.py:22-53): fixed-pitch bitmap pages (the BMP and
     PNG profiles of kernels/ocr_kernel.py + kernels/png_kernel.py) are
-    OCR'd from scratch into the TEXT channel; every other image format —
-    or a container variant outside the OCR profile — dispatches to a loud
-    needs-OCR quarantine row (meta ok=false) instead of silently
+    OCR'd from scratch into the TEXT channel; a container variant outside
+    the OCR profile, or a raster that is not machine print, dispatches to
+    a loud needs-OCR quarantine row (meta ok=false) instead of silently
     extracting as empty text, preserving the reference's file_type
     semantics.
     """
     if payload:
         img = detect_image_format(payload)
-        decoder = _OCR_DECODERS.get(img)
-        if decoder is not None:
+        if img is not None:
             try:
-                lines = ocr_gray_rows(decoder(payload))
+                lines = ocr_gray_rows(_OCR_DECODERS[img](payload))
             except OcrUnsupported as exc:
                 return [_needs_ocr_row(img, f" ({exc})")]
             if not ocr_page_plausible(lines):
@@ -212,8 +211,6 @@ def extract_document(payload: bytes | None,
                     "spans": lang_spans(text), "meta": meta,
                 }
             ]
-        if img is not None:
-            return [_needs_ocr_row(img, " (no OCR stack in this environment)")]
     if payload and payload.startswith(b"%PDF"):
         res = extract_pdf(payload)
         rows = []
@@ -233,14 +230,6 @@ def extract_document(payload: bytes | None,
                     "meta": res["meta"],
                 }
             )
-        if not rows:
-            rows = [
-                {
-                    "page_number": 1, "text": "", "combined": "", "table": "",
-                    "markdown": "", "titles": "", "latex": "", "spans": [],
-                    "meta": res["meta"],
-                }
-            ]
         return rows
     res = extract_html(payload or b"", transport_charset)
     ch = res["channels"]

@@ -435,10 +435,6 @@ AUD_MAGIC = b"AUD1"
 FRAMES_DDL = (
     "media_id long, frame_index int, frame_ts_ms long, payload binary, error string"
 )
-AUDIO_FEATURES_DDL = (
-    "media_id long, n_samples int, sample_rate int, rms double, "
-    "zero_crossings int, error string"
-)
 
 
 def encode_fake_video(media_id: int, n_frames: int, width: int = 8, height: int = 8,
@@ -454,18 +450,6 @@ def encode_fake_audio(media_id: int, n_samples: int, sample_rate: int = 16000) -
     rng = np.random.default_rng(media_id)
     pcm = (rng.normal(0, 3000, size=n_samples)).astype(np.int16)
     return AUD_MAGIC + struct.pack("<IH", n_samples, sample_rate) + pcm.tobytes()
-
-
-def encode_wav_pcm16(pcm: np.ndarray, sample_rate: int = 16000) -> bytes:
-    """A real RIFF/WAVE file: 16-bit mono PCM, the canonical uncompressed
-    audio container (format code 1). Used by tests and as the reference
-    shape for `_decode_wav`."""
-    data = pcm.astype("<i2").tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16)
-    return (b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data))
-            + b"WAVE"
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data)
 
 
 def _decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
@@ -502,21 +486,6 @@ def _decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
 
 
 _Y4M_FRAME_FRACTION = {"420": 3, "mono": 2, "422": 4, "444": 6}  # x/2 of w*h
-
-
-def encode_y4m(media_id: int, n_frames: int, width: int = 8, height: int = 8,
-               fps: tuple[int, int] = (25, 1), chroma: str = "420") -> bytes:
-    """A real YUV4MPEG2 stream (uncompressed planar YUV — the ffmpeg
-    interchange format): header line, then FRAME marker + raw planes per
-    frame. Seeded deterministic plane bytes."""
-    rng = np.random.default_rng(media_id)
-    fsize = width * height * _Y4M_FRAME_FRACTION[chroma] // 2
-    head = (f"YUV4MPEG2 W{width} H{height} F{fps[0]}:{fps[1]} Ip A1:1 "
-            f"C{'mono' if chroma == 'mono' else chroma}\n").encode("ascii")
-    frames = b"".join(
-        b"FRAME\n" + rng.integers(0, 256, size=fsize, dtype=np.uint8).tobytes()
-        for _ in range(n_frames))
-    return head + frames
 
 
 def _iter_y4m_frames(raw: bytes):
@@ -691,35 +660,3 @@ def sample_frames(media: DataFrame, every_n: int = 5) -> DataFrame:
             yield pd.DataFrame(out)
 
     return media.mapInPandas(batches, FRAMES_DDL)
-
-
-def audio_features(media: DataFrame) -> DataFrame:
-    """Waveform → fixed feature row (RMS + zero crossings). Decode is REAL
-    for RIFF/WAVE PCM-16 (struct-level chunk walk — `_decode_wav`), the
-    fake PCM container for scale tests, and a loud NotImplementedError for
-    codec formats; numpy does the waveform math either way."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"media_id": [], "n_samples": [], "sample_rate": [],
-                   "rms": [], "zero_crossings": [], "error": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    x, sr = _decode_audio(bytes(payload))
-                    n = len(x)
-                    out["media_id"].append(mid)
-                    out["n_samples"].append(int(n))
-                    out["sample_rate"].append(int(sr))
-                    out["rms"].append(float(np.sqrt((x * x).mean())) if n else 0.0)
-                    out["zero_crossings"].append(int((np.diff(np.sign(x)) != 0).sum()))
-                    out["error"].append(None)
-                except Exception as exc:
-                    out["media_id"].append(mid)
-                    out["n_samples"].append(None)
-                    out["sample_rate"].append(None)
-                    out["rms"].append(None)
-                    out["zero_crossings"].append(None)
-                    out["error"].append(f"{type(exc).__name__}: {exc}")
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(batches, AUDIO_FEATURES_DDL)

@@ -201,30 +201,6 @@ def upserted_events(events: DataFrame, soft_delete_mod: int | None = 17) -> Data
     ).orderBy("event_id")
 
 
-def order_detail_gather(
-    orders: DataFrame, customer: DataFrame, lineitem: DataFrame, max_orderkey: int = 40
-) -> DataFrame:
-    """EP3 multi-way per-page gather (main.py:1045-1098): point lookup of a
-    small key set joined across three tables in ONE pass — replaces the
-    reference's per-job N+1 loop. The filtered fact slice is tiny, so both
-    dimension joins broadcast; the predicate pushes to the scan."""
-    lines = lineitem.where(F.col("l_orderkey") <= max_orderkey)
-    return (
-        lines.join(F.broadcast(orders.where(F.col("o_orderkey") <= max_orderkey)),
-                   lines.l_orderkey == F.col("o_orderkey"))
-        .join(customer, F.col("o_custkey") == customer.c_custkey)
-        .select(
-            "l_orderkey",
-            "l_linenumber",
-            F.col("l_quantity").alias("quantity"),
-            F.round("l_extendedprice", 2).alias("price"),
-            "o_orderstatus",
-            "c_name",
-        )
-        .orderBy("l_orderkey", "l_linenumber")
-    )
-
-
 def scalar_functions_showcase(docs: DataFrame, carry_cols: tuple[str, ...] = ()) -> DataFrame:
     """Every scalar function family the reference uses (SURVEY.md §2 scalar
     row: strip/join/split/ilike/lower/startswith/regex, round/ceil, base64)
@@ -434,22 +410,6 @@ def order_value_percentiles(orders: DataFrame) -> DataFrame:
     )
 
 
-def lineitem_stats(lineitem: DataFrame) -> DataFrame:
-    """Statistical aggregate parity per return flag: sample stddev/variance
-    and Pearson correlation (quantity vs extended price) — the standard
-    profiling pass over a fact table. One shuffle, map-side partials."""
-    return (
-        lineitem.groupBy("l_returnflag")
-        .agg(
-            F.round(F.stddev("l_quantity"), 6).alias("sd_qty"),
-            F.round(F.variance("l_extendedprice"), 4).alias("var_price"),
-            F.round(F.corr("l_quantity", "l_extendedprice"), 6).alias("corr_qty_price"),
-            F.count("*").alias("n"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
 def event_time_heatmap(events: DataFrame) -> DataFrame:
     """Date-dimension rollup: events per (day-of-week, hour) — the
     activity-heatmap query, covering the date/time scalar family
@@ -478,18 +438,6 @@ def user_event_pivot(events: DataFrame) -> DataFrame:
         .agg(F.count(F.lit(1)))
         .na.fill(0, EVENT_TYPES)
         .orderBy("user_id")
-    )
-
-
-def order_flags_unpivot(orders: DataFrame) -> DataFrame:
-    """UNPIVOT/melt parity: wide per-order numeric columns fanned into
-    (o_orderkey, metric, value) long form — the inverse of q71's pivot.
-    Narrow 1→N row explode, no shuffle (the orderBy is for the oracle)."""
-    return (
-        orders.select("o_orderkey", F.col("o_totalprice").alias("totalprice"),
-                      F.col("o_custkey").cast("double").alias("custkey"))
-        .unpivot("o_orderkey", ["totalprice", "custkey"], "metric", "value")
-        .orderBy("o_orderkey", "metric")
     )
 
 
@@ -523,80 +471,3 @@ def user_event_windows(events: DataFrame) -> DataFrame:
         F.ntile(4).over(wr).alias("value_quartile"),
         F.dense_rank().over(wr).alias("value_rank"),
     ).orderBy("user_id", "event_id")
-
-
-def user_value_moving_avg(events: DataFrame) -> DataFrame:
-    """Bounded window-frame parity: 4-event moving average (ROWS 3 PRECEDING
-    TO CURRENT) and running total per user over event time. One shuffle on
-    user_id; the frame is bounded so state per row is O(4)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return events.select(
-        "user_id",
-        "event_id",
-        F.round(F.avg("value").over(w.rowsBetween(-3, 0)), 6).alias("mavg4"),
-        F.round(F.sum("value").over(w.rowsBetween(Window.unboundedPreceding, 0)), 4)
-        .alias("running_total"),
-    ).orderBy("user_id", "event_id")
-
-
-def order_value_quartiles(orders: DataFrame) -> DataFrame:
-    """Ranking-window parity: ntile(4) value quartile and dense_rank within
-    each priority. One shuffle on the priority key."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey"))
-    return orders.select(
-        "o_orderkey", "o_orderpriority",
-        F.ntile(4).over(w).alias("quartile"),
-        F.dense_rank().over(w).alias("rnk"),
-    ).orderBy("o_orderkey")
-
-
-def gap_fill_locf(df: DataFrame, key_col: str, day_col: str,
-                  value_col: str) -> DataFrame:
-    """Dense daily series per key with last-observation-carried-forward:
-    build each key's day spine from its own min..max day (sequence →
-    explode — a JVM generator, no driver loop), left-join the observations,
-    and fill gaps with `last(value, ignoreNulls)` over the ordered window.
-    Returns (key_col, day, value, filled boolean). Multiple observations
-    on one day collapse to their max (deterministic) before the fill.
-
-    The time-series companion to the as-of join (q33): as-of aligns one
-    table's rows to another's timeline; gap-fill densifies a single series
-    onto the calendar. Plan: one keyed aggregate for the spine bounds, a
-    broadcast-sized spine explode per key, one keyed window — all shuffles
-    on key_col, nothing global.
-    """
-    from pyspark.sql.window import Window
-
-    obs = (
-        df.select(
-            F.col(key_col).alias("k"),
-            F.col(day_col).cast("date").alias("day"),
-            F.col(value_col).alias("v"),
-        )
-        # one row per (key, day): multiple same-day observations would fan
-        # out the spine join and make the carried value order-dependent —
-        # intra-day ties resolve deterministically to the max value
-        .groupBy("k", "day")
-        .agg(F.max("v").alias("v"))
-    )
-    bounds = obs.groupBy("k").agg(
-        F.min("day").alias("d0"), F.max("day").alias("d1"))
-    spine = bounds.select(
-        "k", F.explode(F.sequence("d0", "d1")).alias("day"))
-    w = Window.partitionBy("k").orderBy("day").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow)
-    return (
-        spine.join(obs, ["k", "day"], "left")
-        .select(
-            F.col("k").alias(key_col),
-            "day",
-            F.last("v", ignorenulls=True).over(w).alias(value_col),
-            F.col("v").isNull().alias("filled"),
-        )
-        .orderBy(key_col, "day")
-    )

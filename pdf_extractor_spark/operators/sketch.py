@@ -194,11 +194,8 @@ def _cm_pos(word: Column, row: Column) -> Column:
 
 def cm_cell_expand(df: DataFrame, key_col: str,
                    carry: tuple[str, ...] = ()) -> DataFrame:
-    """The Count-Min cell expansion shared by the batch build, the
-    streaming build, and their parity tests: one row per (input row x
-    depth) with the md5 cell position — (carry..., cm_key, row, pos).
-    Keeping this in ONE place is what makes stream/batch cell equality a
-    structural guarantee rather than a copy-discipline."""
+    """The Count-Min cell expansion: one row per (input row x depth) with
+    the md5 cell position — (carry..., cm_key, row, pos)."""
     rows = F.sequence(F.lit(0), F.lit(CM_DEPTH - 1))
     out = df.select(
         *carry, F.col(key_col).alias("cm_key"), F.explode(rows).alias("row"))
@@ -369,26 +366,3 @@ def histogram_quantiles_sql(table_expr: str, value_sql: str,
                 GROUP BY grp, bucket)
         ) GROUP BY grp
     """
-
-
-def hll_merge_registers(*reg_tables: DataFrame) -> DataFrame:
-    """Merge HLL register tables (grp, idx, m_j) by max — the property that
-    makes HLL shardable: registers built independently per shard/day/batch
-    combine losslessly, so a continuous crawl keeps one tiny committed
-    register table per group and folds each new batch in with ONE
-    register-sized aggregate (the q18 incremental-dedup shape applied to
-    cardinality state)."""
-    out = reg_tables[0]
-    for t in reg_tables[1:]:
-        out = out.unionByName(t)
-    return out.groupBy("grp", "idx").agg(F.max("m_j").alias("m_j"))
-
-
-def countmin_merge_cells(*cell_tables: DataFrame) -> DataFrame:
-    """Merge Count-Min cell tables (row, pos, cell_total) by sum — CM is a
-    linear sketch, so shard-built cells add exactly."""
-    out = cell_tables[0]
-    for t in cell_tables[1:]:
-        out = out.unionByName(t)
-    return out.groupBy("row", "pos").agg(
-        F.sum("cell_total").alias("cell_total"))

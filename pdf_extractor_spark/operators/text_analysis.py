@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_extractor_spark.kernels.textstats import EN_STOPWORDS_SMALL, TOKEN_RE
+from pdf_extractor_spark.kernels.textstats import EN_STOPWORDS_SMALL
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -25,19 +25,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _norm(col):
     """lower + collapse whitespace (kernels/textstats.normalize twin)."""
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
-
-
-def token_counts(docs: DataFrame) -> DataFrame:
-    """Whitespace + BPE-ish token counts per document."""
-    norm = _norm(F.col("text"))
-    return docs.select(
-        "doc_id",
-        F.when(norm == "", 0)
-        .otherwise(F.size(F.split(norm, " ")))
-        .alias("ws_tokens"),
-        F.size(F.regexp_extract_all(F.col("text"), F.lit(TOKEN_RE), 0)).alias("bpe_tokens"),
-        F.length("text").alias("chars"),
-    )
 
 
 def quality_scores(docs: DataFrame) -> DataFrame:

@@ -1,10 +1,8 @@
 """Web-corpus operators beyond the reference's API: URL canonicalization
-(crawl dedup's first line of defense), extraction-quality scoring
-(token-level P/R/F1 of extracted text against a gold text column — how
-boilerplate-removal quality is measured over a labeled corpus), link
-extraction with relative-URL resolution, and a host-level fixed-point
-PageRank (the canonical web-graph centrality signal used for crawl
-prioritization and quality weighting of training corpora).
+(crawl dedup's first line of defense), link extraction with relative-URL
+resolution, and a host-level fixed-point PageRank (the canonical web-graph
+centrality signal used for crawl prioritization and quality weighting of
+training corpora).
 
 All of these are pure JVM expression/aggregation plans — no Python in
 the hot path, every stage map-side-partial — and all carry DuckDB SQL
@@ -51,78 +49,6 @@ def canonical_url_expr(url: Column) -> Column:
         scheme, F.lit("://"), auth, path2,
         F.when(qsorted != "", F.concat(F.lit("?"), qsorted)).otherwise(F.lit("")),
     )
-
-
-def url_dup_groups(pages: DataFrame, url_col: str = "url") -> DataFrame:
-    """Pages sharing a canonical URL → (canonical_url, n_urls, urls) groups
-    with more than one distinct raw spelling — the crawl-frontier exact-dup
-    shape (hash groupBy on the canonical key; one shuffle)."""
-    c = pages.select(
-        F.col(url_col).alias("raw_url"),
-        canonical_url_expr(F.col(url_col)).alias("canonical_url"),
-    )
-    return (
-        c.groupBy("canonical_url")
-        .agg(
-            F.countDistinct("raw_url").alias("n_urls"),
-            F.array_sort(F.collect_set("raw_url")).alias("urls"),
-        )
-        .filter(F.col("n_urls") > 1)
-        .orderBy("canonical_url")
-    )
-
-
-def extraction_f1(df: DataFrame, pred_col: str, gold_col: str,
-                  key_col: str) -> DataFrame:
-    """Per-document token-multiset precision/recall/F1 of an extracted-text
-    column against a gold column (whitespace tokens, exact match).
-
-    Plan shape: explode both sides → one (key, token) partial-agg shuffle →
-    full-outer token join inside the same key partitioning → one key-level
-    agg. Empty gold AND empty pred scores 1.0 (extractor correctly emitted
-    nothing); empty on one side only scores 0.0. Rounded 6dp (+0.0) for the
-    engine-portable value hash — the SQL twin lives in the unit tests.
-    """
-    def counts(col: str, out: str) -> DataFrame:
-        return (
-            df.select(F.col(key_col).alias("k"),
-                      F.explode(F.split(F.trim(F.col(col)), r"\s+")).alias("tok"))
-            .filter(F.col("tok") != "")
-            .groupBy("k", "tok")
-            .agg(F.count("*").alias(out))
-        )
-
-    p = counts(pred_col, "pc")
-    g = counts(gold_col, "gc")
-    per_tok = p.join(g, ["k", "tok"], "full_outer").select(
-        "k",
-        F.coalesce("pc", F.lit(0)).alias("pc"),
-        F.coalesce("gc", F.lit(0)).alias("gc"),
-    )
-    scored = per_tok.groupBy("k").agg(
-        F.sum(F.least("pc", "gc")).alias("inter"),
-        F.sum("pc").alias("np"),
-        F.sum("gc").alias("ng"),
-    )
-    keys = df.select(F.col(key_col).alias("k")).distinct()
-    scored = keys.join(scored, "k", "left").select(
-        "k",
-        F.coalesce("inter", F.lit(0)).alias("inter"),
-        F.coalesce("np", F.lit(0)).alias("np"),
-        F.coalesce("ng", F.lit(0)).alias("ng"),
-    )
-    prec = F.when(F.col("np") > 0, F.col("inter") / F.col("np")) \
-        .otherwise(F.when(F.col("ng") == 0, F.lit(1.0)).otherwise(F.lit(0.0)))
-    rec = F.when(F.col("ng") > 0, F.col("inter") / F.col("ng")) \
-        .otherwise(F.when(F.col("np") == 0, F.lit(1.0)).otherwise(F.lit(0.0)))
-    return scored.select(
-        F.col("k").alias(key_col),
-        (F.round(prec, 6) + F.lit(0.0)).alias("precision"),
-        (F.round(rec, 6) + F.lit(0.0)).alias("recall"),
-        (F.round(
-            F.when(prec + rec > 0, 2 * prec * rec / (prec + rec))
-            .otherwise(F.lit(0.0)), 6) + F.lit(0.0)).alias("f1"),
-    ).orderBy(key_col)
 
 
 # --------------------------------------------------------------------------
@@ -185,10 +111,6 @@ _ATTR_VAL = "\"[^\"]*\"|'[^']*'|[^\\s\"'<>=`]+"
 # expected link set closed-form, never by regex).
 _HREF_EQ = r'(?<![\w-])href\s*=\s*'
 _REL_EQ = r'(?<![\w-])rel\s*=\s*'
-# rel=canonical as the WHOLE rel value, any quoting (unquoted terminated
-# by a delimiter lookahead so rel=canonical-ish does not match)
-_REL_CANONICAL = (r"(?:\"canonical\"|'canonical'"
-                  r"|canonical(?=[\s/>]|$))")
 _BASE_HREF_PATTERN = rf'(?i)<base\s[^>]*?{_HREF_EQ}({_ATTR_VAL})'
 # full <a ...> tag attrs (group 1) for per-link href+rel inspection.
 # The attrs body is [^<>] (not [^>]): a mid-document UNCLOSED anchor must
@@ -199,12 +121,6 @@ _BASE_HREF_PATTERN = rf'(?i)<base\s[^>]*?{_HREF_EQ}({_ATTR_VAL})'
 # the next '<' (unclosed tag), or end-of-input.
 _A_TAG_PATTERN = (rf'(?i)<a\s([^<>]*?{_HREF_EQ}(?:{_ATTR_VAL})[^<>]*)'
                   r'(?:>|(?=<)|$)')
-_CANONICAL_PATTERN = (
-    rf'(?i)<link\s[^>]*?{_REL_EQ}{_REL_CANONICAL}'
-    rf'[^>]*?{_HREF_EQ}({_ATTR_VAL})')
-_CANONICAL_PATTERN_HREF_FIRST = (
-    rf'(?i)<link\s[^>]*?{_HREF_EQ}({_ATTR_VAL})'
-    rf'[^>]*?{_REL_EQ}{_REL_CANONICAL}')
 
 
 def _unquote_attr(v: Column) -> Column:
@@ -253,32 +169,6 @@ def extract_links(pages: DataFrame, url_col: str = "url",
         href.alias("href"),
         resolve_url_expr(F.col("base"), href).alias("link_url"),
         nofollow.alias("nofollow"),
-    )
-
-
-def extract_canonical_links(pages: DataFrame, url_col: str = "url",
-                            html_col: str = "html") -> DataFrame:
-    """``(url, html)`` pages → ``(url, canonical_url)`` from
-    ``<link rel="canonical" href=...>`` (either attribute order) resolved
-    against the page's effective base (``<base href>`` applies to every
-    URL-bearing attribute per the HTML spec, link@href included) — the
-    in-page dedup signal next to URL canonicalization: a crawl keeps ONE
-    copy per canonical target and the graph credits it. Pages without
-    the tag are absent from the output (join back left to keep them).
-    Narrow, zero-Python."""
-    html_str = F.decode(F.col(html_col), "utf-8")
-    c1 = _unquote_attr(F.regexp_extract(html_str, _CANONICAL_PATTERN, 1))
-    c2 = _unquote_attr(
-        F.regexp_extract(html_str, _CANONICAL_PATTERN_HREF_FIRST, 1))
-    return (
-        pages.select(
-            F.col(url_col).alias("url"),
-            base_href_expr(html_str, F.col(url_col)).alias("base"),
-            F.when(c1 != "", c1).otherwise(c2).alias("c"))
-        .where(F.col("c") != "")
-        .select("url",
-                resolve_url_expr(F.col("base"), F.col("c"))
-                .alias("canonical_url"))
     )
 
 

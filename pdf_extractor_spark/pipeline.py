@@ -137,32 +137,27 @@ class ExtractionJob:
         finished_at}`` (epoch ms), from the output table's manifest CHAIN
         (authoritative — a bucket is visible iff its data committed).
 
-        Walk parent pointers from CURRENT: a commit carrying the cumulative
-        ``waves`` record (pipeline appends write it; maintenance commits
-        carry it) is self-sufficient — stop there; an entry without
-        ``finished_at`` is the wave that commit appended. Otherwise take
-        each append's ``buckets`` as a wave and keep walking through
-        row-PRESERVING maintenance commits; a plain overwrite replaced the
-        data, so older appends no longer count."""
+        Walk parent pointers from CURRENT to the newest commit carrying the
+        cumulative ``waves`` record (pipeline appends write it; maintenance
+        commits carry it); an entry without ``finished_at`` is the wave
+        that commit appended. Appends by other writers and row-PRESERVING
+        maintenance commits are walked through; a plain overwrite replaced
+        the data, so nothing older counts."""
         by_id = {m["snapshot_id"]: m for m in self.extracted.snapshots()}
         sid = self.extracted._current_id()
-        newer: list[dict] = []
         while sid is not None and sid in by_id:
             m = by_id[sid]
             summ = m.get("summary") or {}
             if "waves" in summ:
                 return [{"finished_at": m.get("committed_at"), **w}
-                        for w in summ["waves"]] + newer[::-1]
-            if m["op"] == "append":
-                if "buckets" in summ:
-                    newer.append({"buckets": summ["buckets"],
-                                  "finished_at": m.get("committed_at")})
-            elif not (m["op"] in ("compact", "add_column", "rename_column", "drop_column")
-                      or "soft_delete" in summ or "undelete" in summ
-                      or "backfill" in summ):
+                        for w in summ["waves"]]
+            if not (m["op"] in ("append", "compact", "add_column",
+                                "rename_column", "drop_column")
+                    or "soft_delete" in summ or "undelete" in summ
+                    or "backfill" in summ):
                 break  # plain overwrite: data replaced
             sid = m.get("parent_id")
-        return newer[::-1]
+        return []
 
     def done_buckets(self) -> set[int]:
         """Buckets already committed (see ``_waves``)."""

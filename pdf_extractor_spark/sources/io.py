@@ -98,27 +98,6 @@ def write_pages(df: DataFrame, path: str, fmt: str = "parquet", mode: str = "ove
     raise ValueError(f"unsupported pages format: {fmt}")
 
 
-def write_extracted(
-    df: DataFrame,
-    path: str,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """Sink for the extracted table. Parquet (partitionable — at scale,
-    partition by a coarse key like crawl date or partition_id so readers
-    prune) or JSON-lines (spans/meta nest naturally; CSV cannot hold them)."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    if fmt in ("parquet", "orc"):
-        w.format(fmt).save(path)
-    elif fmt == "json":
-        w.json(path)
-    else:
-        raise ValueError(f"unsupported extracted format: {fmt}")
-
-
 def read_extracted(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
     from pdf_extractor_spark.operators.extract import EXTRACTED_SCHEMA
 

@@ -222,150 +222,6 @@ def extract_stream_to_table(spark: SparkSession, pages_dir: str, table,
     q.awaitTermination()
 
 
-def _watermark(table, cache: dict | None = None, key: str | None = None):
-    """Replay watermark for ``table`` (MAX stream_batch_id over the chain),
-    memoized per (query, cache-key): the chain walk — O(manifests) file
-    reads — runs once per query, then advances in-closure, exactly like
-    snapshot_table_sink; within one query this writer is the only source
-    of new ids."""
-    if cache is not None and key in cache:
-        return cache[key]
-    last = table.chain_max_summary("stream_batch_id")
-    if cache is not None:
-        cache[key] = last
-    return last
-
-
-def _append_once(table, df: DataFrame, batch_id: int,
-                 cache: dict | None = None, key: str | None = None) -> None:
-    """Idempotent per-table append keyed by the stream batch id: each
-    table carries its OWN replay watermark, so a crash between the two
-    appends of a multi-table sink replays the batch and each table
-    independently skips or lands it — no duplicates, no gaps."""
-    last = _watermark(table, cache, key)
-    if last is not None and batch_id <= last:
-        return
-    table.append(df, summary={"stream_batch_id": batch_id})
-    if cache is not None:
-        cache[key] = batch_id
-
-
-def neardup_stream_to_tables(spark: SparkSession, docs_dir: str,
-                             shingle_store, pairs_table,
-                             checkpoint_dir: str,
-                             sig_store=None,
-                             num_perm: int = 64, bands: int = 32,
-                             n: int = 3, jaccard_threshold: float = 0.5,
-                             max_files_per_trigger: int = 1) -> None:
-    """Continuous-crawl near-duplicate detection: landed document segments
-    stream in; each micro-batch is (a) deduped AGAINST THE COMMITTED INDEX
-    (delta-vs-index — the corpus text is never re-scanned), (b) deduped
-    within itself, and then (c) its shingles AND banded signatures are
-    appended to the stores so later batches match against them. Pairs land
-    in `pairs_table`; every table uses a per-table batch-id watermark
-    (_append_once) so a kill/restart at ANY point replays exactly-once.
-
-    `sig_store` (recommended; created under the shingle store's root when
-    omitted) holds the corpus's banded signatures: with it, per-batch
-    compute is O(|batch|) hashing + one keyed join against the signature
-    table — WITHOUT it the corpus's signatures would be re-derived from
-    the shingle store every trigger, corpus-sized numpy work per batch.
-    The exact-Jaccard verify joins candidate ids back to the shingle
-    store. At 10^12 documents the signature table additionally partitions
-    on a band_sig prefix so the join prunes to matching buckets.
-
-    The union of intra-batch and delta-vs-index pairs over all batches
-    equals the batch operator's pairs on the full corpus (same banding
-    geometry, same exact verify; every unordered pair is found exactly
-    once — in the batch where its later member arrives). Drains available
-    segments, then stops (availableNow); re-run to pick up new segments.
-    """
-    from pdf_extractor_spark.operators import dedup
-    from pdf_extractor_spark.sources.table_format import SnapshotTable
-
-    if sig_store is None:
-        sig_store = SnapshotTable(shingle_store.root.rstrip("/") + "_sigs")
-
-    wm: dict = {}  # per-query watermark memo (one chain walk per table)
-
-    def sink(batch_df, batch_id: int) -> None:
-        pairs_last = _watermark(pairs_table, wm, "pairs")
-        if pairs_last is not None and batch_id <= pairs_last:
-            return
-        batch_shh = dedup.shingle_hash_arrays(
-            batch_df.select("doc_id", "text"), n).localCheckpoint()
-        batch_sigs = dedup.minhash_banded_from_hashes(
-            batch_shh, num_perm, bands).localCheckpoint()
-        # Exclude this batch's own doc_ids from the index view: a crash
-        # BETWEEN the store appends and the pairs append replays the batch
-        # with its rows already committed to the stores — without the
-        # anti-join the delta arm would see each batch doc twice (fanned-out
-        # duplicate pairs) and re-find intra-batch pairs through the inter
-        # arm in both orientations. The batch id set is tiny → broadcast.
-        batch_ids = batch_shh.select("doc_id").distinct()
-        base_shh = shingle_store.read(spark)
-        if base_shh is not None:
-            base_shh = base_shh.join(
-                F.broadcast(batch_ids), "doc_id", "left_anti")
-        base_sigs = sig_store.read(spark)
-        if base_sigs is not None:
-            base_sigs = base_sigs.join(
-                F.broadcast(batch_ids), "doc_id", "left_anti")
-        if base_shh is not None and not wm.get("lag_reconciled"):
-            # Signature store may LAG the shingle store — empty (corpus
-            # built by the batch path) or partial (batch-path appends
-            # between streaming runs). Skipping the delta arm for lagging
-            # docs would silently drop every incoming-vs-those-docs pair
-            # forever, so reconcile ONCE per query: derive signatures for
-            # exactly the corpus docs missing from the signature store and
-            # backfill them in their OWN commit (not the batch's
-            # watermarked append — a crash-replay whose sig append was
-            # already committed would skip it and the lag would persist).
-            # Idempotent by re-detection: the next query recomputes the
-            # missing set, which is then empty. Later batches in the same
-            # query append both stores together, so no new lag arises
-            # mid-query (single-writer discipline, as documented).
-            lag_shh = base_shh
-            if base_sigs is not None:
-                lag_shh = base_shh.join(
-                    base_sigs.select("doc_id").distinct(),
-                    "doc_id", "left_anti")
-            lag_sigs = dedup.minhash_banded_from_hashes(
-                lag_shh, num_perm, bands).localCheckpoint()
-            if not lag_sigs.isEmpty():
-                sig_store.append(lag_sigs)
-                base_sigs = (lag_sigs if base_sigs is None
-                             else base_sigs.unionByName(lag_sigs))
-            elif base_sigs is None:
-                base_sigs = lag_sigs  # empty frame with the right schema
-            wm["lag_reconciled"] = True
-        intra = dedup.minhash_pairs_from_hashes(
-            batch_shh, num_perm, bands, jaccard_threshold)
-        if base_shh is not None:
-            inter = dedup.minhash_pairs_delta_vs_index(
-                batch_shh, base_sigs, base_shh, num_perm, bands,
-                jaccard_threshold, new_banded=batch_sigs)
-            pairs = intra.unionByName(inter)
-        else:
-            pairs = intra
-        # index stores FIRST: if we crash after these appends, the replay
-        # skips them via each store's own watermark and still lands pairs
-        _append_once(shingle_store, batch_shh, batch_id, wm, "shingle")
-        _append_once(sig_store, batch_sigs, batch_id, wm, "sig")
-        _append_once(pairs_table, pairs, batch_id, wm, "pairs")
-
-    q = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def session_window_stream(events: DataFrame, gap: str = "30 minutes",
                           watermark: str = "1 day") -> DataFrame:
     """Native session windows (Spark's session_window): per-user sessions
@@ -407,31 +263,4 @@ def hll_user_registers_stream(events: DataFrame,
         .agg(F.max("rank").alias("m_j"))
         .select(F.col("w.start").alias("window_start"), "event_type",
                 "idx", "m_j")
-    )
-
-
-def cm_user_cells_stream(events: DataFrame,
-                         watermark: str = "1 day") -> DataFrame:
-    """Streaming Count-Min cell maintenance: per (tumbling day window) the
-    4x1024 cell table counting user_id occurrences — constant state per
-    window (<= depth x width rows) however many distinct users flow past,
-    and the cells are a LINEAR sketch so late rows within the watermark
-    and cross-shard merges fold in by plain addition. With availableNow
-    the cells equal the batch build (shared sketch._cm_pos hashing), so
-    any key's frequency estimate afterwards is min over its 4 cells.
-    Test-demonstrated (not a driver query: the q28 suite schema has no
-    cell-grain home); the batch arm lives in q54."""
-    from pdf_extractor_spark.operators.sketch import cm_cell_expand
-
-    keyed = cm_cell_expand(
-        events.where(F.col("user_id").isNotNull())
-        .withWatermark("ts", watermark)
-        .select("ts", F.col("user_id").cast("string").alias("key")),
-        "key", carry=("ts",),
-    )
-    return (
-        keyed.groupBy(F.window("ts", "1 day").alias("w"), "row", "pos")
-        .agg(F.count("*").alias("cell_total"))
-        .select(F.col("w.start").alias("window_start"), "row", "pos",
-                "cell_total")
     )

@@ -25,27 +25,27 @@ def docs(spark):
     return spark.createDataFrame(rows, DOCS_DDL)
 
 
-def test_exact_duplicates(spark, docs):
-    groups = dedup.exact_duplicates(docs).collect()
-    assert len(groups) == 1
-    assert groups[0]["n"] == 3  # 1, 2, 5 normalize identically
-    assert groups[0]["keep_id"] == 1
-
-
-def test_dedup_exact_keeps_representative(spark, docs):
-    kept = {r["doc_id"] for r in dedup.dedup_exact(docs).collect()}
-    assert kept == {1, 3, 4, 6, 7}
-
-
 def test_minhash_signature_matches_python_twin(spark, docs):
-    got = {
-        r["doc_id"]: list(r["sig"])
-        for r in dedup.minhash_signatures(docs, num_perm=8).collect()
-    }
-    for row in docs.collect():
-        expected = textstats.minhash_signature(row["text"], num_perm=8)
-        if textstats.shingles(row["text"]):
-            assert got[row["doc_id"]] == expected, row["doc_id"]
+    """The production MinHash (shingle_hash_arrays ->
+    minhash_banded_from_hashes) computes textstats.minhash_signature: with
+    one row per band each band value is one signature entry; with wider
+    bands it is the polynomial fold (mod 2^61-1) of that band's entries."""
+    num_perm = 8
+    shh = dedup.shingle_hash_arrays(docs)
+    for bands in (num_perm, 2):
+        rows = num_perm // bands
+        got = {
+            (r["doc_id"], r["band"]): r["band_sig"]
+            for r in dedup.minhash_banded_from_hashes(
+                shh, num_perm=num_perm, bands=bands).collect()
+        }
+        for row in docs.collect():
+            sig = textstats.minhash_signature(row["text"], num_perm=num_perm)
+            for b in range(bands):
+                want = 0
+                for v in sig[b * rows:(b + 1) * rows]:
+                    want = (want * 1_000_003 + v) % ((1 << 61) - 1)
+                assert got[(row["doc_id"], b)] == want, (row["doc_id"], bands, b)
 
 
 def test_minhash_lsh_finds_near_dups(spark, docs):
@@ -827,165 +827,6 @@ def test_site_template_dedup_per_host(spark):
     assert got[5] == "Nav home. epsilon body"  # rare on b.com -> kept
     assert got[6] == "zeta body six"
     assert got[8] == "theta body eight. iota body"  # 1-doc host untouched
-
-
-def test_neardup_stream_equals_batch(spark, tmp_path):
-    """Continuous-crawl dedup: streaming delta-vs-index + intra-batch pairs
-    over landed segments must equal the batch MinHash-LSH operator on the
-    full corpus (same banding geometry, exact verify), and a restart over
-    the same checkpoint must append nothing."""
-    from pdf_extractor_spark.operators import dedup
-    from pdf_extractor_spark.sources.table_format import SnapshotTable
-    from pdf_extractor_spark.streaming.stream import neardup_stream_to_tables
-
-    base = "the quick brown fox jumps over the lazy dog near segment"
-    rows = []
-    # segments land as separate files; dups within AND across segments
-    for seg in range(3):
-        for i in range(6):
-            did = seg * 100 + i
-            if i == 5 and seg > 0:
-                text = base + " zero 0"  # near-dup of doc 0 (cross-segment)
-            elif i == 4:
-                text = base + f" intra {seg}"  # near-dup cluster per segment
-            elif i == 3:
-                text = base + f" intra {seg} x"  # pairs with i==4 in-segment
-            else:
-                text = f"unique content number {did} " + " ".join(
-                    f"w{did}_{j}" for j in range(10))
-            rows.append((seg, did, text))
-    docs = spark.createDataFrame(rows, "seg int, doc_id long, text string")
-    ddir = str(tmp_path / "docs")
-    for seg in range(3):
-        docs.where(F.col("seg") == seg).select("doc_id", "text") \
-            .coalesce(1).write.mode("append").parquet(ddir)
-
-    store = SnapshotTable(str(tmp_path / "shingles"))
-    pairs_t = SnapshotTable(str(tmp_path / "pairs"))
-    ckpt = str(tmp_path / "ckpt")
-    neardup_stream_to_tables(spark, ddir, store, pairs_t, ckpt,
-                             max_files_per_trigger=1)
-
-    got = {(min(r["a"], r["b"]), max(r["a"], r["b"]), r["jaccard"])
-           for r in pairs_t.read(spark).collect()}
-    want = {(r["a"], r["b"], r["jaccard"])
-            for r in dedup.minhash_lsh_pairs(
-                docs.select("doc_id", "text"), num_perm=64, bands=32,
-                jaccard_threshold=0.5).collect()}
-    assert got == want and len(want) > 0
-    # cross-segment pairs present (found via the delta-vs-index arm)
-    assert any(a < 100 <= b for a, b, _ in got)
-
-    # restart: nothing appends, store unchanged
-    n_pairs = pairs_t.read(spark).count()
-    n_shh = store.read(spark).count()
-    neardup_stream_to_tables(spark, ddir, store, pairs_t, ckpt,
-                             max_files_per_trigger=1)
-    assert pairs_t.read(spark).count() == n_pairs
-    assert store.read(spark).count() == n_shh == 18
-
-
-def test_neardup_stream_crash_replay_between_appends(spark, tmp_path):
-    """A crash AFTER the shingle/signature store appends but BEFORE the
-    pairs append replays the batch with its rows already committed to the
-    index; the replayed pair computation must exclude the batch's own rows
-    from the index view, or every cross pair duplicates and intra pairs
-    re-emit through the inter arm (review finding, round 3)."""
-    from pdf_extractor_spark.operators import dedup
-    from pdf_extractor_spark.sources.table_format import SnapshotTable
-    from pdf_extractor_spark.streaming.stream import neardup_stream_to_tables
-
-    base = "the quick brown fox jumps over the lazy dog near segment"
-    seg0 = [(0, base + " zero 0"), (1, "totally unrelated words one " +
-                                    " ".join(f"u{j}" for j in range(10)))]
-    seg1 = [(100, base + " zero 0x"),        # near-dup of doc 0 (cross)
-            (101, base + " intra pair a"),   # near-dup cluster in-batch
-            (102, base + " intra pair b")]
-    docs0 = spark.createDataFrame(seg0, "doc_id long, text string")
-    docs1 = spark.createDataFrame(seg1, "doc_id long, text string")
-    ddir = str(tmp_path / "docs")
-    docs0.coalesce(1).write.mode("append").parquet(ddir)
-
-    store = SnapshotTable(str(tmp_path / "shingles"))
-    sig_t = SnapshotTable(str(tmp_path / "sigs"))
-    pairs_t = SnapshotTable(str(tmp_path / "pairs"))
-    ckpt = str(tmp_path / "ckpt")
-    neardup_stream_to_tables(spark, ddir, store, pairs_t, ckpt,
-                             sig_store=sig_t, max_files_per_trigger=1)
-
-    # segment 2 lands; simulate the crash: its shingles AND signatures are
-    # committed with the NEXT batch id, but the pairs append (and the
-    # checkpoint) never happened
-    docs1.coalesce(1).write.mode("append").parquet(ddir)
-    shh1 = dedup.shingle_hash_arrays(docs1, 3)
-    store.append(shh1, summary={"stream_batch_id": 1})
-    sig_t.append(dedup.minhash_banded_from_hashes(shh1, 64, 32),
-                 summary={"stream_batch_id": 1})
-
-    # restart: batch 1 replays (checkpoint never committed it)
-    neardup_stream_to_tables(spark, ddir, store, pairs_t, ckpt,
-                             sig_store=sig_t, max_files_per_trigger=1)
-
-    got = sorted((min(r["a"], r["b"]), max(r["a"], r["b"]))
-                 for r in pairs_t.read(spark).collect())
-    all_docs = docs0.unionByName(docs1)
-    want = sorted((r["a"], r["b"]) for r in dedup.minhash_lsh_pairs(
-        all_docs, num_perm=64, bands=32, jaccard_threshold=0.5).collect())
-    assert got == want and (0, 100) in got and (101, 102) in got
-    # stores did not double-append on the replay
-    assert store.read(spark).count() == all_docs.count()
-
-
-def test_neardup_stream_backfills_lagging_sig_store(spark, tmp_path):
-    """Streaming on top of a shingle store built by the BATCH path (no
-    signature store yet) must derive and backfill the corpus signatures —
-    not silently skip the delta arm and lose every incoming-vs-corpus pair
-    (review finding, round 3)."""
-    from pdf_extractor_spark.operators import dedup
-    from pdf_extractor_spark.sources.table_format import SnapshotTable
-    from pdf_extractor_spark.streaming.stream import neardup_stream_to_tables
-
-    base = "the quick brown fox jumps over the lazy dog near segment"
-    corpus = [(0, base + " zero 0"),
-              (1, "unrelated filler " + " ".join(f"v{j}" for j in range(10)))]
-    newseg = [(200, base + " zero 0y")]      # near-dup of corpus doc 0
-    docs0 = spark.createDataFrame(corpus, "doc_id long, text string")
-    docs1 = spark.createDataFrame(newseg, "doc_id long, text string")
-
-    store = SnapshotTable(str(tmp_path / "shingles"))
-    store.append(dedup.shingle_hash_arrays(docs0, 3))  # batch-built corpus
-    sig_t = SnapshotTable(str(tmp_path / "sigs"))      # empty: lags store
-    pairs_t = SnapshotTable(str(tmp_path / "pairs"))
-    ddir = str(tmp_path / "docs")
-    docs1.coalesce(1).write.mode("append").parquet(ddir)
-
-    neardup_stream_to_tables(spark, ddir, store, pairs_t,
-                             str(tmp_path / "ckpt"), sig_store=sig_t,
-                             max_files_per_trigger=1)
-
-    got = {(min(r["a"], r["b"]), max(r["a"], r["b"]))
-           for r in pairs_t.read(spark).collect()}
-    assert got == {(0, 200)}
-    # the corpus signatures were backfilled: a SECOND new segment matches
-    # the corpus through the signature store without re-deriving it
-    assert sig_t.read(spark).select("doc_id").distinct().count() == 3
-
-    # PARTIAL lag: the batch path appends more corpus docs (shingles only)
-    # between streaming runs — the reconciliation must backfill exactly the
-    # missing docs, and incoming near-dups of THOSE docs must be found
-    late = [(300, "late corpus doc about gardening tips and tricks more")]
-    store.append(dedup.shingle_hash_arrays(
-        spark.createDataFrame(late, "doc_id long, text string"), 3))
-    seg2 = [(400, "late corpus doc about gardening tips and tricks morex")]
-    spark.createDataFrame(seg2, "doc_id long, text string") \
-        .coalesce(1).write.mode("append").parquet(ddir)
-    neardup_stream_to_tables(spark, ddir, store, pairs_t,
-                             str(tmp_path / "ckpt"), sig_store=sig_t,
-                             max_files_per_trigger=1)
-    got = {(min(r["a"], r["b"]), max(r["a"], r["b"]))
-           for r in pairs_t.read(spark).collect()}
-    assert (300, 400) in got
-    assert sig_t.read(spark).select("doc_id").distinct().count() == 5
 
 
 # ---------------------------------------------------------------------------

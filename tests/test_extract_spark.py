@@ -311,9 +311,22 @@ def test_kernel_freeze_does_not_grow_per_task(spark):
 def test_image_payload_dispatch_needs_ocr():
     """Image payloads (reference enums.py image-capable types) must route to
     a loud needs-OCR quarantine row, not silently-empty text."""
+    import ast
+    import inspect
+
     from pdf_extractor_spark.operators.extract import (
-        detect_image_format, extract_document,
+        _OCR_DECODERS, detect_image_format, extract_document,
     )
+
+    # extract_document indexes _OCR_DECODERS[img] for every sniffed
+    # format, so each format the sniffer can return needs a decoder
+    sniffed = {
+        n.value.value
+        for n in ast.walk(ast.parse(inspect.getsource(detect_image_format)))
+        if isinstance(n, ast.Return) and isinstance(n.value, ast.Constant)
+        and n.value.value is not None
+    }
+    assert sniffed == set(_OCR_DECODERS)
 
     png = b"\x89PNG\r\n\x1a\n" + b"\x00" * 32
     jpg = b"\xff\xd8\xff\xe0" + b"\x00" * 32

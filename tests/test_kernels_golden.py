@@ -9,6 +9,7 @@ from pdf_extractor_spark import corpus
 from pdf_extractor_spark.kernels.html_kernel import extract_html
 from pdf_extractor_spark.kernels.lang import detect_lang, lang_spans
 from pdf_extractor_spark.kernels.pdf_kernel import extract_pdf
+from tests.builders import build_pdf_nested
 
 DOCS = corpus.generate(400, seed=42)
 
@@ -626,12 +627,11 @@ def test_pdf_nested_page_tree_walk():
     """Writers balance long documents into nested intermediate /Pages
     nodes; the kernel must walk the tree recursively in document order,
     not read one flat /Kids array."""
-    from pdf_extractor_spark import corpus
     from pdf_extractor_spark.kernels.pdf_kernel import extract_pdf
 
     runs = [[(72.0, 720.0, f"Nested tree page {i}.")] for i in range(1, 10)]
     for fanout in (2, 3):
-        res = extract_pdf(corpus.build_pdf_nested(runs, fanout=fanout))
+        res = extract_pdf(build_pdf_nested(runs, fanout=fanout))
         assert res["pages"] == [
             (i, f"Nested tree page {i}.") for i in range(1, 10)], fanout
         assert res["meta"]["page_count"] == "9"
@@ -640,12 +640,11 @@ def test_pdf_nested_page_tree_walk():
 def test_pdf_page_tree_cycle_is_safe():
     """A malformed self-referencing /Pages node must terminate (visited
     set), not loop."""
-    from pdf_extractor_spark import corpus
     from pdf_extractor_spark.kernels.pdf_kernel import extract_pdf
 
     import re as _re
 
-    pdf = corpus.build_pdf_nested(
+    pdf = build_pdf_nested(
         [[(72.0, 720.0, "Cycle survivor.")]], fanout=2)
     # append the root /Pages node's OWN number to its /Kids array
     root_num = None

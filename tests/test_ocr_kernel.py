@@ -565,9 +565,8 @@ def test_decoder_fuzz_no_unexpected_exceptions():
     from pdf_extractor_spark.operators.multimodal import (
         _decode_wav,
         _iter_y4m_frames,
-        encode_wav_pcm16,
-        encode_y4m,
     )
+    from tests.builders import encode_wav_pcm16, encode_y4m
 
     rng = _random.Random(42)
 

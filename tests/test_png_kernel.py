@@ -83,7 +83,7 @@ def _encode_color_type(m: np.ndarray, ct: int) -> bytes:
 def test_render_decode_ocr_roundtrip():
     text = "HELLO PNG WORLD 0123456789, OK."
     png = P.render_text_png(text, width=16)
-    assert K.lines_to_stream_text(P.ocr_png(png)) == text
+    assert K.lines_to_stream_text(K.ocr_gray_rows(P.decode_png_gray(png))) == text
 
 
 def test_multi_idat_chunks_concatenate():
@@ -133,7 +133,8 @@ def test_noise_tolerant_ocr_through_png():
     # flip one pixel inside a glyph cell: Hamming-nearest still recovers
     rows[K.MARGIN + 1][K.MARGIN + 1] ^= 0xFF
     noisy = P.pack_png_gray(rows)
-    assert K.lines_to_stream_text(P.ocr_png(noisy)) == text
+    assert K.lines_to_stream_text(
+        K.ocr_gray_rows(P.decode_png_gray(noisy))) == text
 
 
 @pytest.mark.parametrize("bad,label", [
@@ -255,7 +256,8 @@ def test_adam7_roundtrip_matches_sequential():
 def test_adam7_ocr_exact():
     text = "ADAM SEVEN PASSES, OK."
     page = K.render_page_gray(K.wrap_fixed(text, 16))
-    lines = P.ocr_png(P.pack_png_gray(page, interlace=True))
+    lines = K.ocr_gray_rows(
+        P.decode_png_gray(P.pack_png_gray(page, interlace=True)))
     assert K.lines_to_stream_text(lines) == text
 
 

@@ -446,10 +446,10 @@ def test_pdf_all_layouts_roundtrip_fuzz(pages, which):
     from pdf_extractor_spark.corpus import (
         build_pdf,
         build_pdf_differences,
-        build_pdf_nested,
         build_pdf_objstm,
         build_pdf_type0,
     )
+    from tests.builders import build_pdf_nested
 
     builder = (build_pdf, build_pdf_objstm, build_pdf_type0,
                build_pdf_differences, build_pdf_nested,
@@ -478,10 +478,10 @@ def test_pdf_mutation_fuzz_never_raises():
     from pdf_extractor_spark.corpus import (
         build_pdf,
         build_pdf_differences,
-        build_pdf_nested,
         build_pdf_objstm,
         build_pdf_type0,
     )
+    from tests.builders import build_pdf_nested
     from pdf_extractor_spark.kernels.ocr_kernel import render_scanned_pdf
 
     runs = [[(72.0, 720.0, "Mutation fuzz target, page one 42.")],

@@ -68,18 +68,6 @@ def test_revenue_rollup_totals_consistent(spark, sf_dir):
     assert sum(r["orders"] for r in subtotals) == grand[0]["orders"]
 
 
-def test_order_detail_gather_matches_filter(spark, sf_dir):
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    out = relational.order_detail_gather(orders, customer, lineitem, max_orderkey=20)
-    expect = lineitem.where(F.col("l_orderkey") <= 20).count()
-    assert out.count() == expect
-    assert out.columns == [
-        "l_orderkey", "l_linenumber", "quantity", "price", "o_orderstatus", "c_name",
-    ]
-
-
 def test_char_minhash_matches_python_and_survives_tail_edit(spark):
     docs = spark.createDataFrame(
         [
@@ -163,25 +151,6 @@ def test_order_percentiles_match_numpy(spark):
             assert abs(got[prio][col] - np.quantile(a, q)) < 1e-3, (prio, col)
 
 
-def test_lineitem_stats_match_numpy(spark):
-    import numpy as np
-
-    from pdf_extractor_spark.operators import relational
-
-    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    got = {r["l_returnflag"]: r for r in relational.lineitem_stats(li).collect()}
-    rows = li.select("l_returnflag", "l_quantity", "l_extendedprice").collect()
-    per = {}
-    for r in rows:
-        per.setdefault(r["l_returnflag"], []).append((r["l_quantity"], r["l_extendedprice"]))
-    for flag, vals in per.items():
-        q = np.array([v[0] for v in vals], dtype=np.float64)
-        p = np.array([v[1] for v in vals], dtype=np.float64)
-        assert got[flag]["n"] == len(vals)
-        assert abs(got[flag]["sd_qty"] - q.std(ddof=1)) < 1e-4
-        assert abs(got[flag]["corr_qty_price"] - np.corrcoef(q, p)[0, 1]) < 1e-4
-
-
 def test_event_time_heatmap_total_and_grid(spark):
     from pdf_extractor_spark.operators import relational
 
@@ -204,55 +173,6 @@ def test_user_event_pivot_row_sums(spark):
     for r in got:
         total = sum(r[c] for c in relational.EVENT_TYPES)
         assert total == per_user[r["user_id"]]
-
-
-def test_order_unpivot_shape(spark):
-    from pdf_extractor_spark.operators import relational
-
-    orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    got = relational.order_flags_unpivot(orders).collect()
-    n = orders.count()
-    assert len(got) == 2 * n
-    metrics = {r["metric"] for r in got}
-    assert metrics == {"totalprice", "custkey"}
-
-
-def test_user_moving_avg_matches_python(spark):
-    from pdf_extractor_spark.operators import relational
-
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    got = relational.user_value_moving_avg(events).collect()
-    rows = events.select("user_id", "event_id", "ts", "value").collect()
-    per = {}
-    for r in sorted(rows, key=lambda r: (r["user_id"], r["ts"], r["event_id"])):
-        per.setdefault(r["user_id"], []).append(r)
-    expect = {}
-    for uid, rs in per.items():
-        run = 0.0
-        for i, r in enumerate(rs):
-            run += r["value"]
-            window = [x["value"] for x in rs[max(0, i - 3): i + 1]]
-            expect[(uid, r["event_id"])] = (sum(window) / len(window), run)
-    for r in got[:500]:
-        m, t = expect[(r["user_id"], r["event_id"])]
-        assert abs(r["mavg4"] - m) < 1e-4
-        assert abs(r["running_total"] - t) < 1e-2
-
-
-def test_order_quartiles_balanced(spark):
-    from collections import Counter
-
-    from pdf_extractor_spark.operators import relational
-
-    orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    got = relational.order_value_quartiles(orders).collect()
-    per = {}
-    for r in got:
-        per.setdefault(r["o_orderpriority"], Counter())[r["quartile"]] += 1
-    for prio, counts in per.items():
-        assert set(counts) <= {1, 2, 3, 4}
-        # ntile balance: sizes differ by at most 1
-        assert max(counts.values()) - min(counts.values()) <= 1, (prio, counts)
 
 
 def test_pivot_roundtrip_inverse(spark):
@@ -316,65 +236,3 @@ def test_annotation_span_intersections_offsets(spark):
     got = {(r["ann_id"], r["span_start"]): r["overlap_chars"]
            for r in annotation_span_intersections(extracted, ann).collect()}
     assert got == {(100, 0): 5, (100, 12): 8}
-
-
-def test_gap_fill_locf_known_answers_and_twin(spark):
-    """Dense spine per key, LOCF fill, filled flag; DuckDB twin parity
-    (generate_series spine + last_value IGNORE NULLS window)."""
-    import datetime as dt
-
-    import duckdb
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from pdf_extractor_spark.operators.relational import gap_fill_locf
-
-    d = dt.date
-    rows = [
-        ("a", d(2024, 1, 1), 1.0),
-        ("a", d(2024, 1, 4), 4.0),   # 2 gap days -> carry 1.0
-        ("b", d(2024, 2, 10), 7.0),  # single-day series
-    ]
-    df = spark.createDataFrame(rows, "k string, day date, v double")
-    got = [(r["k"], r["day"].isoformat(), r["v"], r["filled"])
-           for r in gap_fill_locf(df, "k", "day", "v").collect()]
-    assert got == [
-        ("a", "2024-01-01", 1.0, False),
-        ("a", "2024-01-02", 1.0, True),
-        ("a", "2024-01-03", 1.0, True),
-        ("a", "2024-01-04", 4.0, False),
-        ("b", "2024-02-10", 7.0, False),
-    ]
-    con = duckdb.connect()
-    con.register("obs", pd.DataFrame(rows, columns=["k", "day", "v"]))
-    du = con.execute("""
-        WITH b AS (SELECT k, min(day) d0, max(day) d1 FROM obs GROUP BY k),
-        spine AS (SELECT k, unnest(generate_series(d0, d1,
-                                   INTERVAL 1 DAY))::DATE AS day FROM b),
-        j AS (SELECT s.k, s.day, o.v FROM spine s
-              LEFT JOIN obs o ON o.k = s.k AND o.day = s.day)
-        SELECT k, day::VARCHAR,
-               last_value(v IGNORE NULLS) OVER (
-                   PARTITION BY k ORDER BY day
-                   ROWS UNBOUNDED PRECEDING) AS v,
-               v IS NULL AS filled
-        FROM j ORDER BY k, day
-    """).fetchall()
-    assert [tuple(r) for r in du] == got
-
-
-def test_gap_fill_locf_dedupes_same_day(spark):
-    import datetime as dt
-
-    from pdf_extractor_spark.operators.relational import gap_fill_locf
-
-    d = dt.date
-    rows = [("a", d(2024, 1, 1), 1.0), ("a", d(2024, 1, 1), 9.0),
-            ("a", d(2024, 1, 3), 3.0)]
-    df = spark.createDataFrame(rows, "k string, day date, v double")
-    got = [(r["day"].isoformat(), r["v"], r["filled"])
-           for r in gap_fill_locf(df, "k", "day", "v").collect()]
-    # one row per day; intra-day tie resolved to max; carry is deterministic
-    assert got == [("2024-01-01", 9.0, False),
-                   ("2024-01-02", 9.0, True),
-                   ("2024-01-03", 3.0, False)]

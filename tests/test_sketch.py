@@ -157,49 +157,6 @@ def test_histogram_quantiles_bound_exact_and_parity(spark):
     assert du == {g: (r["h50"], r["h90"], r["h99"]) for g, r in got.items()}
 
 
-def test_hll_merge_equals_union(spark):
-    """Registers built per shard and merged by max give EXACTLY the
-    registers of the union — the shardability property."""
-    a = spark.createDataFrame(
-        [("g", f"k{i}") for i in range(300)], "grp string, k string")
-    b = spark.createDataFrame(
-        [("g", f"k{i}") for i in range(150, 450)], "grp string, k string")
-
-    def regs(df):
-        idx, rank = sketch.hll_idx_rank(F.col("k"))
-        return (df.select(F.col("grp"), idx.alias("idx"), rank.alias("rank"))
-                .groupBy("grp", "idx").agg(F.max("rank").alias("m_j")))
-
-    merged = sketch.hll_merge_registers(regs(a), regs(b))
-    union = regs(a.unionAll(b))
-    assert sorted(map(tuple, merged.collect())) == \
-        sorted(map(tuple, union.collect()))
-    est_m = sketch.hll_rollup(merged, ["grp"]).collect()[0]["hll_est"]
-    est_u = sketch.hll_rollup(union, ["grp"]).collect()[0]["hll_est"]
-    assert est_m == est_u
-
-
-def test_countmin_merge_is_linear(spark):
-    """Shard-built CM cells summed == cells of the concatenated vocab."""
-    a = spark.createDataFrame(
-        [(f"w{i}", i + 1) for i in range(100)], "word string, freq long")
-    b = spark.createDataFrame(
-        [(f"w{i}", 2 * i + 1) for i in range(50, 150)],
-        "word string, freq long")
-
-    def cells(df):
-        rows = F.sequence(F.lit(0), F.lit(sketch.CM_DEPTH - 1))
-        wr = df.select("word", "freq", F.explode(rows).alias("row")) \
-            .withColumn("pos", sketch._cm_pos(F.col("word"), F.col("row")))
-        return wr.groupBy("row", "pos").agg(F.sum("freq").alias("cell_total"))
-
-    merged = sketch.countmin_merge_cells(cells(a), cells(b))
-    both = cells(a.unionAll(b).groupBy("word").agg(
-        F.sum("freq").alias("freq")))
-    assert sorted(map(tuple, merged.collect())) == \
-        sorted(map(tuple, both.collect()))
-
-
 def test_sketches_on_empty_input(spark):
     """Empty input → empty result with a stable schema for every sketch
     (no div-by-zero, no null-register rows)."""
@@ -212,33 +169,3 @@ def test_sketches_on_empty_input(spark):
     assert sketch.countmin_topk(e_vocab).count() == 0
     e_vals = spark.createDataFrame([], "grp string, val double")
     assert sketch.histogram_quantiles(e_vals, "val", "grp").count() == 0
-
-
-def test_hll_incremental_via_snapshot_table(spark, tmp_path):
-    """The continuous-crawl cardinality loop: day-1 registers committed to
-    a SnapshotTable; day-2's batch registers fold in with ONE
-    register-sized max-merge and an overwrite commit — the resulting
-    estimate is EXACTLY the estimate of a full recompute over both days
-    (HLL shardability + the repo's table format, no corpus re-scan)."""
-    from pdf_extractor_spark.sources.table_format import SnapshotTable
-
-    day1 = spark.createDataFrame(
-        [("g", f"u{i}") for i in range(400)], "grp string, k string")
-    day2 = spark.createDataFrame(
-        [("g", f"u{i}") for i in range(250, 700)], "grp string, k string")
-
-    def regs(df):
-        idx, rank = sketch.hll_idx_rank(F.col("k"))
-        return (df.select("grp", idx.alias("idx"), rank.alias("rank"))
-                .groupBy("grp", "idx").agg(F.max("rank").alias("m_j")))
-
-    store = SnapshotTable(str(tmp_path / "hll_state"))
-    store.append(regs(day1))
-    committed = store.read(spark)
-    merged = sketch.hll_merge_registers(committed, regs(day2))
-    store.overwrite(merged)
-    est_inc = sketch.hll_rollup(
-        store.read(spark), ["grp"]).collect()[0]["hll_est"]
-    est_full = sketch.hll_distinct(
-        day1.unionAll(day2), "k", "grp").collect()[0]["hll_est"]
-    assert est_inc == est_full

@@ -34,7 +34,7 @@ def test_pages_roundtrip(spark, pages, tmp_path, fmt):
 def test_extracted_roundtrip(spark, pages, tmp_path, fmt):
     extracted = run_extract(pages.select("url", "warc_ts", "html"), num_partitions=4)
     path = str(tmp_path / f"ext_{fmt}")
-    pio.write_extracted(extracted, path, fmt=fmt)
+    extracted.write.format(fmt).save(path)
     back = pio.read_extracted(spark, path, fmt=fmt)
     a = {(r["url"], r["page_number"]): (r["text"], r["spans"]) for r in extracted.collect()}
     b = {(r["url"], r["page_number"]): (r["text"], r["spans"]) for r in back.collect()}
@@ -44,7 +44,7 @@ def test_extracted_roundtrip(spark, pages, tmp_path, fmt):
 def test_partitioned_extracted_sink_prunes(spark, pages, tmp_path):
     extracted = run_extract(pages.select("url", "warc_ts", "html"), num_partitions=4)
     path = str(tmp_path / "ext_part")
-    pio.write_extracted(extracted, path, fmt="parquet", partition_by=["partition_id"])
+    extracted.write.partitionBy("partition_id").parquet(path)
     back = pio.read_extracted(spark, path)
     one = back.where("partition_id = 0")
     # partition pruning must reach the scan
@@ -180,7 +180,7 @@ def test_schema_evolution_resume_state_carries(spark, tmp_path):
     t = SnapshotTable(str(tmp_path / "out" / "extracted"))
     t.append(
         spark.createDataFrame([(1, "x")], "id long, v string"),
-        summary={"buckets": [0, 1]},
+        summary={"waves": [{"buckets": [0, 1], "started_at": 1}]},
     )
     job = ExtractionJob.__new__(ExtractionJob)
     job.extracted = t

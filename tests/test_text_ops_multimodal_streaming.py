@@ -1,6 +1,7 @@
 """Text-analysis twins, multimodal plumbing, streaming batch-equivalence."""
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -10,6 +11,7 @@ from pdf_extractor_spark.operators import text_analysis
 from pdf_extractor_spark.operators.multimodal import (
     encode_fake_image, extract_features, fake_media_table, resize_stub,
 )
+from tests.builders import encode_wav_pcm16, encode_y4m
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -20,11 +22,19 @@ def docs(spark):
 
 
 def test_token_counts_match_python(spark, docs):
-    got = text_analysis.token_counts(docs).collect()
+    """doc_metrics' token counts: whitespace tokens equal the Python twin,
+    and the kernel's TOKEN_RE count equals the JVM regex engine's (the q12
+    oracle counts with SQL regexp_extract_all)."""
+    jvm = docs.select(
+        "doc_id",
+        F.size(F.regexp_extract_all("text", F.lit(textstats.TOKEN_RE), 0))
+        .alias("jvm_bpe"))
+    got = text_analysis.doc_metrics(docs).join(jvm, "doc_id").collect()
     raw = {r["doc_id"]: r["text"] for r in docs.collect()}
+    assert len(got) == len(raw)
     for r in got:
         assert r["ws_tokens"] == textstats.ws_token_count(raw[r["doc_id"]])
-        assert r["bpe_tokens"] == textstats.bpe_ish_token_count(raw[r["doc_id"]])
+        assert r["bpe_tokens"] == r["jvm_bpe"], r["doc_id"]
 
 
 def test_quality_scores_match_python(spark, docs):
@@ -211,21 +221,19 @@ def test_video_frame_sampling_shape(spark):
     assert _decode_image(bytes(ok[0]["payload"])).shape == (8, 8, 3)
 
 
-def test_real_wav_decode(spark):
-    """RIFF/WAVE PCM-16 is a REAL decode arm: features computed from the
-    actual samples, stereo mono-mixed, compressed format codes fail loudly,
-    malformed containers degrade to error rows."""
-    import numpy as np
+def test_real_wav_decode():
+    """RIFF/WAVE PCM-16 is a REAL decode arm: the actual samples come back,
+    stereo mono-mixed, compressed format codes fail loudly, malformed
+    containers raise ValueError."""
     import struct as _struct
 
     from pdf_extractor_spark.operators import multimodal as mm
 
     t = np.arange(1600)
     mono = (3000 * np.sin(2 * np.pi * 440 * t / 16000)).astype(np.int16)
-    wav = mm.encode_wav_pcm16(mono, 16000)
-    x = mono.astype(np.float64)
-    want_rms = float(np.sqrt((x * x).mean()))
-    want_zc = int((np.diff(np.sign(x)) != 0).sum())
+    wav = encode_wav_pcm16(mono, 16000)
+    x, sr = mm._decode_audio(wav)
+    assert sr == 16000 and np.array_equal(x, mono.astype(np.float64))
 
     # stereo: two channels, mono mix = per-frame mean
     stereo = np.empty(3200, dtype=np.int16)
@@ -235,22 +243,15 @@ def test_real_wav_decode(spark):
     wav2 = (b"RIFF" + _struct.pack("<I", 36 + len(data)) + b"WAVE"
             + b"fmt " + _struct.pack("<I", 16) + fmt
             + b"data" + _struct.pack("<I", len(data)) + data)
-    # compressed format code -> loud stub; truncated -> error row
+    x2, sr2 = mm._decode_audio(wav2)
+    assert sr2 == 16000 and np.array_equal(x2, x)
+    # compressed format code -> loud stub; truncated -> ValueError
     bad = bytearray(wav)
     _struct.pack_into("<H", bad, 20, 85)  # MP3 format code
-
-    df = spark.createDataFrame(
-        [(1, "audio", wav, {}), (2, "audio", wav2, {}),
-         (3, "audio", bytes(bad), {}), (4, "audio", b"RIFFjunk", {})],
-        mm.MEDIA_DDL)
-    out = {r["media_id"]: r for r in mm.audio_features(df).collect()}
-    assert out[1]["error"] is None
-    assert out[1]["n_samples"] == 1600 and out[1]["sample_rate"] == 16000
-    assert out[1]["rms"] == want_rms and out[1]["zero_crossings"] == want_zc
-    assert out[2]["error"] is None and out[2]["n_samples"] == 1600
-    assert out[2]["rms"] == want_rms  # mono mix of identical channels
-    assert "NotImplementedError" in out[3]["error"]
-    assert "ValueError" in out[4]["error"]
+    with pytest.raises(NotImplementedError):
+        mm._decode_audio(bytes(bad))
+    with pytest.raises(ValueError):
+        mm._decode_audio(b"RIFFjunk")
 
 
 def test_real_y4m_frame_sampling(spark):
@@ -259,8 +260,8 @@ def test_real_y4m_frame_sampling(spark):
     loudly; truncated streams degrade to error rows."""
     from pdf_extractor_spark.operators import multimodal as mm
 
-    y4m = mm.encode_y4m(5, n_frames=12, width=8, height=8, fps=(25, 1))
-    mono = mm.encode_y4m(6, n_frames=3, width=4, height=4, fps=(30000, 1001),
+    y4m = encode_y4m(5, n_frames=12, width=8, height=8, fps=(25, 1))
+    mono = encode_y4m(6, n_frames=3, width=4, height=4, fps=(30000, 1001),
                          chroma="mono")
     alpha = y4m.replace(b" C420\n", b" C444alpha\n", 1)
     df = spark.createDataFrame(
@@ -342,7 +343,7 @@ def test_audio_envelope_neardup_pairs(spark):
                   & ((1 << 64) - 1)).count("1")
     assert d_clone <= 3
 
-    wav = mm.encode_wav_pcm16(
+    wav = encode_wav_pcm16(
         (2000 * np.sin(np.arange(2000) / 7.0)).astype(np.int16))
     assert isinstance(mm.audio_fingerprint64(mm._decode_audio(wav)[0]), int)
 
@@ -354,21 +355,18 @@ def test_audio_envelope_neardup_pairs(spark):
     assert [(r["a"], r["b"]) for r in pairs] == [(11, 2000011)]
 
 
-def test_audio_features_shape(spark):
+def test_audio_features_shape():
     from pdf_extractor_spark.operators import multimodal as mm
 
-    rows = [(1, "audio", mm.encode_fake_audio(1, 4000), {}),
-            # RIFF/WAVE is now a REAL arm: a header with no chunks is a
-            # malformed container (ValueError), while codec formats like
-            # MP3 frames stay a loud NotImplementedError
-            (2, "audio", b"RIFF....WAVE", {}),
-            (3, "audio", b"\xff\xfbjunk mp3 frame", {})]
-    df = spark.createDataFrame(rows, mm.MEDIA_DDL)
-    out = {r["media_id"]: r for r in mm.audio_features(df).collect()}
-    assert out[1]["n_samples"] == 4000 and out[1]["sample_rate"] == 16000
-    assert out[1]["rms"] > 0 and out[1]["zero_crossings"] > 0
-    assert out[2]["error"] is not None and "ValueError" in out[2]["error"]
-    assert out[3]["error"] is not None and "NotImplementedError" in out[3]["error"]
+    x, sr = mm._decode_audio(mm.encode_fake_audio(1, 4000))
+    assert len(x) == 4000 and sr == 16000 and np.abs(x).max() > 0
+    # RIFF/WAVE is a REAL arm: a header with no chunks is a malformed
+    # container (ValueError), while codec formats like MP3 frames stay a
+    # loud NotImplementedError
+    with pytest.raises(ValueError):
+        mm._decode_audio(b"RIFF....WAVE")
+    with pytest.raises(NotImplementedError):
+        mm._decode_audio(b"\xff\xfbjunk mp3 frame")
 
 
 def test_chunk_documents_windows(spark):
@@ -603,35 +601,6 @@ def test_streaming_hll_registers_equal_batch_and_bounded(spark):
     assert batch.exceptAll(got).count() == 0
     n_groups = got.select("window_start", "event_type").distinct().count()
     assert got.count() <= n_groups * HLL_M
-
-
-def test_streaming_countmin_cells_equal_batch_and_bounded(spark):
-    """Streamed CM cells equal the batch build (shared _cm_pos hashing),
-    and per-window state is bounded at depth x width."""
-    from pdf_extractor_spark.operators.sketch import (
-        CM_DEPTH, CM_WIDTH, cm_cell_expand,
-    )
-    from pdf_extractor_spark.streaming.stream import (
-        cm_user_cells_stream, read_events_stream, run_stream_to_memory,
-    )
-
-    got = run_stream_to_memory(
-        spark, cm_user_cells_stream(read_events_stream(spark, SF_DIR)),
-        "cm_cells_test")
-    events = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    batch = (
-        cm_cell_expand(
-            events.where(F.col("user_id").isNotNull())
-            .select(F.date_trunc("day", "ts").alias("window_start"),
-                    F.col("user_id").cast("string").alias("key")),
-            "key", carry=("window_start",))
-        .groupBy("window_start", "row", "pos")
-        .agg(F.count("*").alias("cell_total"))
-    )
-    assert got.exceptAll(batch).count() == 0
-    assert batch.exceptAll(got).count() == 0
-    per_win = got.groupBy("window_start").count().agg(F.max("count")).first()[0]
-    assert per_win <= CM_DEPTH * CM_WIDTH
 
 
 def test_pack_sequences_ignores_empty_docs(spark):

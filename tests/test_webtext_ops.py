@@ -70,87 +70,6 @@ def test_canonical_url_duckdb_twin_parity(spark):
     assert got == want
 
 
-def test_url_dup_groups(spark):
-    rows = [("HTTP://Example.COM:80/a?b=1&a=2",),
-            ("http://example.com/a?a=2&b=1",),
-            ("http://example.com/a/?a=2&b=1",),
-            ("http://unique.example/only",)]
-    df = spark.createDataFrame(rows, "url string")
-    groups = webtext.url_dup_groups(df).collect()
-    assert len(groups) == 1
-    assert groups[0]["canonical_url"] == "http://example.com/a?a=2&b=1"
-    assert groups[0]["n_urls"] == 3
-
-
-def test_extraction_f1_known_answers(spark):
-    rows = [
-        (1, "the quick brown fox", "the quick brown fox"),   # exact: 1/1/1
-        (2, "hello world", "goodbye moon"),                   # disjoint: 0
-        (3, "a a b", "a b b"),                                # multiset partial
-        (4, "", ""),                                          # both empty: 1
-        (5, "something", ""),                                 # pred-only: 0
-        (6, "", "gold text"),                                 # gold-only: 0
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, pred string, gold string")
-    got = {r["doc_id"]: r for r in
-           webtext.extraction_f1(df, "pred", "gold", "doc_id").collect()}
-    assert (got[1]["precision"], got[1]["recall"], got[1]["f1"]) == (1.0, 1.0, 1.0)
-    assert (got[2]["precision"], got[2]["recall"], got[2]["f1"]) == (0.0, 0.0, 0.0)
-    # doc 3: inter = min(2,1)[a] + min(1,2)[b] = 2; np = ng = 3
-    assert got[3]["precision"] == round(2 / 3, 6)
-    assert got[3]["recall"] == round(2 / 3, 6)
-    assert got[3]["f1"] == round(2 / 3, 6)
-    assert got[4]["f1"] == 1.0
-    assert got[5]["f1"] == 0.0 and got[5]["precision"] == 0.0
-    assert got[6]["f1"] == 0.0 and got[6]["recall"] == 0.0
-
-
-def test_extraction_f1_duckdb_twin_parity(spark):
-    rows = [(i, f"tok{i % 3} shared word word", f"tok{i % 4} shared word")
-            for i in range(30)] + [(99, "", "x")]
-    df = spark.createDataFrame(rows, "doc_id long, pred string, gold string")
-    got = sorted(
-        (r["doc_id"], r["precision"], r["recall"], r["f1"])
-        for r in webtext.extraction_f1(df, "pred", "gold", "doc_id").collect())
-    con = duckdb.connect()
-    con.register("docs", pd.DataFrame(rows, columns=["doc_id", "pred", "gold"]))
-    want = sorted(map(tuple, con.execute(r"""
-        WITH pt AS (
-          SELECT doc_id, tok, count(*) AS pc FROM (
-            SELECT doc_id, unnest(list_filter(string_split_regex(trim(pred), '\s+'),
-                                              x -> x <> '')) AS tok FROM docs)
-          GROUP BY doc_id, tok),
-        gt AS (
-          SELECT doc_id, tok, count(*) AS gc FROM (
-            SELECT doc_id, unnest(list_filter(string_split_regex(trim(gold), '\s+'),
-                                              x -> x <> '')) AS tok FROM docs)
-          GROUP BY doc_id, tok),
-        j AS (
-          SELECT coalesce(pt.doc_id, gt.doc_id) AS doc_id,
-                 coalesce(pc, 0) AS pc, coalesce(gc, 0) AS gc
-          FROM pt FULL OUTER JOIN gt
-            ON pt.doc_id = gt.doc_id AND pt.tok = gt.tok),
-        s AS (
-          SELECT d.doc_id,
-                 coalesce(sum(least(pc, gc)), 0) AS inter,
-                 coalesce(sum(pc), 0) AS np, coalesce(sum(gc), 0) AS ng
-          FROM (SELECT DISTINCT doc_id FROM docs) d
-          LEFT JOIN j ON j.doc_id = d.doc_id GROUP BY d.doc_id),
-        m AS (
-          SELECT doc_id,
-                 CASE WHEN np > 0 THEN inter / np
-                      WHEN ng = 0 THEN 1.0 ELSE 0.0 END AS p,
-                 CASE WHEN ng > 0 THEN inter / ng
-                      WHEN np = 0 THEN 1.0 ELSE 0.0 END AS r
-          FROM s)
-        SELECT doc_id, round(p, 6) + 0.0 AS precision, round(r, 6) + 0.0 AS recall,
-               round(CASE WHEN p + r > 0 THEN 2 * p * r / (p + r) ELSE 0.0 END, 6)
-                 + 0.0 AS f1
-        FROM m ORDER BY doc_id
-    """).fetchall()))
-    assert got == want
-
-
 RESOLVE_CASES = [
     # (base, href, resolved)
     ("https://ex.com/doc/5", "https://other.net/p/1", "https://other.net/p/1"),
@@ -1327,33 +1246,13 @@ def test_extract_links_base_href_and_nofollow(spark):
     assert ("ex.com", "spam.net") in edges_all
 
 
-def test_extract_canonical_links(spark):
-    rows = [
-        ("https://ex.com/a?utm=1",
-         b'<link rel="canonical" href="https://ex.com/a">'),
-        ("https://ex.com/b",
-         b'<link href="/b-canon" rel="canonical">'),       # href-first order
-        ("https://ex.com/c", b'<link rel="stylesheet" href="/s.css">'),
-        ("https://ex.com/d", b"<p>no links</p>"),
-    ]
-    df = spark.createDataFrame(rows, "url string, html binary")
-    got = {r["url"]: r["canonical_url"]
-           for r in webtext.extract_canonical_links(df).collect()}
-    assert got == {"https://ex.com/a?utm=1": "https://ex.com/a",
-                   "https://ex.com/b": "https://ex.com/b-canon"}
-    plan = webtext.extract_canonical_links(df) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and "Python" not in plan
-
-
 def test_link_extraction_review_regressions(spark):
     """Third review wave regressions: data-rel is not rel; truncated
-    final tags still yield links; canonical resolves against <base>;
+    final tags still yield links; links resolve against <base>;
     anchors carry nofollow and inbound signals exclude it; a NULL
     nofollow column keeps the edge."""
     html = (b'<html><head><base href="https://other.net/b/"></head><body>'
             b'<a href="/x" data-rel="nofollow">legit</a>'
-            b'<link rel="canonical" href="/c">'
             b'<a rel="nofollow" href="https://paid.net/y">paid</a>'
             b'<a href="/trunc"')        # WARC truncation: no closing '>'
     df = spark.createDataFrame(
@@ -1363,9 +1262,6 @@ def test_link_extraction_review_regressions(spark):
     assert links["/x"] == ("https://other.net/x", False)     # data-rel != rel
     assert links["/trunc"] == ("https://other.net/trunc", False)
     assert links["https://paid.net/y"][1] is True
-    # canonical: base applies to link@href per the HTML spec
-    canon = webtext.extract_canonical_links(df).collect()[0]
-    assert canon["canonical_url"] == "https://other.net/c"
     # anchors: nofollow flag present; inbound signals exclude it
     anch = webtext.extract_anchor_texts(df)
     got = {r["href"]: r["nofollow"] for r in anch.collect()}
@@ -1512,14 +1408,13 @@ def test_frontier_schedule_release_handle(spark):
 
 def test_link_extraction_attribute_quoting_forms(spark):
     """All three WHATWG attribute quoting forms (double- / single-quoted
-    and unquoted, §13.1.2.3) extract identically across links, anchors,
-    canonical and <base>, with spaced '=' accepted — real Common-Crawl
+    and unquoted, §13.1.2.3) extract identically across links, anchors
+    and <base>, with spaced '=' accepted — real Common-Crawl
     markup mixes them freely, and the reference's DOM parser (lxml/
     HTMLParser semantics, mirrored by kernels/html_kernel.py) reads them
     all; data-href / data-rel remain different attributes and never
     match (left-boundary lookbehind)."""
-    html = (b"<html><head><base href='/b/'>"
-            b"<link rel=canonical href='/c'></head><body>"
+    html = (b"<html><head><base href='/b/'></head><body>"
             b"<a href=x1>u</a>"
             b"<a href='x2'>s</a>"
             b'<a href = "x3">d</a>'
@@ -1527,6 +1422,7 @@ def test_link_extraction_attribute_quoting_forms(spark):
             b"<a href=y rel=nofollow>n</a>"
             b"<a href='z' rel='NOFOLLOW ugc'>n2</a>"
             b"<a href=https://q.net/p>abs</a>"
+            b"<a href='/c'>root</a>"
             b"</body></html>")
     df = spark.createDataFrame(
         [("https://ex.com/deep/page", html)], "url string, html binary")
@@ -1539,17 +1435,15 @@ def test_link_extraction_attribute_quoting_forms(spark):
         "y": ("https://ex.com/b/y", True),
         "z": ("https://ex.com/b/z", True),
         "https://q.net/p": ("https://q.net/p", False),
+        "/c": ("https://ex.com/c", False),
     }
     anch = {r["href"]: (r["anchor"], r["nofollow"])
             for r in webtext.extract_anchor_texts(df).collect()}
     assert anch == {
         "x1": ("u", False), "x2": ("s", False), "x3": ("d", False),
         "y": ("n", True), "z": ("n2", True),
-        "https://q.net/p": ("abs", False),
+        "https://q.net/p": ("abs", False), "/c": ("root", False),
     }
-    canon = webtext.extract_canonical_links(df).collect()
-    assert [(r["url"], r["canonical_url"]) for r in canon] == [
-        ("https://ex.com/deep/page", "https://ex.com/c")]
     # the widened grammar stays whole-stage-codegen'd: narrow, no Python
     plan = webtext.extract_links(df) \
         ._jdf.queryExecution().executedPlan().toString()

@@ -113,8 +113,8 @@ PICKS = {
         "Writer stage is a narrow mapInPandas over the documents scan (one "
         "builder per row, layout picked by doc_id%9); then the mandated "
         "salted hash-repartition on url is the ONLY exchange before the "
-        "mapInArrow kernel pass (round 5: the trailing cosmetic sort is "
-        "opt-in — the range-sampler re-ran the whole pipeline). "
+        "mapInArrow kernel pass (no trailing sort: its range sampler "
+        "re-ran the whole pipeline). "
         "Kernel CPU is bounded per doc: the RC4/AES key-derivation chains "
         "(Algorithms 2/3/5, the 20-round RC4 validation) and the FIPS-197 "
         "key schedule are memoized per worker — a dedup-heavy corpus "
