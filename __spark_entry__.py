@@ -608,7 +608,6 @@ def q_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("mix_weight"), F.col("total_chars"), 10_000_000),
         )
     )
-    result._persisted_pages = pages  # release handle (frontier_release)
     return result
 
 
@@ -954,12 +953,10 @@ def q_channel_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("best:"), F.col("channel")).alias("channel"),
         "content",
     )
-    result = (
+    return (
         fan.select(doc_of.alias("doc_id"), "channel", "content")
         .unionByName(best)
     )
-    result._persisted_gate = fan  # release handle (frontier_release)
-    return result
 
 
 def _page_metadata_frame(docs: DataFrame) -> DataFrame:
@@ -1927,9 +1924,7 @@ def q_doc_metrics_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "url_host", "url_ok", "url_reason")
     rb = webtext.robots_match(urls, _robots_rules(spark))
     pm = _page_metadata_frame(docs)
-    result = base.join(uf, "doc_id").join(rb, "doc_id").join(pm, "doc_id")
-    result._persisted_docs = docs  # release handle (frontier discipline)
-    return result
+    return base.join(uf, "doc_id").join(rb, "doc_id").join(pm, "doc_id")
 
 
 def q_order_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,13 +21,12 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def force(df) -> int:
     df.write.format("noop").mode("overwrite").save()
-    # NOTE: shared-subplan caches riding on results (q46 fanout, q53
-    # pages, q62 gate) are deliberately NOT released here: Spark's
+    # NOTE: the shared-subplan caches the queries persist (q46 fanout,
+    # q53 pages, q62 gate) are deliberately NOT released here: Spark's
     # CacheManager dedupes the canonicalized plan across invocations
     # (measured: repeated q46 builds keep exactly ONE cached frame and
     # warm reps reuse it), so there is no accumulation — releasing would
-    # only force the next rep to re-materialize. frontier_release remains
-    # the explicit hook for callers that want the memory back.
+    # only force the next rep to re-materialize.
     return 0
 
 

@@ -885,12 +885,6 @@ def _estimate_origin(rows: list[bytes]) -> tuple[int, int]:
     return best(ink_y, PITCH_Y, GLYPH_H), best(ink_x, PITCH_X, GLYPH_W)
 
 
-def ocr_bmp(payload: bytes, max_err: int = 6) -> list[str]:
-    """OCR one fixed-pitch BMP page into raw grid lines (container parse +
-    ``ocr_gray_rows``)."""
-    return ocr_gray_rows(decode_bmp_gray(payload), max_err=max_err)
-
-
 def _decode_at(rows: list[bytes], oy: int, ox: int, max_err: int) -> list[str]:
     """Grid decode anchored at origin (oy, ox).
 
@@ -940,8 +934,8 @@ def ocr_gray_rows(rows: list[bytes], max_err: int = 6,
     (implausible) decode returns and the caller's gate rejects it. Each cell is classified independently by ``match_glyph``. Lines
     are returned as the full cell grid (blank cells ARE spaces in a
     fixed-pitch page) — no trimming, so callers can reconstruct the exact
-    printed character stream. Use ``ocr_stream_text``/``ocr_text`` for
-    assembled output. Note a crop that removes entire leading blank cell
+    printed character stream. ``lines_to_stream_text`` assembles the
+    stream form. Note a crop that removes entire leading blank cell
     columns loses them (no absolute reference survives cropping) — the
     standard OCR behavior of dropping leading whitespace.
 
@@ -1063,18 +1057,3 @@ def lines_to_stream_text(lines: list[str]) -> str:
     by the BMP tier and the scanned-PDF tier so the two can never
     diverge under q37's common checksum."""
     return "".join(lines).rstrip(" ")
-
-
-def ocr_stream_text(payload: bytes, max_err: int = 6) -> str:
-    """Reconstruct the printed character stream of a BMP page
-    (extraction-channel form — equals the exact text the page was printed
-    from; byte-identical contract)."""
-    return lines_to_stream_text(ocr_bmp(payload, max_err=max_err))
-
-
-def ocr_text(payload: bytes, max_err: int = 6) -> str:
-    """OCR'd page in per-line display form (lines right-trimmed, blank
-    lines dropped, joined with newline — the tesseract_extractor.py:38-43
-    shape)."""
-    lines = [ln.strip(" ") for ln in ocr_bmp(payload, max_err=max_err)]
-    return "\n".join(ln for ln in lines if ln)

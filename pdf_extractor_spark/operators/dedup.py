@@ -643,18 +643,6 @@ def simhash_neardup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
 # embedding-cosine near-dup
 # ---------------------------------------------------------------------------
 
-def cosine(a, b):
-    """Cosine similarity of two array<float/double> columns, JVM-side.
-
-    try_divide: a zero-norm vector yields NULL (matching DuckDB's NULL)
-    instead of an ANSI divide-by-zero error — callers decide whether NULL
-    means 'filter out' (pair ops) or 'park in cell 0' (k-means)."""
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
-    na = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, v: s + v))
-    nb = F.sqrt(F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0), lambda s, v: s + v))
-    return F.try_divide(dot, na * nb)
-
-
 def _round6_np(x):
     """Half-away-from-zero rounding at 6 decimals in numpy — matches
     F.round/DuckDB round (the proven parity trick from the round-1 blocked

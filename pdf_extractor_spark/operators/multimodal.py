@@ -141,34 +141,6 @@ def extract_features(media: DataFrame, feat_dim: int = 8) -> DataFrame:
     return media.mapInPandas(batches, FEATURES_DDL)
 
 
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: identical schema out, payload replaced by a
-    deterministic re-encode at the new dims (nearest-neighbor over the fake
-    container; a real cluster swaps in a codec)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    arr = _decode_image(bytes(payload))
-                    ys = (np.arange(height) * arr.shape[0] // height).clip(0, arr.shape[0] - 1)
-                    xs = (np.arange(width) * arr.shape[1] // width).clip(0, arr.shape[1] - 1)
-                    resized = arr[ys][:, xs]
-                    payloads.append(
-                        MAGIC
-                        + struct.pack("<HHB", width, height, arr.shape[2])
-                        + resized.tobytes()
-                    )
-                except Exception:
-                    payloads.append(None)
-            pdf = pdf.copy()
-            pdf["payload"] = payloads
-            yield pdf
-
-    return media.mapInPandas(batches, media.schema)
-
-
 def expected_image_feature_row(media_id: int, n_chars: int) -> tuple[int, int, float]:
     """Pure-Python/numpy twin of fake_media_table + extract_features for one
     document: (width, height, mean_intensity) with mean_intensity replicating
@@ -308,8 +280,7 @@ def fake_media_table(spark, documents: DataFrame) -> DataFrame:
 def dhash64(arr: np.ndarray) -> int:
     """64-bit difference hash (dHash) of an image array (h, w, c) or
     (h, w, 1): channel-mean grayscale, nearest-neighbor downsample to a
-    9x8 grid (the resize_stub sampling — deterministic integer indexing,
-    no interpolation), then one bit per horizontal gradient
+    9x8 grid (deterministic integer indexing, no interpolation), then one bit per horizontal gradient
     g[r, c+1] > g[r, c]. Returned as a SIGNED 64-bit value so it round-
     trips through Spark/parquet BIGINT columns unchanged. Pure numpy —
     the same function is the oracle twin (q21 image arm pins its outputs

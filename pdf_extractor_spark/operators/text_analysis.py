@@ -212,22 +212,6 @@ def split_marked_pages(df: DataFrame, content_col: str = "content") -> DataFrame
     return df.mapInPandas(kernel, f"{key_schema}, page_number int, page_text string")
 
 
-def stratified_split(docs: DataFrame, train_pct: int = 90) -> DataFrame:
-    """Deterministic train/val assignment by content-independent key hash:
-    split = 'train' iff md5(doc_id) mod 100 < train_pct. Hash-based (not
-    random) so the split is reproducible, stable under re-runs, and
-    consistent across tables keyed by the same id — the standard
-    training-data discipline. Narrow projection, no shuffle."""
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long"),
-        F.lit(100),
-    )
-    return docs.withColumn(
-        "split", F.when(bucket < train_pct, "train").otherwise("val")
-    )
-
-
 # default blocklist for the C4 badwords gate: spam/scam terms in the
 # same family as the URL-quality gate's blocklist (webtext.py); real
 # deployments pass their full curated list
@@ -308,9 +292,7 @@ def c4_style_pipeline(docs: DataFrame, min_tokens: int = 20, min_quality: float 
     zero-shuffle JVM, and because Catalyst does not dedupe common
     subplans (the q46-fanout / training_mix discipline), the narrow
     (doc_id, lang) survivor frame is persisted so the two stage rollups
-    share ONE execution of the strip→gate→dedup subtree; the cache
-    handle rides on the result as ``_persisted_gate``
-    (frontier_release)."""
+    share ONE execution of the strip→gate→dedup subtree."""
     from pdf_extractor_spark.operators.dedup import line_frequency_dedup
 
     cleaned = line_frequency_dedup(docs, max_df=boiler_max_df).withColumnRenamed(
@@ -343,11 +325,9 @@ def c4_style_pipeline(docs: DataFrame, min_tokens: int = 20, min_quality: float 
     # stripped line)
     clean_ids = badwords_hits(docs, badword_terms).where(
         F.col("bad_hits") == 0).select("doc_id")
-    result = rollup(surv, "c4").unionByName(
+    return rollup(surv, "c4").unionByName(
         rollup(surv.join(clean_ids, "doc_id"), "c4_badwords")
     ).orderBy("stage", "lang")
-    result._persisted_gate = surv  # release handle (frontier_release)
-    return result
 
 
 def chunk_documents(docs: DataFrame, chunk_tokens: int = 128, overlap: int = 16) -> DataFrame:
@@ -956,8 +936,8 @@ def stratified_sample(docs: DataFrame, rates: dict[str, int] | None = None,
     """Deterministic per-stratum downsampling (the data-mixture step of a
     training pipeline: keep X% of each language/quality stratum). Assignment
     is by content-independent key hash — md5(doc_id) mod 100 < rate — so the
-    sample is reproducible, stable under re-runs, and consistent with
-    stratified_split's bucketing. Narrow projection, zero shuffle.
+    sample is reproducible and stable under re-runs. Narrow projection,
+    zero shuffle.
     """
     rates = rates if rates is not None else {"en": 100, "zh": 25}
     bucket = F.pmod(
@@ -1416,45 +1396,6 @@ def _qcls_features(docs: DataFrame, n_buckets: int,
     return grams.unionByName(structs)
 
 
-def quality_classifier_train(docs: DataFrame, n_buckets: int = 256,
-                             iters: int = 4, lr: float = 1.0) -> list[float]:
-    """Distributed trainer for a fastText-style linear quality classifier
-    (the CCNet/FineWeb-edu pattern: a cheap linear model over hashed
-    bag-of-ngram + structural features, distilled from a more expensive
-    quality signal — here the Gopher rule gate supplies the labels
-    y ∈ {0,1}). Returns B+5 weights (see _qcls_features).
-
-    Full-batch logistic-regression gradient descent, every step expressed
-    as Spark aggregates: per iteration (1) per-doc logit = Σ_b w_b·x_b via
-    a broadcast join of the (B+5)-row weight table onto the persisted
-    (doc_id, bucket, x) feature table + one decimal-snapped aggregate,
-    (2) per-doc residual σ(logit)−y in an Arrow kernel (plain math.exp so
-    the pure-Python twin is the same libm call), (3) per-bucket gradient =
-    one more decimal-snapped aggregate collapsed to B+5 rows collected
-    driver-side, (4) Adagrad update in plain driver-side float ops
-    (per-bucket adaptive steps condition the mixed tf/structural feature
-    scales — plain GD needs ~4× the iterations, i.e. ~4× the Spark jobs,
-    for the same separation).
-
-    Scale shape: the ONLY corpus-sized state is the feature table (persist
-    it once, reuse across iterations); everything crossing the driver is
-    B+5 doubles per iteration. Shuffles per iter: two aggregates over
-    bucket-collapsed rows. 100 TB-safe by construction.
-
-    Bit-exact replication contract (mirrors kmeans_centroids): every
-    per-row term double-computes as w*x (resp. coeff*x), snaps through
-    CAST(.. AS DECIMAL(30,15)) == Decimal(repr(x)).quantize(1e-15,
-    HALF_UP), sums exactly (order-free), and re-enters float via float().
-    σ runs in CPython math.exp on both sides. Trained weights therefore
-    equal _quality_classifier_twin's bit-for-bit, which is what lets the
-    oracle pin them as SQL literals.
-    """
-    feats = _qcls_labeled_features(docs, n_buckets).persist()
-    w = _qcls_gd_loop(feats, n_buckets + 5, iters, lr)
-    feats.unpersist()
-    return w
-
-
 def _qcls_labeled_features(docs: DataFrame, n_buckets: int,
                            gq: DataFrame | None = None,
                            stream: DataFrame | None = None) -> DataFrame:
@@ -1469,9 +1410,28 @@ def _qcls_labeled_features(docs: DataFrame, n_buckets: int,
 
 def _qcls_gd_loop(feats: DataFrame, dim: int, iters: int,
                   lr: float) -> list[float]:
-    """The Adagrad full-batch GD loop over a (persisted) labeled feature
-    table — see quality_classifier_train for the plan + replication
-    contract."""
+    """The trainer behind quality_classifier: a fastText-style linear
+    quality classifier (the CCNet/FineWeb-edu pattern: a cheap linear model
+    over hashed bag-of-ngram + structural features, labelled y ∈ {0,1} by
+    the Gopher rule gate) fitted by full-batch logistic-regression
+    gradient descent over a (persisted) labeled feature table. Returns
+    ``dim`` = B+5 weights (see _qcls_features).
+
+    Per iteration, every step is a Spark aggregate: (1) per-doc logit =
+    Σ_b w_b·x_b via a broadcast join of the weight table + one
+    decimal-snapped aggregate, (2) per-doc residual σ(logit)−y in an Arrow
+    kernel (plain math.exp so the pure-Python twin is the same libm call),
+    (3) per-bucket gradient = one more decimal-snapped aggregate collapsed
+    to B+5 rows collected driver-side, (4) Adagrad update in driver-side
+    float ops (plain GD needs ~4× the iterations for the same separation).
+    Everything crossing the driver is B+5 doubles per iteration.
+
+    Bit-exact replication contract (mirrors kmeans_centroids): every
+    per-row term double-computes as w*x (resp. coeff*x), snaps through
+    CAST(.. AS DECIMAL(30,15)) == Decimal(repr(x)).quantize(1e-15,
+    HALF_UP), sums exactly (order-free), and re-enters float via float().
+    Trained weights therefore equal _quality_classifier_twin's
+    bit-for-bit, which is what lets the oracle pin them as SQL literals."""
     import math
 
     from pdf_extractor_spark.kernels.textstats import sigmoid
@@ -1651,7 +1611,7 @@ def quality_classifier_scores(docs: DataFrame, w: list[float],
 def _quality_classifier_twin(doc_rows: list[tuple[int, str | None]],
                              n_buckets: int = 256, iters: int = 4,
                              lr: float = 1.0) -> list[float]:
-    """Bit-exact pure-Python twin of quality_classifier_train, used to pin
+    """Bit-exact pure-Python twin of _qcls_gd_loop's training, used to pin
     the trained weights into the DuckDB oracle as literals (the
     kmeans/winnowing twin pattern). Shares gopher_doc_stats/gopher_keep/
     sigmoid with the Spark kernels; replicates the gram stream (normalize →
@@ -1803,16 +1763,12 @@ def training_mix_pipeline(docs: DataFrame,
     count aggregates + gram joins (broadcast-scale stats) and the final
     rollups.
 
-    The narrow gate∧sample∧perplexity frame is cached (all three stage
-    rollups consume it); the handle rides on the result as
-    ``result._persisted_gate`` — release with
-    :func:`pdf_extractor_spark.operators.webtext.frontier_release` (or
-    ``.unpersist()`` on the handle) once the mixture table has
-    materialized, same contract as ``frontier_schedule``."""
+    The narrow gate∧sample∧perplexity frame is cached (all four stage
+    rollups consume it), as are the Gopher and LM frames; the caches
+    live as long as the session."""
     # ONE Gopher Arrow pass serves the gate, the classifier's structural
     # features, and (on a training run) the labels — the frame is narrow
-    # (doc_id + a handful of 6dp doubles), persisted, released via the
-    # result handle
+    # (doc_id + a handful of 6dp doubles), persisted
     gq = gopher_quality(docs).persist()
     gate = gq.where(F.col("keep")).select("doc_id", "n_words")
     sampled = stratified_sample(docs).select("doc_id", "lang")
@@ -1866,7 +1822,7 @@ def training_mix_pipeline(docs: DataFrame,
         docs, weight_store=weight_store, gq=gq,
         gram_store=gram_store, corpus_key=ckey).where(
         F.col("pred")).select("doc_id")
-    result = (
+    return (
         rollup(kept, "ccnet_mix")
         .unionByName(rollup(
             kept.withColumn("bucket", F.col("bucket_a")),
@@ -1875,10 +1831,6 @@ def training_mix_pipeline(docs: DataFrame,
         .unionByName(rollup(kept.join(qcsel, "doc_id"), "qcls_selected"))
         .orderBy("stage", "lang", "bucket")
     )
-    result._persisted_gate = kept  # release handles (see docstring)
-    result._persisted_lm = pplf
-    result._persisted_gq = gq
-    return result
 
 
 def pack_sequences(docs: DataFrame, seq_tokens: int = 128,

@@ -425,122 +425,6 @@ def parse_sitemap(sitemaps: DataFrame, url_col: str = "url",
         entries(_SITEMAP_INDEX_BLOCK, True))
 
 
-def frontier_schedule(candidates: DataFrame, rules: DataFrame,
-                      host_ranks: DataFrame,
-                      crawl_delays: DataFrame | None = None) -> DataFrame:
-    """The crawl-scheduling pass a frontier runs each cycle, composed
-    from this module's parts: URL-quality gate → robots allow/deny →
-    host-priority assignment → per-host politeness. ``candidates`` is
-    (url) — typically sitemap locs ∪ crawl_diff 'added'/'changed' keys;
-    ``rules`` is parse_robots_txt output; ``host_ranks`` is
-    (host, rank_scaled) from pagerank_fixedpoint (warm-started
-    month-over-month); ``crawl_delays`` is robots_crawl_delay output.
-
-    Returns (url, host, fetch, reason, priority, crawl_delay) where
-    ``fetch`` is the composed verdict, ``reason`` names the FIRST
-    failing gate ('url:<reason>' / 'robots' / 'ok'), and ``priority`` is
-    the host's integer PageRank mass (deterministic: equal-priority urls
-    tie-break by url ASC downstream — no floats anywhere, so schedules
-    are bit-reproducible across reruns, the property a resumable crawl
-    needs). Plan: one gate pass over the deduped frontier, PERSISTED
-    because it feeds both the robots evaluation and the verdict join
-    (Catalyst does not dedupe common subplans — without the persist the
-    six-regexp gate pass would run twice per cycle); robots_match's
-    keyed window plus one url-keyed join attach the verdict, and the
-    rank/delay sides join broadcast (host-cardinality). The persisted
-    frame is url-cardinality (the frontier itself) and is EXPOSED to the
-    caller as ``result._persisted_gate`` — a long-running crawler must
-    release it after the cycle's plan materializes (one cached
-    url-cardinality frame per cycle otherwise accumulates):
-    ``frontier_release(result)`` or ``result._persisted_gate.unpersist()``.
-    """
-    gated = url_quality_filter(candidates.select("url").distinct()).persist()
-    rm = robots_match(gated, rules, key_col="url", url_col="url")
-    out = (
-        gated.join(rm, "url")
-        .join(F.broadcast(host_ranks.select(
-            F.col("host").alias("url_host"),
-            F.col("rank_scaled").alias("priority"))), "url_host", "left")
-    )
-    if crawl_delays is not None:
-        out = out.join(
-            F.broadcast(crawl_delays.select(
-                F.col("host").alias("url_host"), "crawl_delay")),
-            "url_host", "left")
-    else:
-        out = out.withColumn("crawl_delay", F.lit(None).cast("double"))
-    fetch = F.col("url_ok") & F.col("robots_allowed")
-    reason = (
-        F.when(~F.col("url_ok"), F.concat(F.lit("url:"), F.col("url_reason")))
-        .when(~F.col("robots_allowed"), F.lit("robots"))
-        .otherwise(F.lit("ok"))
-    )
-    result = out.select(
-        "url",
-        F.col("url_host").alias("host"),
-        fetch.alias("fetch"),
-        reason.alias("reason"),
-        F.coalesce(F.col("priority"), F.lit(0)).cast("long")
-        .alias("priority"),
-        "crawl_delay",
-    )
-    result._persisted_gate = gated  # release handle (see docstring)
-    return result
-
-
-def frontier_release(schedule: DataFrame) -> None:
-    """Release the cached frame(s) riding on an operator result (call
-    after the plan has materialized). Covers every handle name this
-    engine attaches — ``_persisted_gate`` (:func:`frontier_schedule`,
-    ``training_mix_pipeline``), ``_persisted_lm``/``_persisted_gq`` (the
-    training mix's shared bigram-LM and Gopher frames) and
-    ``_persisted_pages`` (the q53 page table). No-op for frames that
-    don't carry one."""
-    for attr in ("_persisted_gate", "_persisted_lm", "_persisted_gq",
-                 "_persisted_pages"):
-        cached = getattr(schedule, attr, None)
-        if cached is not None:
-            cached.unpersist()
-
-
-def crawl_diff(old: DataFrame, new: DataFrame, key_col: str = "url",
-               content_col: str = "text") -> DataFrame:
-    """Crawl-over-crawl delta: compare two crawl tables (typically two
-    SnapshotTable snapshots via read_snapshot — Common Crawl's
-    month-over-month shape) and classify every key as ``added`` (only in
-    new), ``gone`` (only in old), ``changed`` (both, different content
-    fingerprint) or ``unchanged``. The re-crawl scheduler's input: fetch
-    'changed' hosts more often, expire 'gone' URLs from the frontier.
-
-    Contract: ``key_col`` is unique per side (a crawl table is keyed by
-    url; dedup upstream if not). Plan: each side reduces scan-side to
-    (key, md5(content)) — the one exchange per side carries a
-    32-character hex fingerprint (unhex it to 16 bytes if the exchange
-    volume ever matters more than twin simplicity), never page bodies —
-    then ONE full-outer sort-merge join
-    on the key classifies everything. NULL content hashes as the empty
-    string (a fetched-but-empty page is a real state, distinct from
-    absent). At 10^12 pages this is two keyed shuffles + a join, no
-    driver state.
-    """
-    o = old.select(
-        F.col(key_col).alias("k"),
-        F.md5(F.coalesce(F.col(content_col), F.lit(""))).alias("ofp"))
-    n = new.select(
-        F.col(key_col).alias("k"),
-        F.md5(F.coalesce(F.col(content_col), F.lit(""))).alias("nfp"))
-    status = (
-        F.when(F.col("ofp").isNull(), F.lit("added"))
-        .when(F.col("nfp").isNull(), F.lit("gone"))
-        .when(F.col("ofp") != F.col("nfp"), F.lit("changed"))
-        .otherwise(F.lit("unchanged"))
-    )
-    return (
-        o.join(n, "k", "full_outer")
-        .select(F.col("k").alias(key_col), status.alias("status"))
-    )
-
-
 def host_edges(links: DataFrame,
                include_nofollow: bool = False) -> DataFrame:
     """Link rows → weighted host-graph edges ``(src, dst, w)``. One shuffle
@@ -899,8 +783,9 @@ def centrality_stored(edges: DataFrame, store_root: str,
     t = SnapshotTable(store_root)
     key = {"edges": _edges_key(edges), "iters": iters}
     m = t.current_manifest()
-    # a warm-refreshed snapshot (centrality_refresh) is approximate —
-    # never serve it from this exact, twin-verifiable path
+    # a store written by the removed warm-refresh path may still hold an
+    # approximate table (marked refreshed_from) — never serve it from this
+    # exact, twin-verifiable path
     if m is None or m.get("summary", {}).get("key") != key \
             or m["summary"].get("refreshed_from"):
         cent = (
@@ -912,55 +797,6 @@ def centrality_stored(edges: DataFrame, store_root: str,
         t.overwrite(cent, summary={"key": key})
     # serve the committed table in both branches (a second lazy
     # materialization of the PageRank plan would re-run its joins)
-    return t.read(spark).select(
-        "host", "rank_scaled", "hub_scaled", "auth_scaled")
-
-
-def centrality_refresh(edges: DataFrame, store_root: str,
-                       iters: int = 5, refresh_iters: int = 1) -> DataFrame:
-    """:func:`centrality_stored` with month-over-month WARM START: when
-    the edge set changed but a PREVIOUS snapshot exists, PageRank is
-    re-initialized from the stored ranks and run for only
-    ``refresh_iters`` power iterations instead of the cold ``iters`` —
-    the crawl-refresh shape: the graph changed at the edges, not
-    wholesale, so last snapshot's converged ranks are already near the
-    new fixed point (BENCH.md graph ladder: a warm single iteration
-    lands 6.2x closer to the cold-5 result than a cold iteration at
-    ~0.36x the cost). HITS scores are re-derived at the same reduced
-    iteration count from a uniform start (HITS converges faster and has
-    no warm-start identity to preserve).
-
-    NOT oracle-gated by design: a refreshed rank differs from the cold
-    fixed point by the unconverged residual (bounded by the ladder
-    measurements), so this is the operational fast path, while
-    :func:`centrality_stored` remains the exact, twin-verifiable one.
-    On a key MATCH the committed table serves as-is (identical to
-    centrality_stored); on a miss with no prior snapshot it falls back
-    to the cold path."""
-    from pdf_extractor_spark.sources.table_format import SnapshotTable
-
-    spark = edges.sparkSession
-    t = SnapshotTable(store_root)
-    key = {"edges": _edges_key(edges), "iters": iters}
-    m = t.current_manifest()
-    if m is not None and m.get("summary", {}).get("key") == key:
-        return t.read(spark).select(
-            "host", "rank_scaled", "hub_scaled", "auth_scaled")
-    if m is None:
-        return centrality_stored(edges, store_root, iters=iters)
-    prev = t.read(spark).select("host", "rank_scaled")
-    cent = (
-        pagerank_fixedpoint(edges, iters=refresh_iters, init_ranks=prev)
-        .select("host", "rank_scaled")
-        .join(hits_fixedpoint(edges, iters=refresh_iters)
-              .select("host", "hub_scaled", "auth_scaled"), "host")
-    )
-    # the refreshed snapshot is a HIT for later same-edge calls of THIS
-    # function, but carries a marker so the exact centrality_stored path
-    # never serves an approximate table
-    t.overwrite(cent, summary={
-        "key": key, "refreshed_from": m["snapshot_id"],
-        "refresh_iters": refresh_iters})
     return t.read(spark).select(
         "host", "rank_scaled", "hub_scaled", "auth_scaled")
 
@@ -1139,138 +975,6 @@ def url_filter_sql(url_sql: str) -> str:
     return (
         f"{host} AS url_host, ({reason}) = 'ok' AS url_ok, "
         f"({reason}) AS url_reason"
-    )
-
-
-def _robots_lines(robots: DataFrame, host_col: str,
-                  body_col: str) -> DataFrame:
-    """robots.txt bodies → one row per directive: (host, pos, key, value)
-    with key ASCII-lowercased, '#' comments stripped, whitespace trimmed,
-    non-directive lines dropped. Narrow (split → posexplode → regexp) —
-    the shared front half of parse_robots_txt / robots_sitemaps /
-    robots_crawl_delay."""
-    line = F.col("line")
-    nc = F.regexp_extract(line, r"^([^#]*)", 1)
-    key = _ascii_lower(F.regexp_extract(nc, r"^\s*([A-Za-z-]+)\s*:", 1))
-    value = F.trim(F.regexp_extract(nc, r"^\s*[A-Za-z-]+\s*:(.*)$", 1))
-    return (
-        robots.select(
-            _ascii_lower(F.col(host_col)).alias("host"),
-            F.posexplode(F.split(F.col(body_col), r"\r?\n"))
-            .alias("pos", "line"),
-        )
-        .select("host", "pos", key.alias("key"), value.alias("value"))
-        .where(F.col("key") != "")
-    )
-
-
-def _robots_groups(lines: DataFrame, agent: str) -> DataFrame:
-    """Directive lines → (host, pos, key, value, applicable): RFC 9309
-    group structure. Consecutive ``User-agent`` lines open ONE group; a
-    group is applicable when its agent set names ``agent`` exactly
-    (ASCII-lowercased token match — the RFC's longest-token-match is
-    simplified to exact-or-*, the documented subset) — and if ANY group
-    names the agent specifically, ``*`` groups are ignored for it (the
-    RFC's most-specific-group rule). Windows are partitioned by host
-    (robots files are small; hosts are many — fully parallel).
-
-    ``Sitemap`` lines are filtered out BEFORE the group-run scan: RFC
-    9309 says non-group records must not interfere with group parsing —
-    a Sitemap line between two consecutive User-agent lines must not
-    split their shared group (review-wave finding; the pure-Python
-    reference in the tests skips them the same way)."""
-    from pyspark.sql.window import Window
-
-    lines = lines.where(F.col("key") != "sitemap")
-    w = Window.partitionBy("host").orderBy("pos")
-    is_ua = (F.col("key") == "user-agent").cast("int")
-    lines = lines.withColumn(
-        "gid",
-        F.sum(
-            (is_ua.cast("boolean")
-             & ~F.coalesce(F.lag(is_ua.cast("boolean")).over(w),
-                           F.lit(False))).cast("int")
-        ).over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    agents = (
-        lines.where(F.col("key") == "user-agent")
-        .groupBy("host", "gid")
-        .agg(F.collect_set(_ascii_lower(F.col("value"))).alias("agents"))
-        .withColumn("names_agent",
-                    F.array_contains("agents", agent.lower()))
-        .withColumn("names_star", F.array_contains("agents", "*"))
-    )
-    host_specific = agents.groupBy("host").agg(
-        F.max("names_agent").alias("has_specific"))
-    applicable = (
-        agents.join(F.broadcast(host_specific), "host")
-        .withColumn(
-            "applicable",
-            F.when(F.col("has_specific"), F.col("names_agent"))
-            .otherwise(F.col("names_star")))
-        .select("host", "gid", "applicable")
-    )
-    return lines.join(F.broadcast(applicable), ["host", "gid"], "left") \
-        .withColumn("applicable",
-                    F.coalesce(F.col("applicable"), F.lit(False)))
-
-
-def parse_robots_txt(robots: DataFrame, agent: str = "*",
-                     host_col: str = "host",
-                     body_col: str = "body") -> DataFrame:
-    """robots.txt TEXT → the (host, prefix, allow) rules table
-    :func:`robots_match` consumes — the missing front half of the chain
-    (raw fetched bytes in, crawl decisions out). RFC 9309 subset,
-    documented: '#' comments, CRLF/LF lines, case-insensitive directive
-    keys, consecutive User-agent lines share a group, empty
-    ``Disallow:`` emits no rule (allow-all), percent-decoding is out of
-    the subset; '*'/'$' wildcard rules pass through verbatim and
-    :func:`robots_match` evaluates them per §2.2.3. Only rules from
-    groups applicable to ``agent`` are
-    returned. Narrow until one host-keyed window; output is
-    host-cardinality-small — the broadcast side of robots_match."""
-    g = _robots_groups(_robots_lines(robots, host_col, body_col), agent)
-    return (
-        g.where(F.col("applicable")
-                & F.col("key").isin("allow", "disallow")
-                & (F.col("value") != ""))
-        .select(
-            "host",
-            F.col("value").alias("prefix"),
-            (F.col("key") == "allow").alias("allow"),
-        )
-        .distinct()
-    )
-
-
-def robots_sitemaps(robots: DataFrame, host_col: str = "host",
-                    body_col: str = "body") -> DataFrame:
-    """``Sitemap:`` directives (group-independent per RFC 9309) →
-    (host, sitemap_url) frontier seeds — the link between the robots
-    fetch and :func:`parse_sitemap`."""
-    lines = _robots_lines(robots, host_col, body_col)
-    return (
-        lines.where((F.col("key") == "sitemap") & (F.col("value") != ""))
-        .select("host", F.col("value").alias("sitemap_url"))
-        .distinct()
-    )
-
-
-def robots_crawl_delay(robots: DataFrame, agent: str = "*",
-                       host_col: str = "host",
-                       body_col: str = "body") -> DataFrame:
-    """``Crawl-delay:`` per host for ``agent`` (de-facto directive —
-    not in RFC 9309 but honored by major crawlers; the politeness knob a
-    frontier scheduler needs next to the allow rules). MIN across
-    applicable groups; non-numeric values are ignored."""
-    g = _robots_groups(_robots_lines(robots, host_col, body_col), agent)
-    return (
-        g.where(F.col("applicable") & (F.col("key") == "crawl-delay"))
-        # try_cast: malformed delays are ignored, not ANSI cast errors
-        .select("host", F.col("value").try_cast("double").alias("d"))
-        .where(F.col("d").isNotNull())
-        .groupBy("host")
-        .agg(F.min("d").alias("crawl_delay"))
     )
 
 

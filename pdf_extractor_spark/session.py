@@ -62,22 +62,3 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     return builder.getOrCreate()
-
-
-def pages_df(spark: SparkSession, n: int, seed: int = 42):
-    """Synthesize the Common-Crawl-style pages table (FIXTURES.md §1) as a
-    Spark DataFrame. Small-scale only (driver-side generation); the bench
-    path parallelizes generation across executors (see bench.py)."""
-    from pdf_extractor_spark import corpus
-
-    docs = corpus.generate(n, seed)
-    pdf, _ = corpus.to_pandas(docs)
-    return spark.createDataFrame(pdf, schema=PAGES_DDL)
-
-
-def golden_df(spark: SparkSession, n: int, seed: int = 42):
-    from pdf_extractor_spark import corpus
-
-    docs = corpus.generate(n, seed)
-    _, gdf = corpus.to_pandas(docs)
-    return spark.createDataFrame(gdf)

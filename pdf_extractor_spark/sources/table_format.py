@@ -70,39 +70,6 @@ def zorder_key(df: DataFrame, cols: list[str]):
     return key
 
 
-def parquet_skip_fraction(dirs: list[str], predicates: dict) -> float:
-    """Fraction of row groups a min/max-pruning reader SKIPS for an AND of
-    range predicates ``{col: (lo, hi)}``, judged from parquet footer
-    statistics alone — the same stats Iceberg manifests and parquet
-    readers prune on, so this measures exactly the I/O a clustered layout
-    saves (see SnapshotTable.compact(cluster_by=...))."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    total = skipped = 0
-    for d in dirs:
-        for f in glob.glob(os.path.join(d, "*.parquet")):
-            md = pq.ParquetFile(f).metadata
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                stats = {}
-                for i in range(g.num_columns):
-                    col = g.column(i)
-                    if col.statistics is not None and \
-                            col.statistics.has_min_max:
-                        stats[col.path_in_schema] = (
-                            col.statistics.min, col.statistics.max)
-                total += 1
-                for cname, (lo, hi) in predicates.items():
-                    if cname in stats:
-                        cmn, cmx = stats[cname]
-                        if cmx < lo or cmn > hi:
-                            skipped += 1
-                            break
-    return skipped / total if total else 0.0
-
-
 # Iceberg's safe type promotions in Spark dtype terms (int->long,
 # float->double); consulted by the _read_dirs widen adaptation
 _WIDEN_SAFE = {("int", "bigint"), ("float", "double")}
@@ -675,7 +642,7 @@ class SnapshotTable:
         with range predicates on ANY clustered column skips most files/
         row groups on footer min/max statistics alone — the data-skipping
         lever that turns a 100 TB full scan into a targeted read
-        (measured: parquet_skip_fraction + tests). The key is a pure JVM
+        (measured from parquet footer stats in tests). The key is a pure JVM
         bit-interleave expression (no Python in the write path); one
         narrow min/max aggregate drives the normalization."""
         m = self.current_manifest()

@@ -513,8 +513,8 @@ def index_warc(data: bytes) -> tuple[list[dict], int]:
     For the per-record-gzip layout, offset/length address the COMPRESSED
     gzip member (the real CDX contract: a range request for
     [offset, offset+length) returns one independently decompressable
-    member). For a plain segment they address the raw record bytes —
-    ``read_warc_record`` accepts either. digest = md5 hex of the
+    member). For a plain segment they address the raw record bytes;
+    ``parse_warc(data[offset:offset + length])`` reads either. digest = md5 hex of the
     unwrapped HTTP payload body (Common Crawl uses base32-SHA-1; md5
     here so the DuckDB oracle twin can recompute it — documented
     deviation, same role)."""
@@ -557,7 +557,7 @@ def index_warc(data: bytes) -> tuple[list[dict], int]:
                     # the per-record CDX layout): every entry shares the
                     # member-wide span, so only the FIRST is random-access
                     # recoverable. Flag the degradation instead of silently
-                    # half-indexing (fetch_by_urls also verifies per-record).
+                    # half-indexing.
                     n_bad += 1
                 if next_pos <= pos:
                     break
@@ -570,14 +570,6 @@ def index_warc(data: bytes) -> tuple[list[dict], int]:
     except (zlib.error, ValueError, EOFError):
         return entries, n_bad + 1
     return entries, n_bad
-
-
-def read_warc_record(data: bytes, offset: int, length: int) -> dict | None:
-    """Random access: parse the single record addressed by a CDX entry's
-    (offset, length) — a gzip member or a raw record slice — and return
-    its page dict (None when the slice does not parse to a response)."""
-    pages, _bad = parse_warc(data[offset:offset + length])
-    return pages[0] if pages else None
 
 
 def index_warc_files(spark, path: str):
@@ -607,61 +599,3 @@ def index_warc_files(spark, path: str):
         kernel,
         "file string, surt string, url string, warc_ts timestamp, "
         "offset long, length long, digest string")
-
-
-def fetch_by_urls(spark, path: str, urls):
-    """Point reads through the CDX index: fetch ONLY the requested urls'
-    records from the WARC segments under ``path`` → pages DataFrame
-    (same envelope columns as read_warc).
-
-    The consumer half of the CDX story: build/filter the index (narrow,
-    per-file tasks), then open each touched segment ONCE and slice just
-    its matching members — at Common-Crawl scale this touches
-    len(urls)/~50k of the segment files and reads only the addressed
-    byte ranges instead of streaming 100 TB. The url set broadcasts (a
-    point-read workload is small by definition; a corpus-sized "set"
-    belongs in read_warc + a join instead)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    want = spark.createDataFrame([(u,) for u in urls], "url string")
-    hits = (index_warc_files(spark, path)
-            .join(F.broadcast(want), "url")
-            .select("file", "url", "offset", "length"))
-
-    def kernel(batches):
-        from urllib.parse import unquote, urlparse
-
-        for pdf in batches:
-            rows = []
-            for fpath, group in pdf.groupby("file"):
-                # binaryFile paths are URIs: strip only a leading file:
-                # scheme and percent-decode (a bare .replace() corrupted
-                # paths containing %20 or a literal 'file:' segment)
-                parsed = urlparse(fpath)
-                local = unquote(parsed.path) if parsed.scheme == "file" \
-                    else fpath
-                with open(local, "rb") as f:
-                    data = f.read()
-                for _, r in group.iterrows():
-                    page = read_warc_record(
-                        data, int(r["offset"]), int(r["length"]))
-                    # verify the fetched record IS the requested one: in a
-                    # whole-file-gzip segment every CDX entry shares the
-                    # member-wide span, so the slice parses to the member's
-                    # FIRST response — emitting it for every hit would
-                    # silently mislabel pages. Mismatches drop (fail empty,
-                    # not wrong); index_warc flags such members as bad.
-                    if page is not None and page["url"] == r["url"]:
-                        rows.append((
-                            page["url"], page["warc_ts"], page["body"],
-                            None, None, page["http_status"], page["mime"],
-                            page["charset"]))
-            yield pd.DataFrame(rows, columns=[
-                "url", "warc_ts", "html", "text", "lang",
-                "http_status", "mime", "charset"])
-
-    return hits.repartition("file").mapInPandas(
-        kernel,
-        "url string, warc_ts timestamp, html binary, text string, "
-        "lang string, http_status int, mime string, charset string")

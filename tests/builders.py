@@ -1,13 +1,18 @@
-"""Payload builders that only tests use: a PDF with a nested page tree,
-a RIFF/WAVE PCM-16 file and a YUV4MPEG2 stream."""
+"""Builders and probes that only tests use: a PDF with a nested page
+tree, a RIFF/WAVE PCM-16 file, a YUV4MPEG2 stream, the small driver-side
+pages/golden tables, and a parquet row-group skip probe."""
 from __future__ import annotations
 
+import glob
+import os
 import struct
 
 import numpy as np
 
+from pdf_extractor_spark import corpus
 from pdf_extractor_spark.corpus import _assemble_classic, _pdf_escape
 from pdf_extractor_spark.operators.multimodal import _Y4M_FRAME_FRACTION
+from pdf_extractor_spark.session import PAGES_DDL
 
 
 def build_pdf_nested(
@@ -84,3 +89,48 @@ def encode_y4m(media_id: int, n_frames: int, width: int = 8, height: int = 8,
         b"FRAME\n" + rng.integers(0, 256, size=fsize, dtype=np.uint8).tobytes()
         for _ in range(n_frames))
     return head + frames
+
+
+def pages_df(spark, n: int, seed: int = 42):
+    """Synthesize the Common-Crawl-style pages table (FIXTURES.md §1) as a
+    Spark DataFrame. Small-scale only (driver-side generation);
+    ``corpus.pages_df_distributed`` generates on the executors."""
+    pdf, _ = corpus.to_pandas(corpus.generate(n, seed))
+    return spark.createDataFrame(pdf, schema=PAGES_DDL)
+
+
+def golden_df(spark, n: int, seed: int = 42):
+    """The golden extraction table (FIXTURES.md §2) for ``pages_df``."""
+    _, gdf = corpus.to_pandas(corpus.generate(n, seed))
+    return spark.createDataFrame(gdf)
+
+
+def parquet_skip_fraction(dirs: list[str], predicates: dict) -> float:
+    """Fraction of row groups a min/max-pruning reader SKIPS for an AND of
+    range predicates ``{col: (lo, hi)}``, judged from parquet footer
+    statistics alone — the same stats Iceberg manifests and parquet
+    readers prune on, so this measures exactly the I/O a clustered layout
+    saves (see SnapshotTable.compact(cluster_by=...))."""
+    import pyarrow.parquet as pq
+
+    total = skipped = 0
+    for d in dirs:
+        for f in glob.glob(os.path.join(d, "*.parquet")):
+            md = pq.ParquetFile(f).metadata
+            for rg in range(md.num_row_groups):
+                g = md.row_group(rg)
+                stats = {}
+                for i in range(g.num_columns):
+                    col = g.column(i)
+                    if col.statistics is not None and \
+                            col.statistics.has_min_max:
+                        stats[col.path_in_schema] = (
+                            col.statistics.min, col.statistics.max)
+                total += 1
+                for cname, (lo, hi) in predicates.items():
+                    if cname in stats:
+                        cmn, cmx = stats[cname]
+                        if cmx < lo or cmn > hi:
+                            skipped += 1
+                            break
+    return skipped / total if total else 0.0

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.operators.extract import run_extract
-from pdf_extractor_spark.session import golden_df, pages_df
+from tests.builders import golden_df, pages_df
 
 N = 250
 SEED = 42
@@ -105,7 +105,6 @@ def test_salted_repartition_defuses_host_skew(spark):
     by host would bottleneck two tasks; the url-granular salted hash must
     keep the max/mean partition ratio near 1."""
     from pdf_extractor_spark.operators.extract import salted_repartition
-    from pdf_extractor_spark.session import pages_df
 
     df = pages_df(spark, 2000, seed=11)
     host = F.regexp_extract("url", r"https?://([^/]+)/", 1)
@@ -350,7 +349,6 @@ def test_image_payload_dispatch_needs_ocr():
 
 def test_image_payloads_quarantined_by_pipeline(spark, tmp_path):
     from pdf_extractor_spark.pipeline import ExtractionJob
-    from pdf_extractor_spark.session import pages_df
 
     pages = pages_df(spark, 40, seed=3)
     # overwrite every 8th payload with a PNG header -> 5 needs-OCR docs

@@ -19,6 +19,17 @@ from pdf_extractor_spark.kernels import ocr_kernel as K
 CHARS = "".join(sorted(K.CHARSET - {" "}))
 
 
+def _ocr_lines(bmp: bytes) -> list[str]:
+    """BMP page -> raw grid lines: the container parse and grid OCR that
+    extract_document runs on a BMP payload."""
+    return K.ocr_gray_rows(K.decode_bmp_gray(bmp))
+
+
+def _ocr_stream(bmp: bytes) -> str:
+    """BMP page -> printed character stream (extraction-channel form)."""
+    return K.lines_to_stream_text(_ocr_lines(bmp))
+
+
 def _flip_pixels(bmp: bytes, n: int, seed: int) -> bytes:
     """Deterministic scanner noise: flip n pixels anywhere on the page."""
     buf = bytearray(bmp)
@@ -36,7 +47,7 @@ def _flip_pixels(bmp: bytes, n: int, seed: int) -> bytes:
 def test_roundtrip_full_charset():
     text = CHARS + " " + CHARS.lower().upper()
     bmp = K.render_text_bmp(text, width=16)
-    assert K.ocr_stream_text(bmp) == text
+    assert _ocr_stream(bmp) == text
 
 
 @pytest.mark.parametrize(
@@ -55,7 +66,7 @@ def test_roundtrip_full_charset():
 )
 def test_roundtrip_cases(text):
     bmp = K.render_text_bmp(text, width=32)
-    assert K.ocr_stream_text(bmp) == text
+    assert _ocr_stream(bmp) == text
 
 
 @settings(max_examples=60, deadline=None)
@@ -64,7 +75,7 @@ def test_roundtrip_property(text):
     # the printed stream is right-trim invariant (trailing blank cells are
     # indistinguishable from padding on a fixed-pitch page)
     bmp = K.render_text_bmp(text, width=17)
-    assert K.ocr_stream_text(bmp) == text.rstrip(" ")
+    assert _ocr_stream(bmp) == text.rstrip(" ")
 
 
 def test_noise_tolerance_is_classification():
@@ -85,9 +96,9 @@ def test_noise_tolerance_is_classification():
             y_file = height - 1 - (y0 + dr)
             p = off + y_file * stride + (x0 + dc)
             buf[p] = 255 - buf[p]
-            assert K.ocr_stream_text(bytes(buf)) == text, (ci, dr, dc)
+            assert _ocr_stream(bytes(buf)) == text, (ci, dr, dc)
     for seed in range(3):
-        assert K.ocr_stream_text(_flip_pixels(bmp, 8, seed)) == text
+        assert _ocr_stream(_flip_pixels(bmp, 8, seed)) == text
 
 
 def test_unrecognizable_cell_degrades_to_question_mark():
@@ -129,46 +140,46 @@ def test_vectorized_grid_matches_scalar_reference():
         rows = K.decode_bmp_gray(payload)
         n_lines = (len(rows) - 2 * K.MARGIN) // K.PITCH_Y
         n_cols = (len(rows[0]) - 2 * K.MARGIN) // K.PITCH_X
-        assert K.ocr_bmp(payload) == K._grid_chars_scalar(
+        assert _ocr_lines(payload) == K._grid_chars_scalar(
             rows, n_lines, n_cols, max_err=6)
 
 
 def test_unsupported_variants_raise():
     good = K.render_text_bmp("ABC")
     with pytest.raises(K.OcrUnsupported):
-        K.ocr_bmp(b"BM" + b"\x00" * 20)  # truncated header
+        _ocr_lines(b"BM" + b"\x00" * 20)  # truncated header
     with pytest.raises(K.OcrUnsupported):
-        K.ocr_bmp(b"\x89PNG\r\n\x1a\n" + b"\x00" * 64)
+        _ocr_lines(b"\x89PNG\r\n\x1a\n" + b"\x00" * 64)
     with pytest.raises(K.OcrUnsupported):
-        K.ocr_bmp(good[:80])  # truncated pixel data
+        _ocr_lines(good[:80])  # truncated pixel data
     bad_bpp = bytearray(good)
     struct.pack_into("<H", bad_bpp, 28, 2)  # 2-bpp: no such profile
     with pytest.raises(K.OcrUnsupported):
-        K.ocr_bmp(bytes(bad_bpp))
+        _ocr_lines(bytes(bad_bpp))
     # an 8-bpp file relabeled 16-bpp: the masked-word profile is real
     # (final wave) but the pixel data is now half-length — loud failure
     relabel16 = bytearray(good)
     struct.pack_into("<H", relabel16, 28, 16)
     with pytest.raises(K.OcrUnsupported):
-        K.ocr_bmp(bytes(relabel16))
+        _ocr_lines(bytes(relabel16))
     jpeg_in_bmp = bytearray(good)
     struct.pack_into("<I", jpeg_in_bmp, 30, 4)  # BI_JPEG: out of profile
     with pytest.raises(K.OcrUnsupported):
-        K.ocr_bmp(bytes(jpeg_in_bmp))
+        _ocr_lines(bytes(jpeg_in_bmp))
     bitfields24 = bytearray(K.render_text_bmp("ABC", profile="rgb24"))
     struct.pack_into("<I", bitfields24, 30, 3)  # 24-bpp BITFIELDS: invalid
     with pytest.raises(K.OcrUnsupported):
-        K.ocr_bmp(bytes(bitfields24))
+        _ocr_lines(bytes(bitfields24))
     # BITFIELDS with the mask words themselves truncated away
     bf = bytearray(K.render_text_bmp("ABC", profile="bf16"))
     with pytest.raises(K.OcrUnsupported):
-        K.ocr_bmp(bytes(bf[:60]))
+        _ocr_lines(bytes(bf[:60]))
     # a raw 8-bpp file relabeled RLE8: its PAPER runs are longer than a
     # row, so the RLE interpreter must fail loudly, never emit garbage
     relabeled = bytearray(good)
     struct.pack_into("<I", relabeled, 30, 1)
     with pytest.raises(K.OcrUnsupported):
-        K.ocr_bmp(bytes(relabeled))
+        _ocr_lines(bytes(relabeled))
 
 
 def test_widened_bmp_profiles_roundtrip_with_noise():
@@ -178,7 +189,7 @@ def test_widened_bmp_profiles_roundtrip_with_noise():
     text = "WIDENED PROFILES 0123456789, OK."
     for profile in ("rgb24", "rle8"):
         payload = K.render_text_bmp(text, width=16, profile=profile)
-        assert K.ocr_stream_text(payload) == text, profile
+        assert _ocr_stream(payload) == text, profile
     # one flipped pixel inside a glyph on the 24-bpp page still recovers
     noisy = bytearray(K.render_text_bmp(text, width=16, profile="rgb24"))
     (off,) = struct.unpack_from("<I", noisy, 10)
@@ -188,7 +199,7 @@ def test_widened_bmp_profiles_roundtrip_with_noise():
     p = off + (height - 1 - (K.MARGIN + 1)) * stride + (K.MARGIN + 1) * 3
     for c in range(3):
         noisy[p + c] ^= 0xFF
-    assert K.ocr_stream_text(bytes(noisy)) == text
+    assert _ocr_stream(bytes(noisy)) == text
 
 
 def test_rle8_absolute_mode_and_escapes():
@@ -212,16 +223,16 @@ def test_rle8_absolute_mode_and_escapes():
         body += K._rle8_row(bytes(r))
     body = body[:-2] + b"\x00\x01"
     rebuilt = bytes(good[:off]) + bytes(body)
-    assert K.ocr_stream_text(rebuilt) == text
+    assert _ocr_stream(rebuilt) == text
 
     delta = bytes(good[:off]) + b"\x00\x02\x01\x01" + bytes(good[off:])
     with pytest.raises(K.OcrUnsupported):
-        K.ocr_bmp(delta)
+        _ocr_lines(delta)
 
     topdown = bytearray(good)
     struct.pack_into("<i", topdown, 22, -height)
     with pytest.raises(K.OcrUnsupported):
-        K.ocr_bmp(bytes(topdown))
+        _ocr_lines(bytes(topdown))
 
 
 def test_final_wave_bmp_profiles_roundtrip():
@@ -232,14 +243,14 @@ def test_final_wave_bmp_profiles_roundtrip():
     text = "MASKED WORDS AND NIBBLES 0123456789."
     for profile in ("mono1", "gray4", "rle4", "bf16", "rgb32"):
         payload = K.render_text_bmp(text, width=16, profile=profile)
-        assert K.ocr_stream_text(payload) == text, profile
+        assert _ocr_stream(payload) == text, profile
     # relabel the 565 BITFIELDS file as plain BI_RGB 16-bpp (masks stay
     # in the gap before the pixel data): 555 defaults misread 565 words,
     # but ink (0x0000) and paper (0xFFFF) survive ANY sane mask set —
     # the page still OCRs
     bf = bytearray(K.render_text_bmp(text, width=16, profile="bf16"))
     struct.pack_into("<I", bf, 30, 0)
-    assert K.ocr_stream_text(bytes(bf)) == text
+    assert _ocr_stream(bytes(bf)) == text
 
 
 def test_embedded_codec_bmp_profiles_roundtrip():
@@ -253,7 +264,7 @@ def test_embedded_codec_bmp_profiles_roundtrip():
                                               profile="gray8"))
     for profile in ("jpeg_embed", "png_embed"):
         payload = K.render_text_bmp(text, width=16, profile=profile)
-        assert K.ocr_stream_text(payload) == text, profile
+        assert _ocr_stream(payload) == text, profile
     png_rows = K.decode_bmp_gray(
         K.render_text_bmp(text, width=16, profile="png_embed"))
     assert [bytes(r) for r in png_rows] == [bytes(r) for r in ref]
@@ -358,7 +369,7 @@ def test_top_down_bmp_decodes():
     flipped = b"".join(reversed(rows))
     bmp[off:off + stride * height] = flipped
     struct.pack_into("<i", bmp, 22, -height)
-    assert K.ocr_stream_text(bytes(bmp)) == text
+    assert _ocr_stream(bytes(bmp)) == text
 
 
 def test_inverted_palette_decodes_correctly():
@@ -377,7 +388,7 @@ def test_inverted_palette_decodes_correctly():
         struct.pack_into("<BBBB", bmp, 54 + 4 * i, g, g, g, 0)
     for p in range(off, off + stride * height):
         bmp[p] = 255 - bmp[p]
-    assert K.ocr_stream_text(bytes(bmp)) == text
+    assert _ocr_stream(bytes(bmp)) == text
 
 
 def test_colored_ink_palette_decodes_correctly():
@@ -387,7 +398,7 @@ def test_colored_ink_palette_decodes_correctly():
     bmp = bytearray(K.render_text_bmp(text))
     # index 0 (ink) -> dark red (B,G,R)=(0,0,140); index 255 stays white
     struct.pack_into("<BBBB", bmp, 54, 0, 0, 140, 0)
-    assert K.ocr_stream_text(bytes(bmp)) == text
+    assert _ocr_stream(bytes(bmp)) == text
 
 
 def test_palette_less_bmp_keeps_identity_mapping():
@@ -398,7 +409,7 @@ def test_palette_less_bmp_keeps_identity_mapping():
     stripped = bytearray(bmp[:54] + bmp[off:])
     struct.pack_into("<I", stripped, 10, 54)          # new data offset
     struct.pack_into("<I", stripped, 2, len(stripped))
-    assert K.ocr_stream_text(bytes(stripped)) == text
+    assert _ocr_stream(bytes(stripped)) == text
 
 
 def test_scanned_pdf_roundtrip():
@@ -519,7 +530,7 @@ def test_plausibility_gate_rejects_photo_rasters():
     from pdf_extractor_spark.operators.extract import extract_document
 
     noise = _noise_bmp()
-    lines = K.ocr_bmp(noise)
+    lines = _ocr_lines(noise)
     assert not K.ocr_page_plausible(lines)
     r = extract_document(noise)[0]
     assert r["meta"]["ok"] == "false"
@@ -527,10 +538,10 @@ def test_plausibility_gate_rejects_photo_rasters():
     assert "not fixed-pitch machine print" in r["meta"]["error"]
 
     clean = K.render_text_bmp("CLEAN MACHINE PRINT 123", width=32)
-    assert K.ocr_page_plausible(K.ocr_bmp(clean))
-    assert K.ocr_page_plausible(K.ocr_bmp(_flip_pixels(clean, 8, 3)))
+    assert K.ocr_page_plausible(_ocr_lines(clean))
+    assert K.ocr_page_plausible(_ocr_lines(_flip_pixels(clean, 8, 3)))
     # blank page is EMPTY, not implausible
-    assert K.ocr_page_plausible(K.ocr_bmp(K.render_text_bmp("")))
+    assert K.ocr_page_plausible(_ocr_lines(K.render_text_bmp("")))
 
 
 def test_plausibility_gate_in_scanned_pdf():
@@ -650,7 +661,7 @@ def test_crop_shift_tolerant_decode(dy, dx):
     w = len(inner[0])
     repad = ([bytes([K.PAPER]) * (dx + w)] * dy
              + [bytes([K.PAPER]) * dx + r for r in inner])
-    assert K.ocr_stream_text(K.pack_bmp_gray(repad)) == text
+    assert _ocr_stream(K.pack_bmp_gray(repad)) == text
 
 
 def test_crop_loses_only_leading_blank_columns():
@@ -660,7 +671,7 @@ def test_crop_loses_only_leading_blank_columns():
     text = "  INDENTED LINE"
     px = K.render_page_gray([text])
     cropped = [bytes(r)[K.MARGIN:] for r in px[K.MARGIN:]]
-    got = K.ocr_stream_text(K.pack_bmp_gray(cropped))
+    got = _ocr_stream(K.pack_bmp_gray(cropped))
     assert got == "INDENTED LINE"
 
 
@@ -683,7 +694,7 @@ def test_inverse_video_scan_decodes():
     text = "INVERSE VIDEO FAX PAGE."
     px = K.render_page_gray(K.wrap_fixed(text, 32))
     inverted = [bytes(255 - b for b in r) for r in px]
-    assert K.ocr_stream_text(K.pack_bmp_gray(inverted)) == text
+    assert _ocr_stream(K.pack_bmp_gray(inverted)) == text
 
 
 @pytest.mark.parametrize("k", [2, 3])
@@ -697,11 +708,11 @@ def test_scaled_scan_decodes(k):
     m = np.array([list(r) for r in px], dtype=np.uint8)
     big = np.repeat(np.repeat(m, k, axis=0), k, axis=1)
     rows = [big[y].tobytes() for y in range(big.shape[0])]
-    assert K.ocr_stream_text(K.pack_bmp_gray(rows)) == text
+    assert _ocr_stream(K.pack_bmp_gray(rows)) == text
 
     # zoom + crop compose: strip the scaled margin, decode via relocate
     cropped = [r[k * K.MARGIN:] for r in rows[k * K.MARGIN:]]
-    assert K.ocr_stream_text(K.pack_bmp_gray(cropped)) == text
+    assert _ocr_stream(K.pack_bmp_gray(cropped)) == text
 
 
 def test_photo_still_rejects_through_the_ladder():
@@ -723,7 +734,7 @@ def test_bottom_right_crop_keeps_last_line_and_column():
     # trailing leading + 2-px margin; same on the right for the last col
     cropped = [bytes(r)[: len(r) - K.MARGIN - (K.PITCH_X - K.GLYPH_W)]
                for r in px[: len(px) - K.MARGIN - (K.PITCH_Y - K.GLYPH_H)]]
-    got = K.ocr_stream_text(K.pack_bmp_gray(cropped))
+    got = _ocr_stream(K.pack_bmp_gray(cropped))
     assert got == text
     # and through extract_document: ok=true with ALL the text
     from pdf_extractor_spark.operators.extract import extract_document
@@ -737,11 +748,6 @@ def test_renderer_rejects_out_of_charset():
         K.render_text_bmp("lowercase")
     with pytest.raises(ValueError):
         K.render_text_bmp("EMOJI ☃")
-
-
-def test_ocr_text_display_form():
-    bmp = K.render_text_bmp("AB CD EF", width=5)
-    assert K.ocr_text(bmp) == "AB CD\nEF"
 
 
 def test_extract_document_ocr_dispatch():
@@ -789,7 +795,7 @@ def test_rotated_scan_decodes(rot):
     m = np.array([list(r) for r in px], dtype=np.uint8)
     turned = np.rot90(m, rot)
     rows = [turned[y].tobytes() for y in range(turned.shape[0])]
-    assert K.ocr_stream_text(K.pack_bmp_gray(rows)) == text
+    assert _ocr_stream(K.pack_bmp_gray(rows)) == text
 
 
 def test_rotated_inverse_scaled_scan_composes():
@@ -802,7 +808,7 @@ def test_rotated_inverse_scaled_scan_composes():
     m = np.array([list(r) for r in px], dtype=np.uint8)
     worst = np.repeat(np.repeat(np.rot90(255 - m, 2), 2, axis=0), 2, axis=1)
     rows = [worst[y].tobytes() for y in range(worst.shape[0])]
-    assert K.ocr_stream_text(K.pack_bmp_gray(rows.copy())) == text
+    assert _ocr_stream(K.pack_bmp_gray(rows.copy())) == text
 
 
 def test_clean_scan_path_is_bit_stable_with_rotation_axis():
@@ -810,4 +816,4 @@ def test_clean_scan_path_is_bit_stable_with_rotation_axis():
     never enters the ladder, so its decode is unchanged."""
     text = "CLEAN PAGE FAST PATH."
     bmp = K.render_text_bmp(text, width=32)
-    assert K.ocr_stream_text(bmp) == text
+    assert _ocr_stream(bmp) == text

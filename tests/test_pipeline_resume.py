@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.pipeline import ExtractionAborted, ExtractionJob
-from pdf_extractor_spark.session import pages_df
+from tests.builders import pages_df
 
 N = 150
 SEED = 11

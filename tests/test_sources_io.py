@@ -5,8 +5,8 @@ from __future__ import annotations
 import pytest
 
 from pdf_extractor_spark.operators.extract import run_extract
-from pdf_extractor_spark.session import pages_df
 from pdf_extractor_spark.sources import io as pio
+from tests.builders import pages_df
 
 
 @pytest.fixture(scope="module")
@@ -575,8 +575,8 @@ def test_zorder_compaction_prunes_row_groups(spark, tmp_path):
     range). Logical content is unchanged by the clustered rewrite."""
     import random
 
-    from pdf_extractor_spark.sources.table_format import (
-        SnapshotTable, parquet_skip_fraction)
+    from pdf_extractor_spark.sources.table_format import SnapshotTable
+    from tests.builders import parquet_skip_fraction
 
     rng = random.Random(3)
     rows = [(i, rng.randint(0, 999), rng.randint(0, 999))
@@ -608,8 +608,8 @@ def test_zorder_compaction_prunes_row_groups(spark, tmp_path):
 def test_sort_cluster_single_column_prunes(spark, tmp_path):
     import random
 
-    from pdf_extractor_spark.sources.table_format import (
-        SnapshotTable, parquet_skip_fraction)
+    from pdf_extractor_spark.sources.table_format import SnapshotTable
+    from tests.builders import parquet_skip_fraction
 
     rng = random.Random(5)
     rows = [(i, rng.randint(0, 9999)) for i in range(20000)]

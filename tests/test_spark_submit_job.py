@@ -119,7 +119,7 @@ def test_job_stream_mode_exactly_once(spark, tmp_path, capsys):
     the same checkpoint → zero duplicates, land a new segment → only its
     rows append. Its JSON line reports the rows and the quarantine count."""
     from pdf_extractor_spark.job import main
-    from pdf_extractor_spark.session import pages_df
+    from tests.builders import pages_df
     from pdf_extractor_spark.sources.table_format import SnapshotTable
 
     pages = pages_df(spark, 30, 5).select("url", "warc_ts", "html")

@@ -9,7 +9,7 @@ from pdf_extractor_spark.kernels import textstats
 from pdf_extractor_spark.kernels.lang import detect_lang
 from pdf_extractor_spark.operators import text_analysis
 from pdf_extractor_spark.operators.multimodal import (
-    encode_fake_image, extract_features, fake_media_table, resize_stub,
+    extract_features, fake_media_table,
 )
 from tests.builders import encode_wav_pcm16, encode_y4m
 
@@ -89,14 +89,13 @@ def test_multimodal_error_contract(spark):
 def test_multimodal_real_bmp_decode(spark):
     """Uncompressed 8-bpp BMP is a REAL decode arm (shared with the OCR
     kernel, palette-aware): width/height/channels/mean come from actual
-    pixel data, and the resize path round-trips through it."""
+    pixel data."""
     import numpy as np
 
     from pdf_extractor_spark.kernels.ocr_kernel import (
         decode_bmp_gray,
         render_text_bmp,
     )
-    from pdf_extractor_spark.operators.multimodal import resize_stub
 
     bmp = render_text_bmp("REAL IMAGE", width=32)
     rows_px = decode_bmp_gray(bmp)
@@ -113,10 +112,6 @@ def test_multimodal_real_bmp_decode(spark):
     assert (r["width"], r["height"], r["channels"]) == (want_w, want_h, 1)
     assert r["mean_intensity"] == want_mean
     assert len(r["feature"]) == 8
-
-    rz = {x["media_id"]: x for x in
-          extract_features(resize_stub(media, 10, 6)).collect()}
-    assert rz[7]["width"] == 10 and rz[7]["height"] == 6
     # out-of-profile BMP (24-bpp) degrades to the error row, not garbage
     import struct as _struct
     bad = bytearray(bmp)
@@ -126,16 +121,6 @@ def test_multimodal_real_bmp_decode(spark):
         "media_id long, kind string, payload binary, meta map<string,string>")
     rb = extract_features(media_bad).collect()[0]
     assert rb["error"] is not None and "OcrUnsupported" in rb["error"]
-
-
-def test_multimodal_resize(spark):
-    rows = [(1, "image", encode_fake_image(1, 16, 12), {})]
-    media = spark.createDataFrame(
-        rows, "media_id long, kind string, payload binary, meta map<string,string>"
-    )
-    resized = resize_stub(media, 4, 4)
-    feats = {r["media_id"]: r for r in extract_features(resized).collect()}
-    assert feats[1]["width"] == 4 and feats[1]["height"] == 4
 
 
 # -- streaming ---------------------------------------------------------------
@@ -536,7 +521,7 @@ def test_extract_pages_stream_equals_batch(spark, tmp_path):
     from pdf_extractor_spark.operators.extract import (
         SIZE_CAP_BYTES, run_extract,
     )
-    from pdf_extractor_spark.session import pages_df
+    from tests.builders import pages_df
     from pdf_extractor_spark.streaming.stream import (
         extract_pages_stream, read_pages_stream, run_stream_to_memory,
     )
@@ -689,7 +674,7 @@ def test_extract_stream_to_table_exactly_once(spark, tmp_path):
     (c) landing a new segment and re-running appends ONLY its rows; (d) a
     compact in between keeps the batch-id watermark (carry-state)."""
     from pdf_extractor_spark.operators.extract import run_extract
-    from pdf_extractor_spark.session import pages_df
+    from tests.builders import pages_df
     from pdf_extractor_spark.sources.table_format import SnapshotTable
     from pdf_extractor_spark.streaming.stream import extract_stream_to_table
 

@@ -372,7 +372,15 @@ def test_lm_perplexity_self_trained_repetition_scores_lower(spark):
     assert out[1] < out[3] < out[2]
 
 
-def test_quality_classifier_twin_parity_and_separation(spark):
+def _committed_weights(spark, store: str) -> list[float]:
+    """The B+5 weights quality_classifier committed to its weight store."""
+    from pdf_extractor_spark.sources.table_format import SnapshotTable
+
+    rows = SnapshotTable(store).read(spark).collect()
+    return [r["val"] for r in sorted(rows, key=lambda r: r["i"])]
+
+
+def test_quality_classifier_twin_parity_and_separation(spark, tmp_path):
     """The distributed Adagrad trainer must equal the pure-Python twin
     BIT-FOR-BIT (that identity is what licenses pinning trained weights as
     oracle literals), and the trained model must actually separate: on a
@@ -389,7 +397,9 @@ def test_quality_classifier_twin_parity_and_separation(spark):
     for i in range(12, 24):
         rows.append((i, f"spam spam spam buy now {i} " * 3))  # short+repetitive
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    w = text_analysis.quality_classifier_train(docs, n_buckets=64)
+    store = str(tmp_path / "qcls_w")
+    text_analysis.quality_classifier(docs, n_buckets=64, weight_store=store)
+    w = _committed_weights(spark, store)
     wt = text_analysis._quality_classifier_twin(
         [(i, t) for i, t in rows], n_buckets=64)
     assert w == wt  # exact float equality, element-wise
@@ -401,12 +411,15 @@ def test_quality_classifier_twin_parity_and_separation(spark):
     assert n_pos >= 10 and n_neg >= 10
 
 
-def test_quality_classifier_shared_feats_path_matches_two_pass(spark, docs):
+def test_quality_classifier_shared_feats_path_matches_two_pass(
+        spark, docs, tmp_path):
     """quality_classifier (train+score over one persisted feature table)
-    must equal the two-pass train-then-score composition exactly."""
+    must equal scoring with its trained weights in a separate pass."""
+    store = str(tmp_path / "qcls_w")
     one = {(r["doc_id"], r["logit"], r["pred"])
-           for r in text_analysis.quality_classifier(docs).collect()}
-    w = text_analysis.quality_classifier_train(docs)
+           for r in text_analysis.quality_classifier(
+               docs, weight_store=store).collect()}
+    w = _committed_weights(spark, store)
     two = {(r["doc_id"], r["logit"], r["pred"])
            for r in text_analysis.quality_classifier_scores(docs, w).collect()}
     assert one == two

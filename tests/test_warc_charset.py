@@ -340,8 +340,11 @@ def test_cdx_index_random_access_and_surt(tmp_path, spark):
         assert n_bad == 0 and [e["url"] for e in idx] == [
             p_["url"] for p_ in pages]
         for e, want in zip(idx, pages):
-            rec = warc.read_warc_record(data, e["offset"], e["length"])
-            assert rec is not None and rec["url"] == e["url"]
+            recs, bad = warc.parse_warc(
+                data[e["offset"]:e["offset"] + e["length"]])
+            assert bad == 0 and len(recs) == 1
+            rec = recs[0]
+            assert rec["url"] == e["url"]
             assert rec["body"] == want["body"]
             assert e["digest"] == hashlib.md5(want["body"]).hexdigest()
     assert [e["surt"] for e in idx] == [
@@ -362,73 +365,23 @@ def test_cdx_index_random_access_and_surt(tmp_path, spark):
     assert all(r["length"] > 0 and r["offset"] >= 0 for r in sdf)
 
 
-def test_cdx_fetch_by_urls_point_reads(tmp_path, spark):
-    """The CDX consumer: fetch_by_urls returns exactly the requested
-    records (bodies byte-identical, envelope columns intact) by slicing
-    the addressed members — across multiple segment files — and an
-    unknown url simply returns nothing."""
-    a = [{"url": f"https://a.example/{i}",
-          "body": f"<html>a{i}</html>".encode()} for i in range(5)]
-    b = [{"url": f"https://b.example/{i}", "charset": "utf-8",
-          "body": f"<html>b{i}</html>".encode()} for i in range(5)]
-    warc.write_warc(str(tmp_path / "s1.warc.gz"), a)
-    warc.write_warc(str(tmp_path / "s2.warc.gz"), b)
-
-    got = warc.fetch_by_urls(
-        spark, str(tmp_path),
-        ["https://a.example/3", "https://b.example/0",
-         "https://b.example/4", "https://nowhere.example/x"]).collect()
-    rows = {r["url"]: r for r in got}
-    assert set(rows) == {"https://a.example/3", "https://b.example/0",
-                         "https://b.example/4"}
-    assert bytes(rows["https://a.example/3"]["html"]) == b"<html>a3</html>"
-    assert bytes(rows["https://b.example/4"]["html"]) == b"<html>b4</html>"
-    assert rows["https://b.example/0"]["charset"] == "utf-8"
-    assert rows["https://a.example/3"]["http_status"] == 200
-
-
-def test_fetch_by_urls_whole_file_gzip_fails_empty_not_wrong(tmp_path,
-                                                            spark):
-    """The round-5 advice fix: a valid WARC compressed as ONE whole-file
-    gzip stream (not per-record members) gives every index entry the
-    member-wide (offset, length), so each slice parses to the member's
-    FIRST response. fetch_by_urls must DROP the mislabeled records (fail
-    empty, not wrong) — only the first response, whose URL matches its
-    own slice, survives — and index_warc must flag the multi-response
-    member as degraded (n_bad > 0)."""
+def test_cdx_index_flags_whole_file_gzip(tmp_path):
+    """A valid WARC compressed as ONE whole-file gzip stream (not
+    per-record members) gives every index entry the member-wide
+    (offset, length), whose slice parses to the member's FIRST response
+    only; index_warc must flag that member as degraded (n_bad > 0)."""
     import gzip as _gzip
 
     pages = [{"url": f"https://w.example/{i}",
               "body": f"<html>w{i}</html>".encode()} for i in range(4)]
     raw = tmp_path / "raw.warc"
     warc.write_warc(str(raw), pages, gzip_per_record=False)
-    whole = tmp_path / "whole.warc.gz"
-    whole.write_bytes(_gzip.compress(raw.read_bytes()))
-    raw.unlink()  # only the degraded layout remains under tmp_path
+    whole = _gzip.compress(raw.read_bytes())
 
-    entries, n_bad = warc.index_warc(whole.read_bytes())
+    entries, n_bad = warc.index_warc(whole)
     assert len(entries) == 4          # all responses indexed...
     assert n_bad >= 1                 # ...but the layout is flagged
     assert len({(e["offset"], e["length"]) for e in entries}) == 1
-
-    got = warc.fetch_by_urls(
-        spark, str(tmp_path),
-        [f"https://w.example/{i}" for i in range(4)]).collect()
-    urls = {r["url"] for r in got}
-    # before the fix this returned w0's page FOUR TIMES under four urls;
-    # now only the self-consistent first record survives
-    assert urls == {"https://w.example/0"}
-    assert all(bytes(r["html"]) == b"<html>w0</html>" for r in got)
-
-
-def test_fetch_by_urls_percent_encoded_path(tmp_path, spark):
-    """binaryFile paths are URIs: a segment file whose name contains a
-    space arrives as %20 and must still open (the bare
-    replace('file:','') conversion corrupted it)."""
-    seg = tmp_path / "seg one.warc.gz"
-    warc.write_warc(str(seg), [{"url": "https://p.example/1",
-                                "body": b"<html>p1</html>"}])
-    got = warc.fetch_by_urls(
-        spark, str(tmp_path), ["https://p.example/1"]).collect()
-    assert len(got) == 1
-    assert bytes(got[0]["html"]) == b"<html>p1</html>"
+    e = entries[0]
+    recs, _bad = warc.parse_warc(whole[e["offset"]:e["offset"] + e["length"]])
+    assert recs[0]["url"] == "https://w.example/0"

@@ -197,51 +197,29 @@ def test_centrality_store_matches_fresh_and_invalidates(spark, tmp_path):
     webtext.centrality_stored(rew, root, iters=2).collect()
 
 
-def test_centrality_refresh_warm_starts_from_previous_snapshot(
-        spark, tmp_path):
-    """The month-over-month refresh path: a changed edge set with a prior
-    snapshot warm-starts PageRank from the stored ranks for 1 iteration;
-    the result must equal the explicit warm-started iteration exactly,
-    land closer to the new cold fixed point than a cold single iteration,
-    be served (not recomputed) on a repeat call, and NEVER be served by
-    the exact centrality_stored path."""
+def test_centrality_stored_never_serves_a_refreshed_table(spark, tmp_path):
+    """A store whose current table carries a ``refreshed_from`` marker
+    holds warm-refreshed (approximate) ranks; even on a key match the
+    exact path must recompute instead of serving it."""
     from pdf_extractor_spark.sources.table_format import SnapshotTable
 
-    def edges_df(bump):
-        rows = [(f"h{i % 9}", f"h{(i * 4 + 1) % 9}",
-                 1 + i % 3 + (bump if i == 0 else 0)) for i in range(40)]
-        return spark.createDataFrame(rows, "src string, dst string, w long")
-
+    rows = [(f"h{i % 9}", f"h{(i * 4 + 1) % 9}", 1 + i % 3)
+            for i in range(40)]
+    edges = spark.createDataFrame(rows, "src string, dst string, w long")
     root = str(tmp_path / "cent")
-    old, new = edges_df(0), edges_df(5)
-    webtext.centrality_stored(old, root, iters=5)
-    prev = {r["host"]: r["rank_scaled"] for r in
-            SnapshotTable(root).read(spark).collect()}
+    stale = spark.createDataFrame(
+        [(f"h{i}", 1, 1, 1) for i in range(9)],
+        "host string, rank_scaled long, hub_scaled long, auth_scaled long")
+    SnapshotTable(root).overwrite(stale, summary={
+        "key": {"edges": webtext._edges_key(edges), "iters": 5},
+        "refreshed_from": 1})
     got = {r["host"]: r["rank_scaled"] for r in
-           webtext.centrality_refresh(new, root, iters=5,
-                                      refresh_iters=1).collect()}
-    init = spark.createDataFrame(list(prev.items()),
-                                 "host string, rank_scaled long")
+           webtext.centrality_stored(edges, root, iters=5).collect()}
     want = {r["host"]: r["rank_scaled"] for r in
-            webtext.pagerank_fixedpoint(new, iters=1,
-                                        init_ranks=init).collect()}
-    assert got == want  # warm start is deterministic, bit-exact
-    cold5 = {r["host"]: r["rank_scaled"] for r in
-             webtext.pagerank_fixedpoint(new, iters=5).collect()}
-    cold1 = {r["host"]: r["rank_scaled"] for r in
-             webtext.pagerank_fixedpoint(new, iters=1).collect()}
-    warm_dev = max(abs(got[h] - cold5[h]) for h in cold5)
-    cold_dev = max(abs(cold1[h] - cold5[h]) for h in cold5)
-    assert warm_dev < cold_dev  # the ladder property at test scale
-    # repeat call with the same edges serves the committed refresh
-    snap = SnapshotTable(root).current_manifest()["snapshot_id"]
-    webtext.centrality_refresh(new, root, iters=5).collect()
-    assert SnapshotTable(root).current_manifest()["snapshot_id"] == snap
-    # the EXACT path must recompute rather than serve the approximation
-    exact = {r["host"]: r["rank_scaled"] for r in
-             webtext.centrality_stored(new, root, iters=5).collect()}
-    assert exact == cold5
-    assert SnapshotTable(root).current_manifest()["snapshot_id"] != snap
+            webtext.pagerank_fixedpoint(edges, iters=5).collect()}
+    assert got == want
+    assert "refreshed_from" not in \
+        SnapshotTable(root).current_manifest()["summary"]
 
 
 def test_canonical_url_plan_is_codegen_only(spark):
@@ -726,183 +704,6 @@ def test_parse_sitemap_plan_is_narrow(spark):
     assert "Python" not in plan, plan
 
 
-def test_crawl_diff_known_answers_and_twin(spark):
-    old = spark.createDataFrame(
-        [("u1", "same"), ("u2", "before"), ("u3", "kept"), ("u4", None)],
-        "url string, text string")
-    new = spark.createDataFrame(
-        [("u1", "same"), ("u2", "after"), ("u5", "fresh"), ("u4", "")],
-        "url string, text string")
-    got = sorted(map(tuple, webtext.crawl_diff(old, new).collect()))
-    # u4: NULL old content hashes as '' == new '' -> unchanged
-    assert got == [("u1", "unchanged"), ("u2", "changed"), ("u3", "gone"),
-                   ("u4", "unchanged"), ("u5", "added")]
-    con = duckdb.connect()
-    con.register("o", old.toPandas())
-    con.register("n", new.toPandas())
-    want = sorted(map(tuple, con.execute("""
-        SELECT coalesce(o.url, n.url) AS url,
-               CASE WHEN o.url IS NULL THEN 'added'
-                    WHEN n.url IS NULL THEN 'gone'
-                    WHEN md5(coalesce(o.text, '')) <> md5(coalesce(n.text, ''))
-                        THEN 'changed'
-                    ELSE 'unchanged' END AS status
-        FROM o FULL OUTER JOIN n ON o.url = n.url ORDER BY url
-    """).fetchall()))
-    assert got == want
-
-
-def test_crawl_diff_across_snapshot_time_travel(spark, tmp_path):
-    """The month-over-month shape: crawl A committed, crawl B overwrites,
-    diff(read_snapshot(A), read(current)) classifies every url."""
-    from pdf_extractor_spark.sources.table_format import SnapshotTable
-
-    t = SnapshotTable(str(tmp_path / "crawl"))
-    a = spark.createDataFrame(
-        [("u1", "x"), ("u2", "y"), ("u3", "z")], "url string, text string")
-    snap_a = t.append(a)
-    b = spark.createDataFrame(
-        [("u1", "x"), ("u2", "y2"), ("u4", "w")], "url string, text string")
-    t.overwrite(b)
-    diff = sorted(map(tuple, webtext.crawl_diff(
-        t.read_snapshot(spark, snap_a), t.read(spark)).collect()))
-    assert diff == [("u1", "unchanged"), ("u2", "changed"), ("u3", "gone"),
-                    ("u4", "added")]
-
-
-ROBOTS_A = """# global comment
-User-agent: *
-Disallow: /private/
-Allow: /private/ok
-Crawl-delay: 2
-
-User-agent: fastbot
-User-agent: megabot
-Disallow: /
-Crawl-delay: 0.5
-
-Sitemap: https://a.com/sitemap.xml
-Sitemap: https://a.com/sitemap-news.xml
-"""
-
-ROBOTS_B = """User-agent: *
-Disallow:
-Allow: /x  # trailing comment
-bogus line without colon pattern !!
-Crawl-delay: not-a-number
-"""
-
-
-def _robots_ref(body, agent="*"):
-    """Independent pure-Python reference of the documented RFC 9309
-    subset (group structure, exact-or-* agent match, specific-overrides-*)."""
-    groups, cur, in_ua = [], None, False
-    sitemaps, rules_out, delays = [], [], []
-    for raw in body.split("\n"):
-        line = raw.split("#", 1)[0]
-        import re
-        m = re.match(r"^\s*([A-Za-z-]+)\s*:(.*)$", line)
-        if not m:
-            continue
-        k, v = m.group(1).lower(), m.group(2).strip()
-        if k == "sitemap":
-            if v:
-                sitemaps.append(v)
-            continue
-        if k == "user-agent":
-            if not in_ua:
-                cur = {"agents": set(), "rules": [], "delay": []}
-                groups.append(cur)
-            cur["agents"].add(v.lower())
-            in_ua = True
-            continue
-        in_ua = False
-        if cur is None:
-            continue
-        if k in ("allow", "disallow") and v:
-            cur["rules"].append((v, k == "allow"))
-        elif k == "crawl-delay":
-            try:
-                cur["delay"].append(float(v))
-            except ValueError:
-                pass
-    has_specific = any(agent.lower() in g["agents"] for g in groups)
-    for g in groups:
-        app = (agent.lower() in g["agents"]) if has_specific \
-            else ("*" in g["agents"])
-        if app:
-            rules_out.extend(g["rules"])
-            delays.extend(g["delay"])
-    return sorted(set(rules_out)), sorted(set(sitemaps)), \
-        (min(delays) if delays else None)
-
-
-def test_parse_robots_txt_reference_parity(spark):
-    df = spark.createDataFrame(
-        [("A.com", ROBOTS_A), ("b.com", ROBOTS_B)], "host string, body string")
-    for agent in ("*", "megabot", "unknownbot"):
-        got = {}
-        for r in webtext.parse_robots_txt(df, agent=agent).collect():
-            got.setdefault(r["host"], []).append((r["prefix"], r["allow"]))
-        gd = {r["host"]: r["crawl_delay"] for r in
-              webtext.robots_crawl_delay(df, agent=agent).collect()}
-        for host, body in [("a.com", ROBOTS_A), ("b.com", ROBOTS_B)]:
-            rules, _, delay = _robots_ref(body, agent)
-            assert sorted(got.get(host, [])) == rules, (agent, host)
-            assert gd.get(host) == delay, (agent, host)
-    sm = sorted(map(tuple, webtext.robots_sitemaps(df).collect()))
-    assert sm == [("a.com", "https://a.com/sitemap-news.xml"),
-                  ("a.com", "https://a.com/sitemap.xml")]
-
-
-def test_parse_robots_specific_group_overrides_star(spark):
-    df = spark.createDataFrame([("h.com", ROBOTS_A)], "host string, body string")
-    # megabot has a specific group -> '*' rules ignored entirely
-    rules = sorted((r["prefix"], r["allow"]) for r in
-                   webtext.parse_robots_txt(df, agent="megabot").collect())
-    assert rules == [("/", False)]
-    d = webtext.robots_crawl_delay(df, agent="megabot").collect()
-    assert d[0]["crawl_delay"] == 0.5
-    # unknown agent falls back to the '*' group
-    rules = sorted((r["prefix"], r["allow"]) for r in
-                   webtext.parse_robots_txt(df, agent="slowbot").collect())
-    assert rules == [("/private/", False), ("/private/ok", True)]
-
-
-def test_parse_robots_chain_into_robots_match(spark):
-    """bytes → parse_robots_txt → robots_match: the full decision chain."""
-    df = spark.createDataFrame([("a.com", ROBOTS_A)], "host string, body string")
-    rules = webtext.parse_robots_txt(df, agent="crawler9000")
-    urls = spark.createDataFrame(
-        [(1, "https://a.com/private/secret"),
-         (2, "https://a.com/private/ok/page"),
-         (3, "https://a.com/public")],
-        "doc_id long, url string")
-    got = {r["doc_id"]: r["robots_allowed"] for r in
-           webtext.robots_match(urls, rules).collect()}
-    assert got == {1: False, 2: True, 3: True}
-
-
-def test_parse_robots_sitemap_does_not_split_ua_group(spark):
-    """RFC 9309: non-group records must not interfere with group parsing —
-    a Sitemap line between consecutive User-agent lines keeps them in ONE
-    group (review-wave regression)."""
-    body = ("User-agent: a\n"
-            "Sitemap: https://h.com/s.xml\n"
-            "User-agent: b\n"
-            "Disallow: /x\n")
-    df = spark.createDataFrame([("h.com", body)], "host string, body string")
-    for agent in ("a", "b"):
-        rules = sorted((r["prefix"], r["allow"]) for r in
-                       webtext.parse_robots_txt(df, agent=agent).collect())
-        assert rules == [("/x", False)], agent
-        ref_rules, _, _ = _robots_ref(body, agent)
-        assert rules == ref_rules, agent
-    # the sitemap line itself still surfaces
-    assert webtext.robots_sitemaps(df).collect()[0]["sitemap_url"] == \
-        "https://h.com/s.xml"
-
-
 def test_hits_rejects_iters_zero(spark):
     import pytest
 
@@ -940,61 +741,6 @@ def test_pagerank_warm_start_converges_in_one_iteration(spark):
     err_cold = max(abs(cold1[h] - ref[h]) for h in ref)
     # measured: ratio ~0.09; assert a conservative 5x improvement
     assert err_warm < err_cold / 5, (err_warm, err_cold)
-
-
-def test_parse_robots_txt_fuzz_vs_reference(spark):
-    """Seeded fuzz of the robots.txt TEXT parser: random bodies built
-    from the directive grammar (UA runs of 1-3, interleaved sitemaps,
-    comments, junk lines, empty disallows, weird case/whitespace, CRLF)
-    must parse identically to the pure-Python reference for every
-    agent tier."""
-    import random
-
-    rng = random.Random(1234)
-    agents_pool = ["*", "megabot", "fastbot", "slowbot"]
-    paths = ["/", "/a", "/a/b", "/casino", "/p/q", ""]
-    bodies = []
-    for h in range(25):
-        lines = []
-        for _ in range(rng.randint(2, 18)):
-            roll = rng.random()
-            if roll < 0.25:
-                lines.append(
-                    f"User-Agent: {rng.choice(agents_pool)}"
-                    + (" # c" if rng.random() < 0.3 else ""))
-            elif roll < 0.5:
-                key = rng.choice(["Disallow", "Allow", "disallow", "ALLOW"])
-                lines.append(f"{key}: {rng.choice(paths)}")
-            elif roll < 0.62:
-                lines.append(f"Crawl-delay: {rng.choice(['1', '2.5', 'x', ''])}")
-            elif roll < 0.74:
-                lines.append(f"Sitemap: https://h{h}.com/s{rng.randint(0,3)}.xml")
-            elif roll < 0.85:
-                lines.append("# full-line comment")
-            else:
-                lines.append(rng.choice(["junk without structure", "", "  "]))
-        sep = "\r\n" if rng.random() < 0.3 else "\n"
-        bodies.append((f"h{h}.com", sep.join(lines)))
-    df = spark.createDataFrame(bodies, "host string, body string")
-    for agent in ("*", "megabot", "neverseen"):
-        got_rules: dict = {h: [] for h, _ in bodies}
-        for r in webtext.parse_robots_txt(df, agent=agent).collect():
-            got_rules[r["host"]].append((r["prefix"], r["allow"]))
-        got_delay = {r["host"]: r["crawl_delay"] for r in
-                     webtext.robots_crawl_delay(df, agent=agent).collect()}
-        for h, body in bodies:
-            # CRLF bodies: the reference splits on \n and strips \r via
-            # the regex value-trim, same as the Spark split on \r?\n
-            ref_rules, _, ref_delay = _robots_ref(
-                body.replace("\r\n", "\n"), agent)
-            assert sorted(set(got_rules[h])) == ref_rules, (agent, h, body)
-            assert got_delay.get(h) == ref_delay, (agent, h, body)
-    got_sm: dict = {}
-    for r in webtext.robots_sitemaps(df).collect():
-        got_sm.setdefault(r["host"], set()).add(r["sitemap_url"])
-    for h, body in bodies:
-        _, ref_sm, _ = _robots_ref(body.replace("\r\n", "\n"))
-        assert got_sm.get(h, set()) == set(ref_sm), (h, body)
 
 
 def _sitemap_ref(xml: str):
@@ -1053,79 +799,6 @@ def test_parse_sitemap_fuzz_vs_reference(spark):
     for u, xml in docs:
         assert sorted(got[u], key=lambda t: (t[2], t[0], t[1] or "")) == \
             _sitemap_ref(xml), (u, xml)
-
-
-def test_frontier_schedule_end_to_end(spark, tmp_path):
-    """The whole crawl-scheduling cycle from raw bytes: robots bodies ->
-    rules + sitemap seeds + delays; sitemap XML -> candidate locs;
-    month-over-month crawl tables -> changed/added keys; link graph ->
-    warm-startable priorities; frontier_schedule composes the verdict."""
-    from pdf_extractor_spark.sources.table_format import SnapshotTable
-
-    robots = spark.createDataFrame(
-        [("good.com",
-          "User-agent: *\nDisallow: /private/\nCrawl-delay: 1.5\n"
-          "Sitemap: https://good.com/sitemap.xml\n"),
-         ("spam.com", "User-agent: *\nAllow: /\n")],
-        "host string, body string")
-    rules = webtext.parse_robots_txt(robots, agent="graftbot")
-    delays = webtext.robots_crawl_delay(robots, agent="graftbot")
-    seeds = webtext.robots_sitemaps(robots)
-    assert seeds.collect()[0]["sitemap_url"] == "https://good.com/sitemap.xml"
-    # the sitemap the seed points to (fetched bytes)
-    sm = spark.createDataFrame(
-        [("https://good.com/sitemap.xml",
-          "<urlset>"
-          "<url><loc>https://good.com/new-page</loc></url>"
-          "<url><loc>https://good.com/private/x</loc></url>"
-          "<url><loc>https://spam.com/win-casino-now</loc></url>"
-          "</urlset>")], "url string, xml string")
-    locs = webtext.parse_sitemap(sm).where(~F.col("is_index")) \
-        .select(F.col("loc").alias("url"))
-    # month-over-month: /changed re-crawled with new content
-    t = SnapshotTable(str(tmp_path / "crawl"))
-    snap_a = t.append(spark.createDataFrame(
-        [("https://good.com/changed", "v1"), ("https://good.com/same", "s")],
-        "url string, text string"))
-    t.overwrite(spark.createDataFrame(
-        [("https://good.com/changed", "v2"), ("https://good.com/same", "s")],
-        "url string, text string"))
-    diff = webtext.crawl_diff(t.read_snapshot(spark, snap_a), t.read(spark))
-    refetch = diff.where(F.col("status").isin("added", "changed")) \
-        .select("url")
-    # link graph priorities
-    ranks = spark.createDataFrame(
-        [("good.com", 900), ("spam.com", 100)], "host string, rank_scaled long")
-    sched = {r["url"]: r for r in webtext.frontier_schedule(
-        locs.unionByName(refetch), rules, ranks, delays).collect()}
-    assert set(sched) == {"https://good.com/new-page",
-                          "https://good.com/private/x",
-                          "https://spam.com/win-casino-now",
-                          "https://good.com/changed"}
-    ok = sched["https://good.com/new-page"]
-    assert (ok["fetch"], ok["reason"], ok["priority"],
-            ok["crawl_delay"]) == (True, "ok", 900, 1.5)
-    assert (sched["https://good.com/changed"]["fetch"],
-            sched["https://good.com/changed"]["priority"]) == (True, 900)
-    priv = sched["https://good.com/private/x"]
-    assert (priv["fetch"], priv["reason"]) == (False, "robots")
-    spam = sched["https://spam.com/win-casino-now"]
-    assert spam["fetch"] is False and spam["reason"].startswith("url:")
-    assert spam["priority"] == 100 and spam["crawl_delay"] is None
-    # the same cycle with priorities sourced from the committed
-    # per-crawl-snapshot centrality store (the production wiring):
-    # identical fetch verdicts, host-rank order preserved
-    edges = spark.createDataFrame(
-        [("a.com", "good.com", 5), ("b.com", "good.com", 3),
-         ("c.com", "spam.com", 1)], "src string, dst string, w long")
-    cent = webtext.centrality_stored(edges, str(tmp_path / "cent"))
-    sched2 = {r["url"]: r for r in webtext.frontier_schedule(
-        locs.unionByName(refetch), rules,
-        cent.select("host", "rank_scaled"), delays).collect()}
-    assert {u: s["fetch"] for u, s in sched2.items()} == {
-        u: s["fetch"] for u, s in sched.items()}
-    assert (sched2["https://good.com/new-page"]["priority"]
-            > sched2["https://spam.com/win-casino-now"]["priority"])
 
 
 def test_robots_match_wildcard_rules_and_parity(spark):
@@ -1384,26 +1057,6 @@ def test_centrality_auto_broadcast_bit_identical(spark):
         edges, iters=3, broadcast_scores=True))
     assert auto_ht == vals(webtext.hits_fixedpoint(
         edges, iters=3, broadcast_scores=False))
-
-
-def test_frontier_schedule_release_handle(spark):
-    """frontier_schedule exposes its persisted gate frame for release
-    (ADVICE round 3: one cached url-cardinality frame per crawl cycle
-    otherwise leaks in a long-running driver)."""
-    cands = spark.createDataFrame(
-        [("https://ex.com/a",), ("https://ex.com/b.jpg",)], "url string")
-    rules = webtext.parse_robots_txt(spark.createDataFrame(
-        [("ex.com", "User-agent: *\nDisallow: /private")],
-        "host string, body string"))
-    ranks = spark.createDataFrame(
-        [("ex.com", 123)], "host string, rank_scaled long")
-    sched = webtext.frontier_schedule(cands, rules, ranks)
-    sched.collect()
-    gate = getattr(sched, "_persisted_gate", None)
-    assert gate is not None and gate.storageLevel.useMemory
-    webtext.frontier_release(sched)
-    assert not gate.storageLevel.useMemory
-    webtext.frontier_release(sched)  # idempotent / no-op second call
 
 
 def test_link_extraction_attribute_quoting_forms(spark):
