@@ -1355,8 +1355,7 @@ def q_pipeline_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pdir = tempfile.mkdtemp(prefix="pdfx_q37_pages_")
     pages.repartition(4).write.mode("overwrite").parquet(pdir)
-    sdf = extract_pages_stream(
-        read_pages_stream(spark, pdir, max_files_per_trigger=1))
+    sdf = extract_pages_stream(read_pages_stream(spark, pdir))
     sink_name = f"q37_stream_{_uuid.uuid4().hex[:8]}"
     srows = run_stream_to_memory(spark, sdf, sink_name, output_mode="append")
     # materialize the 1-row aggregate NOW (plan-build-time action, like the
@@ -2822,7 +2821,7 @@ def oracle_sql() -> dict[str, str]:
             (vid + 100000, [v[0] + 0.05] + v[1:])
             for vid, v in _erows if vid % 5 == 0
         ]
-        # same adaptive-k formula as semdedup_pairs (n/cell_target, min 8)
+        # same adaptive-k formula as semdedup_pairs (n/75, min 8)
         _semcents = similarity._kmeans_centroids_twin(
             _duprows, k=max(8, len(_duprows) // 75), iters=2, seed=3)
         _semcents_sql = ", ".join(

@@ -363,11 +363,10 @@ def build_pdf(page_runs: list[list[tuple[float, float, str]]],
 
 
 def build_pdf_encrypted(page_runs: list[list[tuple[float, float, str]]],
-                        r: int = 3, owner_pw: bytes = b"owner",
-                        user_pw: bytes = b"",
+                        r: int = 3, user_pw: bytes = b"",
                         compress: bool = False) -> bytes:
     """The classic ``build_pdf`` layout under the Standard security
-    handler, owner password set, user password EMPTY by default — the
+    handler, owner password "owner", user password EMPTY by default — the
     "protected but readable" shape a web corpus carries in volume and the
     reference's PyPDF2 path opens via decrypt(''). Revisions:
 
@@ -399,6 +398,7 @@ def build_pdf_encrypted(page_runs: list[list[tuple[float, float, str]]],
 
     if r not in (2, 3, 4, 5, 6):
         raise ValueError(f"unsupported revision {r}")
+    owner_pw = b"owner"
     p = -4  # all permissions granted (the common all-bits value)
     id0 = hashlib.md5(
         repr(page_runs).encode() + bytes([r])).digest()  # deterministic

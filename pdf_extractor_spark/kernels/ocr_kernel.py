@@ -12,7 +12,7 @@ scanned tier are built from scratch here —
   libraries), thresholds pixels to ink, segments the page into the fixed
   glyph grid, and classifies every cell by HAMMING-NEAREST template
   matching against the font — tolerant to scanner noise up to
-  ``max_err`` flipped pixels per glyph (default 6 of 35), emitting ``?``
+  ``MAX_ERR`` flipped pixels per glyph (6 of 35), emitting ``?``
   for unrecognizable cells instead of guessing.
 
 The decoder is genuinely a classifier (nearest-neighbor over bit
@@ -822,9 +822,13 @@ def _popcount(v: int) -> int:
     return bin(v).count("1")
 
 
-def match_glyph(bits: int, max_err: int = 6) -> str:
+# Most flipped pixels a cell may differ from its template and still match.
+MAX_ERR = 6
+
+
+def match_glyph(bits: int) -> str:
     """Classify one 35-bit glyph cell: exact template hit, else the
-    Hamming-nearest font template (space = blank) within ``max_err``
+    Hamming-nearest font template (space = blank) within ``MAX_ERR``
     flipped pixels, else '?'. Distance ties break to the lower codepoint
     (deterministic)."""
     if bits == 0:
@@ -832,12 +836,12 @@ def match_glyph(bits: int, max_err: int = 6) -> str:
     hit = _BITS_TO_CHAR.get(bits)
     if hit is not None:
         return hit
-    best_ch, best_d = "?", max_err + 1
+    best_ch, best_d = "?", MAX_ERR + 1
     for ch, tmpl in _TEMPLATES:
         d = _popcount(bits ^ tmpl)
         if d < best_d:
             best_ch, best_d = ch, d
-    return best_ch if best_d <= max_err else "?"
+    return best_ch if best_d <= MAX_ERR else "?"
 
 
 def _cell_bits_numpy(rows: list[bytes], n_lines: int, n_cols: int,
@@ -885,7 +889,7 @@ def _estimate_origin(rows: list[bytes]) -> tuple[int, int]:
     return best(ink_y, PITCH_Y, GLYPH_H), best(ink_x, PITCH_X, GLYPH_W)
 
 
-def _decode_at(rows: list[bytes], oy: int, ox: int, max_err: int) -> list[str]:
+def _decode_at(rows: list[bytes], oy: int, ox: int) -> list[str]:
     """Grid decode anchored at origin (oy, ox).
 
     The last line/column counts as soon as its GLYPH area fits — a
@@ -909,29 +913,28 @@ def _decode_at(rows: list[bytes], oy: int, ox: int, max_err: int) -> list[str]:
     try:
         import numpy as np
     except ImportError:  # pragma: no cover - numpy is baked into this env
-        return _grid_chars_scalar(rows, n_lines, n_cols, max_err, oy, ox)
+        return _grid_chars_scalar(rows, n_lines, n_cols, oy, ox)
     bits_arr = _cell_bits_numpy(rows, n_lines, n_cols, oy, ox)
     uniq, inv = np.unique(bits_arr, return_inverse=True)
-    lut = np.array([match_glyph(int(b), max_err=max_err) for b in uniq],
-                   dtype="<U1")
+    lut = np.array([match_glyph(int(b)) for b in uniq], dtype="<U1")
     chars = lut[inv].reshape(n_lines, n_cols)
     return ["".join(line) for line in chars]
 
 
-def ocr_gray_rows(rows: list[bytes], max_err: int = 6,
-                  autolocate: bool = True) -> list[str]:
+def ocr_gray_rows(rows: list[bytes]) -> list[str]:
     """OCR a top-down luminance-row raster into raw grid lines — the
     container-independent core shared by BMP files and PDF image XObjects.
 
     Grid segmentation first at the page profile's canonical margin (the
     clean-scan fast path — bit-stable for rendered pages); if that decode
-    is implausible and ``autolocate`` is set, a bounded ladder of scanner
+    is implausible, a bounded ladder of scanner
     normalizations is tried (see ``_page_variants``): grid-origin
     re-estimation for cropped/shifted scans, 90°/180°/270° rotation for
     mis-fed pages, luminance inversion for white-on-black output, and
     2x/3x block-average downscale for higher-resolution rasters — each
     accepted only if its decode is itself plausible, else the original
-    (implausible) decode returns and the caller's gate rejects it. Each cell is classified independently by ``match_glyph``. Lines
+    (implausible) decode returns and the caller's gate rejects it. Each
+    cell is classified independently by ``match_glyph``. Lines
     are returned as the full cell grid (blank cells ARE spaces in a
     fixed-pitch page) — no trimming, so callers can reconstruct the exact
     printed character stream. ``lines_to_stream_text`` assembles the
@@ -944,19 +947,19 @@ def ocr_gray_rows(rows: list[bytes], max_err: int = 6,
     them, a noisy page a few more), so per-page cost is numpy ops plus
     O(unique patterns) Python.
     """
-    lines = _decode_at(rows, MARGIN, MARGIN, max_err)
-    if not autolocate or ocr_page_plausible(lines):
+    lines = _decode_at(rows, MARGIN, MARGIN)
+    if ocr_page_plausible(lines):
         return lines
     for i, variant in enumerate(_page_variants(rows)):
         # the first variant IS the raw page, whose canonical decode just
         # failed above — only its estimated-origin attempt is new
-        got = _try_decode(variant, max_err, try_canonical=i > 0)
+        got = _try_decode(variant, try_canonical=i > 0)
         if got is not None:
             return got
     return lines
 
 
-def _try_decode(rows: list[bytes], max_err: int,
+def _try_decode(rows: list[bytes],
                 try_canonical: bool = True) -> list[str] | None:
     """Decode one page variant: canonical origin, then estimated origin.
     Accept only a plausible decode with at least one recognized glyph —
@@ -964,7 +967,7 @@ def _try_decode(rows: list[bytes], max_err: int,
     (the caller's gate turns that into a loud quarantine, not silence)."""
     origins = ((MARGIN, MARGIN),) if try_canonical else ()
     for oy, ox in origins + (_estimate_origin(rows),):
-        got = _decode_at(rows, oy, ox, max_err)
+        got = _decode_at(rows, oy, ox)
         if got and ocr_page_plausible(got) and any(
                 ln.strip(" ") for ln in got):
             return got
@@ -1009,8 +1012,7 @@ def _page_variants(rows: list[bytes]):
 
 
 def _grid_chars_scalar(rows: list[bytes], n_lines: int, n_cols: int,
-                       max_err: int, oy: int = MARGIN,
-                       ox: int = MARGIN) -> list[str]:
+                       oy: int = MARGIN, ox: int = MARGIN) -> list[str]:
     """Pure-Python reference for the vectorized grid decode (parity-tested
     against it; also the no-numpy fallback)."""
     out: list[str] = []
@@ -1025,7 +1027,7 @@ def _grid_chars_scalar(rows: list[bytes], n_lines: int, n_cols: int,
                 for c in range(GLYPH_W):
                     if prow[x0 + c] < 128:
                         bits |= 1 << (r * GLYPH_W + c)
-            chars_l.append(match_glyph(bits, max_err=max_err))
+            chars_l.append(match_glyph(bits))
         out.append("".join(chars_l))
     return out
 
@@ -1034,7 +1036,7 @@ def _grid_chars_scalar(rows: list[bytes], n_lines: int, n_cols: int,
 # this fraction of its inked cells failed classification. A real-world
 # grayscale raster (photo, scanner noise field) thresholded onto the glyph
 # grid classifies overwhelmingly to '?' (a random 35-bit cell lands within
-# max_err=6 of any template with p ≈ 0.2%), so garbage pages reject loudly
+# MAX_ERR of any template with p ≈ 0.2%), so garbage pages reject loudly
 # instead of polluting the TEXT channel — while a legit page with a few
 # damaged cells still reads.
 OCR_MAX_UNKNOWN_FRAC = 0.15

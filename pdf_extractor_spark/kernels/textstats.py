@@ -75,8 +75,9 @@ def fingerprint(text: str) -> str:
     return hashlib.md5(normalize(text).encode("utf-8")).hexdigest()
 
 
-def shingles(text: str, n: int = 3) -> set[str]:
-    """Distinct word n-gram shingles of the normalized text."""
+def shingles(text: str) -> set[str]:
+    """Distinct word 3-gram shingles of the normalized text."""
+    n = 3
     norm = normalize(text)
     toks = norm.split(" ") if norm else []
     if len(toks) < n:
@@ -108,8 +109,8 @@ def minhash_perm_params(num_perm: int) -> list[tuple[int, int]]:
     return params
 
 
-def minhash_signature(text: str, num_perm: int = 64, n: int = 3) -> list[int]:
-    sh = shingles(text, n) or {""}  # empty text → hash of "" (Spark twin)
+def minhash_signature(text: str, num_perm: int = 64) -> list[int]:
+    sh = shingles(text) or {""}  # empty text → hash of "" (Spark twin)
     hms = [shingle_hash(s) % MINHASH_P for s in sh]
     return [
         min((a * h + b) % MINHASH_P for h in hms)
@@ -120,12 +121,13 @@ def minhash_signature(text: str, num_perm: int = 64, n: int = 3) -> list[int]:
 SIMHASH_BITS = 60  # fits exact signed-64 integer math in Spark AND DuckDB
 
 
-def simhash(text: str, bits: int = SIMHASH_BITS) -> int:
+def simhash(text: str) -> int:
     """SimHash over whitespace tokens of the normalized text.
 
     Token hash = first bits/4 md5 hex chars as int. 60 bits (not 64) so the
     Spark/DuckDB twins can use exact signed-64 integer arithmetic.
     """
+    bits = SIMHASH_BITS
     norm = normalize(text)
     toks = norm.split(" ") if norm else []
     if not toks:
@@ -142,8 +144,13 @@ def simhash(text: str, bits: int = SIMHASH_BITS) -> int:
     return out
 
 
-def rolling_hashes(text: str, window: int = 8, base: int = 257, mod: int = (1 << 61) - 1) -> list[int]:
+ROLLING_BASE = 257
+ROLLING_MOD = (1 << 61) - 1  # Mersenne prime
+
+
+def rolling_hashes(text: str, window: int = 8) -> list[int]:
     """Rabin-Karp rolling hashes over characters of the normalized text."""
+    base, mod = ROLLING_BASE, ROLLING_MOD
     s = normalize(text)
     if len(s) < window:
         return []

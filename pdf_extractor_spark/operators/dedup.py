@@ -14,9 +14,7 @@ Scale notes (100 TB):
     Jaccard so precision is exact.
   - SimHash: per-doc 64-bit signature scan-side; grouping on the signature
     is one narrow shuffle.
-  - n-gram Jaccard: explode(shingles) → shuffle on shingle → pair counts;
-    at web scale you'd cap df (drop shingles with document-frequency > K)
-    — implemented via the `max_df` knob.
+  - n-gram Jaccard: explode(shingles) → shuffle on shingle → pair counts.
 """
 from __future__ import annotations
 
@@ -29,6 +27,11 @@ from pyspark.sql import functions as F
 
 def _norm(col):
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
+
+
+# Word n-gram size of the near-duplicate pair operators (MinHash-LSH, exact
+# and prefix-filtered Jaccard), the same shingles textstats.shingles builds.
+SHINGLE_N = 3
 
 
 # ---------------------------------------------------------------------------
@@ -225,11 +228,9 @@ def minhash_lsh_pairs(
     docs: DataFrame,
     num_perm: int = 64,
     bands: int = 16,
-    n: int = 3,
     jaccard_threshold: float = 0.5,
     shingle_store: str | None = None,
     corpus_key: str | None = None,
-    bucket_cap: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via banded MinHash-LSH, verified with exact
     Jaccard (so output is exact given candidate recall).
@@ -246,87 +247,50 @@ def minhash_lsh_pairs(
     runs (see shingle_table).
     """
     if shingle_store is not None:
-        shh = shingle_table(docs, n, shingle_store, corpus_key=corpus_key)
+        shh = shingle_table(docs, SHINGLE_N, shingle_store,
+                            corpus_key=corpus_key)
     else:
-        shh = shingle_hash_arrays(docs, n).persist()
-    return minhash_pairs_from_hashes(shh, num_perm, bands, jaccard_threshold,
-                                     bucket_cap)
+        shh = shingle_hash_arrays(docs, SHINGLE_N).persist()
+    return minhash_pairs_from_hashes(shh, num_perm, bands, jaccard_threshold)
 
 
-def banded_candidate_pairs(banded: DataFrame, id_col: str = "doc_id",
-                           bucket_cap: int | None = None) -> DataFrame:
+def banded_candidate_pairs(banded: DataFrame, id_col: str) -> DataFrame:
     """(id, band, band_sig) band rows → distinct candidate pairs (a < b)
     via the bucket groupBy pair-explode — the shared no-self-join core of
     every banded LSH in this module.
-
-    ``bucket_cap`` is the HOT-BUCKET guard for degenerate signatures: at
-    100 TB, template-heavy corpora routinely put millions of byte-similar
-    pages into ONE (band, band_sig) bucket, and the within-bucket explode
-    is O(k²) — a single such bucket stalls its task forever. With a cap,
-    a bucket with k > cap members emits (a) all pairs among its first
-    ``cap`` sorted members and (b) a STAR from the bucket's first member
-    to every overflow member — O(cap² + k) pairs, deterministic, no
-    sampling RNG. Recall trade (documented, tested): within a capped
-    bucket every member still reaches exact verify via the star, so
-    true-duplicate CLIQUES (the degenerate case that creates hot buckets)
-    stay fully connected for downstream connected-components grouping;
-    what can be lost are pairs between two overflow members that are
-    near-dups of each other but NOT of the representative — a non-clique
-    bucket shape that a capped bucket cannot distinguish without the
-    quadratic work the cap exists to avoid. Default None = exact explode
-    (the oracle-parity configuration).
     """
-    ids = F.sort_array(F.collect_list(id_col))
-
-    def _pairs_of(col):
-        return F.flatten(
-            F.transform(
-                col,
-                lambda x, i: F.transform(
-                    F.slice(col, i + 2, F.size(col)),
-                    lambda y: F.struct(x.alias("a"), y.alias("b")),
-                ),
-            )
-        )
-
     grouped = (
         banded.groupBy("band", "band_sig")
-        .agg(ids.alias("ids"))
+        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
         .where(F.size("ids") > 1)
     )
-    if bucket_cap is None:
-        pair_expr = _pairs_of(F.col("ids"))
-    else:
-        if bucket_cap < 2:
-            raise ValueError("bucket_cap must be >= 2")
-        kept = F.slice(F.col("ids"), 1, bucket_cap)
-        overflow = F.slice(
-            F.col("ids"), bucket_cap + 1,
-            F.greatest(F.size("ids") - bucket_cap, F.lit(0)))
-        star = F.transform(
-            overflow,
-            lambda y: F.struct(F.element_at(F.col("ids"), 1).alias("a"),
-                               y.alias("b")))
-        pair_expr = F.concat(_pairs_of(kept), star)
+    ids = F.col("ids")
+    pairs = F.flatten(
+        F.transform(
+            ids,
+            lambda x, i: F.transform(
+                F.slice(ids, i + 2, F.size(ids)),
+                lambda y: F.struct(x.alias("a"), y.alias("b")),
+            ),
+        )
+    )
     return (
-        grouped.select(F.explode(pair_expr).alias("p"))
+        grouped.select(F.explode(pairs).alias("p"))
         .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
         .distinct()
     )
 
 
 def minhash_pairs_from_hashes(shh: DataFrame, num_perm: int, bands: int,
-                              jaccard_threshold: float,
-                              bucket_cap: int | None = None) -> DataFrame:
+                              jaccard_threshold: float) -> DataFrame:
     """The hash-level core of minhash_lsh_pairs: (doc_id, shh) shingle
     table → banded candidates → exact-Jaccard-verified (a < b) pairs.
     Shared by the batch operator and the streaming intra-batch arm.
     Buckets are tiny on organic corpora (near-dup cliques), so the
     interpreted pair-comprehension HOF is negligible next to the shuffle
-    it avoids; ``bucket_cap`` bounds the degenerate-template case (see
-    banded_candidate_pairs)."""
+    it avoids."""
     banded = minhash_banded_from_hashes(shh, num_perm, bands)
-    cand = banded_candidate_pairs(banded, "doc_id", bucket_cap)
+    cand = banded_candidate_pairs(banded, "doc_id")
     return verify_jaccard_hashed(cand, shh, threshold=jaccard_threshold)
 
 
@@ -394,13 +358,11 @@ def verify_jaccard_hashed(
 # exact n-gram Jaccard over all pairs (small-side ground truth / verifier)
 # ---------------------------------------------------------------------------
 
-def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.5,
-                        max_df: int | None = None,
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
                         shingle_store: str | None = None,
                         corpus_key: str | None = None) -> DataFrame:
     """All-pairs n-gram Jaccard ≥ threshold via inverted index (explode on
-    shingle, pair within posting lists) — NOT a cross join. `max_df` drops
-    stop-shingles with document frequency above the cap (the web-scale knob).
+    shingle, pair within posting lists) — NOT a cross join.
     """
     # int64 shingle hashes, not strings: the posting-list explode is the
     # wide part of this plan, and 8-byte keys shuffle/join at a fraction of
@@ -408,14 +370,13 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.5,
     # shingle_store (when given) reuses the committed shingle table shared
     # with the MinHash arm instead of re-hashing the corpus.
     if shingle_store is not None:
-        sh = shingle_table(docs, n, shingle_store, corpus_key=corpus_key)
+        sh = shingle_table(docs, SHINGLE_N, shingle_store,
+                           corpus_key=corpus_key)
     else:
-        sh = shingle_hash_arrays(docs, n).persist()  # feeds postings AND sizes
+        # feeds postings AND sizes
+        sh = shingle_hash_arrays(docs, SHINGLE_N).persist()
     sizes = sh.select("doc_id", F.size("shh").alias("sz"))
     posts = sh.select("doc_id", F.explode("shh").alias("s"))
-    if max_df is not None:
-        keep = posts.groupBy("s").count().where(F.col("count") <= max_df).select("s")
-        posts = posts.join(keep, "s", "left_semi")
     a = posts.alias("pa")
     b = posts.alias("pb")
     inter = (
@@ -442,8 +403,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.5,
 # exact all-pairs Jaccard via prefix filtering (AllPairs/PPJoin family)
 # ---------------------------------------------------------------------------
 
-def prefix_filter_jaccard_pairs(docs: DataFrame, n: int = 3,
-                                threshold: float = 0.5,
+def prefix_filter_jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
                                 shingle_store: str | None = None,
                                 corpus_key: str | None = None) -> DataFrame:
     """EXACT all-pairs n-gram Jaccard ≥ threshold via prefix filtering
@@ -477,9 +437,10 @@ def prefix_filter_jaccard_pairs(docs: DataFrame, n: int = 3,
     pruning on the full index, prefix filtering is lossless at any skew.
     """
     if shingle_store is not None:
-        sh = shingle_table(docs, n, shingle_store, corpus_key=corpus_key)
+        sh = shingle_table(docs, SHINGLE_N, shingle_store,
+                           corpus_key=corpus_key)
     else:
-        sh = shingle_hash_arrays(docs, n).persist()
+        sh = shingle_hash_arrays(docs, SHINGLE_N).persist()
     t = float(threshold)
     # ceil(t·sz) with a 1e-9 back-off: when the true product is an integer
     # k, IEEE may evaluate k+ulp and ceil would return k+1 — shortening the
@@ -652,8 +613,7 @@ def _round6_np(x):
     return np.sign(x) * np.floor(np.abs(x) * 1e6 + 0.5) / 1e6
 
 
-def cosine_pairs_arrow(joined: DataFrame, a_col: str, b_col: str,
-                       out: str = "cos") -> DataFrame:
+def cosine_pairs_arrow(joined: DataFrame, a_col: str, b_col: str) -> DataFrame:
     """Exact cosine for candidate PAIRS as one BLAS pass per Arrow batch,
     replacing the interpreted per-row fold (the measured hot spot once
     candidate sets reach ~10⁵ pairs). Output values are rounded
@@ -666,7 +626,7 @@ def cosine_pairs_arrow(joined: DataFrame, a_col: str, b_col: str,
     other = [f for f in joined.schema if f.name not in (a_col, b_col)]
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in other
-    ) + f", {out} double"
+    ) + ", cos double"
 
     def kern(batches):
         for pdf in batches:
@@ -678,7 +638,7 @@ def cosine_pairs_arrow(joined: DataFrame, a_col: str, b_col: str,
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = np.einsum("ij,ij->i", A, B) / denom
             outd = {f.name: pdf[f.name] for f in other}
-            outd[out] = _round6_np(cos)
+            outd["cos"] = _round6_np(cos)
             yield pd.DataFrame(outd)
 
     return joined.mapInPandas(kern, schema)
@@ -841,21 +801,19 @@ def embedding_lsh_band_signatures(
     return e.mapInPandas(kernel, "vec_id long, band int, band_sig long")
 
 
-def _auto_lsh_bands(band_bits: int, base_bands: int = 16,
-                    recall_cos: float = 0.99,
-                    base_bits: int = 12) -> int:
+def _auto_lsh_bands(band_bits: int, base_bands: int = 16) -> int:
     """Bands needed so the banded hyperplane-LSH per-pair miss
-    probability at cosine ``recall_cos`` is no worse than the
-    ``(base_bits, base_bands)`` operating point:
-    solve (1 − p^bits)^bands ≤ (1 − p^base_bits)^base_bands with
-    p = 1 − acos(recall_cos)/π (the hyperplane collision probability).
+    probability at cosine 0.99 is no worse than the ``(12, base_bands)``
+    operating point: solve (1 − p^bits)^bands ≤ (1 − p^12)^base_bands
+    with p = 1 − acos(0.99)/π (the hyperplane collision probability).
     Monotone: returns ``base_bands`` when bits do not exceed the base.
     Pure math (no Spark) so the growth rule is unit-testable."""
     import math
 
+    base_bits = 12
     if band_bits <= base_bits:
         return base_bands
-    p = 1.0 - math.acos(recall_cos) / math.pi
+    p = 1.0 - math.acos(0.99) / math.pi
     target = base_bands * math.log(1.0 - p ** base_bits)
     per_band = math.log(max(1.0 - p ** band_bits, 1e-300))
     return max(base_bands, math.ceil(target / per_band))
@@ -863,8 +821,7 @@ def _auto_lsh_bands(band_bits: int, base_bands: int = 16,
 
 def embedding_neardup_pairs_lsh(
     embs: DataFrame, threshold: float = 0.95, n_bands: int = 16,
-    band_bits: int | None = 12, seed: int = 7,
-    bucket_cap: int | None = None,
+    band_bits: int | None = 12,
 ) -> DataFrame:
     """Embedding near-duplicate pairs at scale: banded hyperplane-LSH
     candidates + exact cosine verify — the q18 MinHash shape transplanted
@@ -897,9 +854,7 @@ def embedding_neardup_pairs_lsh(
     rule lands on exactly (12, 16), so the oracle-pinned configuration
     is unchanged; past it, candidate volume stays O(n) while recall does
     not degrade with corpus size. Exact verify still filters every
-    candidate, so extra candidates never change results. ``bucket_cap``
-    bounds the degenerate hot-bucket explode (see
-    banded_candidate_pairs).
+    candidate, so extra candidates never change results.
     """
     if band_bits is None:
         import math
@@ -908,8 +863,8 @@ def embedding_neardup_pairs_lsh(
         band_bits = max(12, math.ceil(math.log2(max(n_vec, 2))))
         n_bands = _auto_lsh_bands(band_bits, n_bands)
     e = embs.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    banded = embedding_lsh_band_signatures(embs, n_bands, band_bits, seed)
-    cand = banded_candidate_pairs(banded, "vec_id", bucket_cap)
+    banded = embedding_lsh_band_signatures(embs, n_bands, band_bits, 7)
+    cand = banded_candidate_pairs(banded, "vec_id")
     joined = cand.join(
         e.select(F.col("vec_id").alias("a"), F.col("v").alias("va")), "a"
     ).join(e.select(F.col("vec_id").alias("b"), F.col("v").alias("vb")), "b")
@@ -924,8 +879,13 @@ def embedding_neardup_pairs_lsh(
 # line/paragraph-frequency dedup (CCNet/C4-style boilerplate removal)
 # ---------------------------------------------------------------------------
 
-def line_frequency_dedup(docs: DataFrame, max_df: int = 50, sep: str = r"\. ",
-                         joiner: str = ". ") -> DataFrame:
+# Sentence split pattern of the line-grain dedup family, and the joiner its
+# order-preserving reassembly puts back between kept sentences.
+_SENT_SEP = r"\. "
+_SENT_JOINER = ". "
+
+
+def line_frequency_dedup(docs: DataFrame, max_df: int = 50) -> DataFrame:
     """Remove sentences/paragraphs whose exact hash occurs in more than
     `max_df` distinct documents (the CCNet/C4 boilerplate-line rule: a line
     repeated across many pages is chrome, not content).
@@ -937,7 +897,7 @@ def line_frequency_dedup(docs: DataFrame, max_df: int = 50, sep: str = r"\. ",
     tiny relative to the corpus (boilerplate is heavy-tailed), so the
     anti-join broadcasts; reassembly shuffles on doc_id once.
     """
-    sents = _exploded_lines(docs, sep)
+    sents = _exploded_lines(docs)
     boiler = (
         sents.groupBy("h")
         .agg(F.countDistinct("doc_id").alias("df"))
@@ -945,20 +905,19 @@ def line_frequency_dedup(docs: DataFrame, max_df: int = 50, sep: str = r"\. ",
         .select("h")
     )
     kept = sents.join(boiler, "h", "left_anti")
-    return _reassemble_clean(docs, kept, joiner)
+    return _reassemble_clean(docs, kept)
 
 
-def _exploded_lines(docs: DataFrame, sep: str, *extra: str) -> DataFrame:
+def _exploded_lines(docs: DataFrame, *extra: str) -> DataFrame:
     """(doc_id, *extra, pos, sent, h=md5(sent)) — the shared explode of the
     line-grain dedup family (line_frequency_dedup, site_template_dedup)."""
     return docs.select(
         "doc_id", *extra,
-        F.posexplode(F.split("text", sep, -1)).alias("pos", "sent"),
+        F.posexplode(F.split("text", _SENT_SEP, -1)).alias("pos", "sent"),
     ).withColumn("h", F.md5("sent"))
 
 
-def _reassemble_clean(docs: DataFrame, kept: DataFrame,
-                      joiner: str) -> DataFrame:
+def _reassemble_clean(docs: DataFrame, kept: DataFrame) -> DataFrame:
     """Order-preserving reassembly of kept lines into (doc_id, clean_text),
     total over the input: docs whose every line was removed drop out of the
     groupBy and are restored as empty strings. Shared by the line-grain
@@ -967,7 +926,7 @@ def _reassemble_clean(docs: DataFrame, kept: DataFrame,
         kept.groupBy("doc_id")
         .agg(
             F.concat_ws(
-                joiner,
+                _SENT_JOINER,
                 F.transform(
                     F.sort_array(F.collect_list(F.struct("pos", "sent"))),
                     lambda s: s["sent"],
@@ -982,19 +941,17 @@ def _reassemble_clean(docs: DataFrame, kept: DataFrame,
     )
 
 
-def site_template_dedup(docs: DataFrame, host_col: str = "host",
-                        max_frac: float = 0.5, min_df: int = 2,
-                        sep: str = r"\. ", joiner: str = ". ") -> DataFrame:
+def site_template_dedup(docs: DataFrame, host_col: str = "host") -> DataFrame:
     """Per-SITE template suppression: remove sentences/lines that repeat
-    across more than `max_frac` of a HOST's documents (and at least
-    `min_df` of them) — the site-chrome rule production web extractors
+    across more than half of a HOST's documents (and at least 2 of them)
+    — the site-chrome rule production web extractors
     apply on top of corpus-global line frequency (line_frequency_dedup):
     a nav/footer sentence shared by most pages of one host is template even
     when the host is too small for its chrome to clear a corpus-wide df
     threshold, and a sentence popular across MANY hosts (a quote, a
     license line) is NOT this operator's business.
 
-    `min_df` guards small hosts: on a 1-document host every unique
+    The floor of 2 guards small hosts: on a 1-document host every unique
     sentence trivially exceeds any fraction of 1 — without the floor the
     whole document would be deleted as its own template.
 
@@ -1004,19 +961,19 @@ def site_template_dedup(docs: DataFrame, host_col: str = "host",
     as line_frequency_dedup. At 100 TB the template set is
     hosts x chrome-lines (tiny vs the corpus) and broadcasts.
     """
-    sents = _exploded_lines(docs, sep, host_col)
+    sents = _exploded_lines(docs, host_col)
     host_docs = docs.groupBy(host_col).agg(
         F.countDistinct("doc_id").alias("n_docs"))
     tmpl = (
         sents.groupBy(host_col, "h")
         .agg(F.countDistinct("doc_id").alias("df"))
         .join(F.broadcast(host_docs), host_col)
-        .where((F.col("df") >= min_df)
-               & (F.col("df") > F.lit(max_frac) * F.col("n_docs")))
+        .where((F.col("df") >= 2)
+               & (F.col("df") > F.lit(0.5) * F.col("n_docs")))
         .select(host_col, "h")
     )
     kept = sents.join(F.broadcast(tmpl), [host_col, "h"], "left_anti")
-    return _reassemble_clean(docs, kept, joiner)
+    return _reassemble_clean(docs, kept)
 
 
 # ---------------------------------------------------------------------------
@@ -1277,18 +1234,17 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 8,
     )
 
 
-def fuzzy_decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 8,
-                        threshold_num: int = 1,
-                        threshold_den: int = 2) -> DataFrame:
+def fuzzy_decontaminate(docs: DataFrame, benchmark: DataFrame,
+                        n: int = 8) -> DataFrame:
     """Near-duplicate decontamination: flag training documents whose
     word-n-gram Jaccard similarity with ANY benchmark document reaches
-    ``threshold_num/threshold_den`` — the fuzzy companion of
+    1/2 — the fuzzy companion of
     ``decontaminate`` (an eval answer paraphrased or truncated into a
     training page shares most but not all n-grams, so set-intersection
     alone under-flags; near-dup decontamination is the FineWeb/Llama
     practice, public reports).
 
-    The threshold compares as INTEGERS (``den*inter >= num*union``) so
+    The threshold compares as INTEGERS (``2*inter >= union``) so
     the SQL twin agrees bit-for-bit — no float rounding seam.
 
     Plan: the benchmark side is eval-suite-sized at any corpus scale, so
@@ -1312,8 +1268,8 @@ def fuzzy_decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 8,
     )
     per_doc = pairs.groupBy("doc_id").agg(
         F.max("inter").alias("overlap_ngrams"),
-        F.max(F.lit(threshold_den) * F.col("inter")
-              >= F.lit(threshold_num) * F.col("uni")).alias("contaminated"),
+        F.max(F.lit(2) * F.col("inter")
+              >= F.lit(1) * F.col("uni")).alias("contaminated"),
     )
     return (
         docs.select("doc_id")
@@ -1330,8 +1286,7 @@ def fuzzy_decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 8,
 # within-document sentence self-dedup (repetition removal)
 # ---------------------------------------------------------------------------
 
-def sentence_self_dedup(docs: DataFrame, sep: str = r"\. ",
-                        joiner: str = ". ") -> DataFrame:
+def sentence_self_dedup(docs: DataFrame) -> DataFrame:
     """Remove repeated sentences WITHIN each document, keeping the first
     occurrence in order (the within-page half of C4's repetition rule —
     line_frequency_dedup handles the cross-document half).
@@ -1342,7 +1297,7 @@ def sentence_self_dedup(docs: DataFrame, sep: str = r"\. ",
     total over input docs (all-duplicate docs keep their first sentence).
     """
     sents = docs.select(
-        "doc_id", F.posexplode(F.split("text", sep, -1)).alias("pos", "sent")
+        "doc_id", F.posexplode(F.split("text", _SENT_SEP, -1)).alias("pos", "sent")
     )
     first = sents.groupBy("doc_id", F.md5("sent").alias("h")).agg(
         F.min("pos").alias("pos")
@@ -1352,7 +1307,7 @@ def sentence_self_dedup(docs: DataFrame, sep: str = r"\. ",
         kept.groupBy("doc_id")
         .agg(
             F.concat_ws(
-                joiner,
+                _SENT_JOINER,
                 F.transform(
                     F.sort_array(F.collect_list(F.struct("pos", "sent"))),
                     lambda s: s["sent"],
@@ -1405,7 +1360,12 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 15) -> DataFrame:
+# Large-star/small-star rounds before connected_components gives up: O(log n)
+# rounds converge any component of up to ~2^15 nodes.
+_CC_MAX_ROUNDS = 15
+
+
+def connected_components(pairs: DataFrame) -> DataFrame:
     """(doc_id, group_id) for every node in the pair graph, group_id = the
     smallest node id reachable from it — the step that turns near-duplicate
     PAIRS (q18/q19/q21 output) into dedup GROUPS with one canonical
@@ -1429,7 +1389,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 15) -> DataFrame:
     if not edges.head(1):
         return edges.select(F.col("u").alias("doc_id"), F.col("v").alias("group_id"))
     converged = False
-    for _ in range(max_iter):
+    for _ in range(_CC_MAX_ROUNDS):
         new = _small_star(_large_star(edges)).localCheckpoint()
         changed = (
             new.exceptAll(edges).count() + edges.exceptAll(new).count()
@@ -1440,8 +1400,8 @@ def connected_components(pairs: DataFrame, max_iter: int = 15) -> DataFrame:
             break
     if not converged:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
-            "large-star/small-star rounds — raise max_iter"
+            f"connected_components did not converge in {_CC_MAX_ROUNDS} "
+            "large-star/small-star rounds"
         )
     # fixpoint is a star forest: every non-root points at its component min
     roots = edges.select(F.col("v").alias("u"), F.col("v"))
@@ -1489,7 +1449,13 @@ def canonical_selection(groups: DataFrame, docs: DataFrame) -> DataFrame:
     )
 
 
-def _bloom_pos(gram: F.Column, i: int, m_bits: int) -> F.Column:
+# Bloom filter of bloom_decontaminate: bits in the filter, hash positions
+# per gram. The DuckDB twin hard-codes both (262144 = 1 << 18).
+_BLOOM_M_BITS = 1 << 18
+_BLOOM_K_HASHES = 4
+
+
+def _bloom_pos(gram: F.Column, i: int) -> F.Column:
     """Bit position i of a gram: 60-bit md5 int of `gram#i`, mod m. The
     DuckDB twin is ('0x' || substr(md5(g || '#i'), 1, 15))::BIGINT % m —
     bit-identical (both parse the same 15 hex chars)."""
@@ -1497,7 +1463,7 @@ def _bloom_pos(gram: F.Column, i: int, m_bits: int) -> F.Column:
         F.conv(
             F.substring(F.md5(F.concat(gram, F.lit(f"#{i}"))), 1, 15), 16, 10
         ).cast("long")
-        % m_bits
+        % _BLOOM_M_BITS
     )
 
 
@@ -1505,9 +1471,6 @@ def bloom_decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,
     n: int = 8,
-    m_bits: int = 1 << 18,
-    k_hashes: int = 4,
-    min_overlap: int = 1,
 ) -> DataFrame:
     """Bloom-filter decontamination — the constant-memory variant of
     `decontaminate` for when even the distinct benchmark n-gram SET is too
@@ -1535,7 +1498,8 @@ def bloom_decontaminate(
         .distinct()
         .select(
             F.explode(
-                F.array(*[_bloom_pos(F.col("g"), i, m_bits) for i in range(k_hashes)])
+                F.array(*[_bloom_pos(F.col("g"), i)
+                          for i in range(_BLOOM_K_HASHES)])
             ).alias("pos")
         )
         .distinct()
@@ -1546,7 +1510,8 @@ def bloom_decontaminate(
         .select(
             "doc_id", "g",
             F.explode(
-                F.array(*[_bloom_pos(F.col("g"), i, m_bits) for i in range(k_hashes)])
+                F.array(*[_bloom_pos(F.col("g"), i)
+                          for i in range(_BLOOM_K_HASHES)])
             ).alias("pos"),
         )
     )
@@ -1554,7 +1519,7 @@ def bloom_decontaminate(
         probes.join(F.broadcast(bits), "pos")
         .groupBy("doc_id", "g")
         .agg(F.count("*").alias("nbits"))
-        .where(F.col("nbits") == k_hashes)
+        .where(F.col("nbits") == _BLOOM_K_HASHES)
         .groupBy("doc_id")
         .agg(F.count("*").alias("overlap_ngrams"))
     )
@@ -1564,7 +1529,7 @@ def bloom_decontaminate(
         .select(
             "doc_id",
             F.coalesce("overlap_ngrams", F.lit(0)).alias("overlap_ngrams"),
-            (F.coalesce("overlap_ngrams", F.lit(0)) >= min_overlap).alias(
+            (F.coalesce("overlap_ngrams", F.lit(0)) >= 1).alias(
                 "contaminated"
             ),
         )

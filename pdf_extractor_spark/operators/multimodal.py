@@ -38,11 +38,11 @@ FEATURES_DDL = (
 MAGIC = b"IMG1"
 
 
-def encode_fake_image(media_id: int, width: int, height: int, channels: int = 3) -> bytes:
+def encode_fake_image(media_id: int, width: int, height: int) -> bytes:
     """Deterministic fake 'image': header + seeded byte payload."""
     rng = np.random.default_rng(media_id)
-    body = rng.integers(0, 256, size=width * height * channels, dtype=np.uint8).tobytes()
-    return MAGIC + struct.pack("<HHB", width, height, channels) + body
+    body = rng.integers(0, 256, size=width * height * 3, dtype=np.uint8).tobytes()
+    return MAGIC + struct.pack("<HHB", width, height, 3) + body
 
 
 def _decode_image(payload: bytes) -> np.ndarray:
@@ -97,13 +97,13 @@ def _decode_image(payload: bytes) -> np.ndarray:
     return arr.reshape(h, w, c)
 
 
-def extract_features(media: DataFrame, feat_dim: int = 8) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over binary media columns.
 
     Real Spark plumbing: Arrow-batched, one output row per input row, errors
     degrade to an error column (reference error contract,
     pypdf2_extractor.py:41-48). The 'feature' is a deterministic downsample
-    (per-stripe mean) standing in for a real embedding.
+    (mean of 8 stripes) standing in for a real embedding.
     """
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -117,7 +117,7 @@ def extract_features(media: DataFrame, feat_dim: int = 8) -> DataFrame:
                     arr = _decode_image(bytes(payload))
                     h, w, c = arr.shape
                     flat = arr.reshape(-1).astype(np.float64)
-                    stripes = np.array_split(flat, feat_dim)
+                    stripes = np.array_split(flat, 8)
                     feat = [float(s.mean()) for s in stripes]
                     out["media_id"].append(mid)
                     out["kind"].append(kind)
@@ -300,16 +300,15 @@ def dhash64(arr: np.ndarray) -> int:
     return v
 
 
-def fake_near_dup_image(media_id: int, width: int, height: int,
-                        channels: int = 3, k: int = 3) -> bytes:
+def fake_near_dup_image(media_id: int, width: int, height: int) -> bytes:
     """A near-duplicate of ``encode_fake_image(media_id, ...)``: the same
-    payload with k seeded body bytes shifted by +64 (mod 256) — the
+    payload with 3 seeded body bytes shifted by +64 (mod 256) — the
     'slightly re-encoded copy' shape crawl dedup hunts for. Shared by the
     q21 image arm and its oracle twin."""
-    base = bytearray(encode_fake_image(media_id, width, height, channels))
+    base = bytearray(encode_fake_image(media_id, width, height))
     rng = np.random.default_rng(media_id + 999_983)
     body = len(base) - 9
-    for p in rng.integers(0, body, size=k):
+    for p in rng.integers(0, body, size=3):
         q = 9 + int(p)
         base[q] = (base[q] + 64) % 256
     return bytes(base)
@@ -408,19 +407,20 @@ FRAMES_DDL = (
 )
 
 
-def encode_fake_video(media_id: int, n_frames: int, width: int = 8, height: int = 8,
-                      fps: int = 10) -> bytes:
-    """header + n_frames fake image frames, each seeded by (media_id, idx)."""
+def encode_fake_video(media_id: int, n_frames: int) -> bytes:
+    """header + n_frames 8x8 fake image frames at 10 fps, each seeded by
+    (media_id, idx)."""
     frames = b"".join(
-        encode_fake_image(media_id * 1000 + i, width, height) for i in range(n_frames)
+        encode_fake_image(media_id * 1000 + i, 8, 8) for i in range(n_frames)
     )
-    return VID_MAGIC + struct.pack("<HHB", n_frames, fps, 0) + frames
+    return VID_MAGIC + struct.pack("<HHB", n_frames, 10, 0) + frames
 
 
-def encode_fake_audio(media_id: int, n_samples: int, sample_rate: int = 16000) -> bytes:
+def encode_fake_audio(media_id: int, n_samples: int) -> bytes:
+    """header + n_samples seeded 16-bit PCM samples at 16 kHz."""
     rng = np.random.default_rng(media_id)
     pcm = (rng.normal(0, 3000, size=n_samples)).astype(np.int16)
-    return AUD_MAGIC + struct.pack("<IH", n_samples, sample_rate) + pcm.tobytes()
+    return AUD_MAGIC + struct.pack("<IH", n_samples, 16000) + pcm.tobytes()
 
 
 def _decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
@@ -551,16 +551,15 @@ def audio_fingerprint64(x: np.ndarray) -> int:
     return v
 
 
-def fake_near_dup_audio(media_id: int, n_samples: int,
-                        sample_rate: int = 16000, k: int = 5) -> bytes:
-    """A near-duplicate of ``encode_fake_audio``: the same PCM with k
+def fake_near_dup_audio(media_id: int, n_samples: int) -> bytes:
+    """A near-duplicate of ``encode_fake_audio``: the same PCM with 5
     seeded samples nudged by +500 — a lightly re-encoded copy whose
     envelope fingerprint stays within a few bits. Shared with the oracle
     twin."""
-    base = bytearray(encode_fake_audio(media_id, n_samples, sample_rate))
+    base = bytearray(encode_fake_audio(media_id, n_samples))
     rng = np.random.default_rng(media_id + 424_243)
     pcm = np.frombuffer(bytes(base[10:]), dtype=np.int16).copy()
-    for p in rng.integers(0, len(pcm), size=k):
+    for p in rng.integers(0, len(pcm), size=5):
         pcm[int(p)] = np.clip(int(pcm[int(p)]) + 500, -32768, 32767)
     return bytes(base[:10]) + pcm.tobytes()
 

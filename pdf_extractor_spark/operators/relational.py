@@ -76,19 +76,15 @@ def latest_per_user(events: DataFrame) -> DataFrame:
     )
 
 
-def paginated_orders(orders: DataFrame, sort_col: str = "o_totalprice",
-                     desc: bool = True, offset: int = 20, limit: int = 10) -> DataFrame:
-    """Whitelist-validated dynamic sort + offset/limit (main.py:581-684).
-    o_orderkey tie-break keeps pagination deterministic."""
-    allowed = {"o_totalprice", "o_orderdate", "o_orderkey"}
-    if sort_col not in allowed:
-        raise ValueError(f"sort column {sort_col!r} not in {sorted(allowed)}")
-    key = F.col(sort_col).desc() if desc else F.col(sort_col).asc()
+def paginated_orders(orders: DataFrame) -> DataFrame:
+    """Sorted page read (main.py:581-684): the third page of 10 orders by
+    total price, descending. o_orderkey tie-break keeps pagination
+    deterministic."""
     return (
-        orders.orderBy(key, F.col("o_orderkey").asc())
+        orders.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
         .select("o_orderkey", "o_custkey", F.round("o_totalprice", 2).alias("o_totalprice"))
-        .offset(offset)
-        .limit(limit)
+        .offset(20)
+        .limit(10)
     )
 
 
@@ -101,10 +97,11 @@ def customers_without_orders(customer: DataFrame, orders: DataFrame) -> DataFram
     )
 
 
-def customers_with_high_value_orders(customer: DataFrame, orders: DataFrame,
-                                     min_total: float = 400000.0) -> DataFrame:
-    """Existence check → left semi join (main.py:984-1002)."""
-    big = orders.where(F.col("o_totalprice") >= min_total)
+def customers_with_high_value_orders(customer: DataFrame,
+                                     orders: DataFrame) -> DataFrame:
+    """Existence check → left semi join (main.py:984-1002): customers with
+    an order of at least 400,000."""
+    big = orders.where(F.col("o_totalprice") >= 400000.0)
     return (
         customer.join(big, customer.c_custkey == big.o_custkey, "left_semi")
         .select("c_custkey", "c_name", F.round("c_acctbal", 2).alias("c_acctbal"))
@@ -175,11 +172,11 @@ def merge_upsert(base: DataFrame, updates: DataFrame, keys: list[str]) -> DataFr
     return base.join(updates, keys, "left_anti").unionByName(updates)
 
 
-def upserted_events(events: DataFrame, soft_delete_mod: int | None = 17) -> DataFrame:
+def upserted_events(events: DataFrame) -> DataFrame:
     """Deterministic upsert exercise over `events`: every event_id % 10 == 0
     gets value += 100 (update arm); the same rows shifted by +10_000_000 are
-    brand-new keys (insert arm). With soft_delete_mod set, rows with
-    event_id % mod == 3 are then tombstoned (deleted_at) and the read-side
+    brand-new keys (insert arm). Rows with event_id % 17 == 3 are then
+    tombstoned (deleted_at) and the read-side
     scan filters `deleted_at IS NULL` — the reference's soft-delete read
     discipline (main.py:609,626-631) as an oracle-gated query; the storage
     half lives in sources/table_format.SnapshotTable.soft_delete."""
@@ -188,14 +185,13 @@ def upserted_events(events: DataFrame, soft_delete_mod: int | None = 17) -> Data
     )
     ins = upd.withColumn("event_id", F.col("event_id") + 10_000_000)
     merged = merge_upsert(events, upd.unionByName(ins), ["event_id"])
-    if soft_delete_mod is not None:
-        merged = merged.withColumn(
-            "deleted_at",
-            F.when(
-                F.col("event_id") % soft_delete_mod == 3,
-                F.to_timestamp(F.lit("2024-06-01 00:00:00")),
-            ),
-        ).where(F.col("deleted_at").isNull())
+    merged = merged.withColumn(
+        "deleted_at",
+        F.when(
+            F.col("event_id") % 17 == 3,
+            F.to_timestamp(F.lit("2024-06-01 00:00:00")),
+        ),
+    ).where(F.col("deleted_at").isNull())
     return merged.select(
         "event_id", "user_id", F.round("value", 6).alias("value")
     ).orderBy("event_id")
@@ -316,9 +312,9 @@ def orders_with_latest_event(orders: DataFrame, events: DataFrame) -> DataFrame:
     ).orderBy("o_orderkey")
 
 
-def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Gap-based sessionization: a new session starts when a user's
-    inter-event gap exceeds `gap_minutes`. The classic lag → gap-flag →
+    inter-event gap exceeds 30 minutes. The classic lag → gap-flag →
     running-sum window composition; one shuffle on user_id, both windows
     share the same partitioning so the second is shuffle-free. Emits one
     row per session with bounds and totals."""
@@ -327,7 +323,7 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
         "user_id", "event_id", "ts", "value",
         F.when(
             F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-            > gap_minutes * 60,
+            > 30 * 60,
             1,
         ).otherwise(0).alias("new_session"),
     )
@@ -356,22 +352,22 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     )
 
 
-def customer_year_cohorts(orders: DataFrame, y1: int = 1995, y2: int = 1996) -> DataFrame:
+def customer_year_cohorts(orders: DataFrame) -> DataFrame:
     """Set-operation parity (UNION/INTERSECT/EXCEPT — beyond-reference §2
-    scope note): customers who ordered in both years, only the first, only
-    the second. Distinct custkey sets are narrow (one column), so the
+    scope note): customers who ordered in both 1995 and 1996, only in 1995,
+    only in 1996. Distinct custkey sets are narrow (one column), so the
     intersect/except hash shuffles stay minimal-width; the three cohorts
     union into one tagged output.
     """
     c1 = (
-        orders.where(F.year("o_orderdate") == y1).select("o_custkey").distinct()
+        orders.where(F.year("o_orderdate") == 1995).select("o_custkey").distinct()
     )
     c2 = (
-        orders.where(F.year("o_orderdate") == y2).select("o_custkey").distinct()
+        orders.where(F.year("o_orderdate") == 1996).select("o_custkey").distinct()
     )
     both = c1.intersect(c2).select("o_custkey", F.lit("both").alias("cohort"))
-    only1 = c1.subtract(c2).select("o_custkey", F.lit(f"only_{y1}").alias("cohort"))
-    only2 = c2.subtract(c1).select("o_custkey", F.lit(f"only_{y2}").alias("cohort"))
+    only1 = c1.subtract(c2).select("o_custkey", F.lit("only_1995").alias("cohort"))
+    only2 = c2.subtract(c1).select("o_custkey", F.lit("only_1996").alias("cohort"))
     return both.unionByName(only1).unionByName(only2).orderBy("o_custkey", "cohort")
 
 

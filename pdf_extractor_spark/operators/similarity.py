@@ -59,12 +59,12 @@ def brute_force_topk(embs: DataFrame, query_ids: list[int], k: int = 5) -> DataF
     )
 
 
-def hyperplane_lsh_buckets(embs: DataFrame, n_planes: int = 12, seed: int = 7,
-                           dim: int = 64) -> DataFrame:
+def hyperplane_lsh_buckets(embs: DataFrame, n_planes: int,
+                           dim: int) -> DataFrame:
     """Sign-sketch bucket per vector: bit i = (v · h_i) > 0 for deterministic
-    pseudo-random hyperplanes derived from md5(seed, plane, dim).
+    pseudo-random hyperplanes derived from md5(7, plane, dim).
 
-    Hyperplane component in [-0.5, 0.5): (md5_int(seed:plane:dim) % 1000)/1000 - 0.5,
+    Hyperplane component in [-0.5, 0.5): (md5_int(7:plane:dim) % 1000)/1000 - 0.5,
     computed once in Python (bit-identical integer ops + one division) and
     applied as ONE n×planes BLAS matmul per Arrow batch — the former
     interpreted fold evaluated the md5 plane arrays per ROW and was the
@@ -77,7 +77,7 @@ def hyperplane_lsh_buckets(embs: DataFrame, n_planes: int = 12, seed: int = 7,
     import pandas as pd
 
     H = np.array(
-        [[_md5_unit(f"{seed}:{i}:{d}") for d in range(dim)] for i in range(n_planes)],
+        [[_md5_unit(f"7:{i}:{d}") for d in range(dim)] for i in range(n_planes)],
         dtype=np.float64,
     )
     weights = (1 << np.arange(n_planes, dtype=np.int64))
@@ -97,18 +97,16 @@ def hyperplane_lsh_buckets(embs: DataFrame, n_planes: int = 12, seed: int = 7,
     return e.mapInPandas(kern, "vec_id long, v array<double>, bucket int")
 
 
-def lsh_neardup_pairs(embs: DataFrame, threshold: float = 0.9, n_planes: int = 8,
-                      seed: int = 7, dim: int | None = None) -> DataFrame:
+def lsh_neardup_pairs(embs: DataFrame, threshold: float = 0.9) -> DataFrame:
     """Candidate pairs from shared LSH bucket, verified with exact cosine.
 
     At 100 TB: shuffle on bucket (narrow — vec + 1 int), within-bucket
-    self-join, exact Arrow-kernel cosine verify. Bucket count 2^n_planes
-    tunes the candidate-set size / recall trade-off.
+    self-join, exact Arrow-kernel cosine verify. Bucket count 2^8 sets the
+    candidate-set size / recall trade-off.
     """
-    if dim is None:
-        row = embs.select(F.size("embedding")).first()
-        dim = row[0] if row is not None else 64
-    b = hyperplane_lsh_buckets(embs, n_planes, seed, dim=dim)
+    row = embs.select(F.size("embedding")).first()
+    dim = row[0] if row is not None else 64
+    b = hyperplane_lsh_buckets(embs, 8, dim)
     l = b.select("bucket", F.col("vec_id").alias("a"), F.col("v").alias("va"))
     r = b.select("bucket", F.col("vec_id").alias("b"), F.col("v").alias("vb"))
     joined = (
@@ -124,8 +122,8 @@ def lsh_neardup_pairs(embs: DataFrame, threshold: float = 0.9, n_planes: int = 8
     )
 
 
-def knn_graph_lsh(embs: DataFrame, k: int = 3, n_planes: int = 4,
-                  seed: int = 7, dim: int | None = None) -> DataFrame:
+def knn_graph_lsh(embs: DataFrame, k: int = 3,
+                  dim: int | None = None) -> DataFrame:
     """(query_id, neighbor_id, cos, rank): approximate k-nearest-neighbor
     GRAPH over the whole corpus — the neighbor structure graph-based
     dedup/clustering pipelines consume (SemDeDup neighbor pruning, kNN
@@ -138,7 +136,7 @@ def knn_graph_lsh(embs: DataFrame, k: int = 3, n_planes: int = 4,
 
     Plan at 100 TB: one narrow Arrow sketch pass, ONE shuffle on bucket
     (each vector ships once), per-bucket gram + per-row top-k inside the
-    kernel (no window shuffle at all); 2^n_planes tunes bucket size. The
+    kernel (no window shuffle at all); 2^4 planes set the bucket size. The
     md5 plane geometry is engine-portable, so the oracle recomputes the
     whole graph in SQL from plane literals."""
     import numpy as np
@@ -149,7 +147,7 @@ def knn_graph_lsh(embs: DataFrame, k: int = 3, n_planes: int = 4,
     if dim is None:
         row = embs.select(F.size("embedding")).first()
         dim = row[0] if row is not None else 64
-    b = hyperplane_lsh_buckets(embs, n_planes, seed, dim=dim)
+    b = hyperplane_lsh_buckets(embs, 4, dim)
 
     def kern(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["vec_id"].to_numpy()
@@ -197,17 +195,16 @@ def knn_graph_lsh(embs: DataFrame, k: int = 3, n_planes: int = 4,
     )
 
 
-def semdedup_pairs(embs: DataFrame, k: int | None = None, iters: int = 2,
+def semdedup_pairs(embs: DataFrame, iters: int = 2,
                    seed: int = 3, threshold: float = 0.95,
-                   cell_target: int = 75,
                    cent_store: str | None = None) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) semantic near-dup
     pairs: k-means-cluster the embeddings, then search for near-identical
     pairs ONLY within each cluster — the paper's observation is that
     semantic duplicates land in the same cluster, so the O(n²) pair search
-    collapses to O(Σ|cell|²) ≈ O(n²/k). k defaults to n/cell_target
-    (min 8), growing WITH the corpus exactly as the paper scales cluster
-    count — a fixed k would silently re-quadratize at 100×.
+    collapses to O(Σ|cell|²) ≈ O(n²/k). k is n/75 (min 8), growing WITH
+    the corpus exactly as the paper scales cluster count — a fixed k would
+    silently re-quadratize at 100×.
 
     This is the third member of the engine's candidate-generation family
     (hyperplane LSH buckets, banded minhash LSH, k-means cells), each a
@@ -218,7 +215,7 @@ def semdedup_pairs(embs: DataFrame, k: int | None = None, iters: int = 2,
     int — no pair-join that would ship every vector |cell| times); each
     cell's pairs are then one in-memory BLAS gram matrix, emitting only
     the (a, b, cos) survivors. Cell size is bounded by construction
-    (cell_target), so the per-task memory is flat as the corpus grows.
+    (75 on average), so the per-task memory is flat as the corpus grows.
     Training reuses kmeans_centroids (seeded deterministic init,
     exact-decimal updates), so the trained geometry is replicable by the
     pure-Python twin and the whole operator is value-hash oracle-gated.
@@ -229,8 +226,7 @@ def semdedup_pairs(embs: DataFrame, k: int | None = None, iters: int = 2,
     from pdf_extractor_spark.operators.dedup import _round6_np
 
     e = embs.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    if k is None:
-        k = max(8, e.count() // cell_target)
+    k = max(8, e.count() // 75)
     # cent_store: committed model store — train once per corpus version,
     # reuse across invocations (see kmeans_centroids_stored)
     if cent_store is not None:
@@ -278,7 +274,7 @@ def auto_n_cells(embs: DataFrame) -> int:
 
 def ivf_topk(embs: DataFrame, query_ids: list[int], k: int = 5,
              n_cells: int | None = 8,
-             n_probe: int = 2, seed: int = 3) -> DataFrame:
+             n_probe: int = 2) -> DataFrame:
     """IVF-style ANN: assign vectors to their nearest of n_cells seed
     centroids (deterministic pseudo-random), search only the n_probe closest
     cells per query.
@@ -303,7 +299,7 @@ def ivf_topk(embs: DataFrame, query_ids: list[int], k: int = 5,
         )
     dim = int(first["d"])  # derive from data, like the trained/LSH siblings
     cent_lists = [
-        [_md5_unit(f"ivf:{seed}:{c}:{d}") for d in range(dim)]
+        [_md5_unit(f"ivf:3:{c}:{d}") for d in range(dim)]
         for c in range(n_cells)
     ]
     return _ivf_probe_plan(e, cent_lists, query_ids, k, n_probe, dim)
@@ -353,16 +349,16 @@ def _ivf_probe_plan(e: DataFrame, cent_lists: list[list[float]],
     )
 
 
-def normalize_quantize(embs: DataFrame, bits: int = 8) -> DataFrame:
-    """L2-normalize vectors and symmetric-quantize to signed ints — the
+def normalize_quantize(embs: DataFrame) -> DataFrame:
+    """L2-normalize vectors and symmetric-quantize to signed int8 — the
     standard pre-index compression step for an embedding store (int8 cuts
     the ANN working set 4× vs float32 with ~no recall loss).
 
-    q_i = round(x_i / ||x|| * (2^(bits-1) - 1)); JVM-side fold for the norm
-    and transform for the quantization — one scan, no shuffle, exactly
+    q_i = round(x_i / ||x|| * 127); JVM-side fold for the norm and
+    transform for the quantization — one scan, no shuffle, exactly
     SQL-mirrorable for the oracle.
     """
-    scale = float((1 << (bits - 1)) - 1)
+    scale = 127.0
     v = F.col("embedding").cast("array<double>")
     nrm = F.sqrt(
         F.aggregate(F.transform(v, lambda x: x * x), F.lit(0.0), lambda s, x: s + x)
@@ -564,26 +560,22 @@ def _kmeans_centroids_twin(embedding_rows: list[tuple[int, list[float]]],
 
 
 def ivf_topk_trained(embs: DataFrame, query_ids: list[int], k: int = 5,
-                     n_cells: int | None = 8, n_probe: int = 2, seed: int = 3,
                      train_iters: int = 3,
                      cent_store: str | None = None) -> DataFrame:
-    """IVF ANN over k-means-trained centroids (vs ivf_topk's seed
-    centroids): same probe plan, better cell balance → better recall at
-    equal n_probe. Centroids are tiny and enter the plan as literals
-    (broadcast by construction). `cent_store` reuses a committed trained
-    index across invocations (kmeans_centroids_stored) — production IVF
-    trains once and serves many queries. ``n_cells=None`` applies the √n
-    rule (auto_n_cells)."""
-    if n_cells is None:
-        n_cells = auto_n_cells(embs)
+    """IVF ANN over 8 k-means-trained centroids (vs ivf_topk's seed
+    centroids), probing the 2 nearest cells: same probe plan, better cell
+    balance → better recall at equal n_probe. Centroids are tiny and enter
+    the plan as literals (broadcast by construction). `cent_store` reuses a
+    committed trained index across invocations (kmeans_centroids_stored) —
+    production IVF trains once and serves many queries."""
     if cent_store is not None:
-        cents = kmeans_centroids_stored(embs, k=n_cells, iters=train_iters,
-                                        seed=seed, store_root=cent_store)
+        cents = kmeans_centroids_stored(embs, k=8, iters=train_iters,
+                                        seed=3, store_root=cent_store)
     else:
-        cents = kmeans_centroids(embs, k=n_cells, iters=train_iters, seed=seed)
+        cents = kmeans_centroids(embs, k=8, iters=train_iters)
     e = embs.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     dim = len(cents[0])
-    return _ivf_probe_plan(e, cents, query_ids, k, n_probe, dim)
+    return _ivf_probe_plan(e, cents, query_ids, k, 2, dim)
 
 
 def embedding_covariance(embs: DataFrame) -> DataFrame:
@@ -1071,7 +1063,7 @@ def pq_adc_luts(query_rows: list[tuple[int, list[float]]],
 
 def pq_adc_topk(embs: DataFrame, query_ids: list[int], k: int = 5,
                 m_sub: int = 4, ksub: int = 16, train_iters: int = 2,
-                seed: int = 3, book_store: str | None = None) -> DataFrame:
+                book_store: str | None = None) -> DataFrame:
     """Product-quantization ANN with asymmetric distance (FAISS IndexPQ
     over L2-normalized vectors — METRIC_INNER_PRODUCT on unit vectors IS
     cosine, the faiss cosine-search discipline): train per-subspace
@@ -1098,11 +1090,11 @@ def pq_adc_topk(embs: DataFrame, query_ids: list[int], k: int = 5,
     """
     if book_store is not None:
         books = pq_codebooks_stored(embs, m_sub=m_sub, ksub=ksub,
-                                    iters=train_iters, seed=seed,
+                                    iters=train_iters, seed=3,
                                     store_root=book_store)
     else:
         books = pq_train_codebooks(embs, m_sub=m_sub, ksub=ksub,
-                                   iters=train_iters, seed=seed)
+                                   iters=train_iters)
     e = embs.select(
         "vec_id",
         _unit_expr(F.col("embedding").cast("array<double>")).alias("v"),
@@ -1243,7 +1235,7 @@ def ivfpq_probes(qrows: list[tuple[int, list[float]]],
 def ivfpq_adc_topk(embs: DataFrame, query_ids: list[int], k: int = 5,
                    n_cells: int = 8, n_probe: int = 4, m_sub: int = 4,
                    ksub: int = 16, coarse_iters: int = 2,
-                   train_iters: int = 2, seed: int = 3,
+                   train_iters: int = 2,
                    cent_store: str | None = None) -> DataFrame:
     """IVF-PQ ANN (Jégou et al. 2011 §V; FAISS IndexIVFPQ, by_residual):
     L2-normalize → coarse k-means cells (inverted lists) → product-
@@ -1273,22 +1265,20 @@ def ivfpq_adc_topk(embs: DataFrame, query_ids: list[int], k: int = 5,
     embs_n = e_n.select("vec_id", F.col("v").alias("embedding"))
     if cent_store is not None:
         cents = kmeans_centroids_stored(embs_n, k=n_cells, iters=coarse_iters,
-                                        seed=seed,
+                                        seed=3,
                                         store_root=cent_store + "_coarse")
     else:
-        cents = kmeans_centroids(embs_n, k=n_cells, iters=coarse_iters,
-                                 seed=seed)
+        cents = kmeans_centroids(embs_n, k=n_cells, iters=coarse_iters)
     res = residual_frame(e_n, cents)
     res_embs = res.select("vec_id", F.col("r").alias("embedding"))
     if cent_store is not None:
         books = pq_codebooks_stored(res_embs, m_sub=m_sub, ksub=ksub,
-                                    iters=train_iters, seed=seed,
+                                    iters=train_iters, seed=3,
                                     store_root=cent_store + "_books",
                                     normalize=False)
     else:
         books = pq_train_codebooks(res_embs, m_sub=m_sub, ksub=ksub,
-                                   iters=train_iters, seed=seed,
-                                   normalize=False)
+                                   iters=train_iters, normalize=False)
     codes = pq_assign_codes(res, books, vec_col="r").select(
         "vec_id", "cell", "codes")
     spark = e_n.sparkSession

@@ -202,10 +202,14 @@ def cm_cell_expand(df: DataFrame, key_col: str,
     return out.withColumn("pos", _cm_pos(F.col("cm_key"), F.col("row")))
 
 
-def countmin_topk(words: DataFrame, k: int = 20) -> DataFrame:
+# Heavy hitters countmin_topk keeps.
+CM_TOP_K = 20
+
+
+def countmin_topk(words: DataFrame) -> DataFrame:
     """Count-Min heavy hitters over a (word, freq) vocabulary table:
     build the d x w cell table, then score every word as
-    min_i cells[i][pos_i(word)] and keep the top-k by (estimate DESC,
+    min_i cells[i][pos_i(word)] and keep the top CM_TOP_K by (estimate DESC,
     word ASC). Returns (gram, cnt, rank) where cnt is the CM ESTIMATE
     (>= true frequency; over-counts come only from deterministic md5
     cell collisions, so the oracle reproduces them bit-exactly).
@@ -242,7 +246,7 @@ def countmin_topk(words: DataFrame, k: int = 20) -> DataFrame:
     # over the vocab-sized estimate table), THEN rank the k survivors —
     # a bare global row_number window would funnel the whole vocabulary
     # through one task (the corpus_top_ngrams pattern)
-    top = est.orderBy(F.col("est").desc(), F.col("word").asc()).limit(k)
+    top = est.orderBy(F.col("est").desc(), F.col("word").asc()).limit(CM_TOP_K)
     rank_w = Window.orderBy(F.col("est").desc(), F.col("word").asc())
     return (
         top.withColumn("rank", F.row_number().over(rank_w))
@@ -254,7 +258,7 @@ def countmin_topk(words: DataFrame, k: int = 20) -> DataFrame:
     )
 
 
-def countmin_oracle_sql(vocab_cte: str, k: int = 20) -> str:
+def countmin_oracle_sql(vocab_cte: str) -> str:
     """DuckDB fragment recomputing countmin_topk over `vocab_cte`, a CTE
     name with columns (word, freq)."""
     return f"""
@@ -279,7 +283,7 @@ def countmin_oracle_sql(vocab_cte: str, k: int = 20) -> str:
           GROUP BY wr.word
         )
         ORDER BY est DESC, word ASC
-        LIMIT {k}
+        LIMIT {CM_TOP_K}
     """
 
 
@@ -287,14 +291,14 @@ def countmin_oracle_sql(vocab_cte: str, k: int = 20) -> str:
 HIST_WIDTH = 1000.0
 
 
-def histogram_quantiles(df: DataFrame, value_col: str, group_col: str,
-                        width: float = HIST_WIDTH) -> DataFrame:
+def histogram_quantiles(df: DataFrame, value_col: str,
+                        group_col: str) -> DataFrame:
     """Single-pass histogram quantile estimates (p50/p90/p99) per group:
-    bucket counts at fixed width `width`, then the quantile is the upper
+    bucket counts at fixed width `HIST_WIDTH`, then the quantile is the upper
     edge of the first bucket whose cumulative count reaches ceil(q*n).
     Returns (group_col, h50, h90, h99) — the constant-memory companion to
     the exact sort-based percentile (state is range/width buckets per
-    group instead of every value; the error bound is `width`).
+    group instead of every value; the error bound is `HIST_WIDTH`).
 
     Determinism note: ceil(q*n) inherits IEEE double literal-times-int
     semantics (0.9 is not binary-exact), which both engines evaluate
@@ -314,7 +318,7 @@ def histogram_quantiles(df: DataFrame, value_col: str, group_col: str,
     # (Spark windows put NULLS FIRST, DuckDB NULLS LAST)
     b = df.where(F.col(value_col).isNotNull()).select(
         F.col(group_col).alias("grp"),
-        F.floor(F.col(value_col) / width).cast("long").alias("bucket"),
+        F.floor(F.col(value_col) / HIST_WIDTH).cast("long").alias("bucket"),
     )
     cells = b.groupBy("grp", "bucket").agg(F.count("*").alias("c"))
     w = Window.partitionBy("grp").orderBy("bucket").rowsBetween(
@@ -325,7 +329,7 @@ def histogram_quantiles(df: DataFrame, value_col: str, group_col: str,
     def est(q: float) -> Column:
         rank = F.ceil(F.lit(q) * F.col("n"))
         return F.min(
-            F.when(F.col("cum") >= rank, (F.col("bucket") + 1) * width)
+            F.when(F.col("cum") >= rank, (F.col("bucket") + 1) * HIST_WIDTH)
         )
 
     return (
@@ -337,8 +341,7 @@ def histogram_quantiles(df: DataFrame, value_col: str, group_col: str,
 
 
 def histogram_quantiles_sql(table_expr: str, value_sql: str,
-                            group_sql: str,
-                            width: float = HIST_WIDTH) -> str:
+                            group_sql: str) -> str:
     """DuckDB fragment recomputing histogram_quantiles exactly.
     `value_sql`/`group_sql` must be bare column names (re-selected across
     subquery levels / used as an output alias)."""
@@ -346,7 +349,8 @@ def histogram_quantiles_sql(table_expr: str, value_sql: str,
     # decimal-typed estimate would canon-differ from Spark's double
     ests = ", ".join(
         f"min(CASE WHEN cum >= ceil(CAST({q!r} AS DOUBLE) * n) "
-        f"THEN (bucket + 1) * CAST({width!r} AS DOUBLE) END) AS h{int(q * 100)}"
+        f"THEN (bucket + 1) * CAST({HIST_WIDTH!r} AS DOUBLE) END) "
+        f"AS h{int(q * 100)}"
         for q in (0.5, 0.9, 0.99)
     )
     return f"""
@@ -359,7 +363,7 @@ def histogram_quantiles_sql(table_expr: str, value_sql: str,
           FROM (SELECT grp, bucket, count(*) AS c
                 FROM (SELECT {group_sql} AS grp,
                              CAST(floor({value_sql}
-                                        / CAST({width!r} AS DOUBLE))
+                                        / CAST({HIST_WIDTH!r} AS DOUBLE))
                                   AS BIGINT) AS bucket
                       FROM {table_expr}
                       WHERE {value_sql} IS NOT NULL)

@@ -162,8 +162,8 @@ def language_agreement(docs: DataFrame) -> DataFrame:
     )
 
 
-def char_minhash_fingerprints(docs: DataFrame, k: int = 8) -> DataFrame:
-    """Winnowing-style document fingerprint: the minimum md5 over ALL k-char
+def char_minhash_fingerprints(docs: DataFrame) -> DataFrame:
+    """Winnowing-style document fingerprint: the minimum md5 over ALL 8-char
     substrings of the normalized text (a 1-fingerprint degenerate winnowing;
     kernels/textstats.rolling_hashes is the pure-Python rolling-hash twin).
 
@@ -172,6 +172,7 @@ def char_minhash_fingerprints(docs: DataFrame, k: int = 8) -> DataFrame:
     oracle. JVM-side: transform over a position sequence + array_min; one
     scan, no shuffle.
     """
+    k = 8
     norm = _norm(F.col("text"))
     npos = F.greatest(F.length(norm) - (k - 1), F.lit(1))
     grams = F.transform(
@@ -180,7 +181,7 @@ def char_minhash_fingerprints(docs: DataFrame, k: int = 8) -> DataFrame:
     return docs.select("doc_id", F.array_min(grams).alias("fp")).orderBy("doc_id")
 
 
-def split_marked_pages(df: DataFrame, content_col: str = "content") -> DataFrame:
+def split_marked_pages(df: DataFrame) -> DataFrame:
     """Explode `PAGE n:`-marked content into per-page rows (kernel twin
     kernels/pagesplit.split_pages — reference llamaparse.py:137-222 parity:
     marker regex, then \\n---\\n fallback, then whole-text page 1).
@@ -191,13 +192,13 @@ def split_marked_pages(df: DataFrame, content_col: str = "content") -> DataFrame
 
     from pdf_extractor_spark.kernels.pagesplit import split_pages
 
-    key_cols = [c for c in df.columns if c != content_col]
+    key_cols = [c for c in df.columns if c != "content"]
 
     def kernel(batches):
         for pdf in batches:
             rows = {c: [] for c in key_cols}
             pn, pt = [], []
-            for i, content in enumerate(pdf[content_col]):
+            for i, content in enumerate(pdf["content"]):
                 for num, text in split_pages(content if content is not None else ""):
                     for c in key_cols:
                         rows[c].append(pdf[c].iloc[i])
@@ -208,7 +209,7 @@ def split_marked_pages(df: DataFrame, content_col: str = "content") -> DataFrame
             yield pd.DataFrame(rows)
 
     key_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-                           if f.name != content_col)
+                           if f.name != "content")
     return df.mapInPandas(kernel, f"{key_schema}, page_number int, page_text string")
 
 
@@ -275,7 +276,6 @@ def badwords_hits(docs: DataFrame,
 
 
 def c4_style_pipeline(docs: DataFrame, min_tokens: int = 20, min_quality: float = 0.5,
-                      boiler_max_df: int = 50,
                       badword_terms: tuple[str, ...] | None = None) -> DataFrame:
     """The classic web-corpus cleaning pipeline in one composed plan:
     line-frequency boilerplate removal → quality/length gate → exact dedup
@@ -295,7 +295,7 @@ def c4_style_pipeline(docs: DataFrame, min_tokens: int = 20, min_quality: float 
     share ONE execution of the strip→gate→dedup subtree."""
     from pdf_extractor_spark.operators.dedup import line_frequency_dedup
 
-    cleaned = line_frequency_dedup(docs, max_df=boiler_max_df).withColumnRenamed(
+    cleaned = line_frequency_dedup(docs).withColumnRenamed(
         "clean_text", "text"
     )
     cleaned = cleaned.join(docs.select("doc_id", "lang"), "doc_id")
@@ -364,10 +364,10 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = 128, overlap: int = 16)
     )
 
 
-def winnowing_fingerprints(docs: DataFrame, k: int = 8, window: int = 4) -> DataFrame:
+def winnowing_fingerprints(docs: DataFrame) -> DataFrame:
     """True winnowing (Schleimer/Wilkerson/Aiken): Rabin-Karp rolling hashes
-    over k-char grams of the normalized text, then the minimum hash per
-    sliding window of `window` grams, deduplicated — the document's
+    over 8-char grams of the normalized text, then the minimum hash per
+    sliding window of 4 grams, deduplicated — the document's
     fingerprint set for plagiarism-style local matching. Arrow kernel over
     kernels/textstats.rolling_hashes (the twin the unit tests pin);
     numpy sliding-window-min. Non-SQL-expressible (rolling recurrence) →
@@ -387,7 +387,7 @@ def winnowing_fingerprints(docs: DataFrame, k: int = 8, window: int = 4) -> Data
                 # driver's canonicalizer cannot hash list cells
                 # (CORRECTNESS_r01 q48 harness crash). The helper is the
                 # single source of truth shared with the q48 literal oracle.
-                s, n = winnow_fingerprint_set(text, k=k, window=window)
+                s, n = winnow_fingerprint_set(text)
                 fps.append(s)
                 nfp.append(n)
             yield pd.DataFrame(
@@ -473,7 +473,7 @@ PII_PHONE_RE = r"\+[0-9]{1,2}-[0-9]{3}-[0-9]{4}"
 PII_IP_RE = r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b"
 
 
-def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def redact_pii(docs: DataFrame) -> DataFrame:
     """Regex PII scrubbing (training-data hygiene pass): emails → [EMAIL],
     phone numbers → [PHONE], IPv4 literals → [IP], with per-doc match counts
     taken from the original text. Pure JVM regexp_replace/regexp_extract_all
@@ -482,7 +482,7 @@ def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
     Order matters and is fixed: emails first (an email must not first lose
     its host to the IP rule), then IPs, then phones.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     clean = F.regexp_replace(t, PII_EMAIL_RE, "[EMAIL]")
     clean = F.regexp_replace(clean, PII_IP_RE, "[IP]")
     clean = F.regexp_replace(clean, PII_PHONE_RE, "[PHONE]")
@@ -602,13 +602,14 @@ def source_rollup(docs: DataFrame) -> DataFrame:
     )
 
 
-def corpus_top_ngrams(docs: DataFrame, n: int = 3, k: int = 20) -> DataFrame:
-    """Corpus-wide top-k word n-grams with multiplicity (the n-gram count
+def corpus_top_ngrams(docs: DataFrame) -> DataFrame:
+    """Corpus-wide top-20 word trigrams with multiplicity (the n-gram count
     table of a Common-Crawl-style corpus). The gram build is one JVM
     transform over a stride sequence (no Python, no shuffle); the count is
     one shuffle with map-side partial aggregation; the global top-k runs as
     TakeOrderedAndProject (per-partition heaps, no full sort). Deterministic
     order: count DESC, gram ASC."""
+    n = 3
     toks = F.split(_norm(F.col("text")), " ")
     n_grams = F.size(toks) - (n - 1)
     # guard: sequence(1, 0) would generate a DESCENDING [1, 0] in Spark
@@ -625,8 +626,15 @@ def corpus_top_ngrams(docs: DataFrame, n: int = 3, k: int = 20) -> DataFrame:
         .groupBy("gram")
         .agg(F.count("*").alias("cnt"))
         .orderBy(F.col("cnt").desc(), F.col("gram"))
-        .limit(k)
+        .limit(20)
     )
+
+
+# BPE merges learned per corpus, and the least weighted pair count a merge
+# needs; BPE_TOP_K subword tokens are reported by bpe_token_counts.
+BPE_N_MERGES = 8
+BPE_MIN_COUNT = 2
+BPE_TOP_K = 20
 
 
 def _word_freq_table(docs: DataFrame) -> DataFrame:
@@ -641,13 +649,12 @@ def _word_freq_table(docs: DataFrame) -> DataFrame:
     )
 
 
-def bpe_learn_merges(docs: DataFrame, n_merges: int = 8,
-                     min_count: int = 2,
+def bpe_learn_merges(docs: DataFrame,
                      words: DataFrame | None = None,
                      vocab_cap: int | None = None,
                      ) -> list[tuple[int, str, str, int]]:
     """Distributed BPE merge learning (Sennrich et al. 2016): greedily
-    learn `n_merges` subword merges from the corpus, each step picking the
+    learn `BPE_N_MERGES` subword merges from the corpus, each step picking the
     most frequent adjacent symbol pair (weighted by word frequency;
     deterministic tie-break count DESC, then pair ASC). Returns
     [(rank, left, right, weighted_count), ...].
@@ -662,7 +669,7 @@ def bpe_learn_merges(docs: DataFrame, n_merges: int = 8,
     decimal contract needed.
 
     At 100 TB: the word-freq aggregate is the only corpus-sized pass;
-    each of the n_merges steps touches only the vocabulary table.
+    each of the BPE_N_MERGES steps touches only the vocabulary table.
 
     `vocab_cap` (round-2 verdict item 5 — sublinear driver round-trips):
     the production path. The top-`vocab_cap` vocabulary rows by
@@ -680,6 +687,7 @@ def bpe_learn_merges(docs: DataFrame, n_merges: int = 8,
         bpe_apply_merges, bpe_learn_from_vocab,
     )
 
+    n_merges, min_count = BPE_N_MERGES, BPE_MIN_COUNT
     own_words = words is None
     if vocab_cap is not None:
         wdf = words if words is not None else _word_freq_table(docs)
@@ -727,10 +735,9 @@ def bpe_learn_merges(docs: DataFrame, n_merges: int = 8,
 
 
 def bpe_token_counts(docs: DataFrame, merges: list[tuple[str, str]],
-                     k: int = 20,
                      words: DataFrame | None = None) -> DataFrame:
     """(token, cnt): corpus subword-token counts under learned BPE merges,
-    top-k (count DESC, token ASC) — the distributed APPLICATION pass of the
+    top BPE_TOP_K (count DESC, token ASC) — the distributed APPLICATION pass of the
     learned vocabulary (what a tokenization job runs over the full corpus).
     One Arrow segmentation kernel over the vocab table, one aggregate,
     TakeOrdered top-k."""
@@ -757,12 +764,11 @@ def bpe_token_counts(docs: DataFrame, merges: list[tuple[str, str]],
         .mapInPandas(kern, "token string, freq long")
         .groupBy("token").agg(F.sum("freq").alias("cnt"))
         .orderBy(F.col("cnt").desc(), "token")
-        .limit(k)
+        .limit(BPE_TOP_K)
     )
 
 
-def _bpe_twin(texts: list[str | None], n_merges: int = 8,
-              min_count: int = 2, k: int = 20):
+def _bpe_twin(texts: list[str | None]):
     """Pure-Python twin of bpe_learn_merges + bpe_token_counts (exact
     integer/string work; shares bpe_apply_merges, bpe_learn_from_vocab and
     normalize with the Spark kernels). Returns (learned, top_tokens) where
@@ -781,13 +787,13 @@ def _bpe_twin(texts: list[str | None], n_merges: int = 8,
             if w:
                 wf[w] += 1
     # learning: the SAME shared function the Spark capped-vocab path calls
-    learned = bpe_learn_from_vocab(wf, n_merges, min_count)
+    learned = bpe_learn_from_vocab(wf, BPE_N_MERGES, BPE_MIN_COUNT)
     merges = [(a, b) for _, a, b, _ in learned]
     tc: Counter = Counter()
     for w, f in wf.items():
         for s in bpe_apply_merges(w, merges):
             tc[s] += f
-    top = sorted(tc.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
+    top = sorted(tc.items(), key=lambda kv: (-kv[1], kv[0]))[:BPE_TOP_K]
     return learned, [(t, c, i + 1) for i, (t, c) in enumerate(top)]
 
 
@@ -828,7 +834,7 @@ def bpe_vocab_and_map(docs: DataFrame, n_merges: int = 16,
 
 def bpe_encode_pack(docs: DataFrame, n_merges: int = 16,
                     min_count: int = 2, vocab_cap: int = 65536,
-                    seq_tokens: int = 128, bucket: int = 1024) -> DataFrame:
+                    seq_tokens: int = 128) -> DataFrame:
     """The end-to-end tokenization deliverable of an LLM-data pipeline:
     learn a BPE vocabulary from the corpus, ENCODE every document to token
     ids, and pack the global id stream into fixed-length training
@@ -858,7 +864,7 @@ def bpe_encode_pack(docs: DataFrame, n_merges: int = 16,
     frozen_map = dict(wmap)
 
     def kern(batches, _m=frozen_m, _map=frozen_map, _tid=tok_ids,
-             _bucket=bucket):
+             _bucket=PACK_BUCKET):
         import pandas as pd
 
         mlist = list(_m)
@@ -931,21 +937,20 @@ def _bpe_encode_map_twin(texts: list[str | None], n_merges: int = 16,
         (w, " ".join(str(i) for i in ids)) for w, ids in out.items())
 
 
-def stratified_sample(docs: DataFrame, rates: dict[str, int] | None = None,
-                      default_rate: int = 50) -> DataFrame:
+def stratified_sample(docs: DataFrame) -> DataFrame:
     """Deterministic per-stratum downsampling (the data-mixture step of a
-    training pipeline: keep X% of each language/quality stratum). Assignment
-    is by content-independent key hash — md5(doc_id) mod 100 < rate — so the
-    sample is reproducible and stable under re-runs. Narrow projection,
-    zero shuffle.
+    training pipeline: keep X% of each language stratum — all of en, a
+    quarter of zh, half of the rest). Assignment is by content-independent
+    key hash — md5(doc_id) mod 100 < rate — so the sample is reproducible
+    and stable under re-runs. Narrow projection, zero shuffle.
     """
-    rates = rates if rates is not None else {"en": 100, "zh": 25}
+    rates = {"en": 100, "zh": 25}
     bucket = F.pmod(
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("long"),
         F.lit(100),
     )
-    rate = F.lit(default_rate)
+    rate = F.lit(50)
     for lang, r in sorted(rates.items()):
         rate = F.when(F.col("lang") == lang, r).otherwise(rate)
     return docs.select("doc_id", "lang", bucket.alias("bucket"),
@@ -1087,16 +1092,14 @@ def fingerprint_suite(docs: DataFrame) -> DataFrame:
     return fp.join(cm, "doc_id").orderBy("doc_id")
 
 
-def lm_perplexity_buckets(docs: DataFrame, model_docs: DataFrame | None = None,
-                          alpha: float = 1.0,
-                          approx_terciles: bool = False) -> DataFrame:
+def lm_perplexity_buckets(docs: DataFrame) -> DataFrame:
     """CCNet-style language-model quality bucketing (Wenzek et al. 2019
     §4.3): score each document by the perplexity of a smoothed word-bigram
     LM and split each language into head/middle/tail terciles — the
     canonical corpus-quality partition used to weight training mixtures.
     CCNet scores with a Wikipedia-trained KenLM; the deterministic stand-in
-    here trains add-α bigram counts on `model_docs` (default: the corpus
-    itself, a self-scoring pass).
+    here trains add-one bigram counts on the corpus itself (a self-scoring
+    pass).
 
     Plan: model bigram/context counts are two hash aggregates on the gram
     key; document bigrams join those counts (one shuffle on gram — in
@@ -1107,24 +1110,16 @@ def lm_perplexity_buckets(docs: DataFrame, model_docs: DataFrame | None = None,
     nondeterministic — the same snap discipline as q49/q16). Perplexity
     exp(-avg_lp) snaps through decimal(18,6) for cross-engine hash
     stability. Tercile assignment is ntile(3) per language over the snapped
-    value — rank-based, so exactly SQL-mirrorable; at 100 TB you'd replace
-    the per-language global sort with approx-percentile cutpoints
-    (two-pass, broadcastable), trading exactness of the tercile boundary
-    only — that is exactly what ``approx_terciles=True`` does: one
-    `percentile_approx` aggregate per language (constant-size state per
-    partition, lang-cardinality result broadcast back), so no
-    per-language sort ever happens. Bucket boundaries then sit on VALUE
-    cutpoints instead of exact rank thirds: ties and boundary docs can
-    land one bucket over vs ntile, nothing else changes (tested:
-    value-monotone buckets, high agreement with the exact path). The
-    default stays the rank-exact path because the DuckDB oracle mirrors
-    ntile.
+    value — rank-based, so exactly SQL-mirrorable. The sort-free 100 TB
+    alternative, value cutpoints from one `percentile_approx` aggregate per
+    language (_approx_tercile_cuts / _approx_tercile_bucket), is composed
+    over this frame by training_mix_pipeline.
 
     Output: (doc_id, lang, ppl, bucket); docs with <2 tokens score ppl=1.
     """
     from pyspark.sql import Window
 
-    model = model_docs if model_docs is not None else docs
+    alpha = 1.0
 
     def bigrams(col_toks):
         return F.transform(
@@ -1132,7 +1127,7 @@ def lm_perplexity_buckets(docs: DataFrame, model_docs: DataFrame | None = None,
             lambda i: F.concat_ws(" ", F.get(col_toks, i), F.get(col_toks, i + 1)),
         )
 
-    mt = model.select(F.split(_norm(F.col("text")), " ").alias("toks"))
+    mt = docs.select(F.split(_norm(F.col("text")), " ").alias("toks"))
     mbig = mt.where(F.size("toks") >= 2).select(
         F.explode(bigrams(F.col("toks"))).alias("gram")
     )
@@ -1181,12 +1176,6 @@ def lm_perplexity_buckets(docs: DataFrame, model_docs: DataFrame | None = None,
             .alias("ppl"),
         )
     )
-    if approx_terciles:
-        # the 100 TB arm: lang-cardinality cutpoint table via one
-        # constant-memory sketch aggregate, broadcast back — no sort
-        return ppl.join(F.broadcast(_approx_tercile_cuts(ppl)), "lang") \
-            .select("doc_id", "lang", "ppl",
-                    _approx_tercile_bucket().alias("bucket"))
     w = Window.partitionBy("lang").orderBy("ppl", "doc_id")
     return ppl.select(
         "doc_id",
@@ -1215,8 +1204,7 @@ def _approx_tercile_cuts(ppl: DataFrame) -> DataFrame:
 
 def _approx_tercile_bucket():
     """Bucket expression over a frame joined with _approx_tercile_cuts —
-    ONE definition shared by lm_perplexity_buckets(approx_terciles=True)
-    and training_mix_pipeline's approx stage."""
+    training_mix_pipeline's approx stage."""
     return (
         F.when(F.col("ppl") <= F.element_at("cuts", 1), F.lit("head"))
         .when(F.col("ppl") <= F.element_at("cuts", 2), F.lit("middle"))
@@ -1246,8 +1234,7 @@ def _hashed_gram_stream(d: DataFrame, n_buckets: int, *extra: str) -> DataFrame:
     ).select(*extra, bucket.alias("bucket"))
 
 
-def dsir_weights(docs: DataFrame, target_docs: DataFrame | None = None,
-                 n_buckets: int = 1024, alpha: float = 1.0,
+def dsir_weights(docs: DataFrame,
                  gram_store: str | None = None,
                  corpus_key: str | None = None) -> DataFrame:
     """DSIR hashed n-gram importance weights (Xie et al. 2023, "Data
@@ -1259,7 +1246,7 @@ def dsir_weights(docs: DataFrame, target_docs: DataFrame | None = None,
     looks more like the target than like the average raw page.
 
     Plan: both distributions are ONE hash aggregate each over the exploded
-    gram stream, collapsed to `n_buckets` rows — so the stats tables are
+    gram stream, collapsed to 1024 hash buckets — so the stats tables are
     constant-size (1024 rows here) and BROADCAST back onto the per-doc gram
     stream regardless of corpus size; the per-doc sum is one aggregate
     keyed by doc_id. Hashing is md5-hex mod B (the same portable bucket
@@ -1267,18 +1254,19 @@ def dsir_weights(docs: DataFrame, target_docs: DataFrame | None = None,
     so the per-doc sum is exact and order-independent, and the output
     weight snaps to decimal(18,6) for cross-engine hash stability.
 
-    Default target: the corpus's `lang = 'en'` slice (self-referential
+    Target: the corpus's `lang = 'en'` slice (self-referential
     stand-in for the paper's curated target, e.g. Wikipedia+books).
     Output: (doc_id, dsir_weight); docs with no grams weigh 0.
     """
+    n_buckets, alpha = 1024, 1.0
+
     def gram_stream(d: DataFrame, *extra):
         return _hashed_gram_stream(d, n_buckets, *extra)
 
     # ONE shared corpus-wide gram stream feeds all three consumers (raw
-    # distribution, default-target distribution, per-doc scoring) — without
+    # distribution, target distribution, per-doc scoring) — without
     # sharing, the tokenize+md5 explode (the dominant cost) runs 3x; the
-    # tfidf/shingle discipline applied here. An explicit target corpus
-    # still streams separately (it is not derivable from the raw stream).
+    # tfidf/shingle discipline applied here.
     # Sharing medium (round-2 advice): `gram_store` routes the stream
     # through a SnapshotTable — the 100 TB path, where a .persist() of the
     # exploded gram stream is a multi-TB executor-cache residency that
@@ -1301,12 +1289,8 @@ def dsir_weights(docs: DataFrame, target_docs: DataFrame | None = None,
     else:
         stream = gram_stream(docs, "doc_id", "lang").persist()
     raw_b = stream.groupBy("bucket").agg(F.count("*").alias("r_b"))
-    if target_docs is not None:
-        tgt_b = gram_stream(target_docs).groupBy("bucket").agg(
-            F.count("*").alias("t_b"))
-    else:
-        tgt_b = (stream.where(F.col("lang") == "en")
-                 .groupBy("bucket").agg(F.count("*").alias("t_b")))
+    tgt_b = (stream.where(F.col("lang") == "en")
+             .groupBy("bucket").agg(F.count("*").alias("t_b")))
     raw_tot = raw_b.agg(F.sum("r_b").alias("r_tot"))
     tgt_tot = tgt_b.agg(F.sum("t_b").alias("t_tot"))
 
@@ -1503,8 +1487,14 @@ def _qcls_score(docs: DataFrame, feats: DataFrame, w: list[float],
         "doc_id", logit.alias("logit"), (logit > 0).alias("pred"))
 
 
-def quality_classifier(docs: DataFrame, n_buckets: int = 256,
-                       iters: int = 4, lr: float = 1.0,
+# Hashed gram buckets of the quality classifier's features, and its
+# AdaGrad training rounds and learning rate.
+QCLS_N_BUCKETS = 256
+QCLS_ITERS = 4
+QCLS_LR = 1.0
+
+
+def quality_classifier(docs: DataFrame,
                        weight_store: str | None = None,
                        gq: DataFrame | None = None,
                        gram_store: str | None = None,
@@ -1520,7 +1510,7 @@ def quality_classifier(docs: DataFrame, n_buckets: int = 256,
     kmeans_centroids_stored discipline): training runs once per corpus
     version and every later invocation scores with the stored B+5 weights
     (one feature pass + one broadcast join) instead of re-running
-    ``iters`` GD rounds over the corpus. Training is deterministic
+    ``QCLS_ITERS`` GD rounds over the corpus. Training is deterministic
     (exact-decimal sums, libm sigmoid), so stored == retrained
     bit-for-bit and the literal-weight oracles are unchanged.
 
@@ -1530,8 +1520,9 @@ def quality_classifier(docs: DataFrame, n_buckets: int = 256,
     gopher_quality frame so the structural features and labels reuse it
     instead of re-running the Gopher Arrow pass; ``gram_store``
     read-through-reuses the DSIR gram store's bucketed stream for the
-    tf features when its bucket count is a multiple of ``n_buckets``
+    tf features when its bucket count is a multiple of ``QCLS_N_BUCKETS``
     (md5-mod composes — see _gram_stream_from_store)."""
+    n_buckets, iters, lr = QCLS_N_BUCKETS, QCLS_ITERS, QCLS_LR
     stream = (None if gram_store is None
               else _gram_stream_from_store(docs, n_buckets, gram_store,
                                            corpus_key=corpus_key))
@@ -1539,8 +1530,7 @@ def quality_classifier(docs: DataFrame, n_buckets: int = 256,
         w = _qcls_weights_from_store(docs, n_buckets, iters, lr,
                                      weight_store, corpus_key=corpus_key)
         if w is not None:
-            return quality_classifier_scores(docs, w, n_buckets,
-                                             gq=gq, stream=stream)
+            return quality_classifier_scores(docs, w, gq=gq, stream=stream)
     feats = _qcls_labeled_features(docs, n_buckets, gq=gq,
                                    stream=stream).persist()
     w = _qcls_gd_loop(feats, n_buckets + 5, iters, lr)
@@ -1592,7 +1582,6 @@ def _qcls_weights_to_store(docs: DataFrame, n_buckets: int, iters: int,
 
 
 def quality_classifier_scores(docs: DataFrame, w: list[float],
-                              n_buckets: int = 256,
                               gq: DataFrame | None = None,
                               stream: DataFrame | None = None) -> DataFrame:
     """(doc_id, logit, pred): score every document with trained weights —
@@ -1602,15 +1591,14 @@ def quality_classifier_scores(docs: DataFrame, w: list[float],
     `gq`/`stream` share prebuilt inputs (see quality_classifier)."""
     return _qcls_score(
         docs,
-        _qcls_features(docs, n_buckets,
+        _qcls_features(docs, QCLS_N_BUCKETS,
                        gopher_quality(docs) if gq is None else gq,
                        stream=stream),
         w)
 
 
-def _quality_classifier_twin(doc_rows: list[tuple[int, str | None]],
-                             n_buckets: int = 256, iters: int = 4,
-                             lr: float = 1.0) -> list[float]:
+def _quality_classifier_twin(
+        doc_rows: list[tuple[int, str | None]]) -> list[float]:
     """Bit-exact pure-Python twin of _qcls_gd_loop's training, used to pin
     the trained weights into the DuckDB oracle as literals (the
     kmeans/winnowing twin pattern). Shares gopher_doc_stats/gopher_keep/
@@ -1628,6 +1616,7 @@ def _quality_classifier_twin(doc_rows: list[tuple[int, str | None]],
     )
     from pdf_extractor_spark.operators.multimodal import round_half_up
 
+    n_buckets, iters, lr = QCLS_N_BUCKETS, QCLS_ITERS, QCLS_LR
     q15 = Decimal("1e-15")
 
     def snap(x: float) -> Decimal:
@@ -1833,8 +1822,12 @@ def training_mix_pipeline(docs: DataFrame,
     )
 
 
-def pack_sequences(docs: DataFrame, seq_tokens: int = 128,
-                   bucket: int = 1024) -> DataFrame:
+# Documents per prefix-sum bucket of the sequence packers (doc_id div
+# PACK_BUCKET).
+PACK_BUCKET = 1024
+
+
+def pack_sequences(docs: DataFrame, seq_tokens: int = 128) -> DataFrame:
     """GPT-style sequence packing: concatenate every document's tokens in
     doc_id order and cut the stream into fixed-length training sequences of
     `seq_tokens` tokens (sequences cross document boundaries; the final
@@ -1845,7 +1838,7 @@ def pack_sequences(docs: DataFrame, seq_tokens: int = 128,
     the part a naive implementation gets wrong with a single-partition
     global window:
       1. per-doc token counts (scan-side, no shuffle);
-      2. per-bucket subtotals (bucket = doc_id div `bucket`): one narrow
+      2. per-bucket subtotals (bucket = doc_id div PACK_BUCKET): one narrow
          aggregate whose output is corpus_size/bucket rows;
       3. cumulative bucket offsets via a window over the tiny subtotal
          table (recurse the same trick one level if even that overflows a
@@ -1866,18 +1859,17 @@ def pack_sequences(docs: DataFrame, seq_tokens: int = 128,
         "doc_id",
         toks.alias("toks"),
         F.size(toks).cast("long").alias("n"),
-        F.expr(f"doc_id div {bucket}").alias("bkt"),
+        F.expr(f"doc_id div {PACK_BUCKET}").alias("bkt"),
     )
     return _pack_token_stream(t, seq_tokens)
 
 
-def shuffled_pack_sequences(docs: DataFrame, seq_tokens: int = 128,
-                            salt: str = "s1") -> DataFrame:
+def shuffled_pack_sequences(docs: DataFrame, seq_tokens: int = 128) -> DataFrame:
     """Sequence packing in DETERMINISTIC SHUFFLED corpus order — the
     training-prep step after cleaning/dedup: a model must not see the
     corpus in crawl/doc_id order (per-source runs become curriculum
     artifacts), and the shuffle must be reproducible from a seed, not a
-    ``rand()``. The global order is (md5(doc_id || salt) 32-bit prefix,
+    ``rand()``. The global order is (md5(doc_id || 's1') 32-bit prefix,
     doc_id) — a seeded pseudo-random permutation both engines compute
     identically.
 
@@ -1896,7 +1888,7 @@ def shuffled_pack_sequences(docs: DataFrame, seq_tokens: int = 128,
         .otherwise(F.split(norm, " "))
     key = F.conv(
         F.substring(
-            F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(salt))),
+            F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("s1"))),
             1, 8),
         16, 10).cast("long")
     bounded_id = F.when(
@@ -1989,10 +1981,7 @@ BM25_QUERIES: list[tuple[int, tuple[str, ...]]] = [
 
 def bm25_topk(
     docs: DataFrame,
-    queries: list[tuple[int, tuple[str, ...]]] | None = None,
     k: int = 5,
-    k1: float = 1.2,
-    b: float = 0.75,
     tf: DataFrame | None = None,
 ) -> DataFrame:
     """Okapi BM25 retrieval over the inverted (doc, term, tf) index — the
@@ -2018,8 +2007,7 @@ def bm25_topk(
     """
     from pyspark.sql import Window
 
-    if queries is None:
-        queries = BM25_QUERIES
+    queries, k1, b = BM25_QUERIES, 1.2, 0.75
     spark = docs.sparkSession
     if tf is None:
         toks = docs.select(

@@ -140,8 +140,7 @@ def base_href_expr(html_str: Column, url: Column) -> Column:
     return F.when(b == "", url).otherwise(resolve_url_expr(url, b))
 
 
-def extract_links(pages: DataFrame, url_col: str = "url",
-                  html_col: str = "html") -> DataFrame:
+def extract_links(pages: DataFrame) -> DataFrame:
     """``(url, html)`` pages → one row per ``<a href="...">`` occurrence:
     ``(url, href, link_url, nofollow)`` with ``link_url`` resolved
     against the page's effective base (``<base href>`` honored — the
@@ -152,11 +151,11 @@ def extract_links(pages: DataFrame, url_col: str = "url",
     attribute). The whole plan is narrow (regexp_extract_all → explode →
     per-tag extracts): zero shuffles, zero Python — at 10^12 pages this
     runs entirely inside the scan stage."""
-    html_str = F.decode(F.col(html_col), "utf-8")
+    html_str = F.decode(F.col("html"), "utf-8")
     tags = F.regexp_extract_all(html_str, F.lit(_A_TAG_PATTERN), 1)
     out = pages.select(
-        F.col(url_col).alias("url"),
-        base_href_expr(html_str, F.col(url_col)).alias("base"),
+        F.col("url").alias("url"),
+        base_href_expr(html_str, F.col("url")).alias("base"),
         F.explode(tags).alias("attrs"),
     )
     href = _unquote_attr(F.regexp_extract(
@@ -180,8 +179,7 @@ _ANCHOR_PATTERN = (rf'(?i)<a\s([^>]*?{_HREF_EQ}({_ATTR_VAL})[^>]*)'
                    r'>([^<]*)</a>')
 
 
-def extract_anchor_texts(pages: DataFrame, url_col: str = "url",
-                         html_col: str = "html") -> DataFrame:
+def extract_anchor_texts(pages: DataFrame) -> DataFrame:
     """``(url, html)`` pages → one row per ``<a href="...">anchor</a>``
     occurrence: ``(url, href, anchor, link_url)``. The inbound-anchor-text
     signal of classic web search (what OTHER pages call a target is a
@@ -199,7 +197,7 @@ def extract_anchor_texts(pages: DataFrame, url_col: str = "url",
     each row carries the same ``nofollow`` flag extract_links emits so
     inbound signals can honor the attribute. Narrow plan: zero shuffles,
     zero Python, runs inside the scan stage at 10^12 pages."""
-    html_str = F.decode(F.col(html_col), "utf-8")
+    html_str = F.decode(F.col("html"), "utf-8")
     pat = F.lit(_ANCHOR_PATTERN)
     zipped = F.arrays_zip(
         F.regexp_extract_all(html_str, pat, 1).alias("attrs"),
@@ -207,8 +205,8 @@ def extract_anchor_texts(pages: DataFrame, url_col: str = "url",
         F.regexp_extract_all(html_str, pat, 3).alias("anchor"),
     )
     out = pages.select(
-        F.col(url_col).alias("url"),
-        base_href_expr(html_str, F.col(url_col)).alias("base"),
+        F.col("url").alias("url"),
+        base_href_expr(html_str, F.col("url")).alias("base"),
         F.explode(zipped).alias("z"),
     ).select("url", "base", F.col("z.attrs").alias("attrs"),
              _unquote_attr(F.col("z.href")).alias("href"),
@@ -222,8 +220,7 @@ def extract_anchor_texts(pages: DataFrame, url_col: str = "url",
     )
 
 
-def inbound_host_signals(anchors: DataFrame,
-                         include_nofollow: bool = False) -> DataFrame:
+def inbound_host_signals(anchors: DataFrame) -> DataFrame:
     """Anchor rows → per-TARGET-host inbound signals: ``(host, in_degree,
     inbound_anchor_terms)``. In-degree is THE classic page/host quality
     prior (a host many others link to is worth keeping at crawl-filter
@@ -231,10 +228,10 @@ def inbound_host_signals(anchors: DataFrame,
     (one repeated anchor across thousands of links is the link-farm
     shape). One shuffle — the groupBy on target host with map-side
     partial aggregation; anchor terms dedup inside the aggregate.
-    rel=nofollow anchors are EXCLUDED by default when the input carries
-    the flag (the attribute exists precisely to keep paid/UGC links out
-    of this quality prior), mirroring host_edges."""
-    if "nofollow" in anchors.columns and not include_nofollow:
+    rel=nofollow anchors are EXCLUDED when the input carries the flag
+    (the attribute exists precisely to keep paid/UGC links out of this
+    quality prior), mirroring host_edges."""
+    if "nofollow" in anchors.columns:
         anchors = anchors.where(
             ~F.coalesce(F.col("nofollow"), F.lit(False)))
     return (
@@ -313,8 +310,7 @@ def _meta_content(html_str: Column, name_attr: str, value: str) -> Column:
     return F.when(out != "", out)
 
 
-def page_metadata(pages: DataFrame, url_col: str = "url",
-                  html_col: str = "html") -> DataFrame:
+def page_metadata(pages: DataFrame) -> DataFrame:
     """``(url, html)`` pages → one row per page with the harvested head
     metadata: ``(url, title, meta_description, og_title, og_type,
     ld_type, ld_headline, published_ts, date_source)``.
@@ -342,8 +338,8 @@ def page_metadata(pages: DataFrame, url_col: str = "url",
     this is the routing/date-filter stage of corpus curation. Narrow
     plan: per-row expressions only — zero shuffles, zero Python, runs
     inside the scan stage at 10^12 pages like extract_links."""
-    html_str = F.decode(F.col(html_col), "utf-8")
-    url = F.col(url_col)
+    html_str = F.decode(F.col("html"), "utf-8")
+    url = F.col("url")
 
     title = F.regexp_extract(html_str, _TITLE_PATTERN, 1)
     ld_body = F.regexp_extract(html_str, _LD_JSON_PATTERN, 1)
@@ -386,8 +382,7 @@ _SITEMAP_LOC = r"(?is)<loc>\s*([^<]*?)\s*</loc>"
 _SITEMAP_LASTMOD = r"(?is)<lastmod>\s*([^<]*?)\s*</lastmod>"
 
 
-def parse_sitemap(sitemaps: DataFrame, url_col: str = "url",
-                  xml_col: str = "xml") -> DataFrame:
+def parse_sitemap(sitemaps: DataFrame) -> DataFrame:
     """``(url, xml)`` sitemap documents → one row per entry:
     ``(url, loc, lastmod, is_index)`` — the crawl-frontier feed
     (sitemaps.org protocol, public spec). ``<urlset>`` entries carry
@@ -406,12 +401,12 @@ def parse_sitemap(sitemaps: DataFrame, url_col: str = "url",
     frontier refresh runs entirely inside the scan stage, like
     extract_links.
     """
-    xml = F.col(xml_col)
+    xml = F.col("xml")
 
     def entries(block_re: str, is_index: bool) -> DataFrame:
         blocks = F.regexp_extract_all(xml, F.lit(block_re), 0)
         out = sitemaps.select(
-            F.col(url_col).alias("url"), F.explode(blocks).alias("b"))
+            F.col("url").alias("url"), F.explode(blocks).alias("b"))
         loc = F.regexp_extract(F.col("b"), _SITEMAP_LOC, 1)
         lastmod = F.regexp_extract(F.col("b"), _SITEMAP_LASTMOD, 1)
         return out.select(
@@ -425,16 +420,14 @@ def parse_sitemap(sitemaps: DataFrame, url_col: str = "url",
         entries(_SITEMAP_INDEX_BLOCK, True))
 
 
-def host_edges(links: DataFrame,
-               include_nofollow: bool = False) -> DataFrame:
+def host_edges(links: DataFrame) -> DataFrame:
     """Link rows → weighted host-graph edges ``(src, dst, w)``. One shuffle
     (the (src, dst) groupBy, map-side partial). Self-loops are kept — they
     are real edges in the web graph and the fixed-point PageRank handles
     them like any other. rel=nofollow links (flagged by extract_links)
-    are EXCLUDED by default — honoring the attribute's contract that the
-    linking page vouches nothing — unless ``include_nofollow`` or the
-    input carries no flag column."""
-    if "nofollow" in links.columns and not include_nofollow:
+    are EXCLUDED when the input carries the flag — honoring the
+    attribute's contract that the linking page vouches nothing."""
+    if "nofollow" in links.columns:
         # NULL (no verdict, e.g. a unioned legacy 3-column shape) keeps
         # the edge — only an explicit nofollow drops it
         links = links.where(~F.coalesce(F.col("nofollow"), F.lit(False)))
@@ -467,9 +460,13 @@ def _graph_nodes(edges: DataFrame) -> DataFrame:
 # knob only.
 GRAPH_BROADCAST_MIN_NODES = 100_000
 
+# PageRank damping factor 0.85 as the exact fraction NUM/DEN of the
+# fixed-point recurrence (shared by the Spark operator and its SQL twin).
+PAGERANK_DAMPING_NUM = 85
+PAGERANK_DAMPING_DEN = 100
+
 
 def pagerank_fixedpoint(edges: DataFrame, iters: int = 5,
-                        damping_num: int = 85, damping_den: int = 100,
                         broadcast_ranks: bool | None = None,
                         init_ranks: DataFrame | None = None) -> DataFrame:
     """Host-level PageRank over weighted edges ``(src, dst, w)`` in exact
@@ -482,9 +479,9 @@ def pagerank_fixedpoint(edges: DataFrame, iters: int = 5,
     differs per run).
 
     Per iteration: contribution of edge (s→d) = (rank_s[s] * w) div
-    outdeg[s]; rank' = teleport + damping_num * Σ contrib div damping_den,
-    with teleport = (100-damping)·SCALE div (100·N). Truncation loses
-    ≤1e-12 mass per edge per round — far below any ranking-relevant
+    outdeg[s]; rank' = teleport + 85 * Σ contrib div 100 (damping 0.85 as
+    PAGERANK_DAMPING_NUM/DEN), with teleport = (100-85)·SCALE div (100·N).
+    Truncation loses ≤1e-12 mass per edge per round — far below any ranking-relevant
     signal. Dangling hosts (no outlinks) keep only teleport mass (the
     classic simplification; documented, matched by the twin).
 
@@ -519,7 +516,8 @@ def pagerank_fixedpoint(edges: DataFrame, iters: int = 5,
         return nodes.select(
             "host", F.lit(0).cast("long").alias("rank_scaled"),
             F.lit(0.0).alias("pagerank"))
-    teleport = (damping_den - damping_num) * PAGERANK_SCALE // (damping_den * n)
+    num, den = PAGERANK_DAMPING_NUM, PAGERANK_DAMPING_DEN
+    teleport = (den - num) * PAGERANK_SCALE // (den * n)
     if broadcast_ranks is None:
         broadcast_ranks = n >= GRAPH_BROADCAST_MIN_NODES
     outdeg = edges.groupBy("src").agg(F.sum("w").alias("od"))
@@ -549,7 +547,7 @@ def pagerank_fixedpoint(edges: DataFrame, iters: int = 5,
         ranks = nodes.join(sums, "host", "left").select(
             "host",
             (F.lit(teleport)
-             + F.expr(f"({damping_num} * coalesce(s, 0L)) div {damping_den}")
+             + F.expr(f"({num} * coalesce(s, 0L)) div {den}")
              ).cast("long").alias("rank_scaled"),
         )
     # ew stays persisted until the returned plan is materialized (the five
@@ -560,9 +558,7 @@ def pagerank_fixedpoint(edges: DataFrame, iters: int = 5,
     )
 
 
-def pagerank_unrolled_sql(edges_cte: str, iters: int = 5,
-                          damping_num: int = 85,
-                          damping_den: int = 100) -> str:
+def pagerank_unrolled_sql(edges_cte: str, iters: int = 5) -> str:
     """DuckDB SQL twin of :func:`pagerank_fixedpoint`: the same fixed-point
     integer recurrence unrolled as ``iters`` chained CTEs over an existing
     edge CTE/table ``edges_cte(src, dst, w)``. Floor division (``//``)
@@ -570,8 +566,9 @@ def pagerank_unrolled_sql(edges_cte: str, iters: int = 5,
     twin is bit-exact. Pure string building — deterministic across calls.
     Shared by the unit tests and the driver oracle (q53)."""
     s = PAGERANK_SCALE
-    tele = (f"({damping_den - damping_num} * {s}) "
-            f"// ({damping_den} * (SELECT c FROM pr_n))")
+    num, den = PAGERANK_DAMPING_NUM, PAGERANK_DAMPING_DEN
+    tele = (f"({den - num} * {s}) "
+            f"// ({den} * (SELECT c FROM pr_n))")
     parts = [
         f"pr_nodes AS (SELECT DISTINCT host FROM ("
         f"SELECT src AS host FROM {edges_cte} "
@@ -584,8 +581,8 @@ def pagerank_unrolled_sql(edges_cte: str, iters: int = 5,
     for i in range(1, iters + 1):
         parts.append(
             f"pr_r{i} AS (SELECT pr_nodes.host, "
-            f"CAST({tele} + ({damping_num} * coalesce(t.s, 0)) "
-            f"// {damping_den} AS BIGINT) AS rank_scaled "
+            f"CAST({tele} + ({num} * coalesce(t.s, 0)) "
+            f"// {den} AS BIGINT) AS rank_scaled "
             f"FROM pr_nodes LEFT JOIN ("
             f"SELECT e.dst AS host, "
             f"sum((r.rank_scaled * e.w) // o.od) AS s "
@@ -885,7 +882,7 @@ def _ascii_lower(col: Column) -> Column:
     return F.translate(col, _UC, _LC)
 
 
-def url_quality_filter(df: DataFrame, url_col: str = "url") -> DataFrame:
+def url_quality_filter(df: DataFrame) -> DataFrame:
     """Append URL-quality gate columns (url_host, url_ok, url_reason) —
     the crawl-side filter a web-scale training pipeline applies BEFORE
     fetching/extracting a page: scheme whitelist, token blocklist,
@@ -896,7 +893,7 @@ def url_quality_filter(df: DataFrame, url_col: str = "url") -> DataFrame:
     All gates are JVM string/regexp expressions (whole-stage codegen, no
     shuffle — this is a narrow map over the frontier/pages table).
     """
-    u = F.col(url_col)
+    u = F.col("url")
     # scheme chars are regex-constrained to ASCII, but host and the whole
     # URL are not — fold case ASCII-only everywhere for engine parity
     scheme = _ascii_lower(
@@ -978,9 +975,7 @@ def url_filter_sql(url_sql: str) -> str:
     )
 
 
-def robots_match(urls: DataFrame, rules: DataFrame,
-                 key_col: str = "doc_id",
-                 url_col: str = "url") -> DataFrame:
+def robots_match(urls: DataFrame, rules: DataFrame) -> DataFrame:
     """RFC 9309 robots.txt evaluation: match each URL against its host's
     allow/disallow path rules — plain prefixes AND the §2.2.3 special
     characters ('*' matches any sequence, trailing '$' anchors); the
@@ -989,7 +984,7 @@ def robots_match(urls: DataFrame, rules: DataFrame,
     host has no matching rule are allowed.
 
     `rules` is (host, prefix, allow boolean) — the parsed robots table a
-    crawler maintains per host. Returns (key_col, robots_allowed,
+    crawler maintains per host. Returns (doc_id, robots_allowed,
     robots_rule) where robots_rule is the winning prefix ('' if none).
     A URL with no path component evaluates as path '/' (RFC 9309 — a
     full-site `Disallow: /` must match `https://host`).
@@ -1003,15 +998,15 @@ def robots_match(urls: DataFrame, rules: DataFrame,
     from pyspark.sql.window import Window
 
     u = urls.select(
-        F.col(key_col),
+        F.col("doc_id"),
         _ascii_lower(F.split_part(
-            F.regexp_extract(F.col(url_col), _AUTH_RE, 1),
+            F.regexp_extract(F.col("url"), _AUTH_RE, 1),
             F.lit(":"), F.lit(1))).alias("host"),
         F.when(
-            F.regexp_extract(F.col(url_col), _AUTH_RE + r"([^?#]*)", 2)
+            F.regexp_extract(F.col("url"), _AUTH_RE + r"([^?#]*)", 2)
             == "", F.lit("/"))
         .otherwise(
-            F.regexp_extract(F.col(url_col), _AUTH_RE + r"([^?#]*)", 2))
+            F.regexp_extract(F.col("url"), _AUTH_RE + r"([^?#]*)", 2))
         .alias("path"),
     )
     # the match predicate must live INSIDE the left-join condition: a
@@ -1046,7 +1041,7 @@ def robots_match(urls: DataFrame, rules: DataFrame,
         .otherwise(F.col("path").startswith(F.col("prefix"))),
         "left",
     )
-    w = Window.partitionBy(key_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.length(F.col("prefix")).desc_nulls_last(),
         F.col("allow").desc_nulls_last(),
         F.col("prefix").asc_nulls_last(),
@@ -1055,15 +1050,14 @@ def robots_match(urls: DataFrame, rules: DataFrame,
         m.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .select(
-            F.col(key_col),
+            F.col("doc_id"),
             F.coalesce(F.col("allow"), F.lit(True)).alias("robots_allowed"),
             F.coalesce(F.col("prefix"), F.lit("")).alias("robots_rule"),
         )
     )
 
 
-def robots_match_sql(urls_cte: str, rules_cte: str,
-                     key_col: str = "doc_id") -> str:
+def robots_match_sql(urls_cte: str, rules_cte: str) -> str:
     """DuckDB fragment recomputing robots_match over CTEs `urls_cte`
     (key, url) and `rules_cte` (host, prefix, allow) — including the RFC
     9309 §2.2.3 '*'/'$' wildcard translation (same two-path shape as the
@@ -1072,17 +1066,17 @@ def robots_match_sql(urls_cte: str, rules_cte: str,
     Spark's is global by default, and backreferences are \\1 not $1)."""
     auth = "^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)"
     return f"""
-        SELECT {key_col},
+        SELECT doc_id,
                coalesce(allow, TRUE) AS robots_allowed,
                coalesce(prefix, '') AS robots_rule
         FROM (
-          SELECT u.{key_col}, r.allow, r.prefix,
+          SELECT u.doc_id, r.allow, r.prefix,
                  row_number() OVER (
-                   PARTITION BY u.{key_col}
+                   PARTITION BY u.doc_id
                    ORDER BY length(r.prefix) DESC NULLS LAST,
                             r.allow DESC NULLS LAST,
                             r.prefix ASC NULLS LAST) AS rn
-          FROM (SELECT {key_col},
+          FROM (SELECT doc_id,
                        split_part(translate(regexp_extract(url,
                                       '{auth}', 1),
                                       'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'),

@@ -111,6 +111,11 @@ class ExtractionAborted(RuntimeError):
     """Raised when the failure-rate circuit breaker opens (tasks.py:126-151)."""
 
 
+# Share of a wave's documents that may fail before the circuit breaker
+# opens and the job aborts.
+FAILURE_RATE_ABORT = 0.5
+
+
 class ExtractionJob:
     def __init__(
         self,
@@ -120,7 +125,6 @@ class ExtractionJob:
         partitions: int = 32,
         salt: int = 0,
         wave_size: int = 8,
-        failure_rate_abort: float = 0.5,
     ) -> None:
         self.spark = spark
         self.out_root = out_root
@@ -128,7 +132,6 @@ class ExtractionJob:
         self.partitions = partitions
         self.salt = salt
         self.wave_size = wave_size
-        self.failure_rate_abort = failure_rate_abort
         self.extracted = SnapshotTable(os.path.join(out_root, "extracted"))
 
     # -- checkpoint state ----------------------------------------------------
@@ -193,11 +196,11 @@ class ExtractionJob:
             total["waves"] += 1
             total["buckets"] += len(wave)
             if stats["docs"] > 0 and (
-                stats["failures"] / stats["docs"] > self.failure_rate_abort
+                stats["failures"] / stats["docs"] > FAILURE_RATE_ABORT
             ):
                 raise ExtractionAborted(
                     f"failure rate {stats['failures']}/{stats['docs']} exceeds "
-                    f"{self.failure_rate_abort} — circuit breaker open"
+                    f"{FAILURE_RATE_ABORT} — circuit breaker open"
                 )
         return total
 

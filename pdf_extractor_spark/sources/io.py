@@ -3,8 +3,9 @@
 The reference ingests payloads from S3 or a local uploads volume and
 catalogs them in Postgres (main.py:401-431); our engine's equivalents are
 schema-explicit readers/writers over the lake formats available in the
-sandbox: Parquet (canonical), ORC (columnar alternate), JSON-lines and CSV (interchange). Binary
-payloads can't live in text formats, so JSON/CSV round-trip them through
+sandbox: pages read from Parquet (canonical), ORC (columnar alternate),
+JSON-lines and CSV (interchange); both tables are written as Parquet.
+Binary payloads can't live in text formats, so JSON/CSV carry them as
 base64 — the same encoding the reference uses for vision payloads
 (openai_vision_extractor.py:134).
 
@@ -76,33 +77,14 @@ def read_pages(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFram
     raise ValueError(f"unsupported pages format: {fmt}")
 
 
-def write_pages(df: DataFrame, path: str, fmt: str = "parquet", mode: str = "overwrite") -> None:
-    """Write the pages table. Text formats encode html as base64."""
-    if fmt in ("parquet", "orc"):
-        df.select([f.name for f in PAGES_SCHEMA]).write.mode(mode).format(fmt).save(path)
-        return
-    if fmt in ("json", "csv"):
-        out = df.select(
-            "url",
-            F.date_format("warc_ts", _TS_FMT).alias("warc_ts"),
-            F.base64("html").alias("html_b64"),
-            "text",
-            "lang",
-        )
-        w = out.write.mode(mode)
-        if fmt == "json":
-            w.json(path)
-        else:
-            w.option("header", "true").option("escape", '"').csv(path)
-        return
-    raise ValueError(f"unsupported pages format: {fmt}")
+def write_pages(df: DataFrame, path: str) -> None:
+    """Write the pages table as parquet, replacing what is at ``path``."""
+    df.select([f.name for f in PAGES_SCHEMA]).write.mode("overwrite") \
+        .format("parquet").save(path)
 
 
-def read_extracted(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
+def read_extracted(spark: SparkSession, path: str) -> DataFrame:
+    """Read a parquet extracted table with its declared schema."""
     from pdf_extractor_spark.operators.extract import EXTRACTED_SCHEMA
 
-    if fmt in ("parquet", "orc"):
-        return spark.read.schema(EXTRACTED_SCHEMA).format(fmt).load(path)
-    if fmt == "json":
-        return spark.read.schema(EXTRACTED_SCHEMA).json(path)
-    raise ValueError(f"unsupported extracted format: {fmt}")
+    return spark.read.schema(EXTRACTED_SCHEMA).format("parquet").load(path)

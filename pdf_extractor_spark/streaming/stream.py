@@ -20,6 +20,10 @@ EVENTS_DDL = (
     "value double, props string"
 )
 
+# Lateness the event-time operators tolerate before a row is dropped and
+# its state expires.
+WATERMARK = "1 day"
+
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the file stream source needs a directory; select the events table via
@@ -32,12 +36,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def windowed_counts_stream(events: DataFrame, watermark: str = "1 day") -> DataFrame:
+def windowed_counts_stream(events: DataFrame) -> DataFrame:
     """Watermarked tumbling-window counts per event type — late rows beyond
     the watermark are dropped; with availableNow the result equals the batch
     twin (relational.event_type_windowed_counts)."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 day").alias("w"), F.col("event_type"))
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n", "sum_value")
@@ -77,13 +81,13 @@ def user_session_totals_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def dedup_events_stream(events: DataFrame, watermark: str = "1 day") -> DataFrame:
+def dedup_events_stream(events: DataFrame) -> DataFrame:
     """Streaming exact-dedup on event_id with watermarked state expiry —
     the streaming arm of the dedup family (operators/dedup.py): state for
     ids older than the watermark is dropped, so state size is bounded by
     the watermark horizon instead of the full stream history. Core shape of
     a continuous training-data ingest dedup at web scale."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    return events.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
 
@@ -103,13 +107,13 @@ def run_stream_to_memory(spark: SparkSession, stream_df: DataFrame, name: str,
     return spark.table(name)
 
 
-def sliding_counts_stream(events: DataFrame, watermark: str = "1 day") -> DataFrame:
+def sliding_counts_stream(events: DataFrame) -> DataFrame:
     """Watermarked SLIDING-window counts (2-day windows advancing 1 day):
     each event contributes to exactly two overlapping windows. The sliding
     variant of windowed_counts_stream — the shape used for rolling ingest
     dashboards over a continuous training-data feed."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "2 days", "1 day").alias("w"), F.col("event_type"))
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n", "sum_value")
@@ -141,14 +145,17 @@ PAGES_DDL = ", ".join(
     if c.split(" ")[0] in ("url", "warc_ts", "html"))
 
 
-def read_pages_stream(spark: SparkSession, pages_dir: str,
-                      max_files_per_trigger: int = 1) -> DataFrame:
+# Page segment files one micro-batch of the page stream reads.
+MAX_FILES_PER_TRIGGER = 1
+
+
+def read_pages_stream(spark: SparkSession, pages_dir: str) -> DataFrame:
     """File-source stream of Common-Crawl-style pages (the input_hint
     schema) — the streaming ingest shape of a crawler that lands parquet
     segments continuously."""
     return (
         spark.readStream.schema(PAGES_DDL)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(pages_dir)
     )
 
@@ -203,16 +210,14 @@ def snapshot_table_sink(table):
 
 
 def extract_stream_to_table(spark: SparkSession, pages_dir: str, table,
-                            checkpoint_dir: str,
-                            max_files_per_trigger: int = 1) -> None:
+                            checkpoint_dir: str) -> None:
     """End-to-end streaming ingestion: landed page segments → the flagship
     extraction kernel → exactly-once appends into a snapshot table. The
     streaming twin of pipeline.ExtractionJob's wave loop — the checkpoint
     plays the role of done_buckets (source progress) and the batch-id
     summary plays the role of the bucket manifest (sink idempotence).
     Drains everything available, then stops (availableNow)."""
-    sdf = extract_pages_stream(
-        read_pages_stream(spark, pages_dir, max_files_per_trigger))
+    sdf = extract_pages_stream(read_pages_stream(spark, pages_dir))
     q = (
         sdf.writeStream.foreachBatch(snapshot_table_sink(table))
         .option("checkpointLocation", checkpoint_dir)
@@ -222,15 +227,15 @@ def extract_stream_to_table(spark: SparkSession, pages_dir: str, table,
     q.awaitTermination()
 
 
-def session_window_stream(events: DataFrame, gap: str = "30 minutes",
-                          watermark: str = "1 day") -> DataFrame:
+def session_window_stream(events: DataFrame) -> DataFrame:
     """Native session windows (Spark's session_window): per-user sessions
-    that close after `gap` of inactivity — the built-in complement to the
+    that close after 30 minutes of inactivity — the built-in complement to the
     custom applyInPandasWithState operator (user_session_totals_stream) and
     the batch sessionize (q49). State is bounded by the watermark horizon."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"),
+                 F.col("user_id"))
         .agg(F.count("*").alias("n_events"),
              F.round(F.sum("value"), 4).alias("sum_value"))
         .select("user_id", F.col("w.start").alias("session_start"),
@@ -238,8 +243,7 @@ def session_window_stream(events: DataFrame, gap: str = "30 minutes",
     )
 
 
-def hll_user_registers_stream(events: DataFrame,
-                              watermark: str = "1 day") -> DataFrame:
+def hll_user_registers_stream(events: DataFrame) -> DataFrame:
     """Streaming HyperLogLog register maintenance: distinct-user
     cardinality state per (tumbling day window, event_type) as
     (window_start, event_type, idx, m_j) register rows. The streaming
@@ -257,7 +261,7 @@ def hll_user_registers_stream(events: DataFrame,
         # NULL user_id carries no element — must not mint a NULL register
         # (mirrors the batch hll_distinct filter exactly)
         events.where(F.col("user_id").isNotNull())
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", WATERMARK)
         .select("ts", "event_type", idx.alias("idx"), rank.alias("rank"))
         .groupBy(F.window("ts", "1 day").alias("w"), "event_type", "idx")
         .agg(F.max("rank").alias("m_j"))

@@ -347,7 +347,8 @@ def test_image_payload_dispatch_needs_ocr():
     assert extract_document(b"<p>BMW cars</p>")[0]["meta"].get("ok") != "false"
 
 
-def test_image_payloads_quarantined_by_pipeline(spark, tmp_path):
+def test_image_payloads_quarantined_by_pipeline(spark, tmp_path, monkeypatch):
+    from pdf_extractor_spark import pipeline
     from pdf_extractor_spark.pipeline import ExtractionJob
 
     pages = pages_df(spark, 40, seed=3)
@@ -362,8 +363,10 @@ def test_image_payloads_quarantined_by_pipeline(spark, tmp_path):
         ).otherwise(F.col("html")),
     )
     n_img = pages.where(F.crc32(F.col("url")) % 8 == 0).count()
+    # a small wave of failing images must not open the breaker
+    monkeypatch.setattr(pipeline, "FAILURE_RATE_ABORT", 0.9)
     job = ExtractionJob(spark, str(tmp_path / "imgq"), n_buckets=4,
-                        partitions=4, wave_size=4, failure_rate_abort=0.9)
+                        partitions=4, wave_size=4)
     job.run(pages)
     quar = job.read_quarantine()
     needs = quar.where(quar["error"].contains("needs_ocr")).count()

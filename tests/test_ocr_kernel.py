@@ -103,11 +103,13 @@ def test_noise_tolerance_is_classification():
 
 def test_unrecognizable_cell_degrades_to_question_mark():
     assert K.match_glyph((1 << 35) - 1) == "?"  # all ink
-    # a glyph mangled beyond max_err must not silently guess
+    # a glyph mangled beyond MAX_ERR must not silently guess
     bits = K._FONT_BITS["A"]
     for i in range(10):
         bits ^= 1 << (i * 3 % 35)
-    assert K.match_glyph(bits, max_err=2) == "?"
+    assert min(bin(bits ^ t).count("1")
+               for _, t in K._TEMPLATES) > K.MAX_ERR
+    assert K.match_glyph(bits) == "?"
 
 
 def test_font_min_hamming_distance():
@@ -141,7 +143,7 @@ def test_vectorized_grid_matches_scalar_reference():
         n_lines = (len(rows) - 2 * K.MARGIN) // K.PITCH_Y
         n_cols = (len(rows[0]) - 2 * K.MARGIN) // K.PITCH_X
         assert _ocr_lines(payload) == K._grid_chars_scalar(
-            rows, n_lines, n_cols, max_err=6)
+            rows, n_lines, n_cols)
 
 
 def test_unsupported_variants_raise():

@@ -105,7 +105,7 @@ def test_circuit_breaker_opens_on_failure_storm(spark, tmp_path):
     pages = spark.createDataFrame(
         rows, "url string, warc_ts timestamp, html binary, text string, lang string"
     )
-    job = _job(spark, tmp_path, failure_rate_abort=0.5)
+    job = _job(spark, tmp_path)
     with pytest.raises(ExtractionAborted):
         job.run(pages)
 

@@ -74,7 +74,7 @@ def vocab_df(spark):
 
 
 def test_countmin_overestimates_and_ranks(vocab_df):
-    out = sketch.countmin_topk(vocab_df, k=20).collect()
+    out = sketch.countmin_topk(vocab_df).collect()
     assert len(out) == 20
     true = {r["word"]: r["freq"] for r in vocab_df.collect()}
     for r in out:
@@ -87,12 +87,12 @@ def test_countmin_overestimates_and_ranks(vocab_df):
 
 
 def test_countmin_duckdb_parity(vocab_df):
-    sp = [tuple(r) for r in sketch.countmin_topk(vocab_df, k=20).collect()]
+    sp = [tuple(r) for r in sketch.countmin_topk(vocab_df).collect()]
     con = duckdb.connect()
     con.register("vtbl", vocab_df.toPandas())
     du = con.execute(
         "WITH v AS (SELECT word, freq FROM vtbl) "
-        + sketch.countmin_oracle_sql("v", k=20)
+        + sketch.countmin_oracle_sql("v")
     ).fetchall()
     assert sp == [tuple(r) for r in du]
 

@@ -383,7 +383,7 @@ def test_winnowing_fingerprints_match_twin_and_localize(spark):
     )
     got = {r["doc_id"]: ([int(x) for x in r["fingerprints"].split(",")]
                          if r["fingerprints"] else [])
-           for r in winnowing_fingerprints(docs, k=8, window=4).collect()}
+           for r in winnowing_fingerprints(docs).collect()}
 
     def twin(text, k=8, window=4):
         hs = rolling_hashes(normalize(text), window=k)

@@ -914,8 +914,9 @@ def test_extract_links_base_href_and_nofollow(spark):
              webtext.host_edges(webtext.extract_links(df)).collect()}
     assert ("ex.com", "spam.net") not in edges
     assert ("ex.com", "ex.com") in edges
+    # an input without the flag column keeps every edge
     edges_all = {(r["src"], r["dst"]) for r in webtext.host_edges(
-        webtext.extract_links(df), include_nofollow=True).collect()}
+        webtext.extract_links(df).drop("nofollow")).collect()}
     assert ("ex.com", "spam.net") in edges_all
 
 
@@ -942,7 +943,7 @@ def test_link_extraction_review_regressions(spark):
     inb = {r["host"] for r in webtext.inbound_host_signals(anch).collect()}
     assert "paid.net" not in inb and "other.net" in inb
     inb_all = {r["host"] for r in webtext.inbound_host_signals(
-        anch, include_nofollow=True).collect()}
+        anch.drop("nofollow")).collect()}
     assert "paid.net" in inb_all
     # NULL nofollow (legacy 3-column shape unioned in) keeps the edge
     legacy = spark.createDataFrame(
