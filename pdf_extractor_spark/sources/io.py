@@ -82,9 +82,3 @@ def write_pages(df: DataFrame, path: str) -> None:
     df.select([f.name for f in PAGES_SCHEMA]).write.mode("overwrite") \
         .format("parquet").save(path)
 
-
-def read_extracted(spark: SparkSession, path: str) -> DataFrame:
-    """Read a parquet extracted table with its declared schema."""
-    from pdf_extractor_spark.operators.extract import EXTRACTED_SCHEMA
-
-    return spark.read.schema(EXTRACTED_SCHEMA).format("parquet").load(path)

@@ -213,8 +213,9 @@ def test_kernel_drops_cached_zip_importers(spark, tmp_path):
 
         from pdf_extractor_spark.operators.extract import _extract_arrow_batches
 
-        # a fresh worker's first batch imports pandas (pa.array probes
-        # for it), which caches the importers of sys.path's archives again
+        # the kernel's first batch in a worker imports modules lazily
+        # (pyarrow.compute, the kernels' deferred imports), which caches
+        # the importers of sys.path's archives again
         list(_extract_arrow_batches(iter([batch])))
         sys.path.insert(0, entry)
         try:
@@ -278,9 +279,10 @@ def test_kernel_freeze_does_not_grow_per_task(spark):
     pyspark, pyarrow, numpy and the kernels. Leak bound of freezing on
     every task: K kernel runs in one task, each followed by a gc.collect()
     as the daemon does between tasks, grow the frozen set by at most a
-    small constant, and leave no unfrozen objects behind. A fresh worker's
-    first batch imports pandas (pa.array probes for it); what that creates
-    is frozen from the second run on."""
+    small constant, and leave no unfrozen objects behind. The first
+    run's lazy imports (pyarrow.compute, the kernels' deferred imports)
+    come after its freeze; what they create is frozen from the second run
+    on."""
     runs = 12
     batch = _kernel_batch()
 

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pytest
 
-from pdf_extractor_spark.operators.extract import run_extract
+from pdf_extractor_spark.operators.extract import EXTRACTED_SCHEMA, run_extract
 from pdf_extractor_spark.sources import io as pio
 from tests.builders import pages_df
 
@@ -57,7 +57,7 @@ def test_extracted_roundtrip(spark, pages, tmp_path):
     extracted = run_extract(pages.select("url", "warc_ts", "html"), num_partitions=4)
     path = str(tmp_path / "ext")
     extracted.write.parquet(path)
-    back = pio.read_extracted(spark, path)
+    back = spark.read.schema(EXTRACTED_SCHEMA).parquet(path)
     a = {(r["url"], r["page_number"]): (r["text"], r["spans"]) for r in extracted.collect()}
     b = {(r["url"], r["page_number"]): (r["text"], r["spans"]) for r in back.collect()}
     assert a == b
@@ -67,7 +67,7 @@ def test_partitioned_extracted_sink_prunes(spark, pages, tmp_path):
     extracted = run_extract(pages.select("url", "warc_ts", "html"), num_partitions=4)
     path = str(tmp_path / "ext_part")
     extracted.write.partitionBy("partition_id").parquet(path)
-    back = pio.read_extracted(spark, path)
+    back = spark.read.schema(EXTRACTED_SCHEMA).parquet(path)
     one = back.where("partition_id = 0")
     # partition pruning must reach the scan
     plan = one.queryExecution if hasattr(one, "queryExecution") else None

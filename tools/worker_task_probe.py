@@ -19,7 +19,10 @@ JVM starts). For every task the wrapper appends one record to a log:
   phase, whose heap that collect walked;
 * ``tracked``: tracked objects the collect after this task will walk
   (``len(gc.get_objects())``, frozen objects excluded);
-* ``frozen``: ``gc.get_freeze_count()``; ``rss_mb``: the worker's VmRSS.
+* ``frozen``: ``gc.get_freeze_count()``; ``rss_mb``: the worker's VmRSS;
+* ``pandas``: whether ``pandas`` is in the worker's ``sys.modules`` (the
+  extraction kernel never needs it; pyarrow's ``pa.array`` and
+  ``RecordBatch.from_pylist`` import it as a side effect).
 
 Phases, on seed 302's 8,000-doc crawl table (``corpus.generate_chunk``,
 the pages ``crawl_extract`` times in ``perfbench``), each run 3 times and
@@ -63,6 +66,7 @@ size (written by tools/worker_task_probe.py)."""
 import gc
 import json
 import os
+import sys
 import time
 
 from pyspark import worker as _worker
@@ -92,7 +96,8 @@ def main(infile, outfile):
         rec = {"pid": os.getpid(), "phase": phase,
                "task_ms": 1000.0 * (t1 - t0),
                "tracked": len(gc.get_objects()),
-               "frozen": gc.get_freeze_count(), "rss_mb": _rss_mb()}
+               "frozen": gc.get_freeze_count(), "rss_mb": _rss_mb(),
+               "pandas": "pandas" in sys.modules}
         if _prev is not None:
             rec["between_ms"] = 1000.0 * (t0 - _prev[0])
             rec["between_phase"] = _prev[1]
@@ -204,6 +209,7 @@ def summarize(recs: list[dict], phase: str) -> dict:
         "tracked_p50": statistics.median(r["tracked"] for r in tasks),
         "frozen_p50": statistics.median(r["frozen"] for r in tasks),
         "rss_mb_p50": statistics.median(r["rss_mb"] for r in tasks),
+        "pandas_tasks": sum(r["pandas"] for r in tasks),
     }
 
 
@@ -260,7 +266,7 @@ def main(argv=None) -> None:
               "workers": len({r["pid"] for r in recs}), "phases": {}}
     log(f"{'phase':<9} {'tasks':>5} {'task ms':>9} {'between ms':>10} "
         f"{'sum task':>9} {'sum betw.':>9} {'tracked':>8} {'frozen':>7} "
-        f"{'rss MB':>7}")
+        f"{'rss MB':>7} {'pandas':>6}")
     for phase in ("identity", "extract", "soak"):
         s = summarize(recs, phase)
         if not s:
@@ -271,7 +277,7 @@ def main(argv=None) -> None:
             f"{bw if bw is not None else float('nan'):>10.1f} "
             f"{s['task_ms_sum'] / 1e3:>8.2f}s {s['between_ms_sum'] / 1e3:>8.2f}s "
             f"{s['tracked_p50']:>8.0f} {s['frozen_p50']:>7.0f} "
-            f"{s['rss_mb_p50']:>7.1f}")
+            f"{s['rss_mb_p50']:>7.1f} {s['pandas_tasks']:>6}")
     if args.soak_tasks:
         result["soak"] = soak_summary(recs)
         for pid, s in result["soak"].items():
