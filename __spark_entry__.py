@@ -798,7 +798,7 @@ def q_line_freq_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("text"),
     )
-    lf = dedup.line_frequency_dedup(polluted, max_df=50).withColumn(
+    lf = dedup.line_frequency_dedup(polluted).withColumn(
         "method", F.lit("line_freq")
     )
     pol2 = docs.select(
@@ -2037,8 +2037,7 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = similarity.lsh_neardup_pairs(embs, threshold=0.35).withColumn(
         "method", F.lit("hyperplane_bucket"))
     sem = similarity.semdedup_pairs(
-        dup, iters=2, seed=3, threshold=0.95,
-        cent_store=_shingle_store_path(sf_dir).replace(
+        dup, cent_store=_shingle_store_path(sf_dir).replace(
             "q18_shingles", "q21_semcents")).withColumn(
         "method", F.lit("semdedup_cell"))
     docs = _t(spark, sf_dir, "documents")
@@ -2960,7 +2959,7 @@ def oracle_sql() -> dict[str, str]:
             "ORDER BY query_id, rank", "")
         _seed_sql = _ivf_topk_sql().replace("ORDER BY query_id, rank", "")
         _books = similarity._pq_codebooks_twin(_erows, m_sub=4, ksub=16,
-                                               iters=2, seed=3, dim=64)
+                                               iters=2, dim=64)
         _qids = (0, 1, 2, 3, 4)
         _qn = [(qid, similarity._unit_py(v)) for qid, v in _erows
                if qid in _qids]
@@ -2968,7 +2967,7 @@ def oracle_sql() -> dict[str, str]:
         _pq_sql = _pq_topk_sql(_books, _luts, k=5)
         _cents_ipq, _books_ipq = similarity._ivfpq_geometry_twin(
             _erows, n_cells=8, m_sub=4, ksub=16, coarse_iters=2,
-            train_iters=2, seed=3, dim=64)
+            train_iters=2, dim=64)
         _luts_ipq = similarity.pq_adc_luts(_qn, _books_ipq)
         _probes_ipq = similarity.ivfpq_probes(_qn, _cents_ipq, n_probe=4)
         _ivfpq_sql = _ivfpq_topk_sql(_cents_ipq, _books_ipq, _probes_ipq,
@@ -3088,7 +3087,7 @@ def oracle_sql() -> dict[str, str]:
             # same helper the Spark kernel calls — the oracle checks the
             # distributed plumbing (batching, schema, row alignment), and
             # the shared function guarantees zero algorithm drift
-            _s, _n = winnow_fingerprint_set(_text or "", k=8, window=4)
+            _s, _n = winnow_fingerprint_set(_text or "")
             _fp_rows.append(f"({int(_did)}, '{_s}', {_n})")
         o["q48_winnowing_fp"] = f"""
             SELECT doc_id::BIGINT AS doc_id, fingerprints, n_fp::INT AS n_fp

@@ -165,10 +165,10 @@ def rolling_hashes(text: str, window: int = 8) -> list[int]:
     return out
 
 
-def winnow_fingerprint_set(text: str, k: int = 8, window: int = 4) -> tuple[str, int]:
+def winnow_fingerprint_set(text: str) -> tuple[str, int]:
     """Winnowing fingerprint set (Schleimer/Wilkerson/Aiken) of ONE document:
-    Rabin-Karp rolling hashes over k-char grams of the normalized text, the
-    minimum per sliding window of `window` grams, deduplicated and sorted,
+    Rabin-Karp rolling hashes over 8-char grams of the normalized text, the
+    minimum per sliding window of 4 grams, deduplicated and sorted,
     returned as (comma-joined string, count).
 
     The single source of truth shared by the Spark kernel
@@ -178,14 +178,14 @@ def winnow_fingerprint_set(text: str, k: int = 8, window: int = 4) -> tuple[str,
     """
     import numpy as np
 
-    hs = rolling_hashes(text, window=k)
+    hs = rolling_hashes(text, window=8)
     if not hs:
         return "", 0
     a = np.array(hs, dtype=np.uint64)
-    if len(a) <= window:
+    if len(a) <= 4:
         mins = [a.min()]
     else:
-        mins = np.lib.stride_tricks.sliding_window_view(a, window).min(axis=1)
+        mins = np.lib.stride_tricks.sliding_window_view(a, 4).min(axis=1)
     sel = sorted({int(x) for x in mins})
     return ",".join(map(str, sel)), len(sel)
 

@@ -883,11 +883,13 @@ def embedding_neardup_pairs_lsh(
 # order-preserving reassembly puts back between kept sentences.
 _SENT_SEP = r"\. "
 _SENT_JOINER = ". "
+# a line in more than this many distinct documents is boilerplate
+LINE_MAX_DF = 50
 
 
-def line_frequency_dedup(docs: DataFrame, max_df: int = 50) -> DataFrame:
+def line_frequency_dedup(docs: DataFrame) -> DataFrame:
     """Remove sentences/paragraphs whose exact hash occurs in more than
-    `max_df` distinct documents (the CCNet/C4 boilerplate-line rule: a line
+    ``LINE_MAX_DF`` distinct documents (the CCNet/C4 boilerplate-line rule: a line
     repeated across many pages is chrome, not content).
 
     Plan: posexplode(split) → md5 per line → doc-frequency aggregate (one
@@ -901,7 +903,7 @@ def line_frequency_dedup(docs: DataFrame, max_df: int = 50) -> DataFrame:
     boiler = (
         sents.groupBy("h")
         .agg(F.countDistinct("doc_id").alias("df"))
-        .where(F.col("df") > max_df)
+        .where(F.col("df") > LINE_MAX_DF)
         .select("h")
     )
     kept = sents.join(boiler, "h", "left_anti")

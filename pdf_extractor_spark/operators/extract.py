@@ -262,6 +262,11 @@ def _settle_worker() -> None:
       directory (pyspark.zip, py4j's zip, the Spark jar, any --py-files
       zip). The dict is only a cache: PathFinder rebuilds an entry from
       ``sys.path_hooks`` the next time an import needs that archive.
+      ``worker_daemon`` moves the first three behind the installed
+      packages, but each worker still caches an importer for all three:
+      the daemon's lookup of this package walked them before they moved,
+      and an import that no earlier entry satisfies (an optional module
+      a library probes for) walks every entry of ``sys.path``.
     * Freezes the live heap (``gc.freeze``). ``pyspark.daemon`` runs a
       full ``gc.collect()`` after every task of a reused worker, and
       without the freeze it walks every tracked object of pyspark,

@@ -195,12 +195,12 @@ def knn_graph_lsh(embs: DataFrame, k: int = 3,
     )
 
 
-def semdedup_pairs(embs: DataFrame, iters: int = 2,
-                   seed: int = 3, threshold: float = 0.95,
+def semdedup_pairs(embs: DataFrame,
                    cent_store: str | None = None) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) semantic near-dup
     pairs: k-means-cluster the embeddings, then search for near-identical
-    pairs ONLY within each cluster — the paper's observation is that
+    pairs (cosine >= 0.95) ONLY within each cluster (2 training
+    iterations) — the paper's observation is that
     semantic duplicates land in the same cluster, so the O(n²) pair search
     collapses to O(Σ|cell|²) ≈ O(n²/k). k is n/75 (min 8), growing WITH
     the corpus exactly as the paper scales cluster count — a fixed k would
@@ -230,10 +230,10 @@ def semdedup_pairs(embs: DataFrame, iters: int = 2,
     # cent_store: committed model store — train once per corpus version,
     # reuse across invocations (see kmeans_centroids_stored)
     if cent_store is not None:
-        cents = kmeans_centroids_stored(embs, k=k, iters=iters, seed=seed,
+        cents = kmeans_centroids_stored(embs, k=k, iters=2,
                                         store_root=cent_store)
     else:
-        cents = kmeans_centroids(embs, k=k, iters=iters, seed=seed)
+        cents = kmeans_centroids(embs, k=k, iters=2)
     assigned = assign_cells(e, cents)
 
     def kern(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -250,7 +250,7 @@ def semdedup_pairs(embs: DataFrame, iters: int = 2,
             sims = (M @ M.T) / np.outer(Mn, Mn)
         iu, ju = np.triu_indices(len(ids), k=1)
         cos = _round6_np(sims[iu, ju])
-        keep = np.isfinite(cos) & (cos >= threshold)
+        keep = np.isfinite(cos) & (cos >= 0.95)
         return pd.DataFrame(
             {"a": ids[iu[keep]], "b": ids[ju[keep]], "cos": cos[keep]})
 
@@ -457,7 +457,7 @@ def _emb_corpus_key(e: DataFrame) -> str:
     return f"{row['c']}:{row['ck']}"
 
 
-def kmeans_centroids_stored(embs: DataFrame, k: int, iters: int, seed: int,
+def kmeans_centroids_stored(embs: DataFrame, k: int, iters: int,
                             store_root: str) -> list[list[float]]:
     """kmeans_centroids behind a committed MODEL STORE (SnapshotTable of
     (cell, dim, val) rows keyed by corpus checksum + hyperparameters) —
@@ -473,7 +473,9 @@ def kmeans_centroids_stored(embs: DataFrame, k: int, iters: int, seed: int,
     spark = embs.sparkSession
     e = embs.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     t = SnapshotTable(store_root)
-    key = {"corpus": _emb_corpus_key(e), "k": k, "iters": iters, "seed": seed}
+    # training always uses kmeans_centroids' default seed, 3; the key keeps
+    # it so committed stores stay valid
+    key = {"corpus": _emb_corpus_key(e), "k": k, "iters": iters, "seed": 3}
     m = t.current_manifest()
     if m is not None and m.get("summary", {}).get("key") == key:
         rows = t.read(spark).collect()
@@ -482,7 +484,7 @@ def kmeans_centroids_stored(embs: DataFrame, k: int, iters: int, seed: int,
         for r in rows:
             cents[r["cell"]][r["dim"]] = r["val"]
         return cents
-    cents = kmeans_centroids(embs, k=k, iters=iters, seed=seed)
+    cents = kmeans_centroids(embs, k=k, iters=iters)
     flat = [(c, d, float(v)) for c, row in enumerate(cents)
             for d, v in enumerate(row)]
     t.overwrite(spark.createDataFrame(flat, "cell int, dim int, val double"),
@@ -570,7 +572,7 @@ def ivf_topk_trained(embs: DataFrame, query_ids: list[int], k: int = 5,
     production IVF trains once and serves many queries."""
     if cent_store is not None:
         cents = kmeans_centroids_stored(embs, k=8, iters=train_iters,
-                                        seed=3, store_root=cent_store)
+                                        store_root=cent_store)
     else:
         cents = kmeans_centroids(embs, k=8, iters=train_iters)
     e = embs.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
@@ -816,13 +818,16 @@ def _pca_geometry_twin(embedding_rows: list[tuple[int, list[float]]],
 # Product quantization (PQ) — the FAISS IndexPQ / IVF-PQ compression shape
 # ---------------------------------------------------------------------------
 
-def _pq_seed_books(m_sub: int, ksub: int, dsub: int,
-                   seed: int) -> list[list[list[float]]]:
+_PQ_SEED = 3
+
+
+def _pq_seed_books(m_sub: int, ksub: int,
+                   dsub: int) -> list[list[list[float]]]:
     """Deterministic md5-derived seed codebooks, one ksub×dsub codebook per
-    subspace — the pq:{seed}:{sub}:{cell}:{dim} tag keeps the scheme
+    subspace — the pq:{_PQ_SEED}:{sub}:{cell}:{dim} tag keeps the scheme
     disjoint from the ivf:* seed-centroid namespace."""
     return [
-        [[_md5_unit(f"pq:{seed}:{m}:{c}:{d}") for d in range(dsub)]
+        [[_md5_unit(f"pq:{_PQ_SEED}:{m}:{c}:{d}") for d in range(dsub)]
          for c in range(ksub)]
         for m in range(m_sub)
     ]
@@ -900,7 +905,7 @@ def _unit_py(v: list[float]) -> list[float]:
 
 
 def pq_train_codebooks(embs: DataFrame, m_sub: int = 4, ksub: int = 16,
-                       iters: int = 2, seed: int = 3,
+                       iters: int = 2,
                        normalize: bool = True) -> list[list[list[float]]]:
     """Lloyd's k-means per subspace over the L2-NORMALIZED embedding
     column — product quantizer training (Jégou et al. 2011, "Product
@@ -924,7 +929,7 @@ def pq_train_codebooks(embs: DataFrame, m_sub: int = 4, ksub: int = 16,
     dim = len(first["v"]) if first is not None else 64
     assert dim % m_sub == 0, f"dim {dim} not divisible by m_sub {m_sub}"
     dsub = dim // m_sub
-    books = _pq_seed_books(m_sub, ksub, dsub, seed)
+    books = _pq_seed_books(m_sub, ksub, dsub)
     if first is None:
         return books
     for _ in range(iters):
@@ -955,7 +960,7 @@ def pq_train_codebooks(embs: DataFrame, m_sub: int = 4, ksub: int = 16,
 
 def _pq_codebooks_twin(embedding_rows: list[tuple[int, list[float]]],
                        m_sub: int = 4, ksub: int = 16, iters: int = 2,
-                       seed: int = 3, dim: int = 64,
+                       dim: int = 64,
                        normalize: bool = True) -> list[list[list[float]]]:
     """Bit-exact pure-Python twin of pq_train_codebooks (the
     _kmeans_centroids_twin contract transposed to per-subspace L2):
@@ -967,7 +972,7 @@ def _pq_codebooks_twin(embedding_rows: list[tuple[int, list[float]]],
 
     q15 = Decimal("1e-15")
     dsub = dim // m_sub
-    books = _pq_seed_books(m_sub, ksub, dsub, seed)
+    books = _pq_seed_books(m_sub, ksub, dsub)
     if not embedding_rows:
         return books
     if normalize:
@@ -999,7 +1004,7 @@ def _pq_codebooks_twin(embedding_rows: list[tuple[int, list[float]]],
 
 
 def pq_codebooks_stored(embs: DataFrame, m_sub: int, ksub: int, iters: int,
-                        seed: int, store_root: str,
+                        store_root: str,
                         normalize: bool = True) -> list[list[list[float]]]:
     """pq_train_codebooks behind a committed model store (rows
     (sub, cell, dim, val) keyed by corpus checksum + hyperparameters) —
@@ -1012,7 +1017,7 @@ def pq_codebooks_stored(embs: DataFrame, m_sub: int, ksub: int, iters: int,
     e = embs.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     t = SnapshotTable(store_root)
     key = {"corpus": _emb_corpus_key(e), "m_sub": m_sub, "ksub": ksub,
-           "iters": iters, "seed": seed, "normalize": normalize}
+           "iters": iters, "seed": _PQ_SEED, "normalize": normalize}
     m = t.current_manifest()
     if m is not None and m.get("summary", {}).get("key") == key:
         rows = t.read(spark).collect()
@@ -1024,7 +1029,7 @@ def pq_codebooks_stored(embs: DataFrame, m_sub: int, ksub: int, iters: int,
             books[r["sub"]][r["cell"]][r["dim"]] = r["val"]
         return books
     books = pq_train_codebooks(embs, m_sub=m_sub, ksub=ksub, iters=iters,
-                               seed=seed, normalize=normalize)
+                               normalize=normalize)
     flat = [(mm, c, d, float(x)) for mm, cb in enumerate(books)
             for c, cw in enumerate(cb) for d, x in enumerate(cw)]
     t.overwrite(
@@ -1090,8 +1095,7 @@ def pq_adc_topk(embs: DataFrame, query_ids: list[int], k: int = 5,
     """
     if book_store is not None:
         books = pq_codebooks_stored(embs, m_sub=m_sub, ksub=ksub,
-                                    iters=train_iters, seed=3,
-                                    store_root=book_store)
+                                    iters=train_iters, store_root=book_store)
     else:
         books = pq_train_codebooks(embs, m_sub=m_sub, ksub=ksub,
                                    iters=train_iters)
@@ -1265,7 +1269,6 @@ def ivfpq_adc_topk(embs: DataFrame, query_ids: list[int], k: int = 5,
     embs_n = e_n.select("vec_id", F.col("v").alias("embedding"))
     if cent_store is not None:
         cents = kmeans_centroids_stored(embs_n, k=n_cells, iters=coarse_iters,
-                                        seed=3,
                                         store_root=cent_store + "_coarse")
     else:
         cents = kmeans_centroids(embs_n, k=n_cells, iters=coarse_iters)
@@ -1273,7 +1276,7 @@ def ivfpq_adc_topk(embs: DataFrame, query_ids: list[int], k: int = 5,
     res_embs = res.select("vec_id", F.col("r").alias("embedding"))
     if cent_store is not None:
         books = pq_codebooks_stored(res_embs, m_sub=m_sub, ksub=ksub,
-                                    iters=train_iters, seed=3,
+                                    iters=train_iters,
                                     store_root=cent_store + "_books",
                                     normalize=False)
     else:
@@ -1338,7 +1341,7 @@ def ivfpq_adc_topk(embs: DataFrame, query_ids: list[int], k: int = 5,
 def _ivfpq_geometry_twin(embedding_rows: list[tuple[int, list[float]]],
                          n_cells: int = 8, m_sub: int = 4, ksub: int = 16,
                          coarse_iters: int = 2, train_iters: int = 2,
-                         seed: int = 3, dim: int = 64):
+                         dim: int = 64):
     """Bit-exact pure-Python twin of ivfpq_adc_topk's trained geometry:
     returns (cents, books) where cents come from _kmeans_centroids_twin
     over the normalized rows and books from _pq_codebooks_twin over the
@@ -1347,12 +1350,12 @@ def _ivfpq_geometry_twin(embedding_rows: list[tuple[int, list[float]]],
     norm_rows = [(vid, _unit_py([float(x) for x in v]))
                  for vid, v in embedding_rows]
     cents = _kmeans_centroids_twin(norm_rows, k=n_cells, iters=coarse_iters,
-                                   seed=seed, dim=dim)
+                                   dim=dim)
     res_rows = []
     for vid, v in norm_rows:
         cell = _assign_cell_py(v, cents)
         res_rows.append((vid, [x - y for x, y in zip(v, cents[cell])]))
     books = _pq_codebooks_twin(res_rows, m_sub=m_sub, ksub=ksub,
-                               iters=train_iters, seed=seed, dim=dim,
+                               iters=train_iters, dim=dim,
                                normalize=False)
     return cents, books

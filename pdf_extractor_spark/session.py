@@ -9,14 +9,41 @@ vectorization row): each engine→Python batch closes as soon as it holds
 exceeds 32 MB by at most its last row. Spark measures each batch's real
 bytes as it fills, so the cap holds on every path — ``run_extract``,
 ``ExtractionJob``, the streaming pass — whatever the payload sizes.
+
+It also selects the Python worker daemon's entry module,
+``worker_daemon``, which starts ``pyspark.daemon`` from the installed
+pyspark's cached bytecode rather than from ``pyspark.zip``'s sources
+(each new SparkContext starts a new daemon; ~1 s less per start). The
+daemon is started from the JVM's working directory and ``PYTHONPATH``,
+so the module is selected only where it can be imported at that moment:
+when this process launches the JVM, with a ``local`` master, and the
+package is in this process's working directory or on its ``PYTHONPATH``.
+Under ``spark-submit --py-files`` the package reaches the workers only
+at task time, after the daemon started, so the daemon stays Spark's own.
 """
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
+DAEMON_MODULE = "pdf_extractor_spark.worker_daemon"
+
+
+def _own_daemon(master: str) -> bool:
+    """Whether the workers can start their daemon from ``DAEMON_MODULE``:
+    this process launches the JVM (under spark-submit it did not, and
+    ``--py-files`` ships the package only at task time), the master is
+    ``local``, and the package is importable from this process's working
+    directory or ``PYTHONPATH``, which the JVM and its daemon inherit."""
+    if ("PYSPARK_GATEWAY_PORT" in os.environ
+            or not re.fullmatch(r"local(\[.*\])?", master)):
+        return False
+    module = DAEMON_MODULE.replace(".", os.sep) + ".py"
+    roots = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    return any(os.path.isfile(os.path.join(root, module)) for root in roots)
 
 
 def get_spark(
@@ -61,4 +88,6 @@ def get_spark(
         builder = builder.master(f"local[{cores}]").config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+    if _own_daemon(master_env or "local"):
+        builder = builder.config("spark.python.daemon.module", DAEMON_MODULE)
     return builder.getOrCreate()

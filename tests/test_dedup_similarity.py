@@ -226,7 +226,7 @@ def test_semdedup_pairs_recovers_near_identical_dups(spark):
     ]
     embs = spark.createDataFrame(rows, EMB_DDL)
     got = {(r["a"], r["b"]): r["cos"]
-           for r in similarity.semdedup_pairs(embs, iters=2, threshold=0.95).collect()}
+           for r in similarity.semdedup_pairs(embs).collect()}
     for i in range(0, 40, 5):
         assert (i, i + 1000) in got, f"missed injected dup pair ({i}, {i + 1000})"
     exact = {(r["a"], r["b"]): r["cos"]
@@ -236,7 +236,8 @@ def test_semdedup_pairs_recovers_near_identical_dups(spark):
     assert all(cos >= 0.95 for cos in got.values())
 
 
-def test_line_frequency_dedup_strips_only_boilerplate(spark):
+def test_line_frequency_dedup_strips_only_boilerplate(spark, monkeypatch):
+    monkeypatch.setattr(dedup, "LINE_MAX_DF", 2)
     docs = spark.createDataFrame(
         [
             (1, "unique alpha. Buy now. unique beta"),
@@ -247,7 +248,7 @@ def test_line_frequency_dedup_strips_only_boilerplate(spark):
         DOCS_DDL,
     )
     out = {r["doc_id"]: r["clean_text"]
-           for r in dedup.line_frequency_dedup(docs, max_df=2).collect()}
+           for r in dedup.line_frequency_dedup(docs).collect()}
     assert out == {
         1: "unique alpha. unique beta",
         2: "other gamma. other delta",
@@ -783,9 +784,9 @@ def test_kmeans_centroid_store_matches_fresh_and_invalidates(spark, tmp_path):
     embs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     root = str(tmp_path / "cents")
     fresh = similarity.kmeans_centroids(embs, k=4, iters=2, seed=3)
-    stored = similarity.kmeans_centroids_stored(embs, k=4, iters=2, seed=3,
+    stored = similarity.kmeans_centroids_stored(embs, k=4, iters=2,
                                                 store_root=root)
-    again = similarity.kmeans_centroids_stored(embs, k=4, iters=2, seed=3,
+    again = similarity.kmeans_centroids_stored(embs, k=4, iters=2,
                                                store_root=root)
     assert stored == fresh == again
     # id-rotation with identical vector multiset must retrain (binding key)
@@ -795,7 +796,7 @@ def test_kmeans_centroid_store_matches_fresh_and_invalidates(spark, tmp_path):
     from pdf_extractor_spark.sources.table_format import SnapshotTable
 
     before = SnapshotTable(root).current_manifest()["snapshot_id"]
-    similarity.kmeans_centroids_stored(rot, k=4, iters=2, seed=3,
+    similarity.kmeans_centroids_stored(rot, k=4, iters=2,
                                        store_root=root)
     after = SnapshotTable(root).current_manifest()["snapshot_id"]
     assert after != before  # recommitted, not served stale
@@ -926,9 +927,9 @@ def test_pq_codebooks_twin_bit_parity_random_matrices(spark):
         embs = spark.createDataFrame(rows,
                                      "vec_id long, embedding array<double>")
         got = similarity.pq_train_codebooks(embs, m_sub=m_sub, ksub=ksub,
-                                            iters=3, seed=5)
+                                            iters=3)
         want = similarity._pq_codebooks_twin(rows, m_sub=m_sub, ksub=ksub,
-                                             iters=3, seed=5, dim=d)
+                                             iters=3, dim=d)
         assert got == want, seed
 
 
@@ -1017,17 +1018,17 @@ def test_pq_codebook_store_matches_fresh_and_invalidates(spark, tmp_path):
             for i in range(40)]
     embs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     root = str(tmp_path / "pqbooks")
-    fresh = similarity.pq_train_codebooks(embs, m_sub=2, ksub=4, iters=2, seed=3)
+    fresh = similarity.pq_train_codebooks(embs, m_sub=2, ksub=4, iters=2)
     stored = similarity.pq_codebooks_stored(embs, m_sub=2, ksub=4, iters=2,
-                                            seed=3, store_root=root)
+                                            store_root=root)
     again = similarity.pq_codebooks_stored(embs, m_sub=2, ksub=4, iters=2,
-                                           seed=3, store_root=root)
+                                           store_root=root)
     assert stored == fresh == again
     rot = spark.createDataFrame(
         [((i + 1) % 40, v) for i, v in rows],
         "vec_id long, embedding array<double>")
     before = SnapshotTable(root).current_manifest()["snapshot_id"]
-    similarity.pq_codebooks_stored(rot, m_sub=2, ksub=4, iters=2, seed=3,
+    similarity.pq_codebooks_stored(rot, m_sub=2, ksub=4, iters=2,
                                    store_root=root)
     after = SnapshotTable(root).current_manifest()["snapshot_id"]
     assert after != before
@@ -1061,17 +1062,17 @@ def test_ivfpq_geometry_twin_bit_parity(spark):
             for i in range(nclust * 4)]
     embs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cents_t, books_t = similarity._ivfpq_geometry_twin(
-        rows, n_cells=8, m_sub=4, ksub=16, seed=5, dim=32)
+        rows, n_cells=8, m_sub=4, ksub=16, dim=32)
     e_n = embs.select(
         "vec_id",
         similarity._unit_expr(F.col("embedding").cast("array<double>")).alias("v"))
     cents_d = similarity.kmeans_centroids(
         e_n.select("vec_id", F.col("v").alias("embedding")),
-        k=8, iters=2, seed=5)
+        k=8, iters=2)
     books_d = similarity.pq_train_codebooks(
         similarity.residual_frame(e_n, cents_d)
         .select("vec_id", F.col("r").alias("embedding")),
-        m_sub=4, ksub=16, iters=2, seed=5, normalize=False)
+        m_sub=4, ksub=16, iters=2, normalize=False)
     assert cents_d == cents_t
     assert books_d == books_t
 

@@ -20,9 +20,14 @@ JVM starts). For every task the wrapper appends one record to a log:
 * ``tracked``: tracked objects the collect after this task will walk
   (``len(gc.get_objects())``, frozen objects excluded);
 * ``frozen``: ``gc.get_freeze_count()``; ``rss_mb``: the worker's VmRSS;
+  ``daemon_rss_mb``: the VmRSS of its parent, the ``pyspark.daemon``
+  that forked it;
 * ``pandas``: whether ``pandas`` is in the worker's ``sys.modules`` (the
   extraction kernel never needs it; pyarrow's ``pa.array`` and
-  ``RecordBatch.from_pylist`` import it as a side effect).
+  ``RecordBatch.from_pylist`` import it as a side effect);
+* ``pyspark``: where the worker's ``pyspark`` came from: ``archive``
+  (Spark's ``pyspark.zip``, compiled from source by the daemon) or
+  ``installed`` (see ``pdf_extractor_spark/worker_daemon.py``).
 
 Phases, on seed 302's 8,000-doc crawl table (``corpus.generate_chunk``,
 the pages ``crawl_extract`` times in ``perfbench``), each run 3 times and
@@ -34,7 +39,13 @@ sunk to ``noop``, after one untimed warm-up extraction pass:
 * ``soak`` (``--soak-tasks N``): ``run_extract`` over the first 1024
   docs in 64 partitions until N tasks have run; reports each worker's
   RSS and frozen-object count over the first and the last tenth of its
-  tasks.
+  tasks;
+* ``spawn``: 3 times, a new SparkContext in the running JVM (so a new
+  daemon, as in each ``perfbench`` set-up), then one tiny Python job of
+  4 tasks twice. The first job minus the second is the worker-start
+  layer: daemon start, its imports and the first fork of each worker.
+  ``perfbench``'s ``python.worker_start_s`` does not see it: it sums the
+  timed passes, whose workers are already running.
 
 Human-readable lines first; the last line is one JSON object.
 """
@@ -47,6 +58,7 @@ import shutil
 import statistics
 import sys
 import tempfile
+import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -59,6 +71,7 @@ PARTITIONS = 2 * CORES
 SALT = 1
 SOAK_DOCS = 1024
 SOAK_PARTITIONS = 64
+SPAWN_ROUNDS = 3
 WRAPPER = "pyspark_task_probe"
 
 _WRAPPER_SRC = '''"""Wrapper of pyspark.worker.main that logs per-task CPU and heap
@@ -69,6 +82,7 @@ import os
 import sys
 import time
 
+import pyspark
 from pyspark import worker as _worker
 
 _LOG = os.environ["WORKER_TASK_PROBE_LOG"]
@@ -76,8 +90,11 @@ _PHASE = os.environ["WORKER_TASK_PROBE_PHASE"]
 _prev = None  # (process CPU at the end of the last task, its phase)
 
 
-def _rss_mb():
-    with open("/proc/self/status") as fh:
+_ORIGIN = "installed" if os.path.isfile(pyspark.__file__) else "archive"
+
+
+def _rss_mb(pid="self"):
+    with open(f"/proc/{pid}/status") as fh:
         for line in fh:
             if line.startswith("VmRSS:"):
                 return int(line.split()[1]) / 1024.0
@@ -97,7 +114,8 @@ def main(infile, outfile):
                "task_ms": 1000.0 * (t1 - t0),
                "tracked": len(gc.get_objects()),
                "frozen": gc.get_freeze_count(), "rss_mb": _rss_mb(),
-               "pandas": "pandas" in sys.modules}
+               "daemon_rss_mb": _rss_mb(os.getppid()),
+               "pandas": "pandas" in sys.modules, "pyspark": _ORIGIN}
         if _prev is not None:
             rec["between_ms"] = 1000.0 * (t0 - _prev[0])
             rec["between_phase"] = _prev[1]
@@ -118,6 +136,15 @@ def set_phase(tmp: str, phase: str) -> None:
         fh.write(phase)
 
 
+def new_session():
+    from pdf_extractor_spark.session import get_spark
+
+    spark = get_spark(app_name="worker-task-probe", cores=CORES,
+                      shuffle_partitions=PARTITIONS)
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
 def start(tmp: str, log_path: str):
     """Write the wrapper and start the session; must run before any JVM."""
     with open(os.path.join(tmp, WRAPPER + ".py"), "w") as fh:
@@ -133,12 +160,7 @@ def start(tmp: str, log_path: str):
             f"--conf spark.python.worker.module={WRAPPER} pyspark-shell"),
     })
     os.environ.pop("SPARK_GRAFT_MASTER", None)
-    from pdf_extractor_spark.session import get_spark
-
-    spark = get_spark(app_name="worker-task-probe", cores=CORES,
-                      shuffle_partitions=PARTITIONS)
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
+    return new_session()
 
 
 def write_table(spark, path: str, docs: int, seed: int) -> None:
@@ -189,6 +211,23 @@ def run_phase(tmp: str, phase: str, df, passes: int) -> None:
         df.write.format("noop").mode("overwrite").save()
 
 
+def spawn_phase(tmp: str, spark):
+    """-> (the last session, first minus second tiny-job seconds per
+    fresh SparkContext)."""
+    set_phase(tmp, "spawn")
+    deltas = []
+    for _ in range(SPAWN_ROUNDS):
+        spark.stop()
+        spark = new_session()
+        times = []
+        for _ in range(2):
+            t0 = time.perf_counter()
+            spark.sparkContext.parallelize(range(CORES), CORES).count()
+            times.append(time.perf_counter() - t0)
+        deltas.append(times[0] - times[1])
+    return spark, deltas
+
+
 def read_log(log_path: str) -> list[dict]:
     with open(log_path) as fh:
         return [json.loads(line) for line in fh]
@@ -209,7 +248,10 @@ def summarize(recs: list[dict], phase: str) -> dict:
         "tracked_p50": statistics.median(r["tracked"] for r in tasks),
         "frozen_p50": statistics.median(r["frozen"] for r in tasks),
         "rss_mb_p50": statistics.median(r["rss_mb"] for r in tasks),
+        "daemon_rss_mb_p50": statistics.median(r["daemon_rss_mb"]
+                                               for r in tasks),
         "pandas_tasks": sum(r["pandas"] for r in tasks),
+        "archive_tasks": sum(r["pyspark"] == "archive" for r in tasks),
     }
 
 
@@ -257,6 +299,7 @@ def main(argv=None) -> None:
         # the collect after each phase's last task is logged at the next
         # task of that worker: one more tiny job reaches every worker
         run_phase(tmp, "tail", extract_plan(spark, table, 64), 2)
+        spark, spawn = spawn_phase(tmp, spark)
         recs = read_log(log_path)
     finally:
         spark.stop()
@@ -266,8 +309,8 @@ def main(argv=None) -> None:
               "workers": len({r["pid"] for r in recs}), "phases": {}}
     log(f"{'phase':<9} {'tasks':>5} {'task ms':>9} {'between ms':>10} "
         f"{'sum task':>9} {'sum betw.':>9} {'tracked':>8} {'frozen':>7} "
-        f"{'rss MB':>7} {'pandas':>6}")
-    for phase in ("identity", "extract", "soak"):
+        f"{'rss MB':>7} {'daemon MB':>9} {'pandas':>6} {'archive':>7}")
+    for phase in ("identity", "extract", "soak", "spawn"):
         s = summarize(recs, phase)
         if not s:
             continue
@@ -277,7 +320,12 @@ def main(argv=None) -> None:
             f"{bw if bw is not None else float('nan'):>10.1f} "
             f"{s['task_ms_sum'] / 1e3:>8.2f}s {s['between_ms_sum'] / 1e3:>8.2f}s "
             f"{s['tracked_p50']:>8.0f} {s['frozen_p50']:>7.0f} "
-            f"{s['rss_mb_p50']:>7.1f} {s['pandas_tasks']:>6}")
+            f"{s['rss_mb_p50']:>7.1f} {s['daemon_rss_mb_p50']:>9.1f} "
+            f"{s['pandas_tasks']:>6} {s['archive_tasks']:>7}")
+    result["spawn_s"] = spawn
+    log(f"spawn: first minus second tiny job in a fresh SparkContext: "
+        f"median {statistics.median(spawn):.3f} s "
+        f"({', '.join(f'{d:.3f}' for d in spawn)})")
     if args.soak_tasks:
         result["soak"] = soak_summary(recs)
         for pid, s in result["soak"].items():
